@@ -1199,8 +1199,8 @@ object Bench {
     // 1M BUILD + SERVE — past the reference's documented ceiling (its 1M
     // LOAD stalls at 93%; we run the full index lifecycle at 2× its
     // 500k serving ceiling). Packed 1M×dim128 = 528 MB exceeds
-    // PackedDriverMaxBytes, so serving runs the DISTRIBUTED packed-RDD
-    // path — this rung is the explicit proof the executor-side tier
+    // the packed-floats residency cap, so serving runs the DISTRIBUTED
+    // packed-RDD path — this rung is the explicit proof the executor-side tier
     // clears baseline too, not just the driver-resident tiers the
     // smaller rungs use (on a real cluster this is the only tier).
     val tB1m = System.nanoTime()
@@ -1632,7 +1632,7 @@ object Bench {
             f"(unwarmed restart first call = cold row $tCold%.2f s)")
         // already-measured rows land BEFORE the u8 gauge below: the
         // gauge has its own failure guard, and a gauge-only failure
-        // (e.g. a heap whose global sq16 line can't seat a third
+        // (e.g. a heap whose refine line can't seat a third
         // engine's store) must not discard nine unrelated rows
         results("engine_10m_ingest_sec") = tIngest
         results("engine_10m_build_sec") = tEngBuild

@@ -56,103 +56,6 @@ object GraftEngine {
   private def lockFor(root: String, tenant: String, index: String): Object =
     manifestLocks.getOrElseUpdate(s"$root#$tenant/$index", new Object)
 
-  /** Default per-snapshot residency bound for the rows tier's [[IdPool]]
-    * (compact surrogate → id map): 512 MB covers ~25M ids at typical id
-    * lengths — the same ceiling class as the packed-codes/graph tiers. */
-  val IdPoolMaxBytesDefault: Long = 512L << 20
-
-  /** JVM-wide ceiling across ALL resident id pools; engines share it the
-    * way resident PQ codes share [[graft.operators.IvfPq.PackedCodesGlobalMaxBytes]].
-    * WEAK-keyed by the pool itself (same accounting as the PQ registry):
-    * handle eviction removes a pool's share explicitly, and an engine
-    * instance dropped without eviction returns its share on GC — a plain
-    * counter would leak those bytes for the JVM's lifetime and starve
-    * later pools. */
-  val IdPoolGlobalMaxBytes: Long = 1024L << 20
-  private val idPoolRegistry = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[AnyRef, java.lang.Long]())
-
-  /** Per-index ceiling for the resident SQ16 rerank store (2·dim bytes/
-    * vec over the RAW vectors — 10M×128 ≈ 2.6 GB, 20M ≈ 5.3 GB, still
-    * half the floats): its OWN budget line, deliberately not the id-pool
-    * budget — a refine store drawing on the pool budget would starve
-    * pools/tag indexes (the r7 ADVICE hazard class). uint16 rather than
-    * uint8 because the refine step's whole purpose is near-exact
-    * answers: uint8's error measurably reorders near-equidistant top-k
-    * boundaries (gauge recall 0.980 vs 0.995 exact); uint16's is 256×
-    * smaller and prices at exact.
-    *
-    * DERIVED from the running JVM's heap, not a constant: 1/4 of
-    * `Runtime.maxMemory`, capped at 8 GiB. On the repo's 32 GiB serving
-    * JVM (build.sbt's default -Xmx) that is the same 8 GiB the refine
-    * tier was sized for (reaching the ~20M×128 corpora the rows gate
-    * admits); an embedded deployment on a 4 GiB heap that forgets to
-    * pass `sq16MaxBytes` now defaults to 1 GiB and takes the plan
-    * fallback instead of OOMing on a budget sized for someone else's
-    * heap (ADVICE r9). The store is segmented, so the budget is the
-    * ONLY ceiling; deployments override per engine via `sq16MaxBytes`. */
-  val Sq16MaxBytesDefault: Long =
-    math.min(8192L << 20, Runtime.getRuntime.maxMemory / 4)
-
-  /** JVM-wide ceiling across ALL resident SQ16 stores — weak-keyed like
-    * the other residency registries (eviction returns a share explicitly;
-    * a dropped engine returns it on GC). 1.5× the per-index default
-    * (heap-derived like it: 3/8 of max heap, capped at 12 GiB — ~37% of
-    * the default 32 GiB heap): one full-size store plus change, the
-    * aggregate stop that keeps N engines from each admitting a
-    * budget-legal store into one JVM. Overridable for deployments whose
-    * heap headroom differs from the default fraction via
-    * `-Dgraft.sq16.globalMaxBytes=<bytes>` (read once at class init —
-    * the registry's ceiling must not move while stores are resident). */
-  val Sq16GlobalMaxBytes: Long =
-    sys.props.get("graft.sq16.globalMaxBytes").map { s =>
-      // named error: a bad value would otherwise surface as an opaque
-      // ExceptionInInitializerError from this object's static init
-      val v =
-        try s.trim.toLong
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"-Dgraft.sq16.globalMaxBytes must be a plain byte count, got '$s'")
-        }
-      // a zero/negative ceiling would silently deny every refine store
-      // (used + est <= 0 never holds) instead of failing at init like
-      // the NumberFormat case (ADVICE r10)
-      if (v <= 0) throw new IllegalArgumentException(
-        s"-Dgraft.sq16.globalMaxBytes must be positive, got '$s'")
-      v
-    }.getOrElse(
-      math.min(12288L << 20, Runtime.getRuntime.maxMemory * 3 / 8))
-  private val sq16Registry = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[AnyRef, java.lang.Long]())
-  private[graft] def sq16BytesUsed: Long = {
-    val it = sq16Registry.synchronized {
-      new java.util.ArrayList(sq16Registry.values())
-    }
-    var s = 0L
-    it.forEach(v => s += v.longValue())
-    s
-  }
-  private[graft] def registerSq16(h: AnyRef, bytes: Long): Unit =
-    sq16Registry.put(h, java.lang.Long.valueOf(bytes))
-  private[graft] def unregisterSq16(h: AnyRef): Unit =
-    sq16Registry.remove(h)
-  /** Atomic check-and-reserve against the global refine-store line:
-    * returns a placeholder token holding `bytes` when headroom exists,
-    * None otherwise. Callers build under the reservation and swap to the
-    * real store (register store, unregister token) — closing the TOCTOU
-    * where two concurrent admissions both pass the same `sq16BytesUsed`
-    * pre-check and overshoot the ceiling together (ADVICE r10). The
-    * whole check+put runs under the registry's own monitor (the
-    * synchronizedMap wrapper — reentrant with [[sq16BytesUsed]]). */
-  private[graft] def tryReserveSq16(bytes: Long): Option[AnyRef] =
-    sq16Registry.synchronized {
-      if (sq16BytesUsed + bytes <= Sq16GlobalMaxBytes) {
-        val token = new Object
-        sq16Registry.put(token, java.lang.Long.valueOf(bytes))
-        Some(token)
-      } else None
-    }
-
   /** Per-part AND of two aligned row-position bitmap sets (the
     * multi-tag conjunction on the resident tier). */
   private[graft] def andBits(a: Array[Array[Long]],
@@ -167,18 +70,6 @@ object GraftEngine {
       out
     }
   }
-  private[graft] def idPoolBytesUsed: Long = {
-    val it = idPoolRegistry.synchronized {
-      new java.util.ArrayList(idPoolRegistry.values())
-    }
-    var s = 0L
-    it.forEach(v => s += v.longValue())
-    s
-  }
-  private[graft] def registerResident(h: AnyRef, bytes: Long): Unit =
-    idPoolRegistry.put(h, java.lang.Long.valueOf(bytes))
-  private[graft] def unregisterResident(h: AnyRef): Unit =
-    idPoolRegistry.remove(h)
 }
 
 /** `refineU8Fallback` (OPT-IN, default off): when the sq16 refine
@@ -190,13 +81,16 @@ object GraftEngine {
   * sq16 rerank; the serving trace announces the tier
   * ("head+pqtail-refined-u8"). */
 class GraftEngine(spark: SparkSession, root: String,
-                  idPoolMaxBytes: Long = GraftEngine.IdPoolMaxBytesDefault,
+                  idPoolMaxBytes: Long = Residency.IdsTags.handleMax,
                   hashAllowedMinEntries: Int = 1 << 17,
                   pqServeMaxLookupsMT: Long =
                     graft.operators.IvfPq.PqServeMaxLookupsMT,
-                  sq16MaxBytes: Long = GraftEngine.Sq16MaxBytesDefault,
+                  sq16MaxBytes: Long = Residency.Refine.handleMax,
                   refineU8Fallback: Boolean = false,
                   sq16IgnoreSidecar: Boolean = false) {
+  // idPoolMaxBytes / sq16MaxBytes: this engine's per-handle caps on the
+  // ids-tags and refine lines of the residency ledger ([[Residency]]);
+  // the line caps and the JVM total are shared by every engine.
   // sq16IgnoreSidecar: serve the refine store via the wave-fetch build
   // even when the snapshot carries the binary segment sidecar — an
   // attribution/ops escape hatch (A/B the two load paths on one
@@ -639,10 +533,10 @@ class GraftEngine(spark: SparkSession, root: String,
         // would strand its own serving on the plan fallback, the exact
         // cliff the tier removes; the build then transiently holds the
         // full-precision store it persists). The transient merge is
-        // additionally fenced on global-registry headroom and counted
-        // against it while alive, so a build inside a loaded serving
-        // JVM cannot stack an unaccounted multi-GB store on top of a
-        // near-ceiling registry. Reading BACK the parquet (rather than
+        // additionally admitted on the ledger's refine line and counted
+        // there while alive, so a build inside a loaded serving JVM
+        // cannot stack an unaccounted multi-GB store on top of a
+        // near-full line. Reading BACK the parquet (rather than
         // re-encoding from `state`) keeps the sidecar bit-identical to
         // what a segment-less engine would build from the same
         // snapshot, duplicate-surrogate resolution included (same
@@ -658,19 +552,17 @@ class GraftEngine(spark: SparkSession, root: String,
             val wanted = est <= sq16MaxBytes ||
               (refineU8Fallback &&
                 graft.operators.Sq8Store.estimateBytes(n16, d16) <= sq16MaxBytes)
-            if (wanted) GraftEngine.tryReserveSq16(est).foreach { token =>
-              // the reservation covers the multi-second wave-fetch +
-              // merge itself, not just the finished store — two
-              // concurrent builds can no longer both pass the same
-              // headroom pre-check and overshoot together (ADVICE r10)
-              try {
-                val store = graft.operators.Sq16Store.buildResident(
-                  codesDf, d16, p16.min, p16.max, estBytes = est)
-                GraftEngine.registerSq16(store, store.bytes)
-                GraftEngine.unregisterSq16(token) // swap reserve → real
+            // `wanted` is this store's per-handle check; the ledger's
+            // reservation covers the multi-second wave-fetch + merge
+            // itself, not just the finished store
+            if (wanted) Residency.admit(Residency.Refine, est, Long.MaxValue) {
+              graft.operators.Sq16Store.buildResident(
+                codesDf, d16, p16.min, p16.max, estBytes = est)
+            } match {
+              case Residency.Admitted(store) =>
                 try graft.operators.Sq16Store.save(store, s"$dir/sq16/segments")
-                finally GraftEngine.unregisterSq16(store)
-              } finally GraftEngine.unregisterSq16(token) // no-op if swapped
+                finally Residency.release(store)
+              case _ =>
             }
           }
         }
@@ -1756,16 +1648,21 @@ class GraftEngine(spark: SparkSession, root: String,
         graft.operators.Pq.loadCodebook(spark, s"$snap/ivfpq/codebooks"))
     })
 
-  // memoized driver-resident HNSW graphs for the rows serving tier —
-  // None (over the residency bound) memoizes too, so oversized graph
-  // sets pay the meta read once and every later call short-circuits
+  // memoized driver-resident HNSW graphs for the rows serving tier — a
+  // per-handle denial (over the graph line's cap) memoizes None, so
+  // oversized graph sets pay the meta read once and every later call
+  // short-circuits; a full line retries against the memoized estimate
   private val hnswGraphsCache =
     scala.collection.concurrent.TrieMap.empty[String, Option[Array[(Int, graft.operators.Hnsw.Graph)]]]
   private def hnswGraphsOf(tenant: String, index: String,
                            m: Manifest): Option[Array[(Int, graft.operators.Hnsw.Graph)]] =
-    hnswGraphsCache.getOrElseUpdate(s"$tenant/$index/v${m.version}",
-      graft.operators.Hnsw.loadResident(
-        spark, s"${snapDir(tenant, index, m)}/hnsw"))
+    Residency.memo(hnswGraphsCache, s"$tenant/$index/v${m.version}") {
+      val path = s"${snapDir(tenant, index, m)}/hnsw"
+      val est = residentEstCache.getOrElseUpdate(
+        s"hnsw:$tenant/$index/v${m.version}",
+        graft.operators.Hnsw.residentBytes(spark, path))
+      graft.operators.Hnsw.loadResident(spark, path, est)
+    }
 
   // MIPS fold constant M² for IP-built IVF_PQ snapshots — immutable per
   // version like the handles above; reading it per search call would put
@@ -1777,43 +1674,23 @@ class GraftEngine(spark: SparkSession, root: String,
       spark.read.parquet(s"${snapDir(tenant, index, m)}/ivfpq/mips")
         .head.getDouble(0))
 
-  /** Memoize built handles and PERMANENT denials (per-version
-    * properties: missing table, per-handle over-budget — these never
-    * change for the snapshot's lifetime); re-evaluate TRANSIENT denials
-    * (JVM-global budget contention) on every call. Memoizing a
-    * contention denial would make it permanent: a fresh engine instance
-    * on a root whose previous instance still held the global budget at
-    * first touch would refuse the handle FOREVER, long after the old
-    * instance (and its share, weak-registry accounted) was GC'd. The
-    * measured byte ESTIMATES are memoized separately below so a
-    * contention retry never re-runs the measuring Spark job. Build races
-    * self-heal: the putIfAbsent loser's handle is dropped and its
-    * registry share evaporates with it (weak keys). */
-  private def residentMemo[T](
-      cache: scala.collection.concurrent.TrieMap[String, Option[T]],
-      key: String)(build: => (Option[T], Boolean)): Option[T] =
-    cache.get(key).getOrElse {
-      val (v, memoize) = build
-      if (memoize) cache.putIfAbsent(key, v).getOrElse(v) else v
-    }
-
   // measured-bytes estimates per snapshot version (the one Spark agg a
   // residency decision costs) — memoized apart from the handles so a
-  // transient global-budget denial retries against the registries only
+  // contention retry never re-runs the measuring job
   private val residentEstCache =
     scala.collection.concurrent.TrieMap.empty[String, Long]
 
   // surrogate → user-facing string id for the rows serving entry — a
   // compact [[IdPool]], immutable per snapshot. Residency is decided by
-  // EXACT measured bytes (one bounded agg) BEFORE any collect, against a
-  // per-pool and a JVM-global budget; per-handle denial memoizes None
-  // and the rows tier falls back to the plan. The pool itself is built
+  // EXACT measured bytes (one bounded agg) BEFORE any collect, on the
+  // ledger's ids-tags line; per-handle denial memoizes None and the rows
+  // tier falls back to the plan. The pool itself is built
   // from executor-side pre-sorted packed runs (never n boxed driver rows).
   private val idPoolCache =
     scala.collection.concurrent.TrieMap.empty[String, Option[IdPool]]
   private def idPoolOf(tenant: String, index: String,
                        m: Manifest): Option[IdPool] =
-    residentMemo(idPoolCache, s"$tenant/$index/v${m.version}") {
+    Residency.memo(idPoolCache, s"$tenant/$index/v${m.version}") {
       // inverted-list snapshots keep (id, id_str) in vectors/; IVF_PQ
       // snapshots alongside the codes; HNSW in its idmap table
       val sub = m.algo match {
@@ -1831,30 +1708,24 @@ class GraftEngine(spark: SparkSession, root: String,
           val strBytes = if (stats.isNullAt(1)) 0L else stats.getLong(1)
           n * 12L + strBytes + 32L
         })
-      if (est > idPoolMaxBytes) (None, true)
-      else if (GraftEngine.idPoolBytesUsed + est >
-          GraftEngine.IdPoolGlobalMaxBytes) (None, false)
-      else {
-        val runs = df.queryExecution.toRdd.mapPartitions { it =>
+      Residency.admit(Residency.IdsTags, est, idPoolMaxBytes) {
+        IdPool.merge(df.queryExecution.toRdd.mapPartitions { it =>
           // toString materializes an owned copy — UnsafeRow buffers are
           // reused across next() calls, so the bytes must not alias them
           IdPool.packRun(it.map(r => (r.getLong(0),
             r.getUTF8String(1).toString
               .getBytes(java.nio.charset.StandardCharsets.UTF_8))))
-        }.collect()
-        val pool = IdPool.merge(runs)
-        GraftEngine.registerResident(pool, pool.bytes)
-        (Some(pool), true)
+        }.collect())
       }
     }
 
   /** Resident SQ16 rerank store per snapshot version, or None when the
     * snapshot predates the sq16 sidecar, the vectors have mixed dims (no
-    * flat layout), or the measured bytes exceed the store's OWN budgets
-    * ([[GraftEngine.Sq16MaxBytesDefault]] / Sq16GlobalMaxBytes — separate
-    * from the id-pool line so refine residency can't starve pools).
-    * Permanent denial memoizes; refined calls then keep the plan
-    * fallback. Global-budget contention retries (see [[residentMemo]]). */
+    * flat layout), or the measured bytes exceed `sq16MaxBytes` on the
+    * ledger's refine line ([[Residency.Refine]] — separate from the
+    * ids-tags line so refine residency can't starve pools). Permanent
+    * denial memoizes; refined calls then keep the plan fallback. A full
+    * line retries (see [[Residency.memo]]). */
   private val sq16StoreCache =
     scala.collection.concurrent.TrieMap.empty[String, Option[graft.operators.Sq16Store]]
   // (n, dim) per version; None = permanently ineligible (no sidecar,
@@ -1863,7 +1734,7 @@ class GraftEngine(spark: SparkSession, root: String,
     scala.collection.concurrent.TrieMap.empty[String, Option[(Long, Int)]]
   private def sq16StoreOf(tenant: String, index: String,
                           m: Manifest): Option[graft.operators.Sq16Store] =
-    residentMemo(sq16StoreCache, s"$tenant/$index/v${m.version}") {
+    Residency.memo(sq16StoreCache, s"$tenant/$index/v${m.version}") {
       val segDir = s"${snapDir(tenant, index, m)}/sq16/segments"
       val useSidecar = !sq16IgnoreSidecar &&
         graft.operators.Sq16Store.sidecarExists(segDir)
@@ -1889,50 +1760,37 @@ class GraftEngine(spark: SparkSession, root: String,
           }
         })
       ndOpt match {
-        case None => (None, true)
+        case None => Residency.Denied
         case Some((n, dim)) =>
           // shared estimator — includes per-segment headers, so the
           // admitted estimate can never undercount what the built store
-          // registers (ADVICE r9)
+          // registers (ADVICE r9). Byte budgets are the ONLY capacity
+          // gate: the store is segmented (Sq16Store.SegMaxCodes), so no
+          // Int-indexed-array ceiling exists to deny around
           val est = graft.operators.Sq16Store.estimateBytes(n, dim)
-          // byte budgets are the ONLY capacity gate: the store is
-          // segmented (Sq16Store.SegMaxCodes), so no Int-indexed-array
-          // ceiling exists to deny around
-          if (est > sq16MaxBytes)
-            (None, true)
-          else GraftEngine.tryReserveSq16(est) match {
-            case None => (None, false)
-            case Some(token) =>
-              // the reservation covers the load/build window, so two
-              // snapshots admitting concurrently can't both pass one
-              // headroom read and overshoot the ceiling (ADVICE r10)
-              try {
-                // segment sidecar when the snapshot carries it
-                // (sequential file read, no Spark jobs); wave-fetch
-                // build for pre-sidecar snapshots (or when the
-                // deployment opts out via sq16IgnoreSidecar)
-                val store =
-                  if (useSidecar)
-                    graft.operators.Sq16Store.load(segDir)
-                  else {
-                    val codes = spark.read.parquet(
-                      s"${snapDir(tenant, index, m)}/sq16/codes")
-                    val p = graft.operators.ScalarQuant.loadParams(
-                      s"${snapDir(tenant, index, m)}/sq16/params.json")
-                    graft.operators.Sq16Store.buildResident(
-                      codes, dim, p.min, p.max, estBytes = est)
-                  }
-                GraftEngine.registerSq16(store, store.bytes)
-                // upgrade path (ADVICE r10): a u8 store admitted while
-                // sq16 was globally denied would otherwise stay
-                // registered against the refine line for the snapshot's
-                // lifetime while never served again (the serve path's
-                // orElse short-circuits once this store exists) — evict
-                // its memo and return its share
-                sq8StoreCache.remove(s"$tenant/$index/v${m.version}")
-                  .foreach(_.foreach(GraftEngine.unregisterSq16))
-                (Some(store), true)
-              } finally GraftEngine.unregisterSq16(token)
+          Residency.admit(Residency.Refine, est, sq16MaxBytes) {
+            // segment sidecar when the snapshot carries it (sequential
+            // file read, no Spark jobs); wave-fetch build for
+            // pre-sidecar snapshots (or when the deployment opts out via
+            // sq16IgnoreSidecar)
+            val store =
+              if (useSidecar) graft.operators.Sq16Store.load(segDir)
+              else {
+                val codes = spark.read.parquet(
+                  s"${snapDir(tenant, index, m)}/sq16/codes")
+                val p = graft.operators.ScalarQuant.loadParams(
+                  s"${snapDir(tenant, index, m)}/sq16/params.json")
+                graft.operators.Sq16Store.buildResident(
+                  codes, dim, p.min, p.max, estBytes = est)
+              }
+            // upgrade path (ADVICE r10): a u8 store admitted while sq16
+            // was Busy would otherwise stay counted on the refine line
+            // for the snapshot's lifetime while never served again (the
+            // serve path's orElse short-circuits once this store exists)
+            // — evict its memo and return its share
+            sq8StoreCache.remove(s"$tenant/$index/v${m.version}")
+              .foreach(_.foreach(Residency.release))
+            store
           }
       }
     }
@@ -1948,25 +1806,15 @@ class GraftEngine(spark: SparkSession, root: String,
     scala.collection.concurrent.TrieMap.empty[String, Option[graft.operators.Sq8Store]]
   private def sq8StoreOf(tenant: String, index: String,
                          m: Manifest): Option[graft.operators.Sq8Store] =
-    residentMemo(sq8StoreCache, s"$tenant/$index/v${m.version}") {
+    Residency.memo(sq8StoreCache, s"$tenant/$index/v${m.version}") {
       val segDir = s"${snapDir(tenant, index, m)}/sq16/segments"
-      if (!graft.operators.Sq16Store.sidecarExists(segDir)) (None, true)
+      if (!graft.operators.Sq16Store.sidecarExists(segDir)) Residency.Denied
       else {
         val (n, dim) = graft.operators.Sq16Store.sidecarStats(segDir)
-        if (n == 0) (None, true)
-        else {
-          val est = graft.operators.Sq8Store.estimateBytes(n, dim)
-          if (est > sq16MaxBytes) (None, true)
-          else GraftEngine.tryReserveSq16(est) match {
-            case None => (None, false)
-            case Some(token) =>
-              try {
-                val store = graft.operators.Sq16Store.loadAsU8(segDir)
-                GraftEngine.registerSq16(store, store.bytes)
-                (Some(store), true)
-              } finally GraftEngine.unregisterSq16(token)
-          }
-        }
+        if (n == 0) Residency.Denied
+        else Residency.admit(Residency.Refine,
+            graft.operators.Sq8Store.estimateBytes(n, dim), sq16MaxBytes)(
+          graft.operators.Sq16Store.loadAsU8(segDir))
       }
     }
 
@@ -1995,14 +1843,13 @@ class GraftEngine(spark: SparkSession, root: String,
   // the EXECUTORS, the driver concatenates + sorts per tag — transient
   // driver footprint = the final index, never one boxed row per
   // (record, tag). Residency by exact measured bytes (one bounded agg)
-  // against the same per-index bound and JVM-global registry as the id
-  // pool; denial memoizes None and filtered calls keep the distributed
-  // filtered plan.
+  // on the id pool's ids-tags line; denial memoizes None and filtered
+  // calls keep the distributed filtered plan.
   private val tagSurrogatesCache =
     scala.collection.concurrent.TrieMap.empty[String, Option[Map[String, Array[Long]]]]
   private def tagSurrogatesOf(tenant: String, index: String,
                               m: Manifest): Option[Map[String, Array[Long]]] =
-    residentMemo(tagSurrogatesCache, s"$tenant/$index/v${m.version}") {
+    Residency.memo(tagSurrogatesCache, s"$tenant/$index/v${m.version}") {
       val recs = spark.read.parquet(s"${snapDir(tenant, index, m)}/records")
       val tagsCol = coalesce(col("tags"), array().cast("array<string>"))
       // size() yields -1 for null arrays under legacy configs; coalesce
@@ -2014,10 +1861,7 @@ class GraftEngine(spark: SparkSession, root: String,
           val entries = if (stats.isNullAt(0)) 0L else stats.getLong(0)
           entries * 8L + 64L
         })
-      if (est > idPoolMaxBytes) (None, true)
-      else if (GraftEngine.idPoolBytesUsed + est >
-          GraftEngine.IdPoolGlobalMaxBytes) (None, false)
-      else {
+      Residency.admit(Residency.IdsTags, est, idPoolMaxBytes) {
         val parts = recs
           .select(xxhash64(col("id_str")).as("sg"),
             explode(tagsCol).as("tag"))
@@ -2032,7 +1876,7 @@ class GraftEngine(spark: SparkSession, root: String,
             }
             local.iterator.map { case (t, buf) => (t, buf.toArray) }
           }.collect()
-        val idx = parts.groupBy(_._1).map { case (t, runs) =>
+        parts.groupBy(_._1).map { case (t, runs) =>
           val total = runs.map(_._2.length).sum
           val a = new Array[Long](total)
           var o = 0
@@ -2042,8 +1886,6 @@ class GraftEngine(spark: SparkSession, root: String,
           java.util.Arrays.sort(a)
           t -> a
         }
-        GraftEngine.registerResident(idx, est)
-        (Some(idx), true)
       }
     }
 
@@ -2056,7 +1898,7 @@ class GraftEngine(spark: SparkSession, root: String,
   private val HashAllowedMinEntries = hashAllowedMinEntries
 
   // memoized per-(snapshot, tag) hash membership for large single-tag
-  // filters — same residency registry as the pools/tag arrays (the set
+  // filters — same ledger line as the pools/tag arrays (the set
   // is ~2× the array's bytes; only tags that actually serve large
   // filtered calls pay it)
   // private[graft]: specs assert budget-denial memoization directly
@@ -2065,7 +1907,7 @@ class GraftEngine(spark: SparkSession, root: String,
   private def tagHashSetOf(tenant: String, index: String, m: Manifest,
                            tag: String,
                            sorted: Array[Long]): graft.operators.LongHashSet =
-    residentMemo(tagHashSetCache, s"$tenant/$index/v${m.version}#$tag") {
+    Residency.memo(tagHashSetCache, s"$tenant/$index/v${m.version}#$tag") {
       // budget BEFORE building: a half-corpus tag's set is ~128 MB at
       // 10M rows (capacity = next pow2 ≥ 2n, 8 B/slot) and memoizes per
       // (version, tag) — many large tags could otherwise grow driver
@@ -2075,15 +1917,9 @@ class GraftEngine(spark: SparkSession, root: String,
       // shared estimator: a hand-copied capacity formula here would
       // silently diverge from the bytes the built set registers if the
       // set's load factor or header ever changed
-      val est = graft.operators.LongHashSet.estimateBytes(sorted.length)
-      if (est > idPoolMaxBytes) (None, true)
-      else if (GraftEngine.idPoolBytesUsed + est >
-          GraftEngine.IdPoolGlobalMaxBytes) (None, false)
-      else {
-        val set = graft.operators.LongHashSet.from(sorted)
-        GraftEngine.registerResident(set, set.bytes)
-        (Some(set), true)
-      }
+      Residency.admit(Residency.IdsTags,
+          graft.operators.LongHashSet.estimateBytes(sorted.length),
+          idPoolMaxBytes)(graft.operators.LongHashSet.from(sorted))
     }.orNull
 
   // per-(snapshot, tag) ROW-POSITION bitmaps aligned with the resident
@@ -2100,16 +1936,14 @@ class GraftEngine(spark: SparkSession, root: String,
                            tag: String, idsPerPart: Array[Array[Long]],
                            member: graft.operators.LongHashSet,
                            sorted: Array[Long] = null): Array[Array[Long]] =
-    residentMemo(tagBitsCache, s"$tenant/$index/v${m.version}#$tag") {
+    Residency.memo(tagBitsCache, s"$tenant/$index/v${m.version}#$tag") {
       // same budget gate as the hash set (est BEFORE building, permanent
       // denial memoized): bitmaps are small (~nRows/8 bytes per tag) but
       // per-(version, tag) residents all draw from one pool
+      // (the estimate is exact: it is what the built bitmaps occupy)
       val est = idsPerPart.iterator
         .map(ids => ((ids.length + 63) >>> 6).toLong * 8L).sum + 64L
-      if (est > idPoolMaxBytes) (None, true)
-      else if (GraftEngine.idPoolBytesUsed + est >
-          GraftEngine.IdPoolGlobalMaxBytes) (None, false)
-      else {
+      Residency.admit(Residency.IdsTags, est, idPoolMaxBytes) {
         // membership via the probe set when one exists; a BUDGET-DENIED
         // hash set must not take the bitmap down with it — the one-time
         // construction pass binary-searches the sorted array instead
@@ -2118,7 +1952,7 @@ class GraftEngine(spark: SparkSession, root: String,
         // replaces (nRows/8 bytes vs 16 B/entry), so at 10M rows the
         // exact corpora whose hash sets blow the budget are the ones
         // that most need this path
-        val bits = idsPerPart.map { ids =>
+        idsPerPart.map { ids =>
           val b = new Array[Long]((ids.length + 63) >>> 6)
           var r = 0
           while (r < ids.length) {
@@ -2130,9 +1964,6 @@ class GraftEngine(spark: SparkSession, root: String,
           }
           b
         }
-        GraftEngine.registerResident(bits,
-          bits.map(_.length.toLong * 8L).sum + 64L)
-        (Some(bits), true)
       }
     }.orNull
 
@@ -2187,7 +2018,7 @@ class GraftEngine(spark: SparkSession, root: String,
           // mirroring the serving path's codes → pool → store gate order
           // (searchRowsTraced): a codes-denied PQ index or a graph-denied
           // HNSW index can never serve rows-native, so warming its pool
-          // would strand bytes against IdPoolGlobalMaxBytes for a tier
+          // would strand bytes on the ledger's ids-tags line for a tier
           // that will never run (ADVICE r9)
           val rowsSized = m.nVectors <= RowsServeMaxRows
           m.algo match {
@@ -2201,7 +2032,7 @@ class GraftEngine(spark: SparkSession, root: String,
               // serving path applies (store build is the last residency
               // decision, after codes and pool admit): a pool-denied
               // index can never serve rows-native, so warming its store
-              // would strand the bytes against the global sq16 line
+              // would strand the bytes on the ledger's refine line
               if (rowsSized && pq.packedDriver.isDefined &&
                   idPoolOf(tenant, index, m).isDefined) {
                 if (sq16StoreOf(tenant, index, m).isEmpty && refineU8Fallback)
@@ -2242,64 +2073,35 @@ class GraftEngine(spark: SparkSession, root: String,
       val v = k.stripPrefix(prefix)
       if (k.startsWith(prefix) && v.forall(_.isDigit)) Some(v.toLong) else None
     }
-    tailIndexCache.keys.toSeq.foreach { k =>
-      if (versionOf(k).exists(_ < keep))
-        // packedIfBuilt, NOT packed: forcing the lazy here would launch
-        // the pack job against the snapshot files this GC just deleted
-        tailIndexCache.remove(k)
-          .foreach(_.packedIfBuilt.foreach(_.unpersist(blocking = false)))
-    }
-    centroidCache.keys.toSeq.foreach { k =>
-      if (versionOf(k).exists(_ < keep)) centroidCache.remove(k)
-    }
-    mipsMaxSqCache.keys.toSeq.foreach { k =>
-      if (versionOf(k).exists(_ < keep)) mipsMaxSqCache.remove(k)
-    }
-    idPoolCache.keys.toSeq.foreach { k =>
-      if (versionOf(k).exists(_ < keep))
-        idPoolCache.remove(k).foreach(_.foreach(GraftEngine.unregisterResident))
-    }
-    tagSurrogatesCache.keys.toSeq.foreach { k =>
-      if (versionOf(k).exists(_ < keep))
-        tagSurrogatesCache.remove(k).foreach(_.foreach(GraftEngine.unregisterResident))
-    }
-    tagHashSetCache.keys.toSeq.foreach { k =>
-      // keys carry a "#tag" suffix after the version
-      if (versionOf(k.takeWhile(_ != '#')).exists(_ < keep))
-        tagHashSetCache.remove(k).foreach(_.foreach(GraftEngine.unregisterResident))
-    }
-    tagBitsCache.keys.toSeq.foreach { k =>
-      if (versionOf(k.takeWhile(_ != '#')).exists(_ < keep))
-        tagBitsCache.remove(k).foreach(_.foreach(GraftEngine.unregisterResident))
-    }
-    // resident-tier handles: dropping the map entry releases the packed
-    // byte codes / graphs to GC, which also frees their share of the
-    // weak-keyed global residency budgets — without this, every rebuild
-    // leaks its predecessor's resident arrays for the engine's lifetime
-    // and the budget eventually denies residency to LIVE versions
-    pqIndexCache.keys.toSeq.foreach { k =>
-      if (versionOf(k).exists(_ < keep)) pqIndexCache.remove(k)
-    }
-    hnswGraphsCache.keys.toSeq.foreach { k =>
-      if (versionOf(k).exists(_ < keep)) hnswGraphsCache.remove(k)
-    }
-    sq16StoreCache.keys.toSeq.foreach { k =>
-      if (versionOf(k).exists(_ < keep))
-        sq16StoreCache.remove(k).foreach(_.foreach(GraftEngine.unregisterSq16))
-    }
-    sq8StoreCache.keys.toSeq.foreach { k =>
-      if (versionOf(k).exists(_ < keep))
-        sq8StoreCache.remove(k).foreach(_.foreach(GraftEngine.unregisterSq16))
-    }
-    // measurement memos (bytes, not handles) for evicted versions
-    sq16StatsCache.keys.toSeq.foreach { k =>
-      if (versionOf(k).exists(_ < keep)) sq16StatsCache.remove(k)
-    }
-    residentEstCache.keys.toSeq.foreach { k =>
-      // keys carry a "pool:"/"tags:" prefix before tenant/index/vN
-      if (versionOf(k.dropWhile(_ != ':').drop(1)).exists(_ < keep))
-        residentEstCache.remove(k)
-    }
+    def evict[V](cache: scala.collection.concurrent.TrieMap[String, V],
+                 versionKey: String => String = k => k)(drop: V => Unit): Unit =
+      cache.keys.toSeq.foreach { k =>
+        if (versionOf(versionKey(k)).exists(_ < keep)) cache.remove(k).foreach(drop)
+      }
+    val forget = (_: Any) => ()
+    val release = (_: Option[AnyRef]).foreach(Residency.release)
+    val tagged = (_: String).takeWhile(_ != '#') // "#tag" after the version
+    // packedIfBuilt, NOT packed: forcing the lazy here would launch the
+    // pack job against the snapshot files this GC just deleted
+    evict(tailIndexCache)(_.packedIfBuilt.foreach(_.unpersist(blocking = false)))
+    evict(centroidCache)(forget)
+    evict(mipsMaxSqCache)(forget)
+    evict(idPoolCache)(release)
+    evict(tagSurrogatesCache)(release)
+    evict(tagHashSetCache, tagged)(release)
+    evict(tagBitsCache, tagged)(release)
+    evict(hnswGraphsCache)(release)
+    evict(sq16StoreCache)(release)
+    evict(sq8StoreCache)(release)
+    // IVF_FLAT/IVF_PQ handles hold their packed parts themselves:
+    // dropping the handle releases them to GC, which also returns their
+    // weak-keyed ledger share — without this, every rebuild leaks its
+    // predecessor's resident arrays for the engine's lifetime
+    evict(pqIndexCache)(forget)
+    // measurement memos (bytes, not handles); estimate keys carry a
+    // "pool:"/"tags:"/"hnsw:" prefix before tenant/index/vN
+    evict(sq16StatsCache)(forget)
+    evict(residentEstCache, _.dropWhile(_ != ':').drop(1))(forget)
   }
 
   // -------------------------------------------------------------------
@@ -2473,17 +2275,20 @@ class GraftEngine(spark: SparkSession, root: String,
     * ids — the gate skips the residency-estimate jobs for corpora the
     * byte budgets could never accept, and everything under it is decided
     * by exact measured bytes in [[idPoolOf]] / [[sq16StoreOf]] /
-    * packedDriver (per-structure + JVM-global budgets). Corpora past any
-    * budget fall back to the DataFrame plan, which resolves ids with a
-    * broadcast semi-join instead of a resident map. Floored at 16M so
-    * deliberately tiny test budgets still exercise the measured-byte
-    * denial paths rather than this gate. At the 512 MB default the gate
-    * sits at ~44.7M rows; a 20M×dim128 IVF_PQ corpus (packed codes
-    * ~480 MB at 24 B/vec — the BINDING line on the plain path, denying
-    * at ~22.4M of its 512 MB budget; pool ~420 MB of 512 MB; segmented
-    * sq16 refine store 5.3 GB under its 8 GiB line) now serves RESIDENT
-    * on the plain, refined, AND filtered paths (Engine10mServeMain
-    * 20000000 measures exactly that).
+    * packedDriver, each admitted by the [[Residency]] ledger against its
+    * per-handle cap, its line's cap and the JVM total (half the heap).
+    * Corpora past any cap fall back to the DataFrame plan, which
+    * resolves ids with a broadcast semi-join instead of a resident map.
+    * Floored at 16M so deliberately tiny test budgets still exercise the
+    * measured-byte denial paths rather than this gate. At the 512 MB
+    * default the gate sits at ~44.7M rows; a 20M×dim128 IVF_PQ corpus
+    * (packed codes ~480 MB at 24 B/vec — the BINDING cap on the plain
+    * path, denying at ~22.4M of the pq-codes line's 512 MB per index;
+    * pool ~420 MB of the ids-tags line's 512 MB; segmented sq16 refine
+    * store 5.3 GB under the refine line's 8 GiB per store, ~6.2 GB in
+    * all under a 32 GiB heap's 16 GiB total) now serves RESIDENT on the
+    * plain, refined, AND filtered paths (Engine10mServeMain 20000000
+    * measures exactly that).
     * (Was a scalar 16M; before that 1M when the resolver was a boxed
     * Map — the compact pool is what lets the wire serve 10M+ rungs
     * driver-side.) */

@@ -22,11 +22,11 @@ package graft
 final class IdPool private (
     private val surrs: Array[Long],
     private val offsets: Array[Int], // length = size + 1
-    private val blob: Array[Byte]) {
+    private val blob: Array[Byte]) extends Residency.Sized {
 
   def size: Int = surrs.length
 
-  /** Resident heap bytes (accounting for the engine's residency budget). */
+  /** Resident heap bytes (what the residency ledger counts). */
   val bytes: Long = surrs.length * 12L + blob.length + 32L
 
   def contains(sg: Long): Boolean =

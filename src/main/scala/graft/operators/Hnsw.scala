@@ -385,55 +385,40 @@ object Hnsw {
     }
   }
 
-  /** Residency bound for [[loadResident]]: graphs hold their full float
-    * vectors plus adjacency, so the economics match IvfFlat's packed
-    * tier — ~512 MB of graph state serves driver-side; bigger corpora
-    * keep the distributed fan-out. */
-  val ResidentMaxBytes: Long = 512L << 20
-  /** JVM-wide ceiling across ALL resident graph sets (weak-keyed — a
-    * dropped handle frees its share on GC; same accounting as the
-    * IvfFlat/IvfPq resident registries). */
-  val ResidentGlobalMaxBytes: Long = 1024L << 20
-  private val residentRegistry = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[AnyRef, java.lang.Long]())
-  private def residentBudgetUsed: Long = {
-    val it = residentRegistry.synchronized {
-      new java.util.ArrayList(residentRegistry.values())
-    }
-    var s = 0L
-    it.forEach(v => s += v.longValue())
-    s
-  }
-
-  /** Load a snapshot's graphs DRIVER-RESIDENT for zero-job serving, or
-    * None past the byte bounds. The bound is checked BEFORE collecting,
-    * from the meta table (n_nodes, m — one driver-sized read) and one
-    * tiny dim probe on nodes/: rows × (vector + adjacency + ids)
-    * estimated conservatively. The reference serves every HNSW query
-    * from one process's heap (HnswVectorIndex.cs "Flat Vector Storage");
-    * this is the honest analog for graphs inside the bound. */
-  def loadResident(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Option[Array[(Int, Graph)]] = {
+  /** Resident heap bytes of a snapshot's graphs (0 = no nodes), from the
+    * meta table (n_nodes, m — one driver-sized read) and one tiny dim
+    * probe on nodes/: rows × (vector + adjacency + ids), estimated
+    * conservatively so the bound fails safe. */
+  def residentBytes(spark: org.apache.spark.sql.SparkSession,
+                    path: String): Long = {
     val meta = spark.read.parquet(s"$path/meta")
       .select("n_nodes", "m").collect()
     val rows = meta.map(_.getInt(0).toLong).sum
-    if (rows == 0L) return Some(Array.empty)
-    val mWidth = meta.map(_.getInt(1)).max
-    val dim = spark.read.parquet(s"$path/nodes")
-      .select(org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col("vec"))).head.getInt(0)
-    // per node: dim floats + ~2 adjacency lists of ≤ m ints (level-0 can
-    // hold 2m in classic HNSW; this build prunes to m) + id + object
-    // headers — a deliberate over-estimate so the bound fails safe
-    val bytes = rows * (4L * dim + 8L * mWidth + 64L)
-    if (bytes > ResidentMaxBytes ||
-        residentBudgetUsed + bytes > ResidentGlobalMaxBytes) None
+    if (rows == 0L) 0L
     else {
-      val parts = load(spark, path).collect()
-      residentRegistry.put(parts, java.lang.Long.valueOf(bytes))
-      Some(parts)
+      val mWidth = meta.map(_.getInt(1)).max
+      val dim = spark.read.parquet(s"$path/nodes")
+        .select(org.apache.spark.sql.functions.size(
+          org.apache.spark.sql.functions.col("vec"))).head.getInt(0)
+      // per node: dim floats + ~2 adjacency lists of ≤ m ints (level-0
+      // can hold 2m in classic HNSW; this build prunes to m) + id +
+      // object headers
+      rows * (4L * dim + 8L * mWidth + 64L)
     }
   }
+
+  /** Load a snapshot's graphs DRIVER-RESIDENT for zero-job serving,
+    * admitted on the [[graft.Residency.HnswGraphs]] line against
+    * [[residentBytes]] BEFORE collecting (~512 MB of graph state per
+    * snapshot; bigger corpora keep the distributed fan-out). The
+    * reference serves every HNSW query from one process's heap
+    * (HnswVectorIndex.cs "Flat Vector Storage"); this is the honest
+    * analog for graphs inside the bound. */
+  def loadResident(spark: org.apache.spark.sql.SparkSession, path: String,
+                   estBytes: Long): graft.Residency.Admission[Array[(Int, Graph)]] =
+    if (estBytes == 0L) graft.Residency.Admitted(Array.empty[(Int, Graph)])
+    else graft.Residency.admit(graft.Residency.HnswGraphs, estBytes)(
+      load(spark, path).collect())
 
   /** Zero-job HNSW serving for driver-local query batches: each query
     * beam-searches every resident sub-graph (k per graph — the SAME

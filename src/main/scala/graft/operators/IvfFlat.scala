@@ -111,14 +111,6 @@ object IvfFlat {
       rdd
     }
 
-    /** Driver-RESIDENT packed lists for the zero-job serving tier, or
-      * None when the corpus exceeds [[IvfFlat.PackedDriverMaxBytes]].
-      * The reference's whole engine is one process's heap — for indexes
-      * that fit the explicit byte bound, holding the packed arrays on
-      * the driver serves single queries with no job submission at all
-      * (the ~25 ms local scheduling floor dominates per-call latency
-      * otherwise). Bound checked BEFORE collecting, from row count ×
-      * vector bytes; oversized indexes keep the distributed path. */
     /** (rows, dim) of the assigned table — one tiny job, memoized per
       * Index handle; feeds the serving-tier dispatch and the residency
       * bound. dim = 0 marks an empty corpus. */
@@ -133,24 +125,24 @@ object IvfFlat {
       if (row.isNullAt(1)) (0L, 0) else (row.getLong(0), row.getInt(1))
     }
 
-    @transient lazy val packedDriver: Option[Array[PackedLists]] = {
-      val (rows, dim) = sizeStats
-      if (rows == 0L) Some(Array.empty[PackedLists]) // empty corpus
-      else {
-        val bytes = rows * (4L * dim + 16L)
-        // per-index AND global budget: a multi-index engine must not pin
-        // N × 512 MB of driver heap. The registry is weak-keyed by the
-        // Index handle, so dropping a handle (evictStaleHandles, engine
-        // GC) frees its share of the budget automatically.
-        if (bytes > PackedDriverMaxBytes ||
-            residentBudgetUsed + bytes > PackedDriverGlobalMaxBytes) None
-        else {
-          val parts = packed.collect()
-          residentRegistry.put(this, java.lang.Long.valueOf(bytes))
-          Some(parts)
-        }
-      }
-    }
+    /** Driver-RESIDENT packed lists for the zero-job serving tier, or
+      * None while the [[graft.Residency.PackedFloats]] line denies them.
+      * The reference's whole engine is one process's heap — for indexes
+      * that fit the explicit byte bound, holding the packed arrays on
+      * the driver serves single queries with no job submission at all
+      * (the ~25 ms local scheduling floor dominates per-call latency
+      * otherwise). Admitted BEFORE collecting, from row count × vector
+      * bytes; oversized indexes keep the distributed path, and a line
+      * that is merely full is retried on the next call. */
+    def packedDriver: Option[Array[PackedLists]] = packedResident.get
+
+    @transient private lazy val packedResident =
+      new graft.Residency.Memo[Array[PackedLists]]({
+        val (rows, dim) = sizeStats
+        if (rows == 0L) graft.Residency.Admitted(Array.empty[PackedLists])
+        else graft.Residency.admit(graft.Residency.PackedFloats,
+          rows * (4L * dim + 16L))(packed.collect())
+      })
 
     /** Per-cluster row counts (≤ nlist entries — driver-sized), memoized
       * per Index handle: the serving-tier dispatch computes EXACT probed
@@ -180,28 +172,6 @@ object IvfFlat {
     }
   }
 
-  /** Residency bound for [[Index.packedDriver]]: ~512 MB of packed
-    * vectors — a small slice of driver heap (the reference holds its
-    * whole corpus in one process heap; 512 MB covers its published
-    * 500k/dim128 ceiling, 264 MB packed). Everything bigger serves
-    * through the executor-side packed RDD. */
-  val PackedDriverMaxBytes: Long = 512L << 20
-
-  /** JVM-wide ceiling across ALL resident indexes (the per-index bound
-    * alone would let a multi-tenant engine pin N × 512 MB). Weak-keyed
-    * accounting: a dropped Index handle frees its share on GC. */
-  val PackedDriverGlobalMaxBytes: Long = 2048L << 20
-  private val residentRegistry = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[Index, java.lang.Long]())
-  private def residentBudgetUsed: Long = {
-    val it = residentRegistry.synchronized {
-      new java.util.ArrayList(residentRegistry.values())
-    }
-    var s = 0L
-    it.forEach(v => s += v.longValue())
-    s
-  }
-
   /** Work bound for dispatching a call to the SINGLE-THREADED
     * driver-resident tier: exact scanned float elements (Σ over probed
     * clusters of real list length × probing queries × dim). The
@@ -225,9 +195,10 @@ object IvfFlat {
     * distributed path's fixed overhead amortizes — and on a REAL
     * cluster the executor fleet has far more cores than the driver, so
     * routing ever-larger scans to driver threads would invert the
-    * scaling story; resident corpora are ≤ [[PackedDriverMaxBytes]]
-    * (134M float-elems) so per-call work above this ceiling means a
-    * genuinely large query batch, exactly what executors are for. */
+    * scaling story; resident corpora are within the
+    * [[graft.Residency.PackedFloats]] handle cap (134M float-elems) so
+    * per-call work above this ceiling means a genuinely large query
+    * batch, exactly what executors are for. */
   val DriverServeMaxScanElemsMT: Long = 8L << 30
 
   /** Shared daemon pool for the multi-threaded driver tier. Sized to the
@@ -513,8 +484,9 @@ object IvfFlat {
   /** Full IVF search: probe top-nprobe inverted lists, exact-score their
     * members, return global top-k per query. Three forms, picked by what
     * is driver-sized:
-    *  - query batch local AND index resident (≤ [[PackedDriverMaxBytes]],
-    *    checked BEFORE any collect): the tiered packed serving path —
+    *  - query batch local AND index resident (within the
+    *    [[graft.Residency.PackedFloats]] handle cap, checked BEFORE any
+    *    collect): the tiered packed serving path —
     *    in-heap single- or multi-threaded scan, no join materialization,
     *    no scheduler (spec-pinned equal to the join plan);
     *  - query batch local, index NOT resident: driver-side probe ranking
@@ -563,8 +535,8 @@ object IvfFlat {
     * list). The DataFrame wrapper above costs ~100-150 ms of per-call
     * encoder + Catalyst planning, which dwarfs the search itself;
     * latency-sensitive callers and the benchmark use this entry.
-    * Indexes inside [[PackedDriverMaxBytes]] serve from the
-    * driver-resident packed tier — no job submission, so per-call
+    * Indexes inside the [[graft.Residency.PackedFloats]] handle cap serve
+    * from the driver-resident packed tier — no job submission, so per-call
     * latency is the scan, not the ~25 ms local scheduler floor. */
   def searchLocalRows(index: Index, queries: Array[(Long, Array[Float])],
                       metric: String, k: Int, nprobe: Int,

@@ -48,75 +48,52 @@ object IvfPq {
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
     /** Driver-RESIDENT packed code lists for the zero-job PQ serving
-      * tier, or None past the residency bounds. Packing runs
-      * per-partition on the executors after a cluster-keyed exchange
-      * (each inverted list whole in one part — same shape as
-      * [[IvfFlat.Index.packed]]); the driver collects the already-flat
-      * parts, never 10M boxed rows. */
-    @transient lazy val packedDriver: Option[Array[PackedCodes]] = {
-      val rows = sizeStats
-      val bytes = rows * (cb.m + 16L)
-      if (bytes > PackedCodesMaxBytes ||
-          residentBudgetUsed + bytes > PackedCodesGlobalMaxBytes) None
-      else {
-        val mWidth = cb.m
-        val parts = assigned.select("id", "cluster_id", "codes")
-          .repartition(col("cluster_id"))
-          .queryExecution.toRdd.mapPartitions { it =>
-            val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val cls = scala.collection.mutable.ArrayBuffer.empty[Int]
-            val codeBuf = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-            while (it.hasNext) {
-              val row = it.next()
-              ids += row.getLong(0)
-              cls += row.getInt(1)
-              codeBuf += row.getBinary(2)
-            }
-            if (ids.isEmpty) Iterator.empty
-            else {
-              val n = ids.length
-              val order = Array.range(0, n).sortBy(i => (cls(i), ids(i)))
-              val pIds = new Array[Long](n)
-              val pCodes = new Array[Byte](n * mWidth)
-              val ranges = new java.util.HashMap[Int, Array[Int]]()
-              var i = 0
-              while (i < n) {
-                val src = order(i)
-                pIds(i) = ids(src)
-                System.arraycopy(codeBuf(src), 0, pCodes, i * mWidth, mWidth)
-                val c = cls(src)
-                val r = ranges.get(c)
-                if (r == null) ranges.put(c, Array(i, 1)) else r(1) += 1
-                i += 1
+      * tier, or None while the [[graft.Residency.PqCodes]] line denies
+      * them (a full line is retried on the next call, like
+      * [[IvfFlat.Index.packedDriver]]). Packing runs per-partition on the
+      * executors after a cluster-keyed exchange (each inverted list whole
+      * in one part — same shape as [[IvfFlat.Index.packed]]); the driver
+      * collects the already-flat parts, never 10M boxed rows. */
+    def packedDriver: Option[Array[PackedCodes]] = packedResident.get
+
+    @transient private lazy val packedResident =
+      new graft.Residency.Memo[Array[PackedCodes]](
+        graft.Residency.admit(graft.Residency.PqCodes,
+            sizeStats * (cb.m + 16L)) {
+          val mWidth = cb.m
+          assigned.select("id", "cluster_id", "codes")
+            .repartition(col("cluster_id"))
+            .queryExecution.toRdd.mapPartitions { it =>
+              val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+              val cls = scala.collection.mutable.ArrayBuffer.empty[Int]
+              val codeBuf = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+              while (it.hasNext) {
+                val row = it.next()
+                ids += row.getLong(0)
+                cls += row.getInt(1)
+                codeBuf += row.getBinary(2)
               }
-              Iterator(new PackedCodes(mWidth, pIds, pCodes, ranges))
-            }
-          }.collect()
-        residentRegistry.put(this, java.lang.Long.valueOf(bytes))
-        Some(parts)
-      }
-    }
-  }
-
-  /** Residency bound for [[Index.packedDriver]]: 512 MB of packed codes
-    * covers ~21M vectors at M = 8 — well past the 10M bench rung and the
-    * reference's published ceilings; larger corpora keep the distributed
-    * ADC plan (the only correct tier on a real cluster anyway). */
-  val PackedCodesMaxBytes: Long = 512L << 20
-
-  /** JVM-wide ceiling across ALL resident PQ indexes (weak-keyed: a
-    * dropped handle frees its share on GC — same accounting as
-    * [[IvfFlat.PackedDriverGlobalMaxBytes]]). */
-  val PackedCodesGlobalMaxBytes: Long = 1024L << 20
-  private val residentRegistry = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[Index, java.lang.Long]())
-  private def residentBudgetUsed: Long = {
-    val it = residentRegistry.synchronized {
-      new java.util.ArrayList(residentRegistry.values())
-    }
-    var s = 0L
-    it.forEach(v => s += v.longValue())
-    s
+              if (ids.isEmpty) Iterator.empty
+              else {
+                val n = ids.length
+                val order = Array.range(0, n).sortBy(i => (cls(i), ids(i)))
+                val pIds = new Array[Long](n)
+                val pCodes = new Array[Byte](n * mWidth)
+                val ranges = new java.util.HashMap[Int, Array[Int]]()
+                var i = 0
+                while (i < n) {
+                  val src = order(i)
+                  pIds(i) = ids(src)
+                  System.arraycopy(codeBuf(src), 0, pCodes, i * mWidth, mWidth)
+                  val c = cls(src)
+                  val r = ranges.get(c)
+                  if (r == null) ranges.put(c, Array(i, 1)) else r(1) += 1
+                  i += 1
+                }
+                Iterator(new PackedCodes(mWidth, pIds, pCodes, ranges))
+              }
+            }.collect()
+        })
   }
 
   /** Work bound for the single-thread resident scan, in ADC lookups

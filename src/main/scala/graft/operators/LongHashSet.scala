@@ -10,9 +10,10 @@ package graft.operators
   * once per (snapshot, tag) and memoized next to the sorted array, which
   * stays the representation for intersections and small sets. */
 final class LongHashSet private (keys: Array[Long], mask: Int,
-                                 hasZero: Boolean, val size: Int) {
+                                 hasZero: Boolean, val size: Int)
+    extends graft.Residency.Sized {
 
-  /** Resident bytes (for the engine's residency registry). */
+  /** Resident bytes (what the residency ledger counts). */
   val bytes: Long = keys.length * 8L + 32L
 
   def contains(k: Long): Boolean = {

@@ -8,10 +8,9 @@ import org.apache.spark.sql.DataFrame
   * [[Sq8Store]] (the DEGRADED tier: measured recall ~0.980 vs the
   * sq16/exact 0.995 on the bench's near-equidistant gauge, explicitly
   * opt-in because it changes served scores). */
-trait RefineStore extends Serializable {
+trait RefineStore extends Serializable with graft.Residency.Sized {
   def dim: Int
   def size: Long
-  def bytes: Long
   /** Global row index of a surrogate id, or -1 when absent. */
   def lookup(id: Long): Long
   /** Dequantized vector of global row `row` into a CALLER-OWNED buffer
@@ -101,7 +100,7 @@ final class Sq16Store private[operators] (
 
   def size: Long = segStarts(segStarts.length - 1)
 
-  /** Resident heap bytes (for the engine's residency registry). */
+  /** Resident heap bytes (what the residency ledger counts). */
   val bytes: Long = {
     var b = 64L
     var i = 0

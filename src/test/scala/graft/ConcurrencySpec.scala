@@ -322,4 +322,60 @@ class ConcurrencySpec extends SparkSpec {
     assert(fast.get._1.sortBy(_._2).toSeq == slow.sortBy(_._2).toSeq)
     assert(fast.get._1.nonEmpty)
   }
+
+  test("residency ledger: concurrent admissions never overshoot a line or the total") {
+    // every line at once, each estimate a third of its line cap, so
+    // each line seats at most three and the five lines' thirds together
+    // outgrow the total: both kinds of contention occur. The invariants
+    // are checked INSIDE each build, while its reservation is held.
+    val violations = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val admitted = new java.util.concurrent.atomic.AtomicInteger()
+    val busy = new java.util.concurrent.atomic.AtomicInteger()
+    def check(where: String): Unit = {
+      Residency.Lines.foreach { l =>
+        val u = Residency.used(l)
+        if (u > l.lineMax) violations.add(s"$where: ${l.name} used $u > ${l.lineMax}")
+      }
+      val t = Residency.usedTotal
+      if (t > Residency.TotalMaxBytes)
+        violations.add(s"$where: total $t > ${Residency.TotalMaxBytes}")
+    }
+    val start = new CountDownLatch(1)
+    val threads = (0 until 12).map { i =>
+      new Thread(() => {
+        start.await()
+        (0 until 20).foreach { j =>
+          val line = Residency.Lines((i + j) % Residency.Lines.length)
+          Residency.admit(line, line.lineMax / 3, Long.MaxValue) {
+            check(s"thread $i build $j")
+            Thread.sleep(5)
+            new Object
+          } match {
+            case Residency.Admitted(v) =>
+              admitted.incrementAndGet()
+              Residency.release(v)
+            case _ => busy.incrementAndGet()
+          }
+        }
+      })
+    }
+    start.countDown()
+    val errs = runAll(threads)
+    assert(errs.isEmpty, errs)
+    import scala.jdk.CollectionConverters._
+    assert(violations.isEmpty, violations.asScala.take(5).mkString("; "))
+    assert(admitted.get > 0 && busy.get > 0, s"admitted=$admitted busy=$busy")
+    // a build that throws returns its reservation
+    val line = Residency.PqCodes
+    val est = line.lineMax / 4
+    var usedInside = -1L
+    intercept[IllegalStateException] {
+      Residency.admit(line, est) {
+        usedInside = Residency.used(line)
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(usedInside >= est)
+    assert(Residency.used(line) <= usedInside - est)
+  }
 }

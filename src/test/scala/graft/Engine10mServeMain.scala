@@ -84,10 +84,10 @@ object Engine10mServeMain {
     //    Spark-job-scale, so the sample shrinks accordingly.
     val pqM = 8 // must match the build() call above
     val codesResident =
-      n * (pqM + 16L) <= graft.operators.IvfPq.PackedCodesMaxBytes
+      n * (pqM + 16L) <= Residency.PqCodes.handleMax
     val sq16Resident =
       graft.operators.Sq16Store.estimateBytes(n, dim) <=
-        GraftEngine.Sq16MaxBytesDefault
+        Residency.Refine.handleMax
     // "v" + decimal seq digits, the generator's id shape: the pool
     // estimate the engine itself computes (n·12 + Σ|id| + 32)
     val sumIdLen: Long = {
@@ -100,7 +100,7 @@ object Engine10mServeMain {
       s
     }
     val poolResident =
-      n * 12L + sumIdLen + 32L <= GraftEngine.IdPoolMaxBytesDefault
+      n * 12L + sumIdLen + 32L <= Residency.IdsTags.handleMax
     val expectPlan = !(poolResident && codesResident)
     val servePath = if (expectPlan) "plan-fallback" else "head+pqtail"
     val nLat = if (expectPlan) 20 else qs.length
@@ -128,7 +128,7 @@ object Engine10mServeMain {
     // REFINED cold: the one-time sq16 store build (sidecar read →
     // per-partition sorted runs → k-way merge), then steady-state
     // refined latency — isolates the bench's refined_cold row. Past the
-    // store's OWN budget (n·(8+2·dim) > Sq16MaxBytesDefault, ~32.5M at
+    // store's OWN budget (n·(8+2·dim) > Refine.handleMax, ~32.5M at
     // dim 128 under the 8 GiB default — reachable only via a smaller
     // per-deployment budget while the pool still admits)
     // the plan fallback reranks in sq16 mode off the sidecar TABLE —

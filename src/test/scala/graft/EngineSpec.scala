@@ -1413,15 +1413,14 @@ class EngineSpec extends SparkSpec {
     eng.add(mkRecords(recs))
     eng.build("t1", "idx", nlist = 2)
     val qv = Array.fill(4)(rng.nextFloat())
-    // hog the ENTIRE JVM-global id-pool budget with a fake handle: the
+    // hog the ENTIRE ids-tags line with a fake handle: the
     // pool/tag residents are denied by CONTENTION (their own est fits
     // the per-handle bound), so the rows tier cannot serve
-    val hog = new Object
-    GraftEngine.registerResident(hog, GraftEngine.IdPoolGlobalMaxBytes)
+    val hog = Residency.hog(Residency.IdsTags, Residency.IdsTags.lineMax)
     try {
       assert(eng.searchRowsFilteredTraced("t1", "idx", Array((1L, qv)), 5,
         "L2", 2, Seq("all")).isEmpty)
-    } finally GraftEngine.unregisterResident(hog)
+    } finally Residency.release(hog)
     // contender released: the SAME engine must now build and serve —
     // a memoized contention denial would refuse the handle forever
     // (the warm-boot hazard: a fresh instance first touched while the
@@ -1434,6 +1433,29 @@ class EngineSpec extends SparkSpec {
     val resFree = free.searchRowsFilteredTraced("t1", "idx", Array((1L, qv)),
       5, "L2", 2, Seq("all"))
     assert(resFree.isDefined && served.get._1.toSeq == resFree.get._1.toSeq)
+  }
+
+  test("pq-codes contention denial is retried on the same engine, not memoized by the handle") {
+    val root = Files.createTempDirectory("engine_pqcontention").toString
+    val eng = new GraftEngine(spark, root)
+    val rng = new scala.util.Random(71)
+    val recs = (0 until 60).map(i =>
+      (s"v$i", Seq.fill(8)(rng.nextFloat()), null: String, Seq.empty[String], 100L))
+    eng.add(mkRecords(recs))
+    eng.build("t1", "idx", nlist = 3, algo = "IVF_PQ", pqM = 2, pqK = 16)
+    val qs = Array((1L, Array.fill(8)(rng.nextFloat())))
+    // hog the ENTIRE pq-codes line: the codes' own estimate fits the
+    // per-handle cap, so the first touch is denied by CONTENTION
+    val hog = Residency.hog(Residency.PqCodes, Residency.PqCodes.lineMax)
+    val (rowsBusy, trBusy) =
+      try eng.searchRowsTraced("t1", "idx", qs, 5, "L2", nprobe = 2)
+      finally Residency.release(hog)
+    assert(trBusy.path == "plan-fallback", trBusy)
+    // contender released: the SAME engine (and so the same memoized
+    // IVF_PQ handle) must now admit the codes and serve resident
+    val (rows, tr) = eng.searchRowsTraced("t1", "idx", qs, 5, "L2", nprobe = 2)
+    assert(tr.path == "head+pqtail", tr)
+    assert(rows.toSeq == rowsBusy.toSeq)
   }
 
   test("warmServing materializes resident handles for every built index, skips unbuilt") {
@@ -1547,7 +1569,7 @@ class EngineSpec extends SparkSpec {
     // the store collect is the most expensive residency decision, so it
     // must run LAST: an engine whose id-pool budget denies every pool
     // can never serve rows-native, and building (and permanently
-    // registering, against the JVM-global sq16 line) a store no call
+    // registering, on the ledger's refine line) a store no call
     // will use would strand its bytes for the engine's lifetime
     val root = Files.createTempDirectory("engine_sq16order").toString
     val eng = new GraftEngine(spark, root)
@@ -1559,21 +1581,21 @@ class EngineSpec extends SparkSpec {
     val qv = Array.fill(8)(rng.nextFloat())
     // pool-denied engine, default sq16 budget (which WOULD admit this
     // tiny store): the refined call must fall back WITHOUT touching the
-    // global sq16 registry
+    // ledger's refine line
     val denied = new GraftEngine(spark, root, idPoolMaxBytes = 16L)
-    val before = GraftEngine.sq16BytesUsed
+    val before = Residency.used(Residency.Refine)
     val (rowsP, trP) = denied.searchRowsTraced("t1", "idx", Array((1L, qv)),
       5, "L2", nprobe = 2, refine = 5)
     assert(trP.path == "plan-fallback", trP)
     assert(rowsP.nonEmpty)
-    // the registry is WEAK-keyed, so a GC during the call can only
+    // the ledger is WEAK-keyed, so a GC during the call can only
     // SHRINK the global count (earlier suites' dropped stores) — the
     // property under test is that this call added nothing
-    assert(GraftEngine.sq16BytesUsed <= before,
+    assert(Residency.used(Residency.Refine) <= before,
       "a pool-denied refined call must not build the sq16 store")
     // sanity: an unconstrained engine on the same root serves refined
     // rows-native — a path that REQUIRES the store, so its trace proves
-    // the build ran (no global-count assert here: the weak registry can
+    // the build ran (no global-count assert here: the weak ledger can
     // shrink concurrently, making any numeric delta flaky)
     val free = new GraftEngine(spark, root)
     val (rowsF, trF) = free.searchRowsTraced("t1", "idx", Array((1L, qv)),
@@ -1663,8 +1685,8 @@ class EngineSpec extends SparkSpec {
     // ADVICE r10: a global-line sq16 denial is NOT memoized (headroom
     // can return), so an opted-in engine admits + memoizes the u8
     // store; a later refined call that retries and admits sq16 must
-    // EVICT the u8 store's registry share — otherwise both stores stay
-    // counted against Sq16GlobalMaxBytes for the snapshot's lifetime
+    // EVICT the u8 store's ledger share — otherwise both stores stay
+    // counted on the refine line for the snapshot's lifetime
     // while orElse never serves the u8 one again.
     val root = Files.createTempDirectory("engine_u8upgrade").toString
     val builder = new GraftEngine(spark, root)
@@ -1679,28 +1701,27 @@ class EngineSpec extends SparkSpec {
     // fresh opted-in engine with a per-store budget that ADMITS sq16 —
     // only the GLOBAL line will deny it
     val eng = new GraftEngine(spark, root, refineU8Fallback = true)
-    val base = GraftEngine.sq16BytesUsed
+    val base = Residency.used(Residency.Refine)
     // consume global headroom down to a sliver that straddles the two
     // estimates: sq16 denied on the global line, u8 still admitted
-    val blocker = new Object
-    GraftEngine.registerSq16(blocker,
-      GraftEngine.Sq16GlobalMaxBytes - base - est16 + 1)
+    val blocker = Residency.hog(Residency.Refine,
+      Residency.Refine.lineMax - base - est16 + 1)
     val usedWithU8 =
       try {
         val (rows8, tr8) = eng.searchRowsTraced("t1", "idx",
           Array((1L, qv)), 5, "L2", nprobe = 2, refine = 5)
         assert(tr8.path == "head+pqtail-refined-u8", tr8)
         assert(rows8.length == 5)
-        GraftEngine.sq16BytesUsed
-      } finally GraftEngine.unregisterSq16(blocker)
+        Residency.used(Residency.Refine)
+      } finally Residency.release(blocker)
     // headroom restored: the retry must admit sq16 AND return the u8
-    // share (weak-registry GC can only shrink the count further, so the
+    // share (weak-ledger GC can only shrink the count further, so the
     // net-growth bound below is one-sided safe)
     val (rows16, tr16) = eng.searchRowsTraced("t1", "idx",
       Array((1L, qv)), 5, "L2", nprobe = 2, refine = 5)
     assert(tr16.path == "head+pqtail-refined", tr16)
     assert(rows16.length == 5)
-    val after = GraftEngine.sq16BytesUsed
+    val after = Residency.used(Residency.Refine)
     assert(after - base <= est16,
       s"u8 store not evicted on sq16 upgrade: base=$base withU8=$usedWithU8 " +
         s"after=$after est16=$est16 est8=$est8")
