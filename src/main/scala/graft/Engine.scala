@@ -53,6 +53,7 @@ object GraftEngine {
     * which would let build commit headDirty=0 and hide the fresh rows. */
   private val manifestLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
+  private[graft] val json = new com.fasterxml.jackson.databind.ObjectMapper()
   private def lockFor(root: String, tenant: String, index: String): Object =
     manifestLocks.getOrElseUpdate(s"$root#$tenant/$index", new Object)
 
@@ -86,17 +87,10 @@ class GraftEngine(spark: SparkSession, root: String,
                   pqServeMaxLookupsMT: Long =
                     graft.operators.IvfPq.PqServeMaxLookupsMT,
                   sq16MaxBytes: Long = Residency.Refine.handleMax,
-                  refineU8Fallback: Boolean = false,
-                  sq16IgnoreSidecar: Boolean = false) {
+                  refineU8Fallback: Boolean = false) {
   // idPoolMaxBytes / sq16MaxBytes: this engine's per-handle caps on the
   // ids-tags and refine lines of the residency ledger ([[Residency]]);
   // the line caps and the JVM total are shared by every engine.
-  // sq16IgnoreSidecar: serve the refine store via the wave-fetch build
-  // even when the snapshot carries the binary segment sidecar — an
-  // attribution/ops escape hatch (A/B the two load paths on one
-  // corpus, or serve a snapshot whose sidecar is suspected corrupt
-  // without deleting it). Content is bit-identical either way
-  // (Sq16StoreSpec pins the roundtrip); only load cost differs.
 
   private def withManifestLock[T](tenant: String, index: String)(f: => T): T =
     GraftEngine.lockFor(root, tenant, index).synchronized(f)
@@ -142,7 +136,58 @@ class GraftEngine(spark: SparkSession, root: String,
     * current — the overwhelmingly common read regime of a serving index. */
   case class Manifest(epoch: Long, buildWatermark: Long, algo: String = "IVF_FLAT",
                       nVectors: Long = 0L, version: Long = 0L, metric: String = "L2",
-                      headDirty: Int = 1)
+                      headDirty: Int = 1) {
+    /** The on-disk form: [[manifest]] and [[exportSnapshot]] write it,
+      * [[Manifest.parse]] reads it back. */
+    def render: String =
+      s"""{"epoch": $epoch, "buildWatermark": $buildWatermark, "algo": "$algo", "nVectors": $nVectors, "version": $version, "metric": "$metric", "headDirty": $headDirty}"""
+  }
+
+  object Manifest {
+    /** Strict read of [[Manifest.render]]'s output. Truncated or
+      * malformed JSON, and a missing or non-integer `epoch`,
+      * `buildWatermark`, `nVectors` or `version`, throw an
+      * IllegalStateException naming the file and the field — a damaged
+      * manifest must never read as epoch 0 / version 0 (an empty or
+      * "not found" index). Absent legacy fields keep their documented
+      * defaults: `algo` IVF_FLAT, `metric` unknown (""), which skips
+      * the cross-metric gate rather than asserting a metric the build
+      * may not have used, and `headDirty` 1 (correctness over speed). */
+    def parse(file: String, text: String): Manifest = {
+      import com.fasterxml.jackson.core.{JsonProcessingException, JsonToken}
+      import com.fasterxml.jackson.databind.JsonNode
+      def corrupt(why: String): Nothing =
+        throw new IllegalStateException(s"corrupt manifest $file: $why")
+      val p = GraftEngine.json.createParser(text)
+      val fields = scala.collection.mutable.Map.empty[String, JsonNode]
+      try {
+        if (p.nextToken() != JsonToken.START_OBJECT) corrupt("not a JSON object")
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val name = p.currentName()
+          p.nextToken()
+          fields(name) = p.readValueAsTree[JsonNode]()
+        }
+        if (p.nextToken() != null) corrupt("trailing content after the object")
+      } catch {
+        case e: JsonProcessingException =>
+          val at = Option(p.currentName()).fold("its start")(n => s"field '$n'")
+          corrupt(s"truncated or malformed JSON at $at: ${e.getOriginalMessage}")
+      }
+      def long(k: String, legacy: Option[Long] = None): Long = fields.get(k) match {
+        case Some(v) if v.isIntegralNumber && v.canConvertToLong => v.asLong
+        case Some(v) => corrupt(s"field '$k' is not an integer: $v")
+        case None => legacy.getOrElse(corrupt(s"missing field '$k'"))
+      }
+      def string(k: String, legacy: String): String = fields.get(k) match {
+        case Some(v) if v.isTextual => v.asText
+        case Some(v) => corrupt(s"field '$k' is not a string: $v")
+        case None => legacy
+      }
+      Manifest(long("epoch"), long("buildWatermark"), string("algo", "IVF_FLAT"),
+        long("nVectors"), long("version"), string("metric", ""),
+        long("headDirty", Some(1L)).toInt)
+    }
+  }
 
   private def manifestFile(tenant: String, index: String) =
     Paths.get(s"${indexPath(tenant, index)}/manifest.json")
@@ -155,7 +200,7 @@ class GraftEngine(spark: SparkSession, root: String,
 
   /** Parsed-manifest memo keyed by the file's (mtime, size): the wire
     * serving path reads the manifest on EVERY call, and a steady-state
-    * search was paying a full read + ~10 regex scans per query — with
+    * search was paying a full read + parse per query — with
     * per-call disk reads also riding this host's external IO storms
     * straight into serving tails. Freshness stays anchored to the
     * filesystem (the atomic-rename commit bumps mtime, so ANY writer —
@@ -183,7 +228,7 @@ class GraftEngine(spark: SparkSession, root: String,
       case None =>
         // metric = "" (unknown), NOT the case-class "L2" default: a
         // never-built index has recorded no metric, so validation must
-        // be skipped — the same convention as an absent field below
+        // be skipped — the same convention as an absent field in parse
         Manifest(0L, Long.MinValue, "IVF_FLAT", metric = "")
       case Some(a) =>
         val key = f.toString
@@ -191,24 +236,7 @@ class GraftEngine(spark: SparkSession, root: String,
         if (hit != null && hit._1 == a.lastModifiedTime && hit._2 == a.size)
           hit._3
         else {
-          val s = Files.readString(f)
-          def field(k: String): Long =
-            raw""""$k"\s*:\s*(-?\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L)
-          val algo = raw""""algo"\s*:\s*"([A-Z_]+)"""".r.findFirstMatchIn(s)
-            .map(_.group(1)).getOrElse("IVF_FLAT")
-          // absent field (pre-upgrade manifest) → UNKNOWN, not L2:
-          // defaulting to a concrete metric would reject the index's true
-          // metric and accept the wrong one; unknown skips validation.
-          // [A-Za-z0-9_]: "L2" has a digit — a letters-only class silently
-          // parsed every L2-built manifest as unknown-metric, wiping the
-          // cross-metric gate for the most common build
-          val metric = raw""""metric"\s*:\s*"([A-Za-z0-9_]+)"""".r.findFirstMatchIn(s)
-            .map(_.group(1)).getOrElse("")
-          // absent field (older manifest) → assume dirty: correctness over speed
-          val headDirty = raw""""headDirty"\s*:\s*(\d+)""".r.findFirstMatchIn(s)
-            .map(_.group(1).toInt).getOrElse(1)
-          val m = Manifest(field("epoch"), field("buildWatermark"), algo,
-            field("nVectors"), field("version"), metric, headDirty)
+          val m = Manifest.parse(f.toString, Files.readString(f))
           manifestMemo.put(key, (a.lastModifiedTime, a.size, m))
           m
         }
@@ -220,10 +248,8 @@ class GraftEngine(spark: SparkSession, root: String,
     Files.createDirectories(f.getParent)
     // write-then-atomic-rename: the manifest swap IS the commit
     val tmp = Paths.get(f.toString + ".tmp")
-    Files.writeString(tmp,
-      s"""{"epoch": ${m.epoch}, "buildWatermark": ${m.buildWatermark}, "algo": "${m.algo}", "nVectors": ${m.nVectors}, "version": ${m.version}, "metric": "${m.metric}", "headDirty": ${m.headDirty}}""",
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
+    Files.writeString(tmp, m.render, StandardOpenOption.CREATE,
+      StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
     Files.move(tmp, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     // a same-JVM writer must never serve even one stale read off the memo
@@ -697,150 +723,372 @@ class GraftEngine(spark: SparkSession, root: String,
     require(queries.map(_._1).distinct.length == queries.length,
       "searchRows batch contains duplicate query_ids")
     val m = manifest(tenant, index)
-    val metricU = metric.toUpperCase(java.util.Locale.ROOT)
-    // `refine` is an IVF_PQ semantic (the plan ignores it elsewhere —
-    // other algos' tails already score exactly); the refined rows tier
-    // additionally needs the resident SQ16 rerank store
-    val wantRefine = refine > 0 && m.algo == "IVF_PQ"
-    // cheap manifest gates FIRST: a dirty-head HNSW/oversized index must
-    // not pay the bounded head-read job just to fall back
-    val algoFlat = (m.algo == "IVF_FLAT" || m.algo == "FLAT") &&
-      m.nVectors <= RowsServeMaxRows
-    // IVF_PQ rows tier: codes are M bytes/vec (32× under raw floats at
-    // dim 128 / M 8), so the driver-RESIDENT tier reaches corpora whose
-    // float vectors never could (10M codes ≈ 240 MB packed). Gated on
-    // ACTUAL residency — memoized per snapshot version; a too-big codes
-    // table memoizes None once and every later call short-circuits here.
-    val algoPqBase = m.algo == "IVF_PQ" && m.nVectors <= RowsServeMaxRows &&
-      pqIndexOf(tenant, index, m).packedDriver.isDefined
-    // HNSW rows tier: graphs hold their full vectors, so residency
-    // economics match IvfFlat's (bound checked before collect, memoized
-    // per snapshot version — a too-big graph set memoizes None once)
-    val hnswGraphs: Option[Array[(Int, graft.operators.Hnsw.Graph)]] =
-      if (m.algo == "HNSW" && m.nVectors <= RowsServeMaxRows)
-        hnswGraphsOf(tenant, index, m)
-      else None
-    val algoHnsw = hnswGraphs.isDefined
-    // the rows tier resolves result surrogates through the resident
-    // [[IdPool]] — a pool past its measured-byte budgets memoizes None
-    // and the call keeps the DataFrame plan (broadcast-join id resolve)
-    val poolOpt: Option[IdPool] =
-      if (algoFlat || algoPqBase || algoHnsw) idPoolOf(tenant, index, m)
-      else None
-    // the sq16 store collect is multi-GB at 10M+, so it is the LAST
-    // residency decision — only after the packed codes AND the pool's
-    // cheap byte estimate have admitted. Building it earlier could
-    // strand gigabytes in a registered store no call would ever use
-    // when the pool then denies (pool and store admissions are
-    // independent budget lines: long user ids can deny a pool whose
-    // corpus the store budget happily admits). When the sq16 store is
-    // budget-denied and the deployment opted into the degraded tier,
-    // the half-size u8 store is tried against the same budget line.
-    val refineStoreOpt: Option[graft.operators.RefineStore] =
-      if (wantRefine && algoPqBase && poolOpt.isDefined)
-        sq16StoreOf(tenant, index, m).orElse(
-          if (refineU8Fallback) sq8StoreOf(tenant, index, m) else None)
-      else None
-    val algoPq = algoPqBase &&
-      (!wantRefine || refineStoreOpt.isDefined) // refined serving needs the store
-    val algoOk = (algoFlat || algoPq || algoHnsw) && poolOpt.isDefined
-    // the head path below is exact-scan; the reference's RESP serving has
-    // the same shape (fresh delta head scanned per query,
-    // DeltaVectorIndex.cs:76-122)
-    val headState: Option[HeadServeState] =
-      if (!algoOk) None
-      else if (m.headDirty == 0) Some(HeadServeState.empty)
+    rowsTierOf(tenant, index, m, refine = refine > 0, filtered = false, hnsw = true)
+      .flatMap(serveRows(tenant, index, _, queries, k, metric, nprobe, refine,
+        tags = Nil, tTrace0))
+      .getOrElse {
+        val rows = planRows(tenant, index, m, queries, k, metric, nprobe, refine,
+          tags = Nil)
+        (rows, SearchTrace("plan-fallback", None, Nil,
+          headLive = -1, headMasked = -1, tailRows = -1,
+          totalMicros = (System.nanoTime() - tTrace0) / 1000L))
+      }
+  }
+
+  /** Tag-filtered zero-job serving: [[searchRowsTraced]] with the F1
+    * conjunctive tag filter applied DURING the scan, not by delegating to
+    * the batch cascade — the reference filters in-process inside its scan
+    * loop at ~no extra cost (VectorCommandSet.cs:461-480), and before this
+    * path a FILTER wire miss paid the ~20-action batch plan, an invisible
+    * latency cliff next to the ~5 ms unfiltered miss.
+    *
+    * Parity with the batch plan's filter-then-top-k (spec-pinned): the
+    * filter tags resolve to a sorted surrogate set from the snapshot's own
+    * tag table (intersection for the conjunction), the packed scan skips
+    * non-members before scoring, head candidates check their OWN head tags
+    * (head wins over snapshot for re-written ids, exactly the batch
+    * `tagsOf` union), and masking/tie-breaks are unchanged. IVF_PQ
+    * indexes serve through the resident byte-code tier (same allowed-set
+    * kernel hook, plan-exact metric folds). Returns None when the
+    * index/batch is outside the rows-tier gates (HNSW, non-resident PQ,
+    * oversized corpus or head, top-k budget) — the caller keeps the
+    * always-correct distributed filtered plan. */
+  /** `hnswBeam = true` opts a FILTERED call on an HNSW index into the
+    * FILTER-DURING-BEAM semantics ([[graft.operators.Hnsw.searchLocalRowsFiltered]])
+    * — a NEW capability flag, not reference parity: the default keeps
+    * the batch plan's fetch-k×10-then-filter (which the reference's
+    * post-filter shape demands and the F1 parity spec pins). Beam mode
+    * is resident-only; outside the rows gates the call falls back to
+    * the plan's post-filter semantics (callers see that in the trace). */
+  private[graft] def searchRowsFilteredTraced(
+      tenant: String, index: String,
+      queries: Array[(Long, Array[Float])], k: Int,
+      metric: String, nprobe: Int, tags: Seq[String],
+      hnswBeam: Boolean = false)
+      : Option[(Array[(Long, Int, String, Double)], SearchTrace)] = {
+    if (tags.isEmpty)
+      return Some(searchRowsTraced(tenant, index, queries, k, metric, nprobe))
+    val tTrace0 = System.nanoTime()
+    require(queries.map(_._1).distinct.length == queries.length,
+      "searchRows batch contains duplicate query_ids")
+    val m = manifest(tenant, index)
+    rowsTierOf(tenant, index, m, refine = false, filtered = true, hnsw = hnswBeam)
+      .flatMap(serveRows(tenant, index, _, queries, k, metric, nprobe, refine = 0,
+        tags, tTrace0))
+  }
+
+  /** The resident tail a rows-tier call scans: the inverted lists (looked
+    * up at scan time — their floats admit inside the scan kernel), the
+    * PQ byte codes plus the store a refined call reranks with, or the
+    * HNSW graphs. */
+  private sealed trait RowsTail
+  private case object FlatTail extends RowsTail
+  private case class PqTail(
+      idx: graft.operators.IvfPq.Index,
+      store: Option[graft.operators.RefineStore]) extends RowsTail
+  private case class HnswTail(
+      graphs: Array[(Int, graft.operators.Hnsw.Graph)]) extends RowsTail
+
+  /** What [[rowsTierOf]] admitted for one index: the tail, the id pool
+    * that resolves its result surrogates, and (filtered calls only) the
+    * tag index. */
+  private case class RowsTier(m: Manifest, tail: RowsTail, pool: IdPool,
+                              tagIdx: Map[String, Array[Long]])
+
+  /** The rows tier's admission gates, in the one order that serving and
+    * [[warmServing]] share. Cheap manifest gates come first, so a
+    * dirty-head or oversized index never pays a residency job just to
+    * fall back; each residency decision runs only after every earlier one
+    * admitted, so a later denial never strands an earlier one's bytes
+    * (pool and store admissions are independent ledger lines: long user
+    * ids can deny a pool whose corpus the refine line happily admits):
+    *   1. algo and row gate (manifest only);
+    *   2. the algo's resident tail: PQ byte codes (M bytes/vec, so the
+    *      tier reaches corpora whose floats never could) or HNSW graphs;
+    *   3. the [[IdPool]] that resolves result surrogates;
+    *   4. refined PQ calls: the sq16 rerank store, the multi-GB collect
+    *      at 10M+ (or, opted in via `refineU8Fallback`, its half-size u8
+    *      copy); filtered calls: the tag index.
+    * HNSW serves filtered calls only in beam mode (`hnsw`). Every
+    * residency is memoized per snapshot version, so a denied handle
+    * short-circuits later calls. None = the call takes the plan. */
+  private def rowsTierOf(tenant: String, index: String, m: Manifest,
+                         refine: Boolean, filtered: Boolean,
+                         hnsw: Boolean): Option[RowsTier] = {
+    val tail: Option[RowsTail] =
+      if (m.nVectors > RowsServeMaxRows) None
+      else m.algo match {
+        case "IVF_FLAT" | "FLAT" => Some(FlatTail)
+        case "IVF_PQ" =>
+          val pq = pqIndexOf(tenant, index, m)
+          pq.packedDriver.map(_ => PqTail(pq, None))
+        case "HNSW" if hnsw => hnswGraphsOf(tenant, index, m).map(HnswTail)
+        case _ => None
+      }
+    for {
+      t0 <- tail
+      pool <- idPoolOf(tenant, index, m)
+      t <- t0 match {
+        case PqTail(pq, _) if refine =>
+          sq16StoreOf(tenant, index, m)
+            .orElse(if (refineU8Fallback) sq8StoreOf(tenant, index, m) else None)
+            .map(store => PqTail(pq, Some(store)))
+        case _ => Some(t0)
+      }
+      tagIdx <-
+        if (filtered) tagSurrogatesOf(tenant, index, m)
+        else Some(Map.empty[String, Array[Long]])
+    } yield RowsTier(m, t, pool, tagIdx)
+  }
+
+  /** Serves one admitted call: fresh-head state → head-work and top-k
+    * buffer gates → one tail scan (with the filter's allowed set) → one
+    * head merge. None when the head or the batch is outside the tier's
+    * budgets, or a filtered scan cannot run resident. The head path is
+    * exact-scan; the reference's RESP serving has the same shape (fresh
+    * delta head scanned per query, DeltaVectorIndex.cs:76-122). */
+  private def serveRows(tenant: String, index: String, tier: RowsTier,
+                        queries: Array[(Long, Array[Float])], k: Int,
+                        metric: String, nprobe: Int, refine: Int,
+                        tags: Seq[String], tTrace0: Long)
+      : Option[(Array[(Long, Int, String, Double)], SearchTrace)] = {
+    val m = tier.m
+    val refineStore = tier.tail match {
+      case PqTail(_, store) => store
+      case _ => None
+    }
+    val headState =
+      if (m.headDirty == 0) Some(HeadServeState.empty)
       else headStateOf(tenant, index, m)
-    val dim = queries.headOption.map(_._2.length).getOrElse(0)
-    // scan-work gate counts the FULL head (tombstone-only heads still
-    // mask-scan), and the over-fetch k is bounded below before sizing
-    val headWork = headState.map(hs =>
-      queries.length.toLong * hs.maskSurrogates.size * dim)
-      .getOrElse(Long.MaxValue)
-    // only ids that exist in the TAIL can mask tail rows — fresh adds
-    // never do, so they must not inflate the per-query over-fetch
-    val kTail = headState.map(k + _.maskInTail).getOrElse(k)
-    // refined calls over-fetch the plan's ADC cut (k·refine post-mask, so
-    // + maskInTail pre-mask) — the top-k buffer budget prices that fetch
-    val tailFetch =
-      if (wantRefine)
-        k.toLong * refine + headState.map(_.maskInTail).getOrElse(0)
-      else kTail.toLong
-    val servable = algoOk && headState.isDefined &&
+    headState.filter { hs =>
+      val dim = queries.headOption.map(_._2.length).getOrElse(0)
+      // scan-work gate counts the FULL head (tombstone-only heads still
+      // mask-scan)
+      val headWork = queries.length.toLong * hs.maskSurrogates.size * dim
+      // only ids that exist in the TAIL can mask tail rows — fresh adds
+      // never do, so they must not inflate the per-query over-fetch;
+      // refined calls over-fetch the plan's ADC cut (k·refine post-mask,
+      // so + maskInTail pre-mask) — the top-k buffer budget prices that
+      val tailFetch =
+        if (refineStore.isDefined) k.toLong * refine + hs.maskInTail
+        else (k + hs.maskInTail).toLong
       headWork <= IvfFlat.DriverServeMaxScanElems &&
-      queries.length.toLong * tailFetch <= 4_000_000L // top-k buffer budget
-    if (!servable) {
-      import spark.implicits._
-      val qDf = queries.toSeq
-        .map { case (qid, qv) => (qid, qv.toSeq) }.toDF("query_id", "qvec")
-      // refined fallback reranks in sq16 mode when the snapshot carries
-      // the sidecar, so plan and rows tiers give the SAME refined answer
-      // regardless of which served; pre-sidecar snapshots rerank exact
-      val store16 =
-        if (refine > 0 && m.algo == "IVF_PQ" &&
-            sq16TableExists(tenant, index, m)) "sq16"
-        else "exact"
-      val rows = search(tenant, index, qDf, k, metric, nprobe,
-          refine = refine, refineStore = store16).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3)))
-      (rows, SearchTrace("plan-fallback", None, Nil,
-        headLive = -1, headMasked = -1, tailRows = -1,
-        totalMicros = (System.nanoTime() - tTrace0) / 1000L))
-    } else {
+        queries.length.toLong * tailFetch <= 4_000_000L // top-k buffer budget
+    }.flatMap { hs =>
       // same metric gate as searchImpl (FLAT tails are metric-agnostic)
       require(m.algo == "FLAT" || m.metric.isEmpty ||
           metric.equalsIgnoreCase(m.metric),
         s"index built with metric=${m.metric}; cannot search with metric=$metric")
-      val hs = headState.get
-      val idMap = poolOpt.get
+      val metricU = metric.toUpperCase(java.util.Locale.ROOT)
       // over-fetch from the tail so masking re-written/tombstoned ids
       // can't leave a query short (≤ maskInTail tail rows can be masked)
-      val tailRows =
-        if (algoPq && wantRefine)
+      val kTail = k + hs.maskInTail
+      val tailOpt = tier.tail match {
+        case PqTail(pq, Some(store)) =>
           // ADC cut (plan-identical: mask, then top k·refine by raw ADC
-          // order) reranked EXACTLY against the resident SQ16 store —
+          // order) reranked EXACTLY against the resident refine store —
           // rows return already masked, true-metric scored, cut at k
-          pqTailRowsRefined(tenant, index, m, queries, metricU, k, refine,
-            nprobe, hs, refineStoreOpt.get)
-        else if (algoPq) pqTailRows(tenant, index, m, queries, metricU, kTail, nprobe)
-        else if (algoHnsw)
-          // per-graph fetch AND global cut at kTail = k + maskInTail —
-          // exactly the plan's kFetch over-fetch, so masking backfills
-          // identically on both tiers
-          graft.operators.Hnsw.searchLocalRows(hnswGraphs.get, queries, kTail)
-        else IvfFlat.searchLocalRows(
-          tailIndexOf(tenant, index, m), queries, metric, kTail, nprobe, spark)
-      val byQuery = tailRows.groupBy(_._1)
-      val rows = queries.flatMap { case (qid, qv) =>
-        val tailCands = byQuery.getOrElse(qid, Array.empty)
-          .filter(r => !hs.maskSurrogates.contains(r._3))
-          .map(r => (r._3, r._4)) // (surrogate, score)
-        // exact head scan — the same kernel both tiers score with
-        val headCands = Array.tabulate(hs.liveVecs.length) { i =>
-          (hs.liveSurrogates(i),
-            IvfFlat.candidateScore(metricU, qv, hs.liveVecs(i)))
-        }
-        // merged bounded top-k, same (score desc, surrogate asc) order as
-        // the DataFrame plan's TopKHits — exact-tie parity included
-        (tailCands ++ headCands)
-          .sortBy { case (surr, s) => (-s, surr) }.take(k).zipWithIndex
-          .map { case ((surr, s), r) =>
-            (qid, r + 1, hs.liveIdOf.getOrElse(surr, idMap(surr)), s)
-          }
+          Some(pqTailRowsRefined(tenant, index, m, pq, queries, metricU, k,
+            refine, nprobe, hs, store))
+        case _ if tags.isEmpty =>
+          scanTail(tenant, index, tier, queries, metric, kTail, nprobe, AllowAll)
+        case _ =>
+          filteredTail(tenant, index, tier, queries, metric, kTail, nprobe, tags)
       }
-      (rows, SearchTrace(
-        if (algoPq && wantRefine)
-          refineStoreOpt.get.kind match {
-            case "u8" => "head+pqtail-refined-u8"
-            case _ => "head+pqtail-refined"
-          }
-        else if (algoPq) "head+pqtail"
-        else if (algoHnsw) "head+hnswtail"
-        else "head+tail", None, Nil,
-        headLive = hs.liveVecs.length, headMasked = hs.maskSurrogates.size,
-        tailRows = tailRows.length,
-        totalMicros = (System.nanoTime() - tTrace0) / 1000L))
+      tailOpt.map { tailRows =>
+        val byQuery = tailRows.groupBy(_._1)
+        val rows = queries.flatMap { case (qid, qv) =>
+          val tailCands = byQuery.getOrElse(qid, Array.empty)
+            .filter(r => !hs.maskSurrogates.contains(r._3))
+            .map(r => (r._3, r._4)) // (surrogate, score)
+          // exact head scan — the same kernel both tiers score with. The
+          // head predicate: every filter tag on the row's OWN head tags
+          // (vacuous unfiltered)
+          val headCands = hs.liveVecs.indices.iterator
+            .filter(i => tags.forall(t => hs.liveTags(i).contains(t)))
+            .map(i => (hs.liveSurrogates(i),
+              IvfFlat.candidateScore(metricU, qv, hs.liveVecs(i))))
+          // merged bounded top-k, same (score desc, surrogate asc) order as
+          // the DataFrame plan's TopKHits — exact-tie parity included
+          (tailCands ++ headCands)
+            .sortBy { case (surr, s) => (-s, surr) }.take(k).zipWithIndex
+            .map { case ((surr, s), r) =>
+              (qid, r + 1, hs.liveIdOf.getOrElse(surr, tier.pool(surr)), s)
+            }
+        }
+        val tailName = tier.tail match {
+          case PqTail(_, Some(store)) if store.kind == "u8" => "pqtail-refined-u8"
+          case PqTail(_, Some(_)) => "pqtail-refined"
+          case PqTail(_, None) => "pqtail"
+          case HnswTail(_) => "hnswtail"
+          case FlatTail => "tail"
+        }
+        val filterName =
+          if (tags.isEmpty) ""
+          else if (tier.tail.isInstanceOf[HnswTail]) "-filtered-beam"
+          else "-filtered"
+        (rows, SearchTrace(s"head+$tailName$filterName", None, Nil,
+          headLive = hs.liveVecs.length, headMasked = hs.maskSurrogates.size,
+          tailRows = tailRows.length,
+          totalMicros = (System.nanoTime() - tTrace0) / 1000L))
+      }
     }
+  }
+
+  /** A filter's resolved membership for the scan kernels: a sorted
+    * surrogate array, plus a [[graft.operators.LongHashSet]] and/or
+    * per-part row bitmaps for large tags. All null = unfiltered; bitmaps
+    * alone (the multi-tag AND) can only scan the resident tier. */
+  private case class AllowedSet(sorted: Array[Long],
+                                hash: graft.operators.LongHashSet,
+                                bits: Array[Array[Long]])
+  private val AllowAll = AllowedSet(null, null, null)
+
+  /** One tail scan per algo, at `kTail` per query. None only when a
+    * filtered scan cannot run resident (PQ over its scan bounds or
+    * non-resident, bitmap-only inverted lists non-resident) — the caller
+    * then keeps the distributed filtered plan. */
+  private def scanTail(tenant: String, index: String, tier: RowsTier,
+                       queries: Array[(Long, Array[Float])], metric: String,
+                       kTail: Int, nprobe: Int,
+                       allowed: AllowedSet): Option[Array[(Long, Int, Long, Double)]] =
+    tier.tail match {
+      case FlatTail =>
+        Option(IvfFlat.searchLocalRowsPath(tailIndexOf(tenant, index, tier.m),
+          queries, metric, kTail, nprobe, spark, forceDistributed = false,
+          allowedSorted = allowed.sorted, allowedHash = allowed.hash,
+          allowedBits = allowed.bits,
+          residentOnly = allowed.sorted == null && allowed.bits != null))
+      case PqTail(pq, _) =>
+        pqTailRows(tenant, index, tier.m, pq, queries,
+          metric.toUpperCase(java.util.Locale.ROOT), kTail, nprobe, allowed)
+      case HnswTail(graphs) =>
+        // per-graph fetch AND global cut at kTail = k + maskInTail —
+        // exactly the plan's kFetch over-fetch, so masking backfills
+        // identically on both tiers. Filtered = beam mode: members-only
+        // beam over the resident graphs — k members come back whenever
+        // reachable, where the parity post-filter keeps at most the
+        // members surviving the unfiltered k×10 cut
+        Some(
+          if (allowed eq AllowAll)
+            graft.operators.Hnsw.searchLocalRows(graphs, queries, kTail)
+          else graft.operators.Hnsw.searchLocalRowsFiltered(graphs, queries,
+            kTail, efSearch = 50, allowedSorted = allowed.sorted,
+            allowedHash = allowed.hash))
+    }
+
+  /** The filtered tail: resolves the tag conjunction to an
+    * [[AllowedSet]] and scans once with it (bitmap AND first for
+    * multi-large-tag filters, then the array path). */
+  private def filteredTail(tenant: String, index: String, tier: RowsTier,
+                           queries: Array[(Long, Array[Float])], metric: String,
+                           kTail: Int, nprobe: Int,
+                           tags: Seq[String]): Option[Array[(Long, Int, Long, Double)]] = {
+    val m = tier.m
+    val lists = tags.map(t => tier.tagIdx.getOrElse(t, Array.empty[Long]))
+    // conjunctive allowed set: intersect per-tag lists, smallest first —
+    // cost |smallest| × (T-1) binary searches, driver-local. The
+    // single-tag case (the common wire shape) serves the MEMOIZED
+    // array directly: a per-call copy of a half-corpus tag list is
+    // milliseconds at 10M, pure waste when there is nothing to
+    // intersect (callers never mutate the allowed set).
+    // lazy: the multi-large-tag bitmap path below must not pay this
+    // intersection at all — that is the point of the bitmaps
+    lazy val allowed: Array[Long] =
+      if (lists.exists(_.isEmpty)) Array.empty[Long]
+      else if (lists.lengthCompare(1) == 0) lists.head
+      else {
+        val sorted = lists.sortBy(_.length)
+        val rest = sorted.tail
+        sorted.head.filter(sg => rest.forall(arr =>
+          java.util.Arrays.binarySearch(arr, sg) >= 0))
+      }
+    // per-part surrogate ids of a resident tail (graphs have no parts;
+    // non-resident floats scan distributed)
+    def residentIds: Option[Array[Array[Long]]] = tier.tail match {
+      case PqTail(pq, _) => pq.packedDriver.map(_.map(_.ids))
+      case FlatTail => tailIndexOf(tenant, index, m).packedDriver.map(_.map(_.ids))
+      case HnswTail(_) => None
+    }
+    // Multi-LARGE-tag fast path: a per-call intersection of T sorted
+    // arrays costs |smallest| × (T−1) binary searches — ~10⁸ probes
+    // per call for two half-corpus tags at 10M rows. When every tag
+    // is large and the tail is resident, AND the MEMOIZED per-tag
+    // row-position bitmaps instead: one pass over nRows/64 longs per
+    // extra tag (~160k word-ANDs at 10M), per call, zero allocation
+    // beyond the combined bitmap. Budget denial of any per-tag
+    // structure, a non-resident tail, or an over-work batch falls
+    // back to the array path below — spec-pinned result-identical.
+    val multiBits: Option[Array[Array[Long]]] =
+      if (tags.lengthCompare(1) > 0 &&
+          lists.forall(_.length >= HashAllowedMinEntries))
+        residentIds.flatMap { partsIds =>
+          val per = tags.zip(lists).map { case (t, arr) =>
+            // a hash set speeds the ONE-TIME bitmap construction but
+            // is never probed again on this path — building (and
+            // permanently registering ~16 B/entry against the shared
+            // id-pool budget) one per conjunction tag would retain
+            // hundreds of MB at 10M just to save a single build pass.
+            // Reuse a set a single-tag call already memoized; else the
+            // construction binary-searches the sorted array
+            val hs = tagHashSetCache
+              .get(s"$tenant/$index/v${m.version}#$t").flatten.orNull
+            tagRowBitsOf(tenant, index, m, t, partsIds, hs, sorted = arr)
+          }
+          if (per.exists(_ == null)) None
+          else Some(per.reduce(GraftEngine.andBits))
+        }
+      else None
+    multiBits.flatMap { bits =>
+      if (!bits.exists(part => part.exists(_ != 0L))) Some(Array.empty[(Long, Int, Long, Double)])
+      else scanTail(tenant, index, tier, queries, metric, kTail, nprobe,
+        AllowedSet(null, null, bits))
+    }.orElse {
+      // large single-tag allowed sets get a memoized open-addressing
+      // membership set: the sorted array costs ~5-7 cache-missing tree
+      // levels PER PROBED ROW at half-corpus sizes, the probe chain 1-2.
+      // Small multi-tag intersections are per-call arrays — building a
+      // set per call would cost more than it saves, so they stay on
+      // binary search.
+      val allowedHash: graft.operators.LongHashSet =
+        if (tags.lengthCompare(1) == 0 &&
+            allowed.length >= HashAllowedMinEntries)
+          tagHashSetOf(tenant, index, m, tags.head, allowed)
+        else null
+      // same gate again, one level better: when the tail is RESIDENT,
+      // pre-resolve the membership into per-part row bitmaps once per
+      // (snapshot, tag) — the scan then tests a sequential bit instead
+      // of probing any table at all. Gated on the tag SIZE, not on the
+      // hash set having been admitted: a budget-denied set falls back
+      // to sorted-array construction inside tagRowBitsOf, and the
+      // bitmap still serves (it is ~100× smaller than the set)
+      val allowedBits: Array[Array[Long]] =
+        if (tags.lengthCompare(1) != 0 ||
+            allowed.length < HashAllowedMinEntries) null
+        else residentIds.map(tagRowBitsOf(tenant, index, m, tags.head, _,
+          allowedHash, sorted = allowed)).orNull
+      if (allowed.isEmpty) Some(Array.empty[(Long, Int, Long, Double)])
+      else scanTail(tenant, index, tier, queries, metric, kTail, nprobe,
+        AllowedSet(allowed, allowedHash, allowedBits))
+    }
+  }
+
+  /** The distributed plan's answer for a rows call outside the rows
+    * gates, collected in the rows shape. A refined call reranks with
+    * [[refineStoreFor]]'s store, so plan and rows tiers give the SAME
+    * refined answer whichever one served. */
+  private def planRows(tenant: String, index: String, m: Manifest,
+                       queries: Array[(Long, Array[Float])], k: Int,
+                       metric: String, nprobe: Int, refine: Int,
+                       tags: Seq[String]): Array[(Long, Int, String, Double)] = {
+    import spark.implicits._
+    val base = queries.toSeq
+      .map { case (qid, qv) => (qid, qv.toSeq) }.toDF("query_id", "qvec")
+    val qDf = if (tags.isEmpty) base
+      else base.withColumn("filter_tags", typedLit(tags))
+    search(tenant, index, qDf, k, metric, nprobe, refine = refine,
+        refineStore = refineStoreFor(tenant, index, m)).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3)))
   }
 
   /** PQ tail for the rows serving tier: zero-job ADC scan over the
@@ -852,20 +1100,29 @@ class GraftEngine(spark: SparkSession, root: String,
     * double op mirrors the plan's kernels exactly (vector_unit UDF,
     * concat-pad, vector_dot accumulation), so tier parity is bit-level —
     * spec-pinned including exact ties. Folds are strictly monotone per
-    * query, so folding AFTER the local top-k preserves ranks/ties. */
+    * query, so folding AFTER the local top-k preserves ranks/ties.
+    * The engine's constructor bound, not the compiled-in default,
+    * governs every PQ rows path. Unfiltered, an over-bound batch takes
+    * the distributed ADC plan. That plan has no filter hook, so a
+    * filtered call serves ONLY from the resident byte-code tier: None
+    * (over-budget batch or non-resident codes) keeps the caller's
+    * distributed filtered plan instead of throwing at serve time (the r7
+    * ADVICE failure: a filtered batch past PqServeMaxLookupsMT hit the
+    * unfiltered fallback's require). */
   private def pqTailRows(tenant: String, index: String, m: Manifest,
+                         pq: graft.operators.IvfPq.Index,
                          queries: Array[(Long, Array[Float])],
-                         metricU: String, kTail: Int,
-                         nprobe: Int): Array[(Long, Int, Long, Double)] = {
-    val pqIdx = pqIndexOf(tenant, index, m)
-    val (tq, fold) = pqFoldedQueries(tenant, index, m, pqIdx, queries, metricU)
-    // the engine's constructor bound, not the compiled-in default — the
-    // same knob must govern all three PQ rows paths (unfiltered here,
-    // refined, filtered); an over-bound batch takes the distributed ADC
-    // plan, which is always legal unfiltered
-    graft.operators.IvfPq.searchLocalRowsPath(pqIdx, tq, kTail, nprobe,
-        spark, mtBound = pqServeMaxLookupsMT)
-      .map { case (qid, rank, surr, s) => (qid, rank, surr, fold(qid, s)) }
+                         metricU: String, kTail: Int, nprobe: Int,
+                         allowed: AllowedSet): Option[Array[(Long, Int, Long, Double)]] = {
+    val (tq, fold) = pqFoldedQueries(tenant, index, m, pq, queries, metricU)
+    val rows =
+      if (allowed eq AllowAll)
+        Some(graft.operators.IvfPq.searchLocalRowsPath(pq, tq, kTail, nprobe,
+          spark, mtBound = pqServeMaxLookupsMT))
+      else graft.operators.IvfPq.searchResidentRows(pq, tq, kTail, nprobe,
+        mtBound = pqServeMaxLookupsMT, allowedSorted = allowed.sorted,
+        allowedHash = allowed.hash, allowedBits = allowed.bits)
+    rows.map(_.map { case (qid, rank, surr, s) => (qid, rank, surr, fold(qid, s)) })
   }
 
   /** Refined PQ tail for the rows tier — the zero-job twin of the plan's
@@ -891,11 +1148,11 @@ class GraftEngine(spark: SparkSession, root: String,
   }
 
   private def pqTailRowsRefined(tenant: String, index: String, m: Manifest,
+                                pqIdx: graft.operators.IvfPq.Index,
                                 queries: Array[(Long, Array[Float])],
                                 metricU: String, k: Int, refine: Int,
                                 nprobe: Int, hs: HeadServeState,
                                 store: graft.operators.RefineStore): Array[(Long, Int, Long, Double)] = {
-    val pqIdx = pqIndexOf(tenant, index, m)
     val (tq, _) = pqFoldedQueries(tenant, index, m, pqIdx, queries, metricU)
     // the cut is Long-guarded, but + maskInTail can still wrap a cut
     // near Int.MaxValue back negative — keep the whole sum guarded
@@ -931,27 +1188,6 @@ class GraftEngine(spark: SparkSession, root: String,
       reranked.sortBy { case (surr, s) => (-s, surr) }.take(k).zipWithIndex
         .map { case ((surr, s), r) => (qid, r + 1, surr, s) }
     }.toArray
-  }
-
-  /** Filtered variant of [[pqTailRows]]: the distributed ADC plan has no
-    * filter hook, so this serves ONLY from the resident byte-code tier —
-    * None (over-budget batch or non-resident codes) tells the caller to
-    * keep the distributed filtered plan instead of throwing at serve
-    * time (the r7 ADVICE failure: a filtered batch past
-    * PqServeMaxLookupsMT hit the unfiltered fallback's require). */
-  private def pqTailRowsFiltered(tenant: String, index: String, m: Manifest,
-                                 queries: Array[(Long, Array[Float])],
-                                 metricU: String, kTail: Int, nprobe: Int,
-                                 allowedSorted: Array[Long],
-                                 allowedHash: graft.operators.LongHashSet,
-                                 allowedBits: Array[Array[Long]]): Option[Array[(Long, Int, Long, Double)]] = {
-    val pqIdx = pqIndexOf(tenant, index, m)
-    val (tq, fold) = pqFoldedQueries(tenant, index, m, pqIdx, queries, metricU)
-    graft.operators.IvfPq.searchResidentRows(pqIdx, tq, kTail, nprobe,
-        mtBound = pqServeMaxLookupsMT,
-        allowedSorted = allowedSorted, allowedHash = allowedHash,
-        allowedBits = allowedBits)
-      .map(_.map { case (qid, rank, surr, s) => (qid, rank, surr, fold(qid, s)) })
   }
 
   /** Metric transform + score fold shared by the PQ rows tiers: COSINE
@@ -995,233 +1231,6 @@ class GraftEngine(spark: SparkSession, root: String,
       i = 0
       while (i < a.length) { out(i) = (a(i) / n).toFloat; i += 1 }
       out
-    }
-  }
-
-  /** Tag-filtered zero-job serving: [[searchRowsTraced]] with the F1
-    * conjunctive tag filter applied DURING the scan, not by delegating to
-    * the batch cascade — the reference filters in-process inside its scan
-    * loop at ~no extra cost (VectorCommandSet.cs:461-480), and before this
-    * path a FILTER wire miss paid the ~20-action batch plan, an invisible
-    * latency cliff next to the ~5 ms unfiltered miss.
-    *
-    * Parity with the batch plan's filter-then-top-k (spec-pinned): the
-    * filter tags resolve to a sorted surrogate set from the snapshot's own
-    * tag table (intersection for the conjunction), the packed scan skips
-    * non-members before scoring, head candidates check their OWN head tags
-    * (head wins over snapshot for re-written ids, exactly the batch
-    * `tagsOf` union), and masking/tie-breaks are unchanged. IVF_PQ
-    * indexes serve through the resident byte-code tier (same allowed-set
-    * kernel hook, plan-exact metric folds). Returns None when the
-    * index/batch is outside the rows-tier gates (HNSW, non-resident PQ,
-    * oversized corpus or head, top-k budget) — the caller keeps the
-    * always-correct distributed filtered plan. */
-  /** `hnswBeam = true` opts a FILTERED call on an HNSW index into the
-    * FILTER-DURING-BEAM semantics ([[graft.operators.Hnsw.searchLocalRowsFiltered]])
-    * — a NEW capability flag, not reference parity: the default keeps
-    * the batch plan's fetch-k×10-then-filter (which the reference's
-    * post-filter shape demands and the F1 parity spec pins). Beam mode
-    * is resident-only; outside the rows gates the call falls back to
-    * the plan's post-filter semantics (callers see that in the trace). */
-  private[graft] def searchRowsFilteredTraced(
-      tenant: String, index: String,
-      queries: Array[(Long, Array[Float])], k: Int,
-      metric: String, nprobe: Int, tags: Seq[String],
-      hnswBeam: Boolean = false)
-      : Option[(Array[(Long, Int, String, Double)], SearchTrace)] = {
-    if (tags.isEmpty)
-      return Some(searchRowsTraced(tenant, index, queries, k, metric, nprobe))
-    val tTrace0 = System.nanoTime()
-    require(queries.map(_._1).distinct.length == queries.length,
-      "searchRows batch contains duplicate query_ids")
-    val m = manifest(tenant, index)
-    val metricU = metric.toUpperCase(java.util.Locale.ROOT)
-    val algoFlat = (m.algo == "IVF_FLAT" || m.algo == "FLAT") &&
-      m.nVectors <= RowsServeMaxRows
-    // filtered PQ serving piggybacks the resident byte-code tier (the
-    // scan kernel takes the same sorted allowed set)
-    val algoPq = m.algo == "IVF_PQ" && m.nVectors <= RowsServeMaxRows &&
-      pqIndexOf(tenant, index, m).packedDriver.isDefined
-    // beam-filtered HNSW: resident graphs + the same tag index
-    val hnswGraphsB: Option[Array[(Int, graft.operators.Hnsw.Graph)]] =
-      if (hnswBeam && m.algo == "HNSW" && m.nVectors <= RowsServeMaxRows)
-        hnswGraphsOf(tenant, index, m)
-      else None
-    val algoHnswBeam = hnswGraphsB.isDefined
-    val poolOpt: Option[IdPool] =
-      if (algoFlat || algoPq || algoHnswBeam) idPoolOf(tenant, index, m)
-      else None
-    // the resident tag index shares the id pool's budgets; denial keeps
-    // the distributed filtered plan
-    val tagIdxOpt: Option[Map[String, Array[Long]]] =
-      if ((algoFlat || algoPq || algoHnswBeam) && poolOpt.isDefined)
-        tagSurrogatesOf(tenant, index, m)
-      else None
-    val algoOk = (algoFlat || algoPq || algoHnswBeam) && poolOpt.isDefined &&
-      tagIdxOpt.isDefined
-    val headState: Option[HeadServeState] =
-      if (!algoOk) None
-      else if (m.headDirty == 0) Some(HeadServeState.empty)
-      else headStateOf(tenant, index, m)
-    val dim = queries.headOption.map(_._2.length).getOrElse(0)
-    val headWork = headState.map(hs =>
-      queries.length.toLong * hs.maskSurrogates.size * dim)
-      .getOrElse(Long.MaxValue)
-    val kTail = headState.map(k + _.maskInTail).getOrElse(k)
-    val servable = algoOk && headState.isDefined &&
-      headWork <= IvfFlat.DriverServeMaxScanElems &&
-      queries.length.toLong * kTail <= 4_000_000L
-    if (!servable) None
-    else {
-      require(m.algo == "FLAT" || m.metric.isEmpty ||
-          metric.equalsIgnoreCase(m.metric),
-        s"index built with metric=${m.metric}; cannot search with metric=$metric")
-      val hs = headState.get
-      val tagIdx = tagIdxOpt.get
-      val lists = tags.map(t => tagIdx.getOrElse(t, Array.empty[Long]))
-      // conjunctive allowed set: intersect per-tag lists, smallest first —
-      // cost |smallest| × (T-1) binary searches, driver-local. The
-      // single-tag case (the common wire shape) serves the MEMOIZED
-      // array directly: a per-call copy of a half-corpus tag list is
-      // milliseconds at 10M, pure waste when there is nothing to
-      // intersect (callers never mutate the allowed set).
-      // lazy: the multi-large-tag bitmap path below must not pay this
-      // intersection at all — that is the point of the bitmaps
-      lazy val allowed: Array[Long] =
-        if (lists.exists(_.isEmpty)) Array.empty[Long]
-        else if (lists.lengthCompare(1) == 0) lists.head
-        else {
-          val sorted = lists.sortBy(_.length)
-          val rest = sorted.tail
-          sorted.head.filter(sg => rest.forall(arr =>
-            java.util.Arrays.binarySearch(arr, sg) >= 0))
-        }
-      val idMap = poolOpt.get
-      // Multi-LARGE-tag fast path: a per-call intersection of T sorted
-      // arrays costs |smallest| × (T−1) binary searches — ~10⁸ probes
-      // per call for two half-corpus tags at 10M rows. When every tag
-      // is large and the tail is resident, AND the MEMOIZED per-tag
-      // row-position bitmaps instead: one pass over nRows/64 longs per
-      // extra tag (~160k word-ANDs at 10M), per call, zero allocation
-      // beyond the combined bitmap. Budget denial of any per-tag
-      // structure, a non-resident tail, or an over-work batch falls
-      // back to the array path below — spec-pinned result-identical.
-      val multiBitsOpt: Option[Array[Array[Long]]] =
-        if (tags.lengthCompare(1) > 0 && !algoHnswBeam &&
-            lists.forall(_.length >= HashAllowedMinEntries)) {
-          val partsIdsOpt: Option[Array[Array[Long]]] =
-            if (algoPq)
-              pqIndexOf(tenant, index, m).packedDriver.map(_.map(_.ids))
-            else tailIndexOf(tenant, index, m).packedDriver.map(_.map(_.ids))
-          partsIdsOpt.flatMap { partsIds =>
-            val per = tags.zip(lists).map { case (t, arr) =>
-              // a hash set speeds the ONE-TIME bitmap construction but
-              // is never probed again on this path — building (and
-              // permanently registering ~16 B/entry against the shared
-              // id-pool budget) one per conjunction tag would retain
-              // hundreds of MB at 10M just to save a single build pass.
-              // Reuse a set a single-tag call already memoized; else the
-              // construction binary-searches the sorted array
-              val hs = tagHashSetCache
-                .get(s"$tenant/$index/v${m.version}#$t").flatten.orNull
-              tagRowBitsOf(tenant, index, m, t, partsIds, hs, sorted = arr)
-            }
-            if (per.exists(_ == null)) None
-            else Some(per.reduce(GraftEngine.andBits))
-          }
-        } else None
-      val tailRowsViaBits: Option[Array[(Long, Int, Long, Double)]] =
-        multiBitsOpt.flatMap { bits =>
-          if (!bits.exists(part => part.exists(_ != 0L)))
-            Some(Array.empty[(Long, Int, Long, Double)])
-          else if (algoPq)
-            pqTailRowsFiltered(tenant, index, m, queries, metricU, kTail,
-              nprobe, allowedSorted = null, allowedHash = null,
-              allowedBits = bits)
-          else IvfFlat.searchResidentRows(tailIndexOf(tenant, index, m),
-            queries, metric, kTail, nprobe, spark, allowedBits = bits)
-        }
-      val tailRowsOpt: Option[Array[(Long, Int, Long, Double)]] =
-        tailRowsViaBits.map(Option(_)).getOrElse {
-        // large single-tag allowed sets get a memoized open-addressing
-        // membership set: the sorted array costs ~5-7 cache-missing tree
-        // levels PER PROBED ROW at half-corpus sizes, the probe chain 1-2.
-        // Small multi-tag intersections are per-call arrays — building a
-        // set per call would cost more than it saves, so they stay on
-        // binary search.
-        val allowedHash: graft.operators.LongHashSet =
-          if (tags.lengthCompare(1) == 0 &&
-              allowed.length >= HashAllowedMinEntries)
-            tagHashSetOf(tenant, index, m, tags.head, allowed)
-          else null
-        // same gate again, one level better: when the tail is RESIDENT,
-        // pre-resolve the membership into per-part row bitmaps once per
-        // (snapshot, tag) — the scan then tests a sequential bit instead
-        // of probing any table at all. Gated on the tag SIZE, not on the
-        // hash set having been admitted: a budget-denied set falls back
-        // to sorted-array construction inside tagRowBitsOf, and the
-        // bitmap still serves (it is ~100× smaller than the set)
-        val allowedBits: Array[Array[Long]] =
-          if (algoHnswBeam || tags.lengthCompare(1) != 0 ||
-              allowed.length < HashAllowedMinEntries) null // graphs: no parts
-          else if (algoPq)
-            tagRowBitsOf(tenant, index, m, tags.head,
-              pqIndexOf(tenant, index, m).packedDriver.get.map(_.ids),
-              allowedHash, sorted = allowed)
-          else tailIndexOf(tenant, index, m).packedDriver match {
-            case Some(parts) =>
-              tagRowBitsOf(tenant, index, m, tags.head, parts.map(_.ids),
-                allowedHash, sorted = allowed)
-            case None => null // non-resident floats: distributed scan path
-          }
-        if (allowed.isEmpty) Some(Array.empty[(Long, Int, Long, Double)])
-        else if (algoHnswBeam)
-          // beam-filtered semantics: members-only beam over the resident
-          // graphs — k members come back whenever reachable, where the
-          // parity post-filter keeps at most the members surviving the
-          // unfiltered k×10 cut
-          Some(graft.operators.Hnsw.searchLocalRowsFiltered(
-            hnswGraphsB.get, queries, kTail, efSearch = 50,
-            allowedSorted = allowed, allowedHash = allowedHash))
-        else if (algoPq)
-          // resident-only: None (probed work past the scan bounds) falls
-          // back to the distributed filtered plan via the early return —
-          // the PQ distributed plan has no filter hook, so over-budget
-          // filtered batches MUST NOT reach its unfiltered fallback
-          pqTailRowsFiltered(tenant, index, m, queries, metricU, kTail,
-            nprobe, allowedSorted = allowed, allowedHash = allowedHash,
-            allowedBits = allowedBits)
-        else Some(IvfFlat.searchLocalRows(tailIndexOf(tenant, index, m),
-          queries, metric, kTail, nprobe, spark, allowedSorted = allowed,
-          allowedHash = allowedHash, allowedBits = allowedBits))
-      }
-      if (tailRowsOpt.isEmpty) return None
-      val tailRows = tailRowsOpt.get
-      val byQuery = tailRows.groupBy(_._1)
-      val rows = queries.flatMap { case (qid, qv) =>
-        val tailCands = byQuery.getOrElse(qid, Array.empty)
-          .filter(r => !hs.maskSurrogates.contains(r._3))
-          .map(r => (r._3, r._4))
-        val headCands = Array.range(0, hs.liveVecs.length).iterator
-          .filter { i =>
-            val ht = hs.liveTags(i); tags.forall(t => ht.contains(t))
-          }
-          .map(i => (hs.liveSurrogates(i),
-            IvfFlat.candidateScore(metricU, qv, hs.liveVecs(i))))
-          .toArray
-        (tailCands ++ headCands)
-          .sortBy { case (surr, s) => (-s, surr) }.take(k).zipWithIndex
-          .map { case ((surr, s), r) =>
-            (qid, r + 1, hs.liveIdOf.getOrElse(surr, idMap(surr)), s)
-          }
-      }
-      Some((rows, SearchTrace(
-        if (algoHnswBeam) "head+hnswtail-filtered-beam"
-        else if (algoPq) "head+pqtail-filtered"
-        else "head+tail-filtered", None, Nil,
-        headLive = hs.liveVecs.length, headMasked = hs.maskSurrogates.size,
-        tailRows = tailRows.length,
-        totalMicros = (System.nanoTime() - tTrace0) / 1000L)))
     }
   }
 
@@ -1736,8 +1745,7 @@ class GraftEngine(spark: SparkSession, root: String,
                           m: Manifest): Option[graft.operators.Sq16Store] =
     Residency.memo(sq16StoreCache, s"$tenant/$index/v${m.version}") {
       val segDir = s"${snapDir(tenant, index, m)}/sq16/segments"
-      val useSidecar = !sq16IgnoreSidecar &&
-        graft.operators.Sq16Store.sidecarExists(segDir)
+      val useSidecar = graft.operators.Sq16Store.sidecarExists(segDir)
       val ndOpt = sq16StatsCache.getOrElseUpdate(
         s"$tenant/$index/v${m.version}", {
           if (useSidecar) {
@@ -1771,8 +1779,7 @@ class GraftEngine(spark: SparkSession, root: String,
           Residency.admit(Residency.Refine, est, sq16MaxBytes) {
             // segment sidecar when the snapshot carries it (sequential
             // file read, no Spark jobs); wave-fetch build for
-            // pre-sidecar snapshots (or when the deployment opts out via
-            // sq16IgnoreSidecar)
+            // pre-sidecar snapshots
             val store =
               if (useSidecar) graft.operators.Sq16Store.load(segDir)
               else {
@@ -1823,16 +1830,15 @@ class GraftEngine(spark: SparkSession, root: String,
     Files.isDirectory(
       Paths.get(s"${snapDir(tenant, index, m)}/sq16/codes"))
 
-  /** Refine-store choice for PLAN-path refined calls (the wire's
-    * WITH_META branch and any other direct [[search]] caller that wants
-    * tier parity): "sq16" when the snapshot carries the sidecar — the
-    * same dequantized floats the rows tier reranks with — else "exact"
-    * (pre-sidecar snapshots). Mirrors [[searchRowsTraced]]'s fallback. */
-  private[graft] def refineStoreFor(tenant: String, index: String): String = {
-    val m = manifest(tenant, index)
+  /** Refine-store choice for PLAN-path refined calls (the rows tier's
+    * fallback, the wire's WITH_META branch and any other direct
+    * [[search]] caller that wants tier parity): "sq16" when the snapshot
+    * carries the sidecar — the same dequantized floats the rows tier
+    * reranks with — else "exact" (pre-sidecar snapshots). */
+  private[graft] def refineStoreFor(tenant: String, index: String,
+                                    m: Manifest): String =
     if (m.algo == "IVF_PQ" && sq16TableExists(tenant, index, m)) "sq16"
     else "exact"
-  }
 
   // tag → sorted surrogate-id array for the FILTERED rows serving tier
   // (the reference keeps per-record tags in the same process heap it
@@ -2009,49 +2015,34 @@ class GraftEngine(spark: SparkSession, root: String,
       try {
         val m = manifest(tenant, index)
         if (m.version > 0) {
-          // force EVERY lazy the first serving call would pay, not just
-          // the big packed collects: clusterCounts is a corpus-wide
-          // groupBy job (~2.4 s at the 10M rung — measured as exactly
-          // the residue the r8 warm-boot bench row exposed when warm
-          // only touched packedDriver), centroidsLocal a small collect.
-          // The id pool warms AFTER the algo-specific residency checks,
-          // mirroring the serving path's codes → pool → store gate order
-          // (searchRowsTraced): a codes-denied PQ index or a graph-denied
-          // HNSW index can never serve rows-native, so warming its pool
-          // would strand bytes on the ledger's ids-tags line for a tier
-          // that will never run (ADVICE r9)
-          val rowsSized = m.nVectors <= RowsServeMaxRows
-          m.algo match {
-            case "IVF_PQ" =>
-              val pq = pqIndexOf(tenant, index, m)
-              pq.packedDriver
-              pq.centroidsLocal
-              pq.clusterCounts
-              pq.sizeStats
-              // refined-serving store — warmed under the SAME gates the
-              // serving path applies (store build is the last residency
-              // decision, after codes and pool admit): a pool-denied
-              // index can never serve rows-native, so warming its store
-              // would strand the bytes on the ledger's refine line
-              if (rowsSized && pq.packedDriver.isDefined &&
-                  idPoolOf(tenant, index, m).isDefined) {
-                if (sq16StoreOf(tenant, index, m).isEmpty && refineU8Fallback)
-                  sq8StoreOf(tenant, index, m)
-              }
-            case "HNSW" =>
-              // serving computes graphs only for rows-sized corpora; the
-              // same gate here keeps warm from paying a graph collect an
-              // oversized index would re-deny at serve time
-              if (rowsSized && hnswGraphsOf(tenant, index, m).isDefined)
-                idPoolOf(tenant, index, m)
-            case _ =>
+          // the serving gates decide what warms ([[rowsTierOf]], the same
+          // resolver every rows call runs): an index they deny can never
+          // serve rows-native, so warming its handles would strand bytes
+          // on the ledger (ADVICE r9). Then force EVERY lazy the first
+          // call's tail kernel would pay, not just the big packed
+          // collects: clusterCounts is a corpus-wide groupBy job (~2.4 s
+          // at the 10M rung — measured as exactly the residue the r8
+          // warm-boot bench row exposed when warm only touched
+          // packedDriver), centroidsLocal a small collect, the MIPS fold
+          // constant a parquet read on IP-built PQ indexes.
+          rowsTierOf(tenant, index, m, refine = false, filtered = false,
+              hnsw = true).foreach(_.tail match {
+            case FlatTail =>
               val tail = tailIndexOf(tenant, index, m)
               tail.packedDriver
               tail.centroidsLocal
               tail.clusterCounts
               tail.sizeStats
-              if (rowsSized) idPoolOf(tenant, index, m)
-          }
+            case PqTail(pq, _) =>
+              pq.centroidsLocal
+              pq.clusterCounts
+              pq.sizeStats
+              if (m.metric == "IP") mipsMaxSqOf(tenant, index, m)
+            case HnswTail(_) => ()
+          })
+          // refined calls' store: the resolver's last gate on PQ indexes
+          rowsTierOf(tenant, index, m, refine = true, filtered = false,
+            hnsw = true)
           ok += 1
         } else skipped += 1
       } catch {
@@ -2181,21 +2172,15 @@ class GraftEngine(spark: SparkSession, root: String,
     val snap = snapDir(tenant, index, m)
     copyTree(Paths.get(snap), Paths.get(s"$dest/snapshot"))
     Files.createDirectories(Paths.get(dest))
-    Files.writeString(Paths.get(s"$dest/manifest.json"),
-      s"""{"epoch": ${m.epoch}, "buildWatermark": ${m.buildWatermark}, "algo": "${m.algo}", "nVectors": ${m.nVectors}, "version": ${m.version}, "metric": "${m.metric}", "headDirty": ${m.headDirty}}""")
+    Files.writeString(Paths.get(s"$dest/manifest.json"), m.render)
   }
 
   /** Import an exported snapshot as this index's next version: the tail
     * serves the imported artifacts; local log rows newer than the imported
     * build watermark surface through the delta head as usual. */
   def importSnapshot(tenant: String, index: String, src: String): Unit = {
-    val s = Files.readString(Paths.get(s"$src/manifest.json"))
-    def field(k: String): Long =
-      raw""""$k"\s*:\s*(-?\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L)
-    val algo = raw""""algo"\s*:\s*"([A-Z_]+)"""".r.findFirstMatchIn(s)
-      .map(_.group(1)).getOrElse("IVF_FLAT")
-    val metric = raw""""metric"\s*:\s*"([A-Za-z_]+)"""".r.findFirstMatchIn(s)
-      .map(_.group(1)).getOrElse("L2")
+    val srcFile = s"$src/manifest.json"
+    val imported = Manifest.parse(srcFile, Files.readString(Paths.get(srcFile)))
     val m0 = manifest(tenant, index)
     val newVersion = m0.version + 1
     copyTree(Paths.get(s"$src/snapshot"),
@@ -2205,8 +2190,7 @@ class GraftEngine(spark: SparkSession, root: String,
     withManifestLock(tenant, index) {
       val mNow = manifest(tenant, index)
       writeManifest(tenant, index,
-        Manifest(mNow.epoch + 1, field("buildWatermark"), algo, field("nVectors"),
-          newVersion, metric, headDirty = 1))
+        imported.copy(epoch = mNow.epoch + 1, version = newVersion, headDirty = 1))
     }
     gcOldSnapshots(tenant, index, keep = newVersion - 1)
     evictStaleHandles(tenant, index, keep = newVersion - 1)
@@ -3472,18 +3456,9 @@ class GraftEngine(spark: SparkSession, root: String,
         // with default keys. A beam call lands here only when the
         // resident graphs/tag index are unavailable; the plan answer is
         // the documented post-filter fallback semantics.
-        import spark.implicits._
-        val base0 = Seq((queryId, qvec.toSeq)).toDF("query_id", "qvec")
-        val base = if (tags.isEmpty) base0
-          else base0.withColumn("filter_tags", typedLit(tags))
-        val store16 =
-          if (m.algo == "IVF_PQ" && sq16TableExists(tenant, index, m)) "sq16"
-          else "exact"
-        val rows = search(tenant, index, base, k, metric, nprobe,
-            refine = refine, refineStore = store16)
-          .collect()
-          .map(r => (r.getAs[Int]("rank"), r.getAs[String]("id"),
-            r.getAs[Double]("score")))
+        val rows = planRows(tenant, index, m, Array((queryId, qvec)), k, metric,
+            nprobe, refine, tags)
+          .map { case (_, r, id, s) => (r, id, s) }
         servingMissesOf(tenant, index).incrementAndGet()
         ("MISS", rows,
           SearchTrace("cache-miss", None, probes.map(_._1).toSeq,

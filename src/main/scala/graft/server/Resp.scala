@@ -581,7 +581,7 @@ final class RespServer(engine: GraftEngine, mgmt: Management,
           else base.withColumn("filter_tags", typedLit(r.filterTags))
         val rows = engine.search(r.tenant, r.index, qDf, r.k, metric,
             withMeta = true, refine = r.refine,
-            refineStore = engine.refineStoreFor(r.tenant, r.index)).collect()
+            refineStore = engine.refineStoreFor(r.tenant, r.index, m)).collect()
         val hits = rows.map(row => (row.getString(2), row.getDouble(3),
           Option(row.getString(4))))
         if (r.trace) writeArrayHeader(out, 2)

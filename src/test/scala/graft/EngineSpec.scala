@@ -1458,6 +1458,33 @@ class EngineSpec extends SparkSpec {
     assert(rows.toSeq == rowsBusy.toSeq)
   }
 
+  /** `f`'s result and the number of Spark jobs it submitted from this
+    * thread (its job group), counted once the listener bus has drained. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsDuring")
+    try {
+      val r = f
+      // the bus is private[spark]; its drain is public in bytecode
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      (r, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("warmServing materializes resident handles for every built index, skips unbuilt") {
     val root = Files.createTempDirectory("engine_warm").toString
     val eng = new GraftEngine(spark, root)
@@ -1468,18 +1495,67 @@ class EngineSpec extends SparkSpec {
     eng.build("t1", "idx", nlist = 2)
     eng.add(mkRecords(recs).withColumn("index_name", lit("pq")))
     eng.build("t1", "pq", nlist = 2, algo = "IVF_PQ", pqM = 2, pqK = 8)
+    eng.add(mkRecords(recs).withColumn("index_name", lit("pqip")))
+    eng.build("t1", "pqip", nlist = 2, metric = "IP", algo = "IVF_PQ",
+      pqM = 2, pqK = 8)
+    eng.add(mkRecords(recs).withColumn("index_name", lit("hnsw")))
+    eng.build("t1", "hnsw", nlist = 2, algo = "HNSW")
     eng.add(mkRecords(recs).withColumn("index_name", lit("unbuilt")))
     // a fresh engine over the same root: nothing memoized yet
     val cold = new GraftEngine(spark, root)
     val (ok, skipped) = cold.warmServing()
-    assert(ok == 2, s"($ok, $skipped)")
+    assert(ok == 4, s"($ok, $skipped)")
     assert(skipped == 1, s"($ok, $skipped)") // the unbuilt index
-    // post-warm calls serve rows-native immediately with correct results
+    // post-warm calls serve rows-native immediately with correct results,
+    // and submit no Spark job: warm-up paid every first-call cost
     val qs = Array((0L, Array.fill(4)(rng.nextFloat())))
-    val (rowsF, trF) = cold.searchRowsTraced("t1", "idx", qs, k = 3, nprobe = 2)
+    def firstCall(index: String, metric: String = "L2", refine: Int = 0) = {
+      val ((rows, tr), jobs) = jobsDuring(cold.searchRowsTraced("t1", index,
+        qs, k = 3, metric = metric, nprobe = 2, refine = refine))
+      assert(jobs == 0, s"$index (metric $metric, refine $refine): $jobs job(s), $tr")
+      (rows, tr)
+    }
+    val (rowsF, trF) = firstCall("idx")
     assert(trF.path == "head+tail" && rowsF.nonEmpty, trF)
-    val (rowsP, trP) = cold.searchRowsTraced("t1", "pq", qs, k = 3, nprobe = 2)
+    val (rowsP, trP) = firstCall("pq")
     assert(trP.path == "head+pqtail" && rowsP.nonEmpty, trP)
+    val (rowsR, trR) = firstCall("pq", refine = 2)
+    assert(trR.path == "head+pqtail-refined" && rowsR.nonEmpty, trR)
+    val (rowsI, trI) = firstCall("pqip", metric = "IP")
+    assert(trI.path == "head+pqtail" && rowsI.nonEmpty, trI)
+    val (rowsH, trH) = firstCall("hnsw")
+    assert(trH.path == "head+hnswtail" && rowsH.nonEmpty, trH)
+  }
+
+  test("a truncated manifest fails with an error naming the file and the field") {
+    val root = Files.createTempDirectory("engine_manifest_trunc").toString
+    val eng = new GraftEngine(spark, root)
+    eng.add(mkRecords(Seq(("a", Seq(1f, 0f), null, Seq.empty[String], 100L))))
+    eng.build("t1", "idx", nlist = 1)
+    val f = java.nio.file.Paths.get(s"$root/indexes/t1/idx/manifest.json")
+    val text = Files.readString(f)
+    assert(eng.manifest("t1", "idx").version == 1L)
+    // cut inside the "version" field's value: the commit point is torn
+    Files.writeString(f, text.take(text.indexOf("\"version\"") + 11))
+    val err = intercept[IllegalStateException](
+      new GraftEngine(spark, root).manifest("t1", "idx"))
+    assert(err.getMessage.contains(f.toString), err.getMessage)
+    assert(err.getMessage.contains("'version'"), err.getMessage)
+  }
+
+  test("a manifest without its version fails instead of reading as version 0") {
+    val root = Files.createTempDirectory("engine_manifest_field").toString
+    val eng = new GraftEngine(spark, root)
+    eng.add(mkRecords(Seq(("a", Seq(1f, 0f), null, Seq.empty[String], 100L))))
+    eng.build("t1", "idx", nlist = 1)
+    val f = java.nio.file.Paths.get(s"$root/indexes/t1/idx/manifest.json")
+    Files.writeString(f,
+      Files.readString(f).replaceAll("\"version\"\\s*:\\s*\\d+\\s*,\\s*", ""))
+    assert(!Files.readString(f).contains("version"))
+    val err = intercept[IllegalStateException](
+      new GraftEngine(spark, root).manifest("t1", "idx"))
+    assert(err.getMessage.contains(f.toString), err.getMessage)
+    assert(err.getMessage.contains("'version'"), err.getMessage)
   }
 
   test("id-pool budget denial: rows path falls back to the plan with identical results") {
