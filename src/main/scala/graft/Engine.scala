@@ -2310,15 +2310,10 @@ class GraftEngine(spark: SparkSession, root: String,
     * delete, and drops the resident maps outright: they must not outlive
     * the entries they cache, and the missing-dir fingerprint (0) would
     * otherwise collide with the pre-first-write stamp and let flushed
-    * in-heap entries keep serving. */
+    * in-heap entries keep serving. The billing counters survive. */
   def flushCache(tenant: String, index: String): Unit =
     withManifestLock(tenant, index) {
-      val key = s"$tenant/$index"
-      pendingEntryRows.remove(key)
-      pendingEntryCounts.remove(key)
-      pendingEntrySince.remove(key)
-      residentL0Cache.remove(key)
-      residentAliasCache.remove(key)
+      cacheStates.get(s"$tenant/$index").foreach(_.resetEntries())
       Seq(cacheEntriesPath(tenant, index), cacheAliasPath(tenant, index))
         .foreach(d => deleteTree(Paths.get(d)))
     }
@@ -2339,11 +2334,6 @@ class GraftEngine(spark: SparkSession, root: String,
   // as per-index hit/miss logs and must not pick this up
   private def evictionsPath(tenant: String, index: String) =
     s"$root/metrics_gc/$tenant/$index"
-
-  // (entries bytes, now) at the last quota sweep that freed nothing —
-  // see the populate path's rate-limit note
-  private val fruitlessSweepMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
 
   private def dirBytes(dir: String): Long = {
     val p = Paths.get(dir)
@@ -2376,13 +2366,13 @@ class GraftEngine(spark: SparkSession, root: String,
     * whole history — the 100×-serving-duration scale killer. Returns the
     * number of evicted entries.
     *
-    * Cache WRITE paths (populate, this compaction, the metrics fold) all
-    * serialize on the per-index manifest lock, so an appending thread
-    * can't slip a file set between the read and the swap. Concurrent
-    * READERS of the entry table during a swap are the caller's contract:
-    * searchCached materializes (localCheckpoint) everything it keeps, so
-    * engine calls are safe; external readers holding lazy plans over
-    * [[cacheEntries]] across a GC are not. */
+    * Cache WRITE paths ([[appendCacheEntries]], this compaction, the
+    * metrics fold) all serialize on the per-index manifest lock, so an
+    * appending thread can't slip a file set between the read and the
+    * swap. Concurrent READERS of the entry table during a swap are the
+    * caller's contract: searchCached materializes (localCheckpoint)
+    * everything it keeps, so engine calls are safe; external readers
+    * holding lazy plans over [[cacheEntries]] across a GC are not. */
   def compactCacheEntries(tenant: String, index: String, now: Long): Long = {
     val p = cacheEntriesPath(tenant, index)
     if (!Files.exists(Paths.get(p))) 0L
@@ -2392,8 +2382,7 @@ class GraftEngine(spark: SparkSession, root: String,
       // per key — identical to the entry searchCached's probe would serve
       // (its validity filter runs before its ranking window)
       val wNewest = Window.partitionBy("cache_key")
-        .orderBy(col("live").desc, col("written_at").desc,
-          xxhash64(to_json(col("hits"))))
+        .orderBy(col("live").desc +: entryWinnerOrder: _*)
       val counted = cacheEntries(tenant, index)
         .withColumn("live",
           col("epoch") === m.epoch && col("expires_at") > now)
@@ -2422,6 +2411,51 @@ class GraftEngine(spark: SparkSession, root: String,
       evicted
     }
   }
+
+  /** The entry table's winner order per cache_key, shared by the batch
+    * probe, the compaction and the resident reload: newest first, then a
+    * content hash, so same-second writes to one key (two queries sharing
+    * an L1/L2 key) resolve deterministically. */
+  private def entryWinnerOrder =
+    Seq(col("written_at").desc, xxhash64(to_json(col("hits"))))
+
+  /** The one entry-table writer: every append (the batch populate, the
+    * pending flush, prefetch) runs, under the per-index lock,
+    *  1. the CacheMemoryMb check (MemoryCacheStorage.cs:59-71) on
+    *     driver-side file sizes, no job;
+    *  2. at quota, a lazy sweep of stale/expired entries (the reference's
+    *     read-path expiry sweep). A sweep that freed nothing is memoized
+    *     until the table changes or `sweepWindow` of logical time passes
+    *     (entries can't expire faster than their TTL) — without this an
+    *     at-quota tenant pays a full-table compaction job per write;
+    *  3. still at quota: REJECT — the miss was served, it just isn't
+    *     cached. Otherwise `append` writes into the entry dir;
+    *  4. file-count GC: every append adds a file set and the per-call
+    *     probe scans all of them, so compaction past
+    *     [[CacheGcFileThreshold]] keeps the probe cost flat over time.
+    * Returns whether `append` ran. */
+  private def appendCacheEntries(tenant: String, index: String, now: Long,
+                                 quotaMb: Int, sweepWindow: Long)
+                                (append: String => Unit): Boolean =
+    withManifestLock(tenant, index) {
+      val dir = cacheEntriesPath(tenant, index)
+      val quotaBytes = quotaMb.toLong << 20
+      val st = cacheStateOf(tenant, index)
+      var cur = dirBytes(dir)
+      if (cur >= quotaBytes && !st.fruitlessSweep.exists {
+            case (sz, t) => sz == cur && now < t + sweepWindow }) {
+        compactCacheEntries(tenant, index, now)
+        cur = dirBytes(dir)
+        if (cur >= quotaBytes) st.fruitlessSweep = Some((cur, now))
+      }
+      val underQuota = cur < quotaBytes
+      if (underQuota) {
+        append(dir)
+        if (dirFileCount(dir) > CacheGcFileThreshold)
+          compactCacheEntries(tenant, index, now)
+      }
+      underQuota
+    }
 
   /** Scratch dir OUTSIDE every enumerated tree (billingUsage lists the
     * children of metrics/<tenant>; cache/<t>/<i> holds the live tables) —
@@ -2534,42 +2568,19 @@ class GraftEngine(spark: SparkSession, root: String,
         sort_array(coalesce(col("filter_tags"), array().cast("array<string>")))
       else array().cast("array<string>")
 
-    // E10 cost proxy over the indexed collection; relaxes L2 admission
-    val cost = lit(m.nVectors / 10000.0) * (size(col("qvec")) / 128.0)
-
-    // nearest centroid + admission (L2 layer key): the centroid table is
-    // driver-sized (nlist rows) — one narrow UDF pass beats a
-    // crossJoin×centroids + per-query window (which shuffles nq×nlist
-    // rows). Tie-break identical: highest score, then lowest cluster_id
-    // (centroids iterate in ascending-cid order).
+    // L2 layer key: the per-call cascade's own admission, run as one
+    // narrow UDF pass over the driver-sized centroid table (nlist rows) —
+    // cheaper than a crossJoin×centroids + per-query window, which
+    // shuffles nq×nlist rows
     val bcCents = spark.sparkContext.broadcast(l2CentroidsLocal(tenant, index, m))
-    val metricU = metric.toUpperCase(java.util.Locale.ROOT)
-    val bestU = udf { (qv: Seq[Float]) =>
-      val arr = qv.toArray
-      var bcid = -1; var bs = Double.NegativeInfinity
-      bcCents.value.foreach { case (cid, cv) =>
-        val s = graft.operators.IvfFlat.candidateScore(metricU, arr, cv)
-        if (s > bs) { bs = s; bcid = cid }
-      }
-      (bcid, bs)
+    val nVectors = m.nVectors // the inner Manifest would drag the engine into the UDF
+    val l2ClusterU = udf { (qv: Seq[Float]) =>
+      Caching.l2ClusterLocal(metric, qv.toArray,
+        Caching.l2Cost(nVectors, qv.length), bcCents.value)
     }
-    val admitted =
-      if (metric.equalsIgnoreCase("COSINE"))
-        col("cscore") >= Caching.closenessThreshold(metric, cost)
-      else if (metric.equalsIgnoreCase("L2"))
-        // L2: admission on euclidean distance (score = -d²)
-        sqrt(-col("cscore")) <= Caching.closenessThreshold("L2", cost)
-      else
-        // IP has no bounded closeness notion (reference thresholds exist
-        // only for cosine/L2, VectorCommandSet.cs:913-944): L2 layer off
-        lit(false)
-    val withCluster = queries
-      .withColumn("best", bestU(col("qvec")))
-      .withColumn("cscore", col("best._2"))
-      .withColumn("l2_cluster", when(admitted, col("best._1")))
-      .select(queries.columns.map(col) :+ col("l2_cluster"): _*)
 
-    val keyed = withCluster
+    val keyed = queries
+      .withColumn("l2_cluster", l2ClusterU(col("qvec")))
       .withColumn("l0_key", Caching.queryKey(lit(tenant), lit(index), lit(k),
         lit(metric), tagsNorm, xxhash64(xxhash64(col("qvec")), lit(k))))
       .withColumn("l1_key", Caching.queryKey(lit(tenant), lit(index), lit(k),
@@ -2611,11 +2622,9 @@ class GraftEngine(spark: SparkSession, root: String,
     val hitRows =
       if (!entriesExist) null
       else {
-        // epoch + TTL validity (St7/St8); newest entry wins per key, with
-        // a content-hash tie-break so same-batch writes to one key (two
-        // queries sharing an L1/L2 key) resolve deterministically
+        // epoch + TTL validity (St7/St8), then the winner order per key
         val wNewest = Window.partitionBy("cache_key")
-          .orderBy(col("written_at").desc, xxhash64(to_json(col("hits"))))
+          .orderBy(entryWinnerOrder: _*)
         val valid = cacheEntries(tenant, index)
           .filter(col("epoch") === m.epoch && col("expires_at") > now)
           .withColumn("vrn", row_number().over(wNewest))
@@ -2757,45 +2766,9 @@ class GraftEngine(spark: SparkSession, root: String,
         lit(m.epoch).as("epoch"),
         (lit(now) + col("e.ttl")).as("expires_at"),
         lit(now).as("written_at"))
-    if (anyMiss && !options.cacheOnly) withManifestLock(tenant, index) {
-      // CacheMemoryMb enforcement (MemoryCacheStorage.cs:59-71): when the
-      // entry table has reached the tenant's quota, first lazily evict
-      // stale/expired entries (the reference's read-path expiry sweep); if
-      // still at quota, REJECT the populate — the miss was served, it just
-      // isn't cached. Size checks are driver-side file metadata, no job.
-      // Fruitless sweeps are rate-limited: a steady at-quota tenant must
-      // not pay a full-table compaction job per miss, so re-sweep only
-      // when the table changed or logical time moved past the last
-      // attempt (TTLs may have expired by then).
-      val entriesDir = cacheEntriesPath(tenant, index)
-      val quotaBytes = options.cacheMemoryMb.toLong << 20
-      val memoKey = s"$tenant/$index"
-      val underQuota = {
-        var cur = dirBytes(entriesDir)
-        // a sweep that freed nothing stays fruitless until the table
-        // changes or TTL-scale logical time passes (entries can't expire
-        // faster than that) — without this, a steadily at-quota tenant
-        // pays a full-table job per miss
-        val skipSweep = fruitlessSweepMemo.get(memoKey).exists {
-          case (sz, t) => sz == cur && now < t + ttlSeconds
-        }
-        if (cur >= quotaBytes && !skipSweep) {
-          compactCacheEntries(tenant, index, now)
-          cur = dirBytes(entriesDir)
-          if (cur >= quotaBytes) fruitlessSweepMemo.put(memoKey, (cur, now))
-        }
-        cur < quotaBytes
-      }
-      if (underQuota) {
-        newEntries.write.mode("append").parquet(entriesDir)
-        // bound the file count independently of the quota: every miss
-        // batch appends a file set, and the per-call validity window
-        // scans all of them — amortized compaction keeps the per-call
-        // probe cost flat over serving time
-        if (dirFileCount(entriesDir) > CacheGcFileThreshold)
-          compactCacheEntries(tenant, index, now)
-      }
-    }
+    if (anyMiss && !options.cacheOnly)
+      appendCacheEntries(tenant, index, now, options.cacheMemoryMb, ttlSeconds)(
+        newEntries.write.mode("append").parquet(_))
 
     val freshOut0 = fresh
       .withColumn("cache_hit", lit(false))
@@ -2811,16 +2784,7 @@ class GraftEngine(spark: SparkSession, root: String,
     // request too, VectorCommandSet.cs:432-433). Misses are counted from
     // the MISS SET (nQ − nHit), not the result rows — a miss whose search
     // returns zero hits (selective tags, empty probes) still bills.
-    val nMiss = nQ - nHit
-    // append + rotation under the per-index lock: a row landing between
-    // another thread's fold-read and its swap would be silently destroyed.
-    // Rotation folds the log into one summed row past the file threshold —
-    // one tiny file per call is a small-files generator at serving rates,
-    // and every consumer (statsText, billingUsage) only ever SUMS it.
-    withManifestLock(tenant, index) {
-      writeMetricsRowLocal(s"$root/metrics/$tenant/$index", now, nHit, nMiss)
-      compactMetricsLog(tenant, index)
-    }
+    appendMetricsRow(tenant, index, now, nHit, nQ - nHit)
 
     keyed.unpersist()
     out.orderBy("query_id", "rank")
@@ -2912,16 +2876,20 @@ class GraftEngine(spark: SparkSession, root: String,
     } finally w.close()
   }
 
-  /** Fold the append-only hit/miss metrics log into a single summed row
-    * when its part-file count exceeds [[CacheGcFileThreshold]] (all
-    * consumers aggregate it, so the fold is lossless for them). Takes the
-    * per-index lock: a concurrent call's append must not land between
-    * the read and the swap (it would be silently destroyed), and the tmp
+  /** The one billing write: append one (ts, hits, misses) row to the
+    * index's metrics log, then fold the log into a single summed row
+    * once its part-file count exceeds [[CacheGcFileThreshold]] — one tiny
+    * file per call is a small-files generator at serving rates, and every
+    * consumer (statsText, billingUsage) only ever SUMS it. Both steps hold
+    * the per-index lock: an append landing between another thread's
+    * fold-read and its swap would be silently destroyed. The fold's tmp
     * dir lives under root/tmp so billingUsage's enumeration of the
     * metrics/<tenant> children can never pick up a half-written fold. */
-  private def compactMetricsLog(tenant: String, index: String): Unit =
+  private def appendMetricsRow(tenant: String, index: String, now: Long,
+                               hits: Long, misses: Long): Unit =
     withManifestLock(tenant, index) {
       val p = s"$root/metrics/$tenant/$index"
+      writeMetricsRowLocal(p, now, hits, misses)
       if (dirFileCount(p) > CacheGcFileThreshold) {
         val r = spark.read.parquet(p)
           .agg(max("ts"), sum("hits"), sum("misses")).head
@@ -2966,10 +2934,8 @@ class GraftEngine(spark: SparkSession, root: String,
       }
     // live resident-tier hits/misses (not yet flushed to the log) fold in
     // so VEC.STATS is current even mid-serving-burst
-    val memHits = servingHitCounters.get(s"$tenant/$index")
-      .map(_.get()).getOrElse(0L)
-    val memMisses = servingMissCounters.get(s"$tenant/$index")
-      .map(_.get()).getOrElse(0L)
+    val (memHits, memMisses) = cacheStates.get(s"$tenant/$index")
+      .fold((0L, 0L))(st => (st.hits.get(), st.misses.get()))
     Governance.metricsText(
       Governance.standardCounters(h + memHits, m + memMisses, evictions = ev,
         fallbacks = 0L), hist)
@@ -2979,36 +2945,100 @@ class GraftEngine(spark: SparkSession, root: String,
   // per-call cached serving (resident L0 probe over the entry table)
   // -------------------------------------------------------------------
 
-  /** Resident-tier cache hits AND rows-path misses counted in memory: the
-    * hot path must not append a metrics file per call (a small-files
-    * generator at serving rates). [[statsText]] folds these in live;
+  // one entry-table row: (cache_key, layer, hits, epoch, expires_at,
+  // written_at)
+  private type EntryRow =
+    (Long, String, Array[(Int, String, Double)], Long, Long, Long)
+
+  // per-key entries sorted in the batch probe's winner order; probe time
+  // applies the same expiry filter the batch plan applies BEFORE ranking
+  private case class ResidentEntry(expiresAt: Long,
+                                   hits: Array[(Int, String, Double)])
+
+  private val NoPending = Long.MinValue
+  private val PendingFlushMaxRows = 256
+  private val PendingFlushMaxAgeNanos = 1000000000L
+
+  /** Everything the engine holds in memory for one index's result cache.
+    *
+    * Billing: resident-tier hits AND rows-path misses are counted here —
+    * the hot path must not append a metrics file per call (a small-files
+    * generator at serving rates). [[statsText]] folds them in live;
     * [[flushServingMetrics]] persists + resets them so billing picks them
-    * up. Batch-path misses still log their own metrics row per batch. */
-  private val servingHitCounters = scala.collection.concurrent.TrieMap
-    .empty[String, java.util.concurrent.atomic.AtomicLong]
-  private def servingHitsOf(tenant: String, index: String) =
-    servingHitCounters.getOrElseUpdate(s"$tenant/$index",
-      new java.util.concurrent.atomic.AtomicLong())
-  private val servingMissCounters = scala.collection.concurrent.TrieMap
-    .empty[String, java.util.concurrent.atomic.AtomicLong]
-  private def servingMissesOf(tenant: String, index: String) =
-    servingMissCounters.getOrElseUpdate(s"$tenant/$index",
-      new java.util.concurrent.atomic.AtomicLong())
+    * up. `served` marks an index the per-call tier has answered for.
+    *
+    * Pending inserts: rows-path cache inserts pending their durable
+    * append. The reference's cache insert is an in-memory map put
+    * (MemoryCacheStorage) — serving truth here is likewise the resident
+    * map, updated in-heap at miss time; the parquet append that makes the
+    * entry visible to the BATCH cascade and to a cold restart is amortized
+    * through this queue (per-call parquet-writer init + dir rewalk
+    * measured ~20 ms and serialized wire misses on the manifest lock at
+    * ~24 QPS). Flushes are inline and deterministic — no background
+    * thread: a miss flushes when the queue reaches [[PendingFlushMaxRows]]
+    * or its oldest row (`pendingSince`, a System.nanoTime) exceeds
+    * [[PendingFlushMaxAgeNanos]]; hits piggyback the age check. Batch
+    * readers may lag a pending insert by at most the flush trigger — a
+    * cache answering a just-inserted query with a recompute, never a wrong
+    * result (and strictly more durable than the reference, which loses
+    * every entry on restart). [[flushCachePending]] is the deterministic
+    * hook for tests and shutdown. `quotaMb` is the latest caller-supplied
+    * CacheMemoryMb — the rows path's analog of SearchOptions.cacheMemoryMb,
+    * consulted at flush time.
+    *
+    * Resident maps: `entries` (epoch, dir fingerprint, key → entries) and
+    * `aliases` (dir fingerprint, source → canonical key), reloaded when
+    * their dir changes. `fruitlessSweep`: (entries bytes, now) at the last
+    * quota sweep that freed nothing ([[appendCacheEntries]]).
+    *
+    * [[flushCache]] resets everything but the billing counters. */
+  private final class CacheState {
+    val hits = new java.util.concurrent.atomic.AtomicLong()
+    val misses = new java.util.concurrent.atomic.AtomicLong()
+    @volatile var served = false
+    val pending = new java.util.concurrent.ConcurrentLinkedQueue[EntryRow]()
+    val pendingCount = new java.util.concurrent.atomic.AtomicInteger()
+    val pendingSince = new java.util.concurrent.atomic.AtomicLong(NoPending)
+    @volatile var quotaMb: Int = Int.MaxValue
+    @volatile var entries: Option[(Long, Long,
+      java.util.HashMap[java.lang.Long, Array[ResidentEntry]])] = None
+    @volatile var aliases: Option[(Long, Map[Long, Long])] = None
+    @volatile var fruitlessSweep: Option[(Long, Long)] = None
+
+    def bill(hit: Boolean): Unit = {
+      served = true
+      (if (hit) hits else misses).incrementAndGet()
+    }
+
+    def pendingAged: Boolean = {
+      val since = pendingSince.get()
+      since != NoPending && System.nanoTime() - since > PendingFlushMaxAgeNanos
+    }
+
+    def resetEntries(): Unit = {
+      pending.clear(); pendingCount.set(0); pendingSince.set(NoPending)
+      entries = None; aliases = None; fruitlessSweep = None
+    }
+  }
+
+  // one CacheState per "$tenant/$index"
+  private val cacheStates =
+    scala.collection.concurrent.TrieMap.empty[String, CacheState]
+  private def cacheStateOf(tenant: String, index: String): CacheState =
+    cacheStates.getOrElseUpdate(s"$tenant/$index", new CacheState)
 
   /** Live (not-yet-flushed) serving counters per index — the sidecar
     * loop's metrics snapshot (the reference's GetMetricsSnapshot payload,
     * server.py:138-160). Read-only: [[flushServingMetrics]] owns the
     * reset, so these are "since the last durable flush". */
   def servingCountersLive: Seq[(String, String, Long, Long)] =
-    (servingHitCounters.keySet ++ servingMissCounters.keySet).toSeq.sorted
-      .flatMap { key =>
+    cacheStates.toSeq.filter(_._2.served).sortBy(_._1).flatMap {
+      case (key, st) =>
         key.split("/", 2) match {
-          case Array(t, i) => Some((t, i,
-            servingHitCounters.get(key).map(_.get()).getOrElse(0L),
-            servingMissCounters.get(key).map(_.get()).getOrElse(0L)))
+          case Array(t, i) => Some((t, i, st.hits.get(), st.misses.get()))
           case _ => None
         }
-      }
+    }
 
   // -------------------------------------------------------------------
   // sidecar-applied serving policy. The reference applies the policy's
@@ -3039,41 +3069,13 @@ class GraftEngine(spark: SparkSession, root: String,
   def servingPolicyOf(tenant: String): Option[(Int, Double, String)] =
     appliedPolicies.get(tenant)
 
-  /** Rows-path cache inserts pending their durable append. The reference's
-    * cache insert is an in-memory map put (MemoryCacheStorage) — serving
-    * truth here is likewise the resident map, updated in-heap at miss
-    * time; the parquet append that makes the entry visible to the BATCH
-    * cascade and to a cold restart is amortized through this queue
-    * (per-call parquet-writer init + dir rewalk measured ~20 ms and
-    * serialized wire misses on the manifest lock at ~24 QPS). Flushes are
-    * inline and deterministic — no background thread: a miss flushes when
-    * the queue reaches [[PendingFlushMaxRows]] or its oldest row exceeds
-    * [[PendingFlushMaxAgeNanos]]; hits piggyback the age check. Batch
-    * readers may lag a pending insert by at most the flush trigger — a
-    * cache answering a just-inserted query with a recompute, never a
-    * wrong result (and strictly more durable than the reference, which
-    * loses every entry on restart). [[flushCachePending]] is the
-    * deterministic hook for tests and shutdown. */
-  private val pendingEntryRows = scala.collection.concurrent.TrieMap
-    .empty[String, java.util.concurrent.ConcurrentLinkedQueue[
-      (Long, String, Array[(Int, String, Double)], Long, Long, Long)]]
-  private val pendingEntryCounts = scala.collection.concurrent.TrieMap
-    .empty[String, java.util.concurrent.atomic.AtomicInteger]
-  private val pendingEntrySince = scala.collection.concurrent.TrieMap
-    .empty[String, Long]
-  // latest caller-supplied CacheMemoryMb per index — the rows path's
-  // analog of SearchOptions.cacheMemoryMb, consulted at flush time
-  private val pendingQuotaMb = scala.collection.concurrent.TrieMap
-    .empty[String, Int]
-  private val PendingFlushMaxRows = 256
-  private val PendingFlushMaxAgeNanos = 1000000000L
-
   /** Drain the pending rows-path inserts for an index into the durable
-    * entry table (one parquet-mr append, no Spark job), enforcing the
-    * tenant's CacheMemoryMb exactly like the batch populate (lazy sweep
-    * at quota, then REJECT the drained rows — their misses were already
-    * served; the in-heap copies age out by TTL/epoch under the resident
-    * map's own bounds), then re-stamp the resident map's fingerprint so
+    * entry table through [[appendCacheEntries]] — one parquet-mr append,
+    * no Spark job, under the tenant's CacheMemoryMb like the batch
+    * populate. The sweep memo's window is the smallest TTL among the
+    * drained rows. Rejected rows' misses were already served; their
+    * in-heap copies age out by TTL/epoch under the resident map's own
+    * bounds. After an append, re-stamp the resident map's fingerprint so
     * the flush itself does not force a reload: the map already holds
     * these entries, so if its stamp matched the pre-write dir it matches
     * the post-write dir too. A stamp that does NOT match fpBefore means
@@ -3083,38 +3085,29 @@ class GraftEngine(spark: SparkSession, root: String,
     * billing becomes durable on the same amortized cadence as the
     * entries themselves. */
   def flushCachePending(tenant: String, index: String): Unit = {
-    val key = s"$tenant/$index"
-    val q = pendingEntryRows.get(key).orNull
-    if (q == null || q.isEmpty) return
+    val st = cacheStates.get(s"$tenant/$index").orNull
+    if (st == null || st.pending.isEmpty) return
     withManifestLock(tenant, index) {
-      val buf = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, String, Array[(Int, String, Double)], Long, Long, Long)]
-      var e = q.poll()
-      while (e != null) { buf += e; e = q.poll() }
-      pendingEntryCounts.get(key).foreach(_.addAndGet(-buf.length))
-      pendingEntrySince.remove(key)
+      val buf = scala.collection.mutable.ArrayBuffer.empty[EntryRow]
+      var e = st.pending.poll()
+      while (e != null) { buf += e; e = st.pending.poll() }
+      st.pendingCount.addAndGet(-buf.length)
+      st.pendingSince.set(NoPending)
       // rows added concurrently after the drain keep an age stamp so the
       // next hit/miss age check still sees them
-      if (!q.isEmpty) pendingEntrySince.putIfAbsent(key, System.nanoTime())
+      if (!st.pending.isEmpty)
+        st.pendingSince.compareAndSet(NoPending, System.nanoTime())
       if (buf.nonEmpty) {
         val logicalNow = buf.map(_._6).max
-        val entriesDir = cacheEntriesPath(tenant, index)
-        val quotaBytes = pendingQuotaMb.getOrElse(key, Int.MaxValue).toLong << 20
-        val underQuota = {
-          var cur = dirBytes(entriesDir)
-          if (cur >= quotaBytes) {
-            compactCacheEntries(tenant, index, logicalNow)
-            cur = dirBytes(entriesDir)
-          }
-          cur < quotaBytes
+        var fpBefore = 0L
+        val appended = appendCacheEntries(tenant, index, logicalNow, st.quotaMb,
+            sweepWindow = buf.map(r => r._5 - r._6).min) { dir =>
+          fpBefore = entriesFingerprint(dir)
+          writeCacheEntryRowsLocal(dir, buf.toSeq)
         }
-        if (underQuota) {
-          val fpBefore = entriesFingerprint(entriesDir)
-          writeCacheEntryRowsLocal(entriesDir, buf.toSeq)
-          if (dirFileCount(entriesDir) > CacheGcFileThreshold)
-            compactCacheEntries(tenant, index, logicalNow)
-          val fpAfter = entriesFingerprint(entriesDir)
-          residentL0Cache.get(key) match {
+        if (appended) {
+          val fpAfter = entriesFingerprint(cacheEntriesPath(tenant, index))
+          st.entries match {
             // restamp ONLY when the map provably holds the drained
             // entries (same key + expiry): a map reloaded from the dir
             // between the in-heap insert and this flush matches fpBefore
@@ -3126,7 +3119,7 @@ class GraftEngine(spark: SparkSession, root: String,
                   val es = map.get(ck)
                   es != null && es.exists(_.expiresAt == exp)
                 } =>
-              residentL0Cache.put(key, (ep, fpAfter, map))
+              st.entries = Some((ep, fpAfter, map))
             case _ => ()
           }
         }
@@ -3140,8 +3133,7 @@ class GraftEngine(spark: SparkSession, root: String,
     * cache entries survive a restart (the reference loses its whole
     * in-memory cache here; we only lose nothing). */
   def flushAllServingMetrics(now: Long = System.currentTimeMillis() / 1000L): Unit =
-    (servingHitCounters.keySet ++ servingMissCounters.keySet ++
-      pendingEntryRows.keySet).foreach { key =>
+    cacheStates.keySet.foreach { key =>
       key.split("/", 2) match {
         case Array(t, i) =>
           flushCachePending(t, i)
@@ -3149,13 +3141,6 @@ class GraftEngine(spark: SparkSession, root: String,
         case _ => ()
       }
     }
-
-  // per-key entries sorted in the batch probe's winner order; probe time
-  // applies the same expiry filter the batch plan applies BEFORE ranking
-  private case class ResidentEntry(expiresAt: Long,
-                                   hits: Array[(Int, String, Double)])
-  private val residentL0Cache = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, Long, java.util.HashMap[java.lang.Long, Array[ResidentEntry]])]
 
   /** Order-independent content fingerprint of the entry dir (file name,
     * size, mtime) — cheap driver-side staleness check for the resident
@@ -3188,80 +3173,55 @@ class GraftEngine(spark: SparkSession, root: String,
       }
   }
 
-  private def residentL0Of(tenant: String, index: String, m: Manifest)
+  private def residentL0Of(tenant: String, index: String, m: Manifest,
+                           st: CacheState)
       : java.util.HashMap[java.lang.Long, Array[ResidentEntry]] = {
-    val key = s"$tenant/$index"
     val dir = cacheEntriesPath(tenant, index)
     val fp = entriesFingerprint(dir)
-    residentL0Cache.get(key) match {
+    st.entries match {
       case Some((e, f, map)) if e == m.epoch && f == fp => map
       case _ =>
         val map = new java.util.HashMap[java.lang.Long, Array[ResidentEntry]]()
         try {
           if (Files.exists(Paths.get(dir))) {
-            // winner order computed BY Spark (same expression as the batch
-            // probe's tie-break: written_at desc, then content hash) — the
+            // ranked BY Spark in the batch probe's winner order — the
             // resident map only caches the plan's own ordering; runtime
             // expiry is applied at probe time like the batch plan's filter
             cacheEntries(tenant, index)
               .filter(col("epoch") === m.epoch)
               .select(col("cache_key"), col("expires_at"), col("hits"),
-                col("written_at"), xxhash64(to_json(col("hits"))).as("jh"))
+                row_number().over(Window.partitionBy("cache_key")
+                  .orderBy(entryWinnerOrder: _*)).as("wrn"))
               .collect()
               .groupBy(_.getLong(0))
               .foreach { case (ck, rows) =>
-                val sorted = rows
-                  .sortBy(r => (-r.getLong(3), r.getLong(4)))
-                  .map { r =>
-                    val hits = r.getSeq[org.apache.spark.sql.Row](2)
+                map.put(ck, rows.sortBy(_.getInt(3)).map { r =>
+                  ResidentEntry(r.getLong(1),
+                    r.getSeq[org.apache.spark.sql.Row](2)
                       .map(h => (h.getInt(0), h.getString(1), h.getDouble(2)))
-                      .toArray
-                    ResidentEntry(r.getLong(1), hits)
-                  }
-                map.put(ck, sorted)
+                      .toArray)
+                })
               }
           }
-          residentL0Cache.put(key, (m.epoch, fp, map))
+          st.entries = Some((m.epoch, fp, map))
           map
         } catch {
-          // a GC-swap racing the read: serve this call as a batch-path
-          // miss (correct, just slower) and retry the load next call —
-          // the failed load is NOT cached
+          // a GC-swap racing the read: serve this call as a miss (correct,
+          // just slower) and retry the load next call — the failed load
+          // is NOT cached
           case _: Exception =>
             new java.util.HashMap[java.lang.Long, Array[ResidentEntry]]()
         }
     }
   }
 
-  /** Driver twin of the batch path's L2 admission (`bestU` + the
-    * closeness threshold): nearest centroid by the metric (ties → lowest
-    * cluster id, the iteration order of the same centroid array), admitted
-    * when within the cost-relaxed closeness bound. IP has no bounded
-    * closeness notion — layer off, like the batch path. */
-  private def l2ClusterLocal(metricU: String, qv: Array[Float], cost: Double,
-                             cents: Array[(Int, Array[Float])]): Option[Int] = {
-    if (cents.isEmpty) return None
-    var bcid = -1; var bs = Double.NegativeInfinity
-    cents.foreach { case (cid, cv) =>
-      val s = IvfFlat.candidateScore(metricU, qv, cv)
-      if (s > bs) { bs = s; bcid = cid }
-    }
-    val relax = math.max(0.0, math.log10(math.max(cost, 1e-9))) * 0.01
-    if (metricU == "COSINE") { if (bs >= 0.95 - relax) Some(bcid) else None }
-    else if (metricU == "L2") {
-      if (math.sqrt(-bs) <= 0.05 + relax) Some(bcid) else None
-    } else None
-  }
-
   // resident alias map (confidence ≥ 0.8, the resolveAlias rule), same
   // fingerprint-refresh discipline as the entry map
-  private val residentAliasCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, Map[Long, Long])]
-  private def residentAliasesOf(tenant: String, index: String): Map[Long, Long] = {
-    val key = s"$tenant/$index"
+  private def residentAliasesOf(tenant: String, index: String,
+                                st: CacheState): Map[Long, Long] = {
     val dir = cacheAliasPath(tenant, index)
     val fp = entriesFingerprint(dir)
-    residentAliasCache.get(key) match {
+    st.aliases match {
       case Some((f, map)) if f == fp => map
       case _ =>
         try {
@@ -3270,7 +3230,7 @@ class GraftEngine(spark: SparkSession, root: String,
             else spark.read.parquet(dir).filter(col("confidence") >= 0.8)
               .select("source_key", "canonical_key").collect()
               .map(r => r.getLong(0) -> r.getLong(1)).toMap
-          residentAliasCache.put(key, (fp, map))
+          st.aliases = Some((fp, map))
           map
         } catch { // concurrent flushCache delete: no aliases this call
           case _: Exception => Map.empty[Long, Long]
@@ -3282,19 +3242,17 @@ class GraftEngine(spark: SparkSession, root: String,
     * for a single query — the full L0 → L0.5 → L1 → L2 priority cascade
     * probed against a driver-resident copy of the (GC-bounded) entry
     * table. A valid hit returns in-heap with no job, tagged with its
-    * layer. A tag-free miss serves rows-native (zero-job search,
-    * in-heap insert, amortized durable append — billed via the in-memory
-    * miss counter that [[flushCachePending]]/[[flushServingMetrics]]
-    * persist, quota-enforced at flush against `cacheMemoryMb`); a
-    * tag-filtered miss delegates to the full batch cascade. Both return
-    * layer "MISS". Probe semantics equal the batch plan's: same key
-    * derivations (the driver/Column parity is spec-pinned; L1 reuses the
-    * simhash kernel itself; L2 mirrors bestU + the cost-relaxed
-    * closeness bound), same epoch gate, same expiry-before-winner rule,
-    * same newest-with-content-hash tie-break (cached from the plan's own
-    * ordering). Reference scenarios: repeat-query semantic-cache hit
-    * (P99 14.5 ms) and prefetch→L2 hit (0.59 ms),
-    * 20260112_phase6_summary.md. */
+    * layer. Every miss serves in-process and returns layer "MISS" (see
+    * the miss tail below), billed via the in-memory miss counter that
+    * [[flushCachePending]]/[[flushServingMetrics]] persist, its entry
+    * quota-enforced at flush against `cacheMemoryMb`. Probe semantics
+    * equal the batch plan's: same key derivations (the driver/Column
+    * parity is spec-pinned; L1 reuses the simhash kernel itself; L2 is
+    * the batch UDF's own [[graft.operators.Caching.l2ClusterLocal]]), same
+    * epoch gate, same expiry-before-winner rule, same winner order
+    * (cached from the plan's own ordering). Reference scenarios:
+    * repeat-query semantic-cache hit (P99 14.5 ms) and prefetch→L2 hit
+    * (0.59 ms), 20260112_phase6_summary.md. */
   def searchCachedRows(tenant: String, index: String, queryId: Long,
                        qvec: Array[Float], k: Int, metric: String = "L2",
                        nprobe: Int = 4, now: Long = 0L, ttlSeconds: Int = 60,
@@ -3309,8 +3267,9 @@ class GraftEngine(spark: SparkSession, root: String,
   }
 
   /** [[searchCachedRows]] plus the per-call [[SearchTrace]]: which
-    * cascade layers were probed (in order), which one hit (or MISS →
-    * the full cached-search plan ran), and call wall time. */
+    * cascade layers were probed (in order), which one hit (or MISS), the
+    * serving counts of the tier that answered a miss (−1 when the plan
+    * answered), and call wall time. */
   def searchCachedRowsTraced(tenant: String, index: String, queryId: Long,
                              qvec: Array[Float], k: Int, metric: String = "L2",
                              nprobe: Int = 4, now: Long = 0L,
@@ -3321,7 +3280,7 @@ class GraftEngine(spark: SparkSession, root: String,
     val tTrace0 = System.nanoTime()
     import graft.operators.Caching
     val m = manifest(tenant, index)
-    val metricU = metric.toUpperCase(java.util.Locale.ROOT)
+    val st = cacheStateOf(tenant, index)
     // beam-filtered HNSW is only a different ANSWER when a filter is on
     val beam = hnswBeam && tags.nonEmpty && m.algo == "HNSW"
     // refined / beam-filtered answers live under their OWN key space:
@@ -3339,14 +3298,14 @@ class GraftEngine(spark: SparkSession, root: String,
     val l0 = keyOf(Caching.l0LayerKeyLocal(qvec, k))
     val probes = scala.collection.mutable.ArrayBuffer[(String, Long)](
       ("L0", l0))
-    residentAliasesOf(tenant, index).get(l0)
+    residentAliasesOf(tenant, index, st).get(l0)
       .filter(_ != l0).foreach(ck => probes += (("L0.5", ck)))
     probes += (("L1", keyOf(graft.functions.VectorSimHash.simhash64(
       scala.collection.immutable.ArraySeq.unsafeWrapArray(qvec), 42L))))
-    val cost = m.nVectors / 10000.0 * (qvec.length / 128.0)
-    l2ClusterLocal(metricU, qvec, cost, l2CentroidsLocal(tenant, index, m))
+    Caching.l2ClusterLocal(metric, qvec, Caching.l2Cost(m.nVectors, qvec.length),
+        l2CentroidsLocal(tenant, index, m))
       .foreach(cid => probes += (("L2", keyOf(cid.toLong))))
-    val entries = residentL0Of(tenant, index, m)
+    val entries = residentL0Of(tenant, index, m, st)
     val hit = probes.iterator.flatMap { case (layer, key) =>
       val cands = entries.get(key)
       (if (cands == null) None else cands.find(_.expiresAt > now))
@@ -3354,153 +3313,114 @@ class GraftEngine(spark: SparkSession, root: String,
     }.nextOption()
     hit match {
       case Some((layer, e)) =>
-        servingHitsOf(tenant, index).incrementAndGet()
+        st.bill(hit = true)
         // piggyback: an aging pending queue flushes off the hit path's
         // cheap timestamp check, so pending inserts can't sit unflushed
         // behind a hit-only workload
-        if (pendingEntrySince.get(s"$tenant/$index").exists(
-            System.nanoTime() - _ > PendingFlushMaxAgeNanos))
-          flushCachePending(tenant, index)
+        if (st.pendingAged) flushCachePending(tenant, index)
         (layer, e.hits.filter(_._1 <= k),
           SearchTrace("cache-hit", Some(layer), probes.map(_._1).toSeq,
             headLive = -1, headMasked = -1, tailRows = -1,
             totalMicros = (System.nanoTime() - tTrace0) / 1000L))
       case None =>
-        // Rows-native miss: the reference answers a cache miss entirely
+        // The miss tail. The reference answers a cache miss entirely
         // in-process — search the index, put the entry in its in-memory
-        // cache, reply — inside one request (~ms). Delegating to the
-        // batch cascade cost ~20 tiny Spark actions of scheduling and
-        // planning per wire miss, and even a synchronous driver-side
-        // parquet append measured ~20 ms/call (writer init + dir rewalk)
-        // serialized on the manifest lock. So the miss mirrors the
-        // reference's shape: the zero-job [[searchRows]] tier answers
+        // cache, reply — inside one request (~ms); delegating to the
+        // batch cascade cost ~20 tiny Spark actions per wire miss, and a
+        // synchronous driver-side parquet append ~20 ms/call serialized
+        // on the manifest lock. So the zero-job rows tier answers
         // (tag-filtered calls through [[searchRowsFilteredTraced]] — the
-        // snapshot tag index filters during the scan, like the
-        // reference's in-process filter), the resident map takes the
-        // entry in-heap immediately (copy-on-write; the dir fingerprint
-        // is untouched because the dir is untouched), and the durable
-        // append rides the amortized [[pendingEntryRows]] queue.
-        // Newest-first per key — the batch winner order — with one
-        // documented looseness: two different-content writes to a shared
-        // L1/L2 key in the same logical second tie in written_at, where
-        // the batch plan picks by content hash and this path keeps the
-        // later write; both are valid entries for that key and a full
-        // reload re-ranks identically to the plan. Calls outside the
-        // rows-tier gates (non-resident tail, oversized corpus/head)
-        // keep the batch cascade below.
-        val rowsNative: Option[(Array[(Long, Int, String, Double)], SearchTrace)] =
+        // snapshot tag index filters during the scan), reached through
+        // the two overridable entry points; a call outside the rows gates
+        // (non-resident tail, oversized corpus/head, filtered + refined)
+        // takes the distributed plan with the call's own tags and refine.
+        val one = Array((queryId, qvec))
+        val rowsServed =
           if (tags.isEmpty)
-            Some(searchRowsTraced(tenant, index, Array((queryId, qvec)), k,
-              metric, nprobe, refine))
-          else if (refine > 0) None // filtered+refined: plan-only below
-          else searchRowsFilteredTraced(tenant, index, Array((queryId, qvec)),
-            k, metric, nprobe, tags, hnswBeam = beam)
-        rowsNative match {
-          case Some((rows0, tr)) =>
-        val hits = rows0.map { case (_, r, id, s) => (r, id, s) }.sortBy(_._1)
-        val writeKeys = probes.toSeq.collect {
-          case (l @ ("L0" | "L1" | "L2"), ck) => (l, ck)
-        }
-        val rkey = s"$tenant/$index"
-        val nPending = withManifestLock(tenant, index) {
-          residentL0Cache.get(rkey).foreach { case (ep, f, oldMap) =>
-            if (ep == m.epoch) {
-              val nm = new java.util.HashMap[java.lang.Long, Array[ResidentEntry]](oldMap)
-              val e = ResidentEntry(now + ttlSeconds, hits)
-              writeKeys.foreach { case (_, ck) =>
-                // prune already-expired entries while prepending: with
-                // reloads now rare (fingerprint restamp on flush), a hot
-                // key repopulated every TTL would otherwise accumulate
-                // dead entries in-heap without bound
-                val prev = nm.get(ck)
-                val kept =
-                  if (prev == null) Array.empty[ResidentEntry]
-                  else prev.filter(_.expiresAt > now)
-                nm.put(ck, e +: kept)
+            Some(searchRowsTraced(tenant, index, one, k, metric, nprobe, refine))
+          else if (refine > 0) None
+          else searchRowsFilteredTraced(tenant, index, one, k, metric, nprobe,
+            tags, hnswBeam = beam)
+        val hits = rowsServed
+          .fold(planRows(tenant, index, m, one, k, metric, nprobe, refine, tags))(_._1)
+          .map { case (_, r, id, s) => (r, id, s) }.sortBy(_._1)
+        // The entry goes in-heap at once (copy-on-write; the dir and its
+        // fingerprint are untouched) and its durable append rides the
+        // pending queue. Newest-first per key — the batch winner order —
+        // with one documented looseness: two different-content writes to
+        // a shared L1/L2 key in the same logical second tie in
+        // written_at, where the batch plan picks by content hash and this
+        // path keeps the later write; both are valid entries for that key
+        // and a full reload re-ranks identically to the plan. A refined
+        // or beam call the plan answered is not cached: a beam call lands
+        // there only when the resident graphs/tag index are unavailable,
+        // and its answer is the post-filter fallback, not the beam one.
+        if (rowsServed.isDefined || (refine == 0 && !beam)) {
+          val writeKeys = probes.toSeq.collect {
+            case (l @ ("L0" | "L1" | "L2"), ck) => (l, ck)
+          }
+          withManifestLock(tenant, index) {
+            st.entries.foreach { case (ep, f, oldMap) =>
+              if (ep == m.epoch) {
+                val nm = new java.util.HashMap[java.lang.Long, Array[ResidentEntry]](oldMap)
+                val e = ResidentEntry(now + ttlSeconds, hits)
+                writeKeys.foreach { case (_, ck) =>
+                  // prune already-expired entries while prepending: with
+                  // reloads now rare (fingerprint restamp on flush), a hot
+                  // key repopulated every TTL would otherwise accumulate
+                  // dead entries in-heap without bound
+                  val prev = nm.get(ck)
+                  val kept =
+                    if (prev == null) Array.empty[ResidentEntry]
+                    else prev.filter(_.expiresAt > now)
+                  nm.put(ck, e +: kept)
+                }
+                st.entries = Some((ep, f, nm))
               }
-              residentL0Cache.put(rkey, (ep, f, nm))
             }
+            // pending enqueue stays under the SAME lock as the resident
+            // insert: a concurrent flushCache (which clears the queue
+            // under this lock) can then never interleave between the two
+            // — an explicitly flushed entry must not resurrect via a
+            // later pending flush
+            writeKeys.foreach { case (l, ck) =>
+              st.pending.add((ck, l, hits, m.epoch, now + ttlSeconds, now))
+            }
+            st.quotaMb = cacheMemoryMb
+            st.pendingCount.addAndGet(writeKeys.length)
+            st.pendingSince.compareAndSet(NoPending, System.nanoTime())
           }
-          // pending enqueue stays under the SAME lock as the resident
-          // insert: a concurrent flushCache (which clears the queue under
-          // this lock) can then never interleave between the two — an
-          // explicitly flushed entry must not resurrect via a later
-          // pending flush
-          val pq = pendingEntryRows.getOrElseUpdate(rkey,
-            new java.util.concurrent.ConcurrentLinkedQueue())
-          writeKeys.foreach { case (l, ck) =>
-            pq.add((ck, l, hits, m.epoch, now + ttlSeconds, now))
-          }
-          pendingQuotaMb.put(rkey, cacheMemoryMb)
-          val pc = pendingEntryCounts.getOrElseUpdate(rkey,
-            new java.util.concurrent.atomic.AtomicInteger())
-          val n = pc.addAndGet(writeKeys.length)
-          pendingEntrySince.putIfAbsent(rkey, System.nanoTime())
-          n
         }
-        servingMissesOf(tenant, index).incrementAndGet()
-        if (nPending >= PendingFlushMaxRows ||
-            pendingEntrySince.get(rkey).exists(
-              System.nanoTime() - _ > PendingFlushMaxAgeNanos))
+        st.bill(hit = false)
+        if (st.pendingCount.get() >= PendingFlushMaxRows || st.pendingAged)
           flushCachePending(tenant, index)
+        val tr = rowsServed.map(_._2)
         ("MISS", hits,
           SearchTrace("cache-miss", None, probes.map(_._1).toSeq,
-            headLive = tr.headLive, headMasked = tr.headMasked,
-            tailRows = tr.tailRows,
+            headLive = tr.fold(-1)(_.headLive),
+            headMasked = tr.fold(-1)(_.headMasked),
+            tailRows = tr.fold(-1)(_.tailRows),
             totalMicros = (System.nanoTime() - tTrace0) / 1000L))
-          case None if refine > 0 || beam =>
-        // refined (or beam-requested-but-unservable) call outside the
-        // rows gates: serve the plan directly and SKIP cache population
-        // — the batch cascade's column-side keys carry no semantics
-        // scope, so populating through it would collide scoped answers
-        // with default keys. A beam call lands here only when the
-        // resident graphs/tag index are unavailable; the plan answer is
-        // the documented post-filter fallback semantics.
-        val rows = planRows(tenant, index, m, Array((queryId, qvec)), k, metric,
-            nprobe, refine, tags)
-          .map { case (_, r, id, s) => (r, id, s) }
-        servingMissesOf(tenant, index).incrementAndGet()
-        ("MISS", rows,
-          SearchTrace("cache-miss", None, probes.map(_._1).toSeq,
-            headLive = -1, headMasked = -1, tailRows = -1,
-            totalMicros = (System.nanoTime() - tTrace0) / 1000L))
-          case None =>
-        import spark.implicits._
-        val base = Seq((queryId, qvec.toSeq)).toDF("query_id", "qvec")
-          .withColumn("filter_tags", typedLit(tags))
-        val rows = searchCached(tenant, index, base, k, metric, nprobe, now,
-            ttlSeconds)
-          .collect()
-          .map(r => (r.getAs[Int]("rank"), r.getAs[String]("id"),
-            r.getAs[Double]("score")))
-        ("MISS", rows,
-          SearchTrace("cache-miss", None, probes.map(_._1).toSeq,
-            headLive = -1, headMasked = -1, tailRows = -1,
-            totalMicros = (System.nanoTime() - tTrace0) / 1000L))
-        }
     }
   }
 
-  /** Persist + reset the in-memory resident-tier hit counters into the
-    * metrics log (one summed row) so billing/offline consumers see them;
+  /** Persist + reset the in-memory serving counters into the metrics log
+    * (one summed row) so billing/offline consumers see them;
     * [[statsText]] already folds the live value in. */
-  def flushServingMetrics(tenant: String, index: String, now: Long = 0L): Unit = {
-    // write FIRST, subtract only after the append commits — a getAndSet
-    // before a failed write would silently drop billable calls (calls
-    // that land during the write stay in the counters for the next flush)
-    val hc = servingHitsOf(tenant, index)
-    val mc = servingMissesOf(tenant, index)
-    val nh = hc.get()
-    val nm = mc.get()
-    if (nh > 0 || nm > 0) {
-      withManifestLock(tenant, index) {
-        writeMetricsRowLocal(s"$root/metrics/$tenant/$index", now, nh, nm)
-        compactMetricsLog(tenant, index)
+  def flushServingMetrics(tenant: String, index: String, now: Long = 0L): Unit =
+    cacheStates.get(s"$tenant/$index").foreach { st =>
+      // write FIRST, subtract only after the append commits — a getAndSet
+      // before a failed write would silently drop billable calls (calls
+      // that land during the write stay in the counters for the next
+      // flush)
+      val nh = st.hits.get()
+      val nm = st.misses.get()
+      if (nh > 0 || nm > 0) {
+        appendMetricsRow(tenant, index, now, nh, nm)
+        st.hits.addAndGet(-nh)
+        st.misses.addAndGet(-nm)
       }
-      hc.addAndGet(-nh)
-      mc.addAndGet(-nm)
     }
-  }
 
   /** Current snapshot's centroid table (cluster_id, centroid). */
   def centroids(tenant: String, index: String): DataFrame =
@@ -3569,7 +3489,10 @@ class GraftEngine(spark: SparkSession, root: String,
         lit(now + ttlSeconds).as("expires_at"),
         lit(now).as("written_at"))
       .localCheckpoint()
-    entries.write.mode("append").parquet(cacheEntriesPath(tenant, index))
+    // through the one writer, with no quota: under the lock, so a
+    // concurrent compaction's swap cannot delete the files just written
+    appendCacheEntries(tenant, index, now, quotaMb = Int.MaxValue,
+      sweepWindow = ttlSeconds)(entries.write.mode("append").parquet(_))
     entries.count()
   }
 

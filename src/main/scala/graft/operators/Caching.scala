@@ -85,6 +85,35 @@ object Caching {
     else lit(0.05) + relax // max allowed L2 distance grows with cost
   }
 
+  /** E10 cost proxy over the indexed collection that relaxes L2
+    * admission: collection size / 10000 · dim / 128. */
+  def l2Cost(nVectors: Long, dim: Int): Double = nVectors / 10000.0 * (dim / 128.0)
+
+  /** The L2 semantic-cluster key both cache cascades derive: the nearest
+    * centroid by the metric (ties → lowest cluster id, the iteration
+    * order of `cents`), admitted when within [[closenessThreshold]] of
+    * `cost` — cosine on the score, L2 on the euclidean distance (score =
+    * −d²). IP has no bounded closeness notion (reference thresholds exist
+    * only for cosine/L2, VectorCommandSet.cs:913-944): layer off. The
+    * threshold arithmetic is the Column form's, StrictMath.log10
+    * included (PropertySpec pins the two). */
+  def l2ClusterLocal(metric: String, qv: Array[Float], cost: Double,
+                     cents: Array[(Int, Array[Float])]): Option[Int] = {
+    val metricU = metric.toUpperCase(java.util.Locale.ROOT)
+    var bcid = -1; var bs = Double.NegativeInfinity
+    cents.foreach { case (cid, cv) =>
+      val s = IvfFlat.candidateScore(metricU, qv, cv)
+      if (s > bs) { bs = s; bcid = cid }
+    }
+    val relax = math.max(0.0, StrictMath.log10(math.max(cost, 1e-9))) * 0.01
+    val admitted = metricU match {
+      case "COSINE" => bs >= 0.95 - relax
+      case "L2" => math.sqrt(-bs) <= 0.05 + relax
+      case _ => false
+    }
+    if (admitted) Some(bcid) else None
+  }
+
   /** Cache read: key-join the request batch into the cache table, keeping
     * only fresh entries — matching epoch (St8: every write bumps the
     * index epoch, stale entries are misses — reference:

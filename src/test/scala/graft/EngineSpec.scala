@@ -1063,6 +1063,23 @@ class EngineSpec extends SparkSpec {
     val (h1, _) = eng.searchCachedRows("t1", "idx", 1L, Array(2f, 1f, 0f),
       k = 3, nprobe = 1, now = 1001L, cacheMemoryMb = 0)
     assert(h1 == "L0")
+    // a steady at-quota tenant: a sweep that freed nothing is memoized, so
+    // the next at-quota flush at the same logical time submits no job
+    val (m2, _) = eng.searchCachedRows("t1", "idx", 2L, Array(-3f, 5f, 2f),
+      k = 3, nprobe = 1, now = 1002L)
+    assert(m2 == "MISS")
+    eng.flushCachePending("t1", "idx")
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$root/cache/t1/idx/entries")))
+    def atQuotaMissFlushJobs(qid: Long, qv: Array[Float]): Int = {
+      val (mq, _) = eng.searchCachedRows("t1", "idx", qid, qv, k = 3,
+        nprobe = 1, now = 1003L, cacheMemoryMb = 0)
+      assert(mq == "MISS")
+      jobsDuring(eng.flushCachePending("t1", "idx"))._2
+    }
+    atQuotaMissFlushJobs(3L, Array(1f, -4f, 7f))
+    val jobs = atQuotaMissFlushJobs(4L, Array(-6f, -2f, -5f))
+    assert(jobs == 0, s"a fruitless at-quota sweep re-ran: $jobs job(s)")
   }
 
   test("searchCachedRows: prefetch-warmed L2 entries serve per-call cluster hits") {
@@ -1897,6 +1914,17 @@ class EngineSpec extends SparkSpec {
     assert(resFree.isDefined &&
       resFree.get._2.path == "head+pqtail-filtered", resFree.map(_._2))
     assert(rows.toSeq == resFree.get._1.map(r => (r._2, r._3, r._4)).toSeq)
+    // the plan-served filtered miss populates under the call's own
+    // CacheMemoryMb: at quota 0 a second miss adds no durable row
+    eng.flushCachePending("t1", "idx")
+    val nEntries = eng.cacheEntries("t1", "idx").count()
+    val (layer2, _, _) = eng.searchCachedRowsTraced("t1", "idx", 2L,
+      Array.fill(6)(rng.nextFloat()), k = 3, nprobe = 2, now = 1001L,
+      tags = Seq("even"), cacheMemoryMb = 0)
+    assert(layer2 == "MISS")
+    eng.flushCachePending("t1", "idx")
+    assert(eng.cacheEntries("t1", "idx").count() == nEntries,
+      "an at-quota filtered miss must not populate")
   }
 
   test("tag hash-set budget denial: memoized None, sorted-array path serves identically") {

@@ -124,6 +124,44 @@ class PropertySpec extends SparkSpec {
       assert(graft.operators.Caching.queryKeyLocal("ten", "idx", k, "L2",
         tags, row.getLong(1)) == row.getLong(0), s"query key case $i")
     }
+    // L2 admission: the driver form both cascades use admits exactly when
+    // the Column closenessThreshold (the oracle's form) admits the same
+    // best score, for random costs; IP admits no cluster
+    import graft.operators.Caching
+    import org.apache.spark.sql.functions.sqrt
+    val admission = (0 until 60).map { i =>
+      val cv = Array.fill(2 + rng.nextInt(6))(rng.nextFloat() * 2 - 1)
+      // noise from 0.001 to ~0.3 per coordinate: distances straddle the
+      // 0.05-plus-relax bounds on both metrics
+      val sigma = math.pow(10, -3 + 2.5 * rng.nextDouble())
+      val qv = cv.map(x => (x + rng.nextGaussian() * sigma).toFloat)
+      val cost = math.pow(10, 12 * rng.nextDouble() - 6)
+      (i, cv, qv, cost)
+    }
+    val metrics = Seq("COSINE", "L2")
+    val scored = for ((i, cv, qv, cost) <- admission; metric <- metrics)
+      yield (i, metric, graft.operators.IvfFlat.candidateScore(metric, qv, cv), cost)
+    val colAdmits = scored.toDF("i", "metric", "s", "cost")
+      .select(col("i"), col("metric"),
+        col("s") >= Caching.closenessThreshold("COSINE", col("cost")),
+        sqrt(-col("s")) <= Caching.closenessThreshold("L2", col("cost")))
+      .collect()
+      .map(r => (r.getInt(0), r.getString(1)) ->
+        (if (r.getString(1) == "COSINE") r.getBoolean(2) else r.getBoolean(3)))
+      .toMap
+    admission.foreach { case (i, cv, qv, cost) =>
+      val cents = Array((7, cv))
+      metrics.foreach { metric =>
+        assert(Caching.l2ClusterLocal(metric, qv, cost, cents) ==
+          Option.when(colAdmits((i, metric)))(7), s"$metric admission case $i")
+      }
+      assert(Caching.l2ClusterLocal("IP", qv, cost, cents).isEmpty,
+        s"IP admission case $i")
+    }
+    metrics.foreach { metric =>
+      val outcomes = colAdmits.collect { case ((_, mt), a) if mt == metric => a }
+      assert(outcomes.toSet == Set(true, false), s"$metric: one-sided inputs")
+    }
   }
 
   test("production Caching.roundK: correct bucket, monotone, idempotent on 1..500 (exhaustive)") {
