@@ -53,7 +53,6 @@ object GraftEngine {
     * which would let build commit headDirty=0 and hide the fresh rows. */
   private val manifestLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
-  private[graft] val json = new com.fasterxml.jackson.databind.ObjectMapper()
   private def lockFor(root: String, tenant: String, index: String): Object =
     manifestLocks.getOrElseUpdate(s"$root#$tenant/$index", new Object)
 
@@ -140,7 +139,7 @@ class GraftEngine(spark: SparkSession, root: String,
     /** The on-disk form: [[manifest]] and [[exportSnapshot]] write it,
       * [[Manifest.parse]] reads it back. */
     def render: String =
-      s"""{"epoch": $epoch, "buildWatermark": $buildWatermark, "algo": "$algo", "nVectors": $nVectors, "version": $version, "metric": "$metric", "headDirty": $headDirty}"""
+      s"""{"epoch": $epoch, "buildWatermark": $buildWatermark, "algo": ${Json.quote(algo)}, "nVectors": $nVectors, "version": $version, "metric": ${Json.quote(metric)}, "headDirty": $headDirty}"""
   }
 
   object Manifest {
@@ -154,38 +153,11 @@ class GraftEngine(spark: SparkSession, root: String,
       * the cross-metric gate rather than asserting a metric the build
       * may not have used, and `headDirty` 1 (correctness over speed). */
     def parse(file: String, text: String): Manifest = {
-      import com.fasterxml.jackson.core.{JsonProcessingException, JsonToken}
-      import com.fasterxml.jackson.databind.JsonNode
-      def corrupt(why: String): Nothing =
-        throw new IllegalStateException(s"corrupt manifest $file: $why")
-      val p = GraftEngine.json.createParser(text)
-      val fields = scala.collection.mutable.Map.empty[String, JsonNode]
-      try {
-        if (p.nextToken() != JsonToken.START_OBJECT) corrupt("not a JSON object")
-        while (p.nextToken() == JsonToken.FIELD_NAME) {
-          val name = p.currentName()
-          p.nextToken()
-          fields(name) = p.readValueAsTree[JsonNode]()
-        }
-        if (p.nextToken() != null) corrupt("trailing content after the object")
-      } catch {
-        case e: JsonProcessingException =>
-          val at = Option(p.currentName()).fold("its start")(n => s"field '$n'")
-          corrupt(s"truncated or malformed JSON at $at: ${e.getOriginalMessage}")
-      }
-      def long(k: String, legacy: Option[Long] = None): Long = fields.get(k) match {
-        case Some(v) if v.isIntegralNumber && v.canConvertToLong => v.asLong
-        case Some(v) => corrupt(s"field '$k' is not an integer: $v")
-        case None => legacy.getOrElse(corrupt(s"missing field '$k'"))
-      }
-      def string(k: String, legacy: String): String = fields.get(k) match {
-        case Some(v) if v.isTextual => v.asText
-        case Some(v) => corrupt(s"field '$k' is not a string: $v")
-        case None => legacy
-      }
-      Manifest(long("epoch"), long("buildWatermark"), string("algo", "IVF_FLAT"),
-        long("nVectors"), long("version"), string("metric", ""),
-        long("headDirty", Some(1L)).toInt)
+      val o = Json.parse(s"corrupt manifest $file", text, new IllegalStateException(_))
+      Manifest(o.need("epoch")(o.long), o.need("buildWatermark")(o.long),
+        o.string("algo").getOrElse("IVF_FLAT"), o.need("nVectors")(o.long),
+        o.need("version")(o.long), o.string("metric").getOrElse(""),
+        o.int("headDirty").getOrElse(1))
     }
   }
 

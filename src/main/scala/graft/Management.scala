@@ -52,6 +52,71 @@ object Management {
     * on excluded internal paths (Program.cs:154-156); every externally
     * attributed call must pass a real user id and clears the role gate. */
   val SystemUser = "__system__"
+
+  // The config-plane records: each writer's exact on-disk form and its
+  // strict reader. Absent fields keep their documented defaults (legacy
+  // files); a truncated or mistyped record throws an
+  // IllegalStateException naming the file and the field.
+  private def record(file: String, text: String): Json.Obj =
+    Json.parse(s"corrupt config $file", text, new IllegalStateException(_))
+
+  private[graft] def renderTenant(q: TenantQuota, apiKeyHash: String): String =
+    s"""{"maxQps": ${q.maxQps}, "maxConcurrentRequests": ${q.maxConcurrentRequests}, "cacheMemoryMb": ${q.cacheMemoryMb}, "dailyRequestLimit": ${q.dailyRequestLimit}, "priority": ${q.priority}, "monthlyBudget": ${q.monthlyBudget}, "apiKeyHash": ${Json.quote(apiKeyHash)}}"""
+
+  /** (quota, apiKeyHash); an absent `apiKeyHash` is "" — no key set. */
+  private[graft] def parseTenant(file: String, text: String): (TenantQuota, String) = {
+    val (o, d) = (record(file, text), TenantQuota())
+    (TenantQuota(o.int("maxQps").getOrElse(d.maxQps),
+      o.int("maxConcurrentRequests").getOrElse(d.maxConcurrentRequests),
+      o.int("cacheMemoryMb").getOrElse(d.cacheMemoryMb),
+      o.long("dailyRequestLimit").getOrElse(d.dailyRequestLimit),
+      o.int("priority").getOrElse(d.priority),
+      o.double("monthlyBudget").getOrElse(d.monthlyBudget)),
+      o.string("apiKeyHash").getOrElse(""))
+  }
+
+  private[graft] val Roles: Set[String] = Set("admin", "writer", "reader")
+
+  private[graft] def renderUsers(us: Map[String, String]): String =
+    us.toSeq.sorted.map { case (u, r) => s"${Json.quote(u)}: ${Json.quote(r)}" }
+      .mkString("{", ", ", "}")
+
+  private[graft] def parseUsers(file: String, text: String): Map[String, String] = {
+    val o = record(file, text)
+    o.strings.map { case (u, r) =>
+      if (!Roles(r)) o.fail(s"field '$u' has unknown role '$r'")
+      u -> r
+    }
+  }
+
+  private[graft] def renderPolicy(p: CachePolicy): String =
+    s"""{"enableCache": ${p.enableCache}, "defaultTtlSeconds": ${p.defaultTtlSeconds}}"""
+
+  private[graft] def parsePolicy(file: String, text: String): CachePolicy = {
+    val (o, d) = (record(file, text), CachePolicy())
+    CachePolicy(o.bool("enableCache").getOrElse(d.enableCache),
+      o.int("defaultTtlSeconds").getOrElse(d.defaultTtlSeconds))
+  }
+
+  private[graft] def renderIndex(c: DeclaredIndex): String =
+    s"""{"dim": ${c.dim}, "metric": ${Json.quote(c.metric)}, "algo": ${Json.quote(c.algo)}, "nlist": ${c.nlist}, "pqM": ${c.pqM}, "pqK": ${c.pqK}}"""
+
+  private[graft] def parseIndex(file: String, text: String): DeclaredIndex = {
+    val (o, d) = (record(file, text), DeclaredIndex(dim = 0))
+    DeclaredIndex(o.int("dim").getOrElse(d.dim), o.string("metric").getOrElse(d.metric),
+      o.string("algo").getOrElse(d.algo), o.int("nlist").getOrElse(d.nlist),
+      o.int("pqM").getOrElse(d.pqM), o.int("pqK").getOrElse(d.pqK))
+  }
+
+  /** The model registry: (latest, active, previous). */
+  private[graft] def renderRegistry(r: (Long, Long, Long)): String =
+    s"""{"latest": ${r._1}, "active": ${r._2}, "previous": ${r._3}}"""
+
+  private[graft] def parseRegistry(file: String, text: String): (Long, Long, Long) = {
+    val o = record(file, text)
+    (o.long("latest").getOrElse(0L), o.long("active").getOrElse(0L),
+      o.long("previous").getOrElse(0L))
+  }
 }
 
 class Management(spark: SparkSession, val root: String) {
@@ -92,17 +157,39 @@ class Management(spark: SparkSession, val root: String) {
       StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
     Files.move(tmp, path, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    parsed.remove(path.toString)
   }
 
-  private def jLong(s: String, k: String): Option[Long] =
-    raw""""$k"\s*:\s*(-?\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-  private def jDouble(s: String, k: String): Option[Double] =
-    // Scala renders e.g. 1.0e7 as "1.0E7" — the pattern must cover
-    // scientific notation or large budgets would round-trip as 1.0
-    raw""""$k"\s*:\s*(-?[\d.]+(?:[eE][+-]?\d+)?)""".r
-      .findFirstMatchIn(s).map(_.group(1).toDouble)
-  private def jString(s: String, k: String): Option[String] =
-    raw""""$k"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
+  /** Parsed records by path, each stamped with its file's (fileKey, mtime,
+    * size): the RESP serving path checks the tenant's key and quota and
+    * the index's declared dim on every call, and per-call disk reads ride
+    * this host's IO storms into serving tails. Every writer renames a
+    * fresh file into place, so the next stat re-parses; same-JVM writers
+    * also drop the entry synchronously. A damaged file is never stored:
+    * it throws on every read. */
+  private val parsed =
+    new java.util.concurrent.ConcurrentHashMap[String, (Any, Any)]()
+
+  /** The record at `f`, None ONLY when the file is absent — a transient
+    * I/O or permission error reported as a missing record would hand the
+    * client a wrong, actionable-looking answer during the exact disk
+    * storms the memo exists to ride out; those propagate. */
+  private def read[T](f: java.nio.file.Path)(parse: (String, String) => T): Option[T] = {
+    val attrs =
+      try Some(Files.readAttributes(
+        f, classOf[java.nio.file.attribute.BasicFileAttributes]))
+      catch { case _: java.nio.file.NoSuchFileException => None }
+    attrs.map { a =>
+      val stamp = (a.fileKey, a.lastModifiedTime, a.size)
+      val hit = parsed.get(f.toString)
+      if (hit != null && hit._1 == stamp) hit._2.asInstanceOf[T]
+      else {
+        val v = parse(f.toString, Files.readString(f))
+        parsed.put(f.toString, (stamp, v))
+        v
+      }
+    }
+  }
 
   // -------------------------------------------------------------------
   // tenants (TenantController.cs:25-57 create, 59-108 quotas, 110-143 key)
@@ -111,76 +198,39 @@ class Management(spark: SparkSession, val root: String) {
   private def tenantFile(t: String) = Paths.get(s"$root/tenants/$t/config.json")
   private def usersFile(t: String) = Paths.get(s"$root/tenants/$t/users.json")
 
-  private def quotaJson(q: TenantQuota, apiKeyHash: String): String =
-    s"""{"maxQps": ${q.maxQps}, "maxConcurrentRequests": ${q.maxConcurrentRequests}, "cacheMemoryMb": ${q.cacheMemoryMb}, "dailyRequestLimit": ${q.dailyRequestLimit}, "priority": ${q.priority}, "monthlyBudget": ${q.monthlyBudget}, "apiKeyHash": "$apiKeyHash"}"""
-
   def createTenant(tenantId: String, quota: TenantQuota = TenantQuota(),
                    apiKeyHash: String = ""): Unit = {
     requireName(tenantId, "tenant id")
     require(!Files.exists(tenantFile(tenantId)),
       s"tenant already exists: $tenantId")
-    writeJson(tenantFile(tenantId), quotaJson(quota, apiKeyHash))
+    writeJson(tenantFile(tenantId), Management.renderTenant(quota, apiKeyHash))
   }
 
   def tenantExists(tenantId: String): Boolean = Files.exists(tenantFile(tenantId))
 
-  /** Parsed-quota memo keyed by the config file's (mtime, size): the
-    * RESP serving path resolves the tenant's cache quota on every call,
-    * and was paying a file read + 6 regex scans per query (per-call disk
-    * reads ride this host's IO storms into serving tails). Any writer
-    * bumps mtime → next stat re-parses; same-JVM writers also drop the
-    * entry synchronously. */
-  private val quotaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.nio.file.attribute.FileTime, Long, TenantQuota)]()
+  /** (quota, apiKeyHash). */
+  private def tenantConfig(tenantId: String): (TenantQuota, String) =
+    read(tenantFile(tenantId))(Management.parseTenant).getOrElse(
+      throw new IllegalArgumentException(s"no such tenant: $tenantId"))
 
-  def quota(tenantId: String): TenantQuota = {
-    val f = tenantFile(tenantId)
-    val attrs =
-      try Files.readAttributes(
-        f, classOf[java.nio.file.attribute.BasicFileAttributes])
-      catch {
-        // ONLY absence means "no such tenant" — a transient I/O or
-        // permission error reported as a missing tenant would hand the
-        // client a wrong, actionable-looking answer during the exact
-        // disk storms this memo exists to ride out; let those propagate
-        // as the internal errors they are
-        case _: java.nio.file.NoSuchFileException =>
-          throw new IllegalArgumentException(s"no such tenant: $tenantId")
-      }
-    val hit = quotaMemo.get(tenantId)
-    if (hit != null && hit._1 == attrs.lastModifiedTime &&
-        hit._2 == attrs.size) hit._3
-    else {
-      val s = Files.readString(f)
-      val q = TenantQuota(
-        jLong(s, "maxQps").getOrElse(100L).toInt,
-        jLong(s, "maxConcurrentRequests").getOrElse(8L).toInt,
-        jLong(s, "cacheMemoryMb").getOrElse(64L).toInt,
-        jLong(s, "dailyRequestLimit").getOrElse(100000L),
-        jLong(s, "priority").getOrElse(1L).toInt,
-        jDouble(s, "monthlyBudget").getOrElse(100.0))
-      quotaMemo.put(tenantId, (attrs.lastModifiedTime, attrs.size, q))
-      q
-    }
-  }
+  def quota(tenantId: String): TenantQuota = tenantConfig(tenantId)._1
 
   def updateQuota(tenantId: String, q: TenantQuota,
                   actingUser: String = Management.SystemUser): Unit = {
     authorize(tenantId, actingUser, "admin")
     require(tenantExists(tenantId), s"no such tenant: $tenantId")
-    writeJson(tenantFile(tenantId), quotaJson(q, apiKeyHash(tenantId)))
-    quotaMemo.remove(tenantId)
+    writeJson(tenantFile(tenantId), Management.renderTenant(q, apiKeyHash(tenantId)))
   }
 
-  private def apiKeyHash(tenantId: String): String =
-    jString(Files.readString(tenantFile(tenantId)), "apiKeyHash").getOrElse("")
+  /** A damaged config throws rather than reading as "no key": the
+    * protocol planes skip key checks for tenants without one. */
+  private def apiKeyHash(tenantId: String): String = tenantConfig(tenantId)._2
 
   def updateApiKey(tenantId: String, newHash: String,
                    actingUser: String = Management.SystemUser): Unit = {
     authorize(tenantId, actingUser, "admin")
     require(tenantExists(tenantId), s"no such tenant: $tenantId")
-    writeJson(tenantFile(tenantId), quotaJson(quota(tenantId), newHash))
-    quotaMemo.remove(tenantId)
+    writeJson(tenantFile(tenantId), Management.renderTenant(quota(tenantId), newHash))
   }
 
   /** Whether the tenant has any API key set — the protocol planes only
@@ -199,20 +249,13 @@ class Management(spark: SparkSession, val root: String) {
 
   // users + roles (TenantController.cs:145-264; roles mirror the
   // reference's RBAC permission tiers)
-  val Roles: Set[String] = Set("admin", "writer", "reader")
+  val Roles: Set[String] = Management.Roles
 
-  def users(tenantId: String): Map[String, String] = {
-    val f = usersFile(tenantId)
-    if (!Files.exists(f)) Map.empty
-    else raw""""([A-Za-z0-9_-]+)"\s*:\s*"(admin|writer|reader)"""".r
-      .findAllMatchIn(Files.readString(f))
-      .map(m => m.group(1) -> m.group(2)).toMap
-  }
+  def users(tenantId: String): Map[String, String] =
+    read(usersFile(tenantId))(Management.parseUsers).getOrElse(Map.empty)
 
   private def writeUsers(tenantId: String, us: Map[String, String]): Unit =
-    writeJson(usersFile(tenantId),
-      us.toSeq.sorted.map { case (u, r) => s""""$u": "$r"""" }
-        .mkString("{", ", ", "}"))
+    writeJson(usersFile(tenantId), Management.renderUsers(us))
 
   def createUser(tenantId: String, userId: String, role: String,
                  actingUser: String = Management.SystemUser): Unit = {
@@ -252,22 +295,13 @@ class Management(spark: SparkSession, val root: String) {
 
   private def policyFile = Paths.get(s"$root/cache_policy.json")
 
-  def cachePolicy: CachePolicy = {
-    if (!Files.exists(policyFile)) CachePolicy()
-    else {
-      val s = Files.readString(policyFile)
-      CachePolicy(
-        raw""""enableCache"\s*:\s*(true|false)""".r.findFirstMatchIn(s)
-          .forall(_.group(1) == "true"),
-        jLong(s, "defaultTtlSeconds").getOrElse(60L).toInt)
-    }
-  }
+  def cachePolicy: CachePolicy =
+    read(policyFile)(Management.parsePolicy).getOrElse(CachePolicy())
 
   def updateCachePolicy(p: CachePolicy,
                         actingUser: String = Management.SystemUser): Unit = {
     require(p.defaultTtlSeconds >= 0, "DefaultTtlSeconds must be >= 0.")
-    writeJson(policyFile,
-      s"""{"enableCache": ${p.enableCache}, "defaultTtlSeconds": ${p.defaultTtlSeconds}}""")
+    writeJson(policyFile, Management.renderPolicy(p))
   }
 
   // -------------------------------------------------------------------
@@ -289,24 +323,13 @@ class Management(spark: SparkSession, val root: String) {
       s"unknown algo: ${cfg.algo}")
     require(!Files.exists(indexFile(tenantId, indexName)),
       s"index already exists: $tenantId/$indexName")
-    writeJson(indexFile(tenantId, indexName),
-      s"""{"dim": ${cfg.dim}, "metric": "${cfg.metric.toUpperCase(java.util.Locale.ROOT)}", "algo": "${cfg.algo.toUpperCase(java.util.Locale.ROOT)}", "nlist": ${cfg.nlist}, "pqM": ${cfg.pqM}, "pqK": ${cfg.pqK}}""")
+    writeJson(indexFile(tenantId, indexName), Management.renderIndex(cfg.copy(
+      metric = cfg.metric.toUpperCase(java.util.Locale.ROOT),
+      algo = cfg.algo.toUpperCase(java.util.Locale.ROOT))))
   }
 
-  def indexConfig(tenantId: String, indexName: String): Option[DeclaredIndex] = {
-    val f = indexFile(tenantId, indexName)
-    if (!Files.exists(f)) None
-    else {
-      val s = Files.readString(f)
-      Some(DeclaredIndex(
-        jLong(s, "dim").getOrElse(0L).toInt,
-        jString(s, "metric").getOrElse("L2"),
-        jString(s, "algo").getOrElse("IVF_FLAT"),
-        jLong(s, "nlist").getOrElse(16L).toInt,
-        jLong(s, "pqM").getOrElse(8L).toInt,
-        jLong(s, "pqK").getOrElse(256L).toInt))
-    }
-  }
+  def indexConfig(tenantId: String, indexName: String): Option[DeclaredIndex] =
+    read(indexFile(tenantId, indexName))(Management.parseIndex)
 
   /** Build with the DECLARED config — the REST build route has no
     * parameters; everything comes from index creation. */
@@ -445,20 +468,12 @@ class Management(spark: SparkSession, val root: String) {
   private def modelDir(name: String) = s"$root/models/$name"
   private def registryFile(name: String) = Paths.get(s"${modelDir(name)}/registry.json")
 
-  private def registry(name: String): (Long, Long, Long) = { // (latest, active, previous)
-    val f = registryFile(name)
-    if (!Files.exists(f)) (0L, 0L, 0L)
-    else {
-      val s = Files.readString(f)
-      (jLong(s, "latest").getOrElse(0L), jLong(s, "active").getOrElse(0L),
-        jLong(s, "previous").getOrElse(0L))
-    }
-  }
+  private def registry(name: String): (Long, Long, Long) = // (latest, active, previous)
+    read(registryFile(name))(Management.parseRegistry).getOrElse((0L, 0L, 0L))
 
   private def writeRegistry(name: String, latest: Long, active: Long,
                             previous: Long): Unit =
-    writeJson(registryFile(name),
-      s"""{"latest": $latest, "active": $active, "previous": $previous}""")
+    writeJson(registryFile(name), Management.renderRegistry((latest, active, previous)))
 
   /** Train a new semantic-cluster model version (KMeans over the given
     * vectors — the sidecar's n_clusters-KMeans, semantic_model.py:17-29).

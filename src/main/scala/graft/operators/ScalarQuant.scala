@@ -24,17 +24,19 @@ object ScalarQuant {
   def saveParams(p: Params, path: String): Unit = {
     val f = java.nio.file.Paths.get(path)
     if (f.getParent != null) java.nio.file.Files.createDirectories(f.getParent)
-    java.nio.file.Files.writeString(f,
-      s"""{"min": ${p.min}, "max": ${p.max}}""")
+    java.nio.file.Files.writeString(f, renderParams(p))
   }
 
-  def loadParams(path: String): Params = {
-    val s = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-    def field(k: String): Float =
-      raw""""$k"\s*:\s*(-?[0-9.eE+-]+)""".r.findFirstMatchIn(s)
-        .map(_.group(1).toFloat)
-        .getOrElse(throw new IllegalArgumentException(s"bad params file: $s"))
-    Params(field("min"), field("max"))
+  def loadParams(path: String): Params =
+    parseParams(path, java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
+
+  private[graft] def renderParams(p: Params): String =
+    s"""{"min": ${p.min}, "max": ${p.max}}"""
+
+  /** Floats read from their own decimal text: bit-exact round trip. */
+  private[graft] def parseParams(source: String, s: String): Params = {
+    val o = graft.Json.parse(s"bad params file $source", s)
+    Params(o.need("min")(o.float), o.need("max")(o.float))
   }
 
   /** Train = global min/max over every vector element. */

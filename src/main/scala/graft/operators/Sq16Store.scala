@@ -276,10 +276,7 @@ object Sq16Store {
     java.nio.file.Files.createDirectories(d)
     val lens = store.segIds.map(_.length)
     java.nio.file.Files.writeString(d.resolve("meta.json"),
-      s"""{"version": $MetaVersion, "dim": ${store.dim}, """ +
-        s""""mn_bits": ${java.lang.Float.floatToRawIntBits(store.mn)}, """ +
-        s""""mx_bits": ${java.lang.Float.floatToRawIntBits(store.mx)}, """ +
-        s""""seg_rows": [${lens.mkString(",")}]}""")
+      renderMeta(Meta(store.dim, store.mn, store.mx, lens)))
     var i = 0
     while (i < store.segIds.length) {
       writeSegment(d.resolve(segFile(i)), store.segIds(i), store.segCodes(i),
@@ -418,33 +415,31 @@ object Sq16Store {
 
   private def segFile(i: Int): String = f"seg-$i%05d.bin"
 
-  private final case class Meta(dim: Int, mn: Float, mx: Float,
-                                segRows: Array[Int])
+  private[graft] final case class Meta(dim: Int, mn: Float, mx: Float,
+                                       segRows: Array[Int])
+
+  private[graft] def renderMeta(m: Meta): String =
+    s"""{"version": $MetaVersion, "dim": ${m.dim}, """ +
+      s""""mn_bits": ${java.lang.Float.floatToRawIntBits(m.mn)}, """ +
+      s""""mx_bits": ${java.lang.Float.floatToRawIntBits(m.mx)}, """ +
+      s""""seg_rows": [${m.segRows.mkString(",")}]}"""
+
+  private[graft] def parseMeta(source: String, s: String): Meta = {
+    val o = graft.Json.parse(s"sq16 sidecar meta $source", s)
+    val ver = o.need("version")(o.long)
+    require(ver == MetaVersion,
+      s"sq16 sidecar version $ver unsupported (expected $MetaVersion)")
+    val segRows = o.need("seg_rows")(o.ints)
+    require(segRows.forall(_ >= 0), s"sq16 sidecar meta negative seg_rows: $s")
+    val dim = o.need("dim")(o.int)
+    require(dim > 0, s"sq16 sidecar meta dim must be positive: $s")
+    Meta(dim, java.lang.Float.intBitsToFloat(o.need("mn_bits")(o.int)),
+      java.lang.Float.intBitsToFloat(o.need("mx_bits")(o.int)), segRows)
+  }
 
   private def readMeta(dir: String): Meta = {
     val p = java.nio.file.Paths.get(dir).resolve("meta.json")
-    val s = java.nio.file.Files.readString(p)
-    def intField(k: String): Long =
-      raw""""$k"\s*:\s*(-?\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-        .getOrElse(throw new IllegalArgumentException(
-          s"sq16 sidecar meta missing '$k': $s"))
-    val ver = intField("version")
-    require(ver == MetaVersion,
-      s"sq16 sidecar version $ver unsupported (expected $MetaVersion)")
-    val rows = raw""""seg_rows"\s*:\s*\[([-\d,\s]*)\]""".r.findFirstMatchIn(s)
-      .map(_.group(1).trim)
-      .getOrElse(throw new IllegalArgumentException(
-        s"sq16 sidecar meta missing 'seg_rows': $s"))
-    val segRows =
-      if (rows.isEmpty) Array.empty[Int]
-      else rows.split(",").map(_.trim.toInt)
-    require(segRows.forall(_ >= 0), s"sq16 sidecar meta negative seg_rows: $s")
-    val dim = intField("dim").toInt
-    require(dim > 0, s"sq16 sidecar meta dim must be positive: $s")
-    Meta(dim,
-      java.lang.Float.intBitsToFloat(intField("mn_bits").toInt),
-      java.lang.Float.intBitsToFloat(intField("mx_bits").toInt),
-      segRows)
+    parseMeta(p.toString, java.nio.file.Files.readString(p))
   }
 
   private def writeSegment(p: java.nio.file.Path, ids: Array[Long],

@@ -12,7 +12,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{CachePolicy, DeclaredIndex, Management, TenantQuota}
+import graft.{CachePolicy, DeclaredIndex, Json, Management, TenantQuota}
 
 /** The reference's REST management plane — every route of the seven
   * controllers (reference: Controllers/IndexController.cs:13-292,
@@ -74,31 +74,6 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
 
   def close(): Unit = if (server != null) server.stop(0)
 
-  // ---- tiny JSON helpers (same regex-extractor discipline as the
-  // Management config plane — bodies here are flat objects) ------------
-
-  private def jStr(s: String, k: String): Option[String] =
-    raw""""$k"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
-  private def jLong(s: String, k: String): Option[Long] =
-    raw""""$k"\s*:\s*(-?\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-  private def jDouble(s: String, k: String): Option[Double] =
-    raw""""$k"\s*:\s*(-?[\d.]+(?:[eE][+-]?\d+)?)""".r
-      .findFirstMatchIn(s).map(_.group(1).toDouble)
-  private def jBool(s: String, k: String): Option[Boolean] =
-    raw""""$k"\s*:\s*(true|false)""".r.findFirstMatchIn(s)
-      .map(_.group(1) == "true")
-
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   /** Bounded by construction: only config/metrics tables flow through
     * here (stats per cluster, audit log, per-tenant billing rollup). */
   private def dfJson(df: DataFrame): String =
@@ -110,8 +85,12 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
 
   // ---- request plumbing ----------------------------------------------
 
-  private def body(ex: HttpExchange): String =
-    new String(ex.getRequestBody.readAllBytes(), UTF_8)
+  /** The request body as one strict JSON object: a malformed or
+    * truncated body, or a field of the wrong type or range, is an
+    * IllegalArgumentException and so a 400 naming the field. */
+  private def body(ex: HttpExchange): Json.Obj =
+    Json.parse("request body",
+      new String(ex.getRequestBody.readAllBytes(), UTF_8))
 
   private def queryParams(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
@@ -134,7 +113,7 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
   }
 
   private def sendErr(ex: HttpExchange, code: Int, msg: String): Unit =
-    send(ex, code, s"""{"error": "${esc(msg)}"}""")
+    send(ex, code, s"""{"error": ${Json.quote(msg)}}""")
 
   private def fail(code: Int, msg: String): Nothing =
     throw new HttpPlane.HttpError(code, msg)
@@ -177,17 +156,10 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
         // tenants (TenantController.cs:25-290)
         case ("POST", List("v1", "tenants")) =>
           val b = body(ex)
-          val t = jStr(b, "tenantId").getOrElse(fail(400, "Invalid request."))
-          val quota = TenantQuota(
-            jLong(b, "maxQps").getOrElse(100L).toInt,
-            jLong(b, "maxConcurrentRequests").getOrElse(8L).toInt,
-            jLong(b, "cacheMemoryMb").getOrElse(64L).toInt,
-            jLong(b, "dailyRequestLimit").getOrElse(100000L),
-            jLong(b, "priority").getOrElse(1L).toInt,
-            jDouble(b, "monthlyBudget").getOrElse(100.0))
-          mgmt.createTenant(t, quota,
-            jStr(b, "apiKey").map(sha256Hex).getOrElse(""))
-          send(ex, 201, s"""{"tenantId": "${esc(t)}"}""")
+          val t = b.string("tenantId").getOrElse(fail(400, "Invalid request."))
+          mgmt.createTenant(t, quotaOf(b, TenantQuota()),
+            b.string("apiKey").map(sha256Hex).getOrElse(""))
+          send(ex, 201, s"""{"tenantId": ${Json.quote(t)}}""")
         case ("GET", List("v1", "tenants", t, "quotas")) =>
           actor(ex, t) // auth only; quota read needs no role in the library
           val q = tenantQuotaOr404(t)
@@ -195,19 +167,12 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
         case ("PUT", List("v1", "tenants", t, "quotas")) =>
           val a = actor(ex, t)
           val cur = tenantQuotaOr404(t)
-          val b = body(ex)
-          val q = TenantQuota(
-            jLong(b, "maxQps").getOrElse(cur.maxQps.toLong).toInt,
-            jLong(b, "maxConcurrentRequests").getOrElse(cur.maxConcurrentRequests.toLong).toInt,
-            jLong(b, "cacheMemoryMb").getOrElse(cur.cacheMemoryMb.toLong).toInt,
-            jLong(b, "dailyRequestLimit").getOrElse(cur.dailyRequestLimit),
-            jLong(b, "priority").getOrElse(cur.priority.toLong).toInt,
-            jDouble(b, "monthlyBudget").getOrElse(cur.monthlyBudget))
+          val q = quotaOf(body(ex), cur)
           mgmt.updateQuota(t, q, a)
           send(ex, 200, quotaJson(q))
         case ("PUT", List("v1", "tenants", t, "apikey")) =>
           val a = actor(ex, t)
-          val k = jStr(body(ex), "apiKey")
+          val k = body(ex).string("apiKey")
             .getOrElse(fail(400, "ApiKey is required."))
           mgmt.updateApiKey(t, sha256Hex(k), a)
           send(ex, 200, """{"message": "API key updated."}""")
@@ -215,18 +180,16 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
           val a = actor(ex, t)
           val b = body(ex)
           mgmt.createUser(t,
-            jStr(b, "userId").getOrElse(fail(400, "userId required")),
-            jStr(b, "role").getOrElse(fail(400, "role required")), a)
+            b.string("userId").getOrElse(fail(400, "userId required")),
+            b.string("role").getOrElse(fail(400, "role required")), a)
           send(ex, 201, """{"message": "User created."}""")
         case ("GET", List("v1", "tenants", t, "users")) =>
           actor(ex, t)
-          send(ex, 200, mgmt.users(t).toSeq.sorted
-            .map { case (u, r) => s""""${esc(u)}": "${esc(r)}"""" }
-            .mkString("{", ", ", "}"))
+          send(ex, 200, Management.renderUsers(mgmt.users(t)))
         case ("PUT", List("v1", "tenants", t, "users", u, "role")) =>
           val a = actor(ex, t)
           mgmt.updateUserRole(t, u,
-            jStr(body(ex), "role").getOrElse(fail(400, "role required")), a)
+            body(ex).string("role").getOrElse(fail(400, "role required")), a)
           send(ex, 200, """{"message": "Role updated."}""")
         case ("DELETE", List("v1", "tenants", t, "users", u)) =>
           val a = actor(ex, t)
@@ -236,32 +199,33 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
         // indexes (IndexController.cs:29-292)
         case ("POST", List("v1", "indexes")) =>
           val b = body(ex)
-          val t = jStr(b, "tenantId").getOrElse(fail(400, "Invalid request."))
-          val i = jStr(b, "indexName").getOrElse(fail(400, "Invalid request."))
+          val t = b.string("tenantId").getOrElse(fail(400, "Invalid request."))
+          val i = b.string("indexName").getOrElse(fail(400, "Invalid request."))
           val a = actor(ex, t)
+          val d = DeclaredIndex(dim = 0)
           mgmt.createIndex(t, i, DeclaredIndex(
-            jLong(b, "dimension").getOrElse(0L).toInt,
-            jStr(b, "metric").getOrElse("L2"),
-            jStr(b, "algorithm").getOrElse("IVF_FLAT"),
-            jLong(b, "nlist").getOrElse(16L).toInt,
-            jLong(b, "pqM").getOrElse(8L).toInt,
-            jLong(b, "pqK").getOrElse(256L).toInt), a)
+            b.int("dimension").getOrElse(d.dim),
+            b.string("metric").getOrElse(d.metric),
+            b.string("algorithm").getOrElse(d.algo),
+            b.int("nlist").getOrElse(d.nlist),
+            b.int("pqM").getOrElse(d.pqM),
+            b.int("pqK").getOrElse(d.pqK)), a)
           send(ex, 201, """{"message": "Index created."}""")
         case ("POST", List("v1", "indexes", t, i, "build")) =>
           mgmt.buildIndex(t, i, actingUser = actor(ex, t))
           send(ex, 200, """{"message": "Index built."}""")
         case ("POST", List("v1", "indexes", t, i, "snapshot")) =>
-          val dest = jStr(body(ex), "dest").getOrElse(fail(400, "dest required"))
+          val dest = body(ex).string("dest").getOrElse(fail(400, "dest required"))
           mgmt.snapshotIndex(t, i, dest, actor(ex, t))
           send(ex, 200, """{"message": "Snapshot written."}""")
         case ("POST", List("v1", "indexes", t, i, "load")) =>
-          val src = jStr(body(ex), "src").getOrElse(fail(400, "src required"))
+          val src = body(ex).string("src").getOrElse(fail(400, "src required"))
           mgmt.loadIndex(t, i, src, actor(ex, t))
           send(ex, 200, """{"message": "Snapshot loaded."}""")
         case ("GET", List("v1", "indexes", t, i, "stats")) =>
           send(ex, 200, dfJson(mgmt.indexStats(t, i, actor(ex, t))))
         case ("POST", List("v1", "indexes", t, i, "centroids")) =>
-          val model = jStr(body(ex), "model")
+          val model = body(ex).string("model")
             .getOrElse(fail(400, "model required"))
           actor(ex, t) // authn; centroid push rides the active model
           mgmt.deployModelToIndex(model, t, i)
@@ -270,25 +234,25 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
         // cache (CacheController.cs:26-125)
         case ("GET", List("v1", "cache", "policies")) =>
           val p = mgmt.cachePolicy
-          send(ex, 200, policyJson(p))
+          send(ex, 200, Management.renderPolicy(p))
         case ("PUT", List("v1", "cache", "policies")) =>
           val b = body(ex)
           val cur = mgmt.cachePolicy
           val p = CachePolicy(
-            jBool(b, "enableCache").getOrElse(cur.enableCache),
-            jLong(b, "defaultTtlSeconds").getOrElse(cur.defaultTtlSeconds.toLong).toInt)
+            b.bool("enableCache").getOrElse(cur.enableCache),
+            b.int("defaultTtlSeconds").getOrElse(cur.defaultTtlSeconds))
           mgmt.updateCachePolicy(p, globalActor(ex))
-          send(ex, 200, policyJson(p))
+          send(ex, 200, Management.renderPolicy(p))
         case ("POST", List("v1", "cache", "flush")) =>
           val b = body(ex)
-          val t = jStr(b, "tenantId").getOrElse(fail(400, "TenantId and IndexName are required."))
-          val i = jStr(b, "indexName").getOrElse(fail(400, "TenantId and IndexName are required."))
+          val t = b.string("tenantId").getOrElse(fail(400, "TenantId and IndexName are required."))
+          val i = b.string("indexName").getOrElse(fail(400, "TenantId and IndexName are required."))
           mgmt.flushCache(t, i, actor(ex, t))
           send(ex, 200, """{"message": "Cache flushed."}""")
         case ("POST", List("v1", "cache", "invalidate")) =>
           val b = body(ex)
-          val t = jStr(b, "tenantId").getOrElse(fail(400, "TenantId and IndexName are required."))
-          val i = jStr(b, "indexName").getOrElse(fail(400, "TenantId and IndexName are required."))
+          val t = b.string("tenantId").getOrElse(fail(400, "TenantId and IndexName are required."))
+          val i = b.string("indexName").getOrElse(fail(400, "TenantId and IndexName are required."))
           mgmt.invalidateCache(t, i, actor(ex, t))
           send(ex, 200, """{"message": "Cache invalidated."}""")
 
@@ -313,28 +277,28 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
             fail(400, "name required"))
           val versions = mgmt.modelVersions(name)
           send(ex, 200,
-            s"""{"name": "${esc(name)}", "versions": [${versions.mkString(",")}], "active": ${mgmt.activeModel(name).getOrElse(0L)}}""")
+            s"""{"name": ${Json.quote(name)}, "versions": [${versions.mkString(",")}], "active": ${mgmt.activeModel(name).getOrElse(0L)}}""")
         case ("POST", List("v1", "ai", "models", "train")) =>
           val b = body(ex)
-          val name = jStr(b, "name").getOrElse(fail(400, "name required"))
-          val t = jStr(b, "tenantId").getOrElse(fail(400, "tenantId required"))
-          val i = jStr(b, "indexName").getOrElse(fail(400, "indexName required"))
-          val k = jLong(b, "k").getOrElse(8L).toInt
+          val name = b.string("name").getOrElse(fail(400, "name required"))
+          val t = b.string("tenantId").getOrElse(fail(400, "tenantId required"))
+          val i = b.string("indexName").getOrElse(fail(400, "indexName required"))
+          val k = b.int("k").getOrElse(8)
           actor(ex, t)
           // training corpus = the index's live vectors (the sidecar trains
           // on the dataset the server exports, semantic_model.py:17-29)
           val vecs = mgmt.engine.currentState(t, i)
             .select(xxhash64(col("id")).as("id"), col("vector").as("vec"))
           val v = mgmt.trainModel(name, vecs, k)
-          send(ex, 200, s"""{"name": "${esc(name)}", "version": $v}""")
+          send(ex, 200, s"""{"name": ${Json.quote(name)}, "version": $v}""")
         case ("POST", List("v1", "ai", "models", "deploy")) =>
           val b = body(ex)
-          val name = jStr(b, "name").getOrElse(fail(400, "name required"))
-          val v = jLong(b, "version").getOrElse(fail(400, "version is required."))
+          val name = b.string("name").getOrElse(fail(400, "name required"))
+          val v = b.long("version").getOrElse(fail(400, "version is required."))
           mgmt.deployModel(name, v)
           send(ex, 200, s"""{"status": "deployed", "active": $v}""")
         case ("POST", List("v1", "ai", "models", "rollback")) =>
-          val name = jStr(body(ex), "name").getOrElse(fail(400, "name required"))
+          val name = body(ex).string("name").getOrElse(fail(400, "name required"))
           mgmt.rollbackModel(name)
           send(ex, 200,
             s"""{"status": "rolled back", "active": ${mgmt.activeModel(name).getOrElse(0L)}}""")
@@ -377,11 +341,17 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
     mgmt.quota(t)
   }
 
+  /** A quota from the body's fields, `cur` for the fields it omits. */
+  private def quotaOf(b: Json.Obj, cur: TenantQuota): TenantQuota =
+    TenantQuota(b.int("maxQps").getOrElse(cur.maxQps),
+      b.int("maxConcurrentRequests").getOrElse(cur.maxConcurrentRequests),
+      b.int("cacheMemoryMb").getOrElse(cur.cacheMemoryMb),
+      b.long("dailyRequestLimit").getOrElse(cur.dailyRequestLimit),
+      b.int("priority").getOrElse(cur.priority),
+      b.double("monthlyBudget").getOrElse(cur.monthlyBudget))
+
   private def quotaJson(q: TenantQuota): String =
     s"""{"maxQps": ${q.maxQps}, "maxConcurrentRequests": ${q.maxConcurrentRequests}, "cacheMemoryMb": ${q.cacheMemoryMb}, "dailyRequestLimit": ${q.dailyRequestLimit}, "priority": ${q.priority}, "monthlyBudget": ${q.monthlyBudget}}"""
-
-  private def policyJson(p: CachePolicy): String =
-    s"""{"enableCache": ${p.enableCache}, "defaultTtlSeconds": ${p.defaultTtlSeconds}}"""
 }
 
 object HttpPlane {

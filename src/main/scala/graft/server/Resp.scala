@@ -11,7 +11,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{GraftEngine, Management}
+import graft.{GraftEngine, Json, Management}
 
 /** RESP2 wire codec — the subset the vector command surface needs: a
   * request is an array of bulk strings, replies are simple strings,
@@ -623,25 +623,14 @@ final class RespServer(engine: GraftEngine, mgmt: Management,
       case NonFatal(e) => writeKnown(out, e)
     }
 
-  /** Minimal JSON string escape for client-echoed values — a quote or
-    * backslash in a REQUEST_ID otherwise makes the trace blob
-    * unparseable for the very client that sent it. */
-  private def escJson(s: String): String = {
-    val sb = new StringBuilder
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
+  /** Client-echoed values are quoted: a quote or backslash in a
+    * REQUEST_ID otherwise makes the trace blob unparseable for the very
+    * client that sent it. */
   private def traceJson(requestId: Option[String], cacheHit: Boolean,
                         info: String, latencyMs: Double): String = {
     val rid = requestId
-      .map(r => s""""requestId": "${escJson(r)}", """).getOrElse("")
-    f"""{$rid"cacheHit": $cacheHit, "info": "${escJson(info)}", "latencyMs": $latencyMs%.3f}"""
+      .map(r => s""""requestId": ${Json.quote(r)}, """).getOrElse("")
+    f"""{$rid"cacheHit": $cacheHit, "info": ${Json.quote(info)}, "latencyMs": $latencyMs%.3f}"""
   }
 
   private def handleStats(args: Seq[String], sessionTenant: Option[String],

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Json
+
 /** The engine ↔ AI-sidecar process boundary as a versioned on-disk data
   * contract instead of a network protocol.
   *
@@ -61,25 +63,33 @@ object SidecarContract {
   def ensureContract(root: String): Unit = {
     Files.createDirectories(Paths.get(root))
     val p = Paths.get(contractPath(root))
-    if (!Files.exists(p)) {
-      val fields = (s: StructType) =>
-        s.fields.map(f => s""""${f.name}":"${f.dataType.simpleString}"""")
-          .mkString("{", ",", "}")
-      Files.write(p,
-        (s"""{"version":$Version,""" +
-          s""""metrics":${fields(MetricsSchema)},""" +
-          s""""policies":${fields(PoliciesSchema)}}""").getBytes(UTF_8))
-    } else checkVersion(root)
+    if (!Files.exists(p))
+      Files.write(p, renderContract(Version,
+        "metrics" -> MetricsSchema, "policies" -> PoliciesSchema).getBytes(UTF_8))
+    else checkVersion(root)
+  }
+
+  /** `CONTRACT.json`: the version stamp, then each named schema as an
+    * object of field name → type. */
+  private[graft] def renderContract(version: Int,
+                                    schemas: (String, StructType)*): String =
+    (s"""{"version":$version""" +: schemas.map { case (name, s) =>
+      Json.quote(name) + ":" + s.fields.map(f =>
+        Json.quote(f.name) + ":" + Json.quote(f.dataType.simpleString))
+        .mkString("{", ",", "}")
+    }).mkString("", ",", "}")
+
+  private[graft] def contractVersion(source: String, text: String): Int = {
+    val o = Json.parse(s"unparseable CONTRACT.json at $source", text,
+      new IllegalStateException(_))
+    o.need("version")(o.int)
   }
 
   /** Parse the version stamp and fail loudly on skew. */
   def checkVersion(root: String): Unit = {
     val p = Paths.get(contractPath(root))
     require(Files.exists(p), s"no CONTRACT.json under $root — not a contract dir")
-    val txt = new String(Files.readAllBytes(p), UTF_8)
-    val m = """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
-    val v = m.map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(s"unparseable CONTRACT.json at $root"))
+    val v = contractVersion(root, new String(Files.readAllBytes(p), UTF_8))
     require(v == Version,
       s"contract version skew: directory speaks v$v, this module speaks v$Version")
   }

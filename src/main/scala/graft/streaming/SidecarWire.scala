@@ -8,6 +8,8 @@ import javax.net.ssl.SSLContext
 
 import scala.util.control.NonFatal
 
+import graft.Json
+
 /** The engine ↔ sidecar boundary as a NETWORK transport: length-prefixed
   * frames over TCP, optionally under mutually-authenticated TLS —
   * carrying the same versioned payloads as the [[SidecarContract]]
@@ -70,107 +72,37 @@ object SidecarWire {
                              ttlSeconds: Int, admissionThreshold: Double,
                              evictionPriority: String)
 
-  // ---- row codecs (JSON-lines; hand-rolled like the repo's other
-  // wire codecs — the payload grammar is flat and fully ours) ---------
+  // ---- row codecs: JSON lines, one object per row -------------------
 
-  private def esc(s: String): String = {
-    val sb = new StringBuilder
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
+  private def decodeRows[A](payload: Array[Byte])(row: Json.Obj => A): Seq[A] =
+    new String(payload, UTF_8).split('\n').toSeq.filter(_.nonEmpty)
+      .map(j => row(Json.parse(s"frame row $j", j)))
 
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case 'u' =>
-            require(i + 6 <= s.length,
-              s"truncated \\u escape in frame string value: $s")
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  private def field(json: String, name: String): String = {
-    val k = "\"" + name + "\":"
-    val at = json.indexOf(k)
-    require(at >= 0, s"frame row missing contract field '$name': $json")
-    var i = at + k.length
-    require(i < json.length,
-      s"frame row truncated after contract field '$name': $json")
-    if (json.charAt(i) == '"') {
-      // escape-aware scan: a lookbehind on charAt(i-1) == '\\' misreads
-      // a value ENDING in an escaped backslash ("a\\") — the backslash
-      // before the closing quote is itself escaped, so the quote
-      // terminates; consume escape PAIRS instead of peeking back.
-      // Bounds-checked: a truncated frame (unterminated string, or a
-      // lone trailing backslash) must surface as the same descriptive
-      // contract-violation error every other parse path throws, not a
-      // raw StringIndexOutOfBoundsException (ADVICE r9)
-      val sb = new StringBuilder
-      i += 1
-      var done = false
-      while (!done) {
-        require(i < json.length,
-          s"frame row has unterminated string value for field '$name': $json")
-        val c = json.charAt(i)
-        if (c == '\\') {
-          require(i + 1 < json.length,
-            s"frame row ends in a dangling escape in field '$name': $json")
-          sb.append(c).append(json.charAt(i + 1)); i += 2
-        }
-        else if (c == '"') done = true
-        else { sb.append(c); i += 1 }
-      }
-      unesc(sb.toString)
-    } else {
-      val end = json.indexWhere(c => c == ',' || c == '}', i)
-      require(end >= 0,
-        s"frame row truncated inside value of field '$name': $json")
-      json.substring(i, end).trim
-    }
-  }
-
-  private[streaming] def encodeMetrics(rows: Seq[MetricsRow]): Array[Byte] =
+  private[graft] def encodeMetrics(rows: Seq[MetricsRow]): Array[Byte] =
     rows.map(r =>
-      s"""{"tenant":"${esc(r.tenant)}","window":${r.window},""" +
+      s"""{"tenant":${Json.quote(r.tenant)},"window":${r.window},""" +
         s""""n_requests":${r.nRequests},"n_misses":${r.nMisses}}""")
       .mkString("\n").getBytes(UTF_8)
 
-  private[streaming] def decodeMetrics(payload: Array[Byte]): Seq[MetricsRow] =
-    new String(payload, UTF_8).split('\n').toSeq.filter(_.nonEmpty).map { j =>
-      MetricsRow(field(j, "tenant"), field(j, "window").toLong,
-        field(j, "n_requests").toLong, field(j, "n_misses").toLong)
+  private[graft] def decodeMetrics(payload: Array[Byte]): Seq[MetricsRow] =
+    decodeRows(payload) { o =>
+      MetricsRow(o.need("tenant")(o.string), o.need("window")(o.long),
+        o.need("n_requests")(o.long), o.need("n_misses")(o.long))
     }
 
-  private[streaming] def encodePolicies(rows: Seq[PolicyRow]): Array[Byte] =
+  private[graft] def encodePolicies(rows: Seq[PolicyRow]): Array[Byte] =
     rows.map(r =>
-      s"""{"tenant":"${esc(r.tenant)}","window":${r.window},""" +
+      s"""{"tenant":${Json.quote(r.tenant)},"window":${r.window},""" +
         s""""ttl_seconds":${r.ttlSeconds},""" +
         s""""admission_threshold":${r.admissionThreshold},""" +
-        s""""eviction_priority":"${esc(r.evictionPriority)}"}""")
+        s""""eviction_priority":${Json.quote(r.evictionPriority)}}""")
       .mkString("\n").getBytes(UTF_8)
 
-  private[streaming] def decodePolicies(payload: Array[Byte]): Seq[PolicyRow] =
-    new String(payload, UTF_8).split('\n').toSeq.filter(_.nonEmpty).map { j =>
-      PolicyRow(field(j, "tenant"), field(j, "window").toLong,
-        field(j, "ttl_seconds").toInt,
-        field(j, "admission_threshold").toDouble,
-        field(j, "eviction_priority"))
+  private[graft] def decodePolicies(payload: Array[Byte]): Seq[PolicyRow] =
+    decodeRows(payload) { o =>
+      PolicyRow(o.need("tenant")(o.string), o.need("window")(o.long),
+        o.need("ttl_seconds")(o.int), o.need("admission_threshold")(o.double),
+        o.need("eviction_priority")(o.string))
     }
 
   // ---- framing -------------------------------------------------------

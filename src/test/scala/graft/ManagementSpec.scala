@@ -50,6 +50,33 @@ class ManagementSpec extends SparkSpec {
     assert(m.users("acme")("bob") == "writer")
   }
 
+  test("a truncated tenant config fails closed; an absent apiKeyHash still means no key") {
+    val m = mkMgmt()
+    m.createTenant("acme", apiKeyHash = "h1")
+    val f = java.nio.file.Paths.get(s"${m.root}/tenants/acme/config.json")
+    Files.writeString(f, Files.readString(f).dropRight(2)) // cut inside apiKeyHash
+    val e = intercept[IllegalStateException](m.apiKeyConfigured("acme"))
+    assert(e.getMessage.contains("config.json") &&
+      e.getMessage.contains("apiKeyHash"), e.getMessage)
+    intercept[IllegalStateException](m.verifyApiKey("acme", "h1"))
+    intercept[IllegalStateException](m.quota("acme"))
+    // a well-formed legacy file without the field: a tenant with no key
+    Files.writeString(f, """{"maxQps": 7}""")
+    assert(!m.apiKeyConfigured("acme"))
+    assert(m.quota("acme") == TenantQuota(maxQps = 7))
+  }
+
+  test("a truncated model registry fails with a named error, not active = 0") {
+    val m = mkMgmt()
+    val f = java.nio.file.Paths.get(s"${m.root}/models/sem/registry.json")
+    Files.createDirectories(f.getParent)
+    Files.writeString(f, """{"latest": 2, "active": 2, "previous": 1}""")
+    assert(m.activeModel("sem").contains(2L))
+    Files.writeString(f, """{"latest": 2, "act""")
+    val e = intercept[IllegalStateException](m.activeModel("sem"))
+    assert(e.getMessage.contains("registry.json"), e.getMessage)
+  }
+
   test("indexes: declared config drives the build; stats served") {
     val m = mkMgmt()
     m.createIndex("t1", "idx", DeclaredIndex(dim = 3, metric = "L2",

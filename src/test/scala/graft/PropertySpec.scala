@@ -237,4 +237,119 @@ class PropertySpec extends SparkSpec {
       got == expect
     })
   }
+
+  // ---- the strict JSON codec: every record type it reads --------------
+
+  /** Strings a hand-rolled codec gets wrong: quotes, backslashes (and a
+    * literal backslash-u sequence), control characters, JSON structure
+    * characters and non-BMP code points. Sizes stay small: each case
+    * parses every prefix of its rendered text. */
+  private val nasty: Gen[String] = Gen.resize(12, Gen.listOf(Gen.frequency(
+    4 -> Gen.oneOf("\"", "\\", "\\\"", "\\" + "u0041", "\u0000", "\n", "\r",
+      "\t", "\u001f", "\u007f", "\u2028", "{", "}", ":", ",", "[", "]"),
+    4 -> Gen.alphaNumChar.map(_.toString),
+    2 -> Gen.choose(0xa0, 0xd7ff).map(c => new String(Character.toChars(c))),
+    2 -> Gen.choose(0x10000, 0x10ffff).map(c => new String(Character.toChars(c))))))
+    .map(_.mkString)
+  private def few[A](g: Gen[A]): Gen[A] = Gen.resize(4, g)
+
+  /** render → parse is the identity (compared through `view`), and every
+    * strict prefix of the rendered text, from `from` chars on, throws
+    * `err` with a message naming `label` — never reads as defaults. */
+  private def roundTrips[A, B](gen: Gen[A], err: Class[_ <: RuntimeException],
+                               label: String, from: Int = 0)(render: A => String)(
+                               parse: String => B)(view: A => B): Unit =
+    check(Prop.forAll(gen) { a =>
+      val text = render(a)
+      parse(text) == view(a) && (from until text.length).forall { n =>
+        try { parse(text.substring(0, n)); false }
+        catch { case e: RuntimeException =>
+          err.isInstance(e) && e.getMessage.contains(label) }
+      }
+    })
+
+  test("strict JSON codec: every record round-trips; no strict prefix reads as defaults") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    import org.scalacheck.Arbitrary.arbitrary
+    import graft.operators.{ScalarQuant, Sq16Store}
+    import graft.streaming.{SidecarContract, SidecarWire}
+    val ise = classOf[IllegalStateException]
+    val iae = classOf[IllegalArgumentException]
+    // the writers render ±Infinity and NaN as Scala prints them
+    val dbl = Gen.frequency(1 -> Gen.oneOf(Double.PositiveInfinity,
+      Double.NegativeInfinity, -0.0, Double.MinPositiveValue, Double.MaxValue),
+      4 -> arbitrary[Double].suchThat(!_.isNaN))
+    val flt = Gen.frequency(1 -> Gen.oneOf(Float.NaN, Float.PositiveInfinity,
+      Float.NegativeInfinity, -0.0f, Float.MinPositiveValue, Float.MaxValue),
+      4 -> arbitrary[Float])
+    // floats compare by bits: ScalarQuant params must round-trip exactly
+    val bits = (f: Float) => java.lang.Float.floatToIntBits(f)
+    val int = arbitrary[Int]
+    val long = arbitrary[Long]
+
+    val tenant = for {
+      qps <- int; conc <- int; mb <- int; daily <- long; prio <- int
+      budget <- dbl; key <- nasty
+    } yield (TenantQuota(qps, conc, mb, daily, prio, budget), key)
+    roundTrips(tenant, ise, "corrupt config t")((Management.renderTenant _).tupled)(
+      Management.parseTenant("t", _))(identity)
+    roundTrips(few(Gen.mapOf(Gen.zip(nasty, Gen.oneOf(Management.Roles.toSeq)))), ise,
+      "corrupt config u")(Management.renderUsers)(Management.parseUsers("u", _))(identity)
+    roundTrips(Gen.zip(arbitrary[Boolean], int).map(CachePolicy.tupled), ise,
+      "corrupt config p")(Management.renderPolicy)(Management.parsePolicy("p", _))(identity)
+    val index = for {
+      dim <- int; metric <- nasty; algo <- nasty; nlist <- int; m <- int; k <- int
+    } yield DeclaredIndex(dim, metric, algo, nlist, m, k)
+    roundTrips(index, ise, "corrupt config i")(Management.renderIndex)(
+      Management.parseIndex("i", _))(identity)
+    roundTrips(Gen.zip(long, long, long), ise, "corrupt config r")(
+      Management.renderRegistry)(Management.parseRegistry("r", _))(identity)
+
+    val meta = for {
+      dim <- Gen.posNum[Int]; mn <- flt; mx <- flt
+      rows <- few(Gen.listOf(Gen.chooseNum(0, Int.MaxValue)))
+    } yield Sq16Store.Meta(dim, mn, mx, rows.toArray)
+    val metaView = (m: Sq16Store.Meta) => (m.dim, bits(m.mn), bits(m.mx), m.segRows.toSeq)
+    roundTrips(meta, iae, "sq16 sidecar meta s")(Sq16Store.renderMeta)(
+      t => metaView(Sq16Store.parseMeta("s", t)))(metaView)
+    val paramsView = (p: ScalarQuant.Params) => (bits(p.min), bits(p.max))
+    roundTrips(Gen.zip(flt, flt).map(ScalarQuant.Params.tupled),
+      iae, "bad params file q")(ScalarQuant.renderParams)(
+      t => paramsView(ScalarQuant.parseParams("q", t)))(paramsView)
+
+    // one row per case: a prefix ending at a row boundary of a longer
+    // payload is a shorter valid frame, and the empty payload is the
+    // valid empty frame, so prefixes start at one char
+    val metrics = for { t <- nasty; w <- long; n <- long; m <- long }
+      yield SidecarWire.MetricsRow(t, w, n, m)
+    roundTrips(metrics, iae, "frame row", from = 1)(r =>
+      new String(SidecarWire.encodeMetrics(Seq(r)), UTF_8))(t =>
+      SidecarWire.decodeMetrics(t.getBytes(UTF_8)))(Seq(_))
+    val policies = for { t <- nasty; w <- long; ttl <- int; th <- dbl; e <- nasty }
+      yield SidecarWire.PolicyRow(t, w, ttl, th, e)
+    roundTrips(policies, iae, "frame row", from = 1)(r =>
+      new String(SidecarWire.encodePolicies(Seq(r)), UTF_8))(t =>
+      SidecarWire.decodePolicies(t.getBytes(UTF_8)))(Seq(_))
+
+    // CONTRACT.json: the version stamp plus named schemas of field → type
+    val schema = few(Gen.mapOf(Gen.zip(nasty,
+      Gen.oneOf[DataType](StringType, LongType, IntegerType, DoubleType))))
+    val contract = Gen.zip(int, few(Gen.mapOf(Gen.zip(nasty.suchThat(_ != "version"), schema))))
+    roundTrips(contract, ise, "unparseable CONTRACT.json at c") { case (v, schemas) =>
+      SidecarContract.renderContract(v, schemas.toSeq.map { case (n, fs) =>
+        n -> StructType(fs.toSeq.map { case (f, t) => StructField(f, t) }) }: _*)
+    } { text =>
+      // the reader reads only the version; the schemas are checked with
+      // a general JSON parser
+      val v = SidecarContract.contractVersion("c", text)
+      val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+      (v, tree.properties.asScala.filter(_.getKey != "version").map { e =>
+        e.getKey -> e.getValue.properties.asScala.map(f => f.getKey -> f.getValue.asText).toMap
+      }.toMap)
+    } { case (v, schemas) =>
+      (v, schemas.map { case (n, fs) => n -> fs.map { case (f, t) => f -> t.simpleString } })
+    }
+  }
 }

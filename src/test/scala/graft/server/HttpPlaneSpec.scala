@@ -109,6 +109,49 @@ class HttpPlaneSpec extends SparkSpec {
       Map("X-API-KEY" -> "k2"))._1 == 200)
   }
 
+  test("a field name inside a nested object or a string value is not the field") {
+    assert(http("POST", "/v1/tenants",
+      """{"tenantId": "nest1", "limits": {"maxQps": 1}, "maxQps": 500}""")._1 == 201)
+    assert(mgmt.quota("nest1").maxQps == 500)
+    assert(http("POST", "/v1/tenants",
+      """{"tenantId": "nest2", "note": "\"maxQps\": 1", "maxQps": 500}""")._1 == 201)
+    assert(mgmt.quota("nest2").maxQps == 500)
+  }
+
+  test("a mistyped or out-of-Int-range body field is a 400 naming the field") {
+    for (v <- Seq("\"fast\"", "4294967297")) {
+      val (c, b) = http("POST", "/v1/tenants",
+        s"""{"tenantId": "typed", "maxQps": $v}""")
+      assert(c == 400 && b.contains("maxQps"), s"maxQps $v: $c $b")
+    }
+    assert(!mgmt.tenantExists("typed"))
+  }
+
+  test("an API key holding an escaped quote authenticates with that same key") {
+    // JSON "k\"ey\\" is the key k"ey\
+    assert(http("POST", "/v1/tenants",
+      """{"tenantId": "quoted", "apiKey": "k\"ey\\"}""")._1 == 201)
+    assert(http("GET", "/v1/tenants/quoted/quotas",
+      Map("X-API-KEY" -> "k\"ey\\"))._1 == 200)
+    assert(http("GET", "/v1/tenants/quoted/quotas",
+      Map("X-API-KEY" -> "k\\"))._1 == 401)
+  }
+
+  test("a truncated body is a 400, not a partial read") {
+    assert(http("POST", "/v1/tenants",
+      """{"tenantId": "cut", "maxQps": 5""")._1 == 400)
+    assert(!mgmt.tenantExists("cut"))
+  }
+
+  test("a damaged tenant config refuses the request instead of dropping the key check") {
+    http("POST", "/v1/tenants", """{"tenantId": "dmg", "apiKey": "k1"}""")
+    assert(http("GET", "/v1/tenants/dmg/quotas", Map("X-API-KEY" -> "k1"))._1 == 200)
+    val f = java.nio.file.Paths.get(s"$root/tenants/dmg/config.json")
+    Files.writeString(f, Files.readString(f).dropRight(2)) // cut inside apiKeyHash
+    val (c, b) = http("GET", "/v1/tenants/dmg/quotas")
+    assert(c / 100 != 2 && b.contains("apiKeyHash"), s"$c $b")
+  }
+
   test("index lifecycle + AI models + cache + billing + audit + metrics routes") {
     http("POST", "/v1/tenants", """{"tenantId": "t1"}""")
     val (ci, _) = http("POST", "/v1/indexes",
