@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.operators.{BruteForceKnn, DeltaIndex, IvfFlat, TopK}
 
@@ -45,6 +46,115 @@ case class SearchTrace(path: String, cacheLayer: Option[String],
                        headMasked: Int, tailRows: Int, totalMicros: Long)
 
 object GraftEngine {
+  /** IVF_PQ states whose build peak ([[localRowBytes]]) fits this many
+    * driver bytes build on the driver (see [[GraftEngine.buildWith]]):
+    * ~30k rows at dim 128. Driver memory sets it, not build time: at dim
+    * 128, nlist 8, M 16 on 4 cores the driver-local build was the faster
+    * one at every size timed, 6,250 to 100k rows (16.3 s against 18.0 s
+    * at 100k). */
+  private val LocalBuildMaxBytes: Long = 64L << 20
+
+  /** Peak driver bytes one collected row costs a driver-local IVF_PQ
+    * build, so the ledger reservation covers the build and not just the
+    * collect. The row itself is 4d + 2b + 96 (floats, id string,
+    * surrogate, headers). While the PQ codes are made it also has a unit
+    * or MIPS copy and a residual (4d each, the MIPS pad inside the
+    * allowance) and a codes row in that write's local relation (~b +
+    * 300); while the SQ16 codes are written, its Int codes and their row
+    * in that write's relation (8d + 180). The resident SQ16 store is
+    * reserved on its own line. */
+  private def localRowBytes(dim: Int, idBytes: Long): Long =
+    12L * dim + 3L * idBytes + 640L
+
+  /** What one pass over the resolved state tells a build: watermark and
+    * row count, the vector size range, the UTF-8 bytes of the string ids
+    * (the id pool's size), and — where the build uses them — the element
+    * range (the SQ16 params) and the largest squared norm (the MIPS
+    * constant M², summed like `vector_dot`). NaN elements never win the
+    * element range. */
+  private final case class BuildStats(watermark: Long, nVectors: Long, minDim: Int,
+                                      maxDim: Int, idBytes: Long, elemMin: Float,
+                                      elemMax: Float, maxSq: Double) {
+    def merge(o: BuildStats): BuildStats =
+      BuildStats(math.max(watermark, o.watermark), nVectors + o.nVectors,
+        math.min(minDim, o.minDim), math.max(maxDim, o.maxDim), idBytes + o.idBytes,
+        if (o.elemMin < elemMin) o.elemMin else elemMin,
+        if (o.elemMax > elemMax) o.elemMax else elemMax, math.max(maxSq, o.maxSq))
+  }
+
+  private val NoStats = BuildStats(Long.MinValue, 0L, Int.MaxValue, Int.MinValue, 0L,
+    Float.PositiveInfinity, Float.NegativeInfinity, Double.NegativeInfinity)
+
+  /** One partition's part of a state pass: its [[BuildStats]], and its
+    * (surrogate, id, vector) rows and their build-peak `bytes` while they
+    * fit `maxBytes` and hold no null element — null otherwise. */
+  private final class StatePart(val stats: BuildStats, val ids: Array[Long],
+                                val idStr: Array[String],
+                                val vecs: Array[Array[Float]],
+                                val bytes: Long) extends Serializable
+
+  /** A state pass's parts, counted on the ledger by the build peak of the
+    * rows they hold. */
+  private final class StateParts(val parts: Array[StatePart]) extends Residency.Sized {
+    val bytes: Long = parts.map(_.bytes).sum
+  }
+
+  private def hasNullElement(v: org.apache.spark.sql.catalyst.util.ArrayData): Boolean = {
+    var i = 0
+    while (i < v.numElements() && !v.isNullAt(i)) i += 1
+    i < v.numElements()
+  }
+
+  /** [[StatePart]] of (updated_at, id, vector, surrogate) rows. */
+  private def foldState(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+                        pq: Boolean, ip: Boolean, maxBytes: Long): StatePart = {
+    var wm = Long.MinValue; var n = 0L; var minDim = Int.MaxValue
+    var maxDim = Int.MinValue; var idBytes = 0L
+    var mn = Float.PositiveInfinity; var mx = Float.NegativeInfinity
+    var maxSq = Double.NegativeInfinity
+    var bytes = 0L
+    var kept = maxBytes > 0
+    val ids = scala.collection.mutable.ArrayBuilder.make[Long]
+    val idStr = scala.collection.mutable.ArrayBuilder.make[String]
+    val vecs = scala.collection.mutable.ArrayBuilder.make[Array[Float]]
+    while (rows.hasNext) {
+      val r = rows.next()
+      n += 1
+      if (!r.isNullAt(0)) wm = math.max(wm, r.getLong(0))
+      val id = r.getUTF8String(1)
+      idBytes += id.numBytes
+      val v = r.getArray(2)
+      val d = v.numElements()
+      minDim = math.min(minDim, d); maxDim = math.max(maxDim, d)
+      if (pq) {
+        var i = 0; var sq = 0.0
+        while (i < d) {
+          if (!v.isNullAt(i)) {
+            val x = v.getFloat(i)
+            if (x < mn) mn = x
+            if (x > mx) mx = x
+            sq += x.toDouble * x.toDouble
+          }
+          i += 1
+        }
+        if (ip) maxSq = math.max(maxSq, sq)
+      }
+      if (kept) {
+        bytes += localRowBytes(d, id.numBytes)
+        // a null element has no driver twin: the distributed SQ16 encode
+        // clamps it to the top code, a float array would read it as 0
+        if (bytes > maxBytes || hasNullElement(v)) {
+          kept = false; ids.clear(); idStr.clear(); vecs.clear()
+        } else {
+          ids += r.getLong(3); idStr += id.toString; vecs += v.toFloatArray()
+        }
+      }
+    }
+    val st = BuildStats(wm, n, minDim, maxDim, idBytes, mn, mx, maxSq)
+    if (kept) new StatePart(st, ids.result(), idStr.result(), vecs.result(), bytes)
+    else new StatePart(st, null, null, null, 0L)
+  }
+
   /** Per-index manifest monitors, JVM-global (keyed by root so two engine
     * instances over the same layout share one): every manifest
     * read-modify-write serializes on this, closing the TOCTOU window where
@@ -115,6 +225,28 @@ class GraftEngine(spark: SparkSession, root: String,
       StructField("index_name", StringType)))
   }
 
+  /** Declared schemas of the snapshot and cache tables — what the build
+    * and the cache writers write. Opening a table with its schema
+    * declared submits no footer-inference job, and `cluster_id`, last as
+    * in an inferred read, stays the partition column probes prune on. */
+  private def schemaOf(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+  private val VectorsSchema = schemaOf("id" -> LongType,
+    "vec" -> ArrayType(FloatType), "id_str" -> StringType, "cluster_id" -> IntegerType)
+  private val PqCodesSchema = schemaOf("id" -> LongType, "codes" -> BinaryType,
+    "id_str" -> StringType, "cluster_id" -> IntegerType)
+  private val CentroidsSchema = schemaOf("cluster_id" -> IntegerType,
+    "centroid" -> ArrayType(FloatType))
+  private val IdMapSchema = schemaOf("id" -> LongType, "id_str" -> StringType)
+  private val MipsSchema = schemaOf("max_sq" -> DoubleType)
+  private val Sq16CodesSchema = schemaOf("id" -> LongType,
+    "qvec16" -> ArrayType(IntegerType))
+  private val CacheEntrySchema = schemaOf("cache_key" -> LongType,
+    "layer" -> StringType,
+    "hits" -> ArrayType(schemaOf("rank" -> IntegerType, "id" -> StringType,
+      "score" -> DoubleType)),
+    "epoch" -> LongType, "expires_at" -> LongType, "written_at" -> LongType)
+
   private def readLog(): DataFrame =
     spark.read.schema(recordSchema).parquet(recordsPath)
 
@@ -166,7 +298,7 @@ class GraftEngine(spark: SparkSession, root: String,
 
   /** Current snapshot dir for reads (requires a completed build). */
   private def snapDir(tenant: String, index: String, m: Manifest): String = {
-    require(m.version > 0, s"$tenant/$index has no built snapshot")
+    if (m.version <= 0) throw new NotFoundException("index", s"$tenant/$index has no built snapshot")
     s"${indexPath(tenant, index)}/v${m.version}"
   }
 
@@ -208,7 +340,7 @@ class GraftEngine(spark: SparkSession, root: String,
         if (hit != null && hit._1 == a.lastModifiedTime && hit._2 == a.size)
           hit._3
         else {
-          val m = Manifest.parse(f.toString, Files.readString(f))
+          val m = Manifest.parse(f.toString, Json.readFile(f))
           manifestMemo.put(key, (a.lastModifiedTime, a.size, m))
           m
         }
@@ -290,25 +422,28 @@ class GraftEngine(spark: SparkSession, root: String,
     * other read failure must propagate, not silently disable the
     * invariant. */
   def add(records: DataFrame): Long = {
-    // one aggregation decides both the dup check and the count (no second
-    // full pass); on success the whole batch is fresh, so the append can
-    // write `records` directly without re-running the anti-join
-    val n =
-      if (!recordsLogExists) records.count()
+    // one grouped aggregation decides the dup check, the count and the
+    // touched (tenant, index) set; on success the whole batch is fresh,
+    // so the append can write `records` directly without re-running the
+    // anti-join
+    val keys = Seq("tenant_id", "index_name")
+    val perIndex =
+      if (!recordsLogExists)
+        records.groupBy(keys.map(col): _*).agg(count(lit(1)), lit(0L)).collect()
       else {
         val existing = currentStateAll()
           .select("tenant_id", "index_name", "id")
           .withColumn("dup", lit(true))
-        val r = records
-          .join(existing, Seq("tenant_id", "index_name", "id"), "left")
-          .agg(count(lit(1)).as("total"), count(col("dup")).as("dups")).head
-        require(r.getLong(1) == 0L,
-          s"Vector already exists: ${r.getLong(1)} duplicate id(s)")
-        r.getLong(0)
+        records
+          .join(existing, keys :+ "id", "left")
+          .groupBy(keys.map(col): _*)
+          .agg(count(lit(1)), count(col("dup"))).collect()
       }
+    val dups = perIndex.map(_.getLong(3)).sum
+    if (dups != 0L) throw new ConflictException("vector", s"Vector already exists: $dups duplicate id(s)")
     appendLog(records.withColumn("deleted", lit(false)))
-    touched(records).foreach { case (t, i) => bumpEpoch(t, i) }
-    n
+    perIndex.foreach(r => bumpEpoch(r.getString(0), r.getString(1)))
+    perIndex.map(_.getLong(2)).sum
   }
 
   /** VEC.UPSERT: last-write-wins append. One aggregation pass yields
@@ -355,10 +490,6 @@ class GraftEngine(spark: SparkSession, root: String,
     bumpEpoch(tenant, index)
   }
 
-  private def touched(records: DataFrame): Array[(String, String)] =
-    records.select("tenant_id", "index_name").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-
   // -------------------------------------------------------------------
   // current state (upsert/tombstone resolution — SURVEY §1.5)
   // -------------------------------------------------------------------
@@ -388,44 +519,66 @@ class GraftEngine(spark: SparkSession, root: String,
   def build(tenant: String, index: String, nlist: Int, metric: String = "L2",
             seed: Long = 42L, algo: String = "IVF_FLAT",
             pqM: Int = 8, pqK: Int = 256): Unit = {
-    // The LWW state resolve is a full-log window sort (payload-wide
-    // exchange + sort). Every downstream consumer — watermark agg, the
-    // coarse/PQ build, the sq16 param train + codes write, the records
-    // snapshot — is an independent action, so an unpersisted plan re-runs
-    // that window once PER ACTION (measured 5× at the 10M rung, the
-    // dominant share of a 296 s engine build). One materialization, many
-    // cache scans; released in the finally.
-    val state = currentState(tenant, index)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    buildWith(tenant, index, nlist, metric, seed, algo, pqM, pqK,
+      GraftEngine.LocalBuildMaxBytes)
+    ()
+  }
+
+  /** A small state held on the driver for one build: surrogate ids,
+    * string ids and vectors, row-aligned. */
+  private final class LocalState(val ids: Array[Long], val idStr: Array[String],
+                                 val vecs: Array[Array[Float]])
+
+  /** The one pass over the resolved state: the build's stats and — when
+    * the rows' build peak fits `localMaxBytes` in all, with uniform dims
+    * and no null element — the rows themselves, so a small build needs no second job to read them. The
+    * bound is reserved on the ledger before the pass and held until
+    * `f` returns; a Denied or Busy answer runs the pass for the stats
+    * only. Each task folds its partition and keeps its rows while their
+    * peak fits its share of the bound, so the build never holds more than
+    * the reservation. */
+  private def withStatePass[T](tenant: String, index: String, state: DataFrame,
+                               pq: Boolean, ip: Boolean, localMaxBytes: Long)
+                              (f: (GraftEngine.BuildStats, Option[LocalState]) => T): T = {
+    val rdd = state.select(col("updated_at"), col("id"), col("vector"),
+      xxhash64(col("id"))).queryExecution.toRdd
+    def pass(partBytes: Long) = new GraftEngine.StateParts(rdd
+      .mapPartitions(it => Iterator(GraftEngine.foldState(it, pq, ip, partBytes)))
+      .collect())
+    // the bound is held while the pass runs; the rows that arrived stay
+    // counted until the build is done with them
+    val admitted =
+      if (localMaxBytes <= 0) Residency.Denied
+      else Residency.admit(Residency.PackedFloats, localMaxBytes)(
+        pass(localMaxBytes / math.max(1, rdd.getNumPartitions)))
+    val held = admitted match {
+      case Residency.Admitted(p) => p
+      case _ => pass(0L)
+    }
+    val parts = held.parts
     try {
-    val vecs = state.select(col("id"), col("vector").as("vec"))
-    val wmRow = state.agg(max("updated_at"), count(lit(1))).head
-    require(!wmRow.isNullAt(0),
-      s"cannot build $tenant/$index: current state is empty (all records tombstoned?)")
-    val watermark = wmRow.getLong(0)
-    val nVectors = wmRow.getLong(1)
-    val keyed = vecs.withColumn("id_str", col("id"))
-      .select(xxhash64(col("id")).as("id"), col("vec"), col("id_str"))
+      val st = parts.map(_.stats).foldLeft(GraftEngine.NoStats)(_ merge _)
+      require(st.nVectors > 0,
+        s"cannot build $tenant/$index: current state is empty (all records tombstoned?)")
+      val local =
+        if (st.minDim != st.maxDim || parts.exists(_.ids == null)) None
+        else Some(new LocalState(parts.flatMap(_.ids), parts.flatMap(_.idStr),
+          parts.flatMap(_.vecs)))
+      f(st, local)
+    } finally Residency.release(held)
+  }
+
+  /** [[build]] with the byte bound up to which the state is resolved
+    * onto the driver (see [[GraftEngine.LocalBuildMaxBytes]]); specs pass
+    * 0 to force the distributed path, whose artifacts must be the same.
+    * True when the build ran on driver-held rows. */
+  private[graft] def buildWith(tenant: String, index: String, nlist: Int,
+                               metric: String, seed: Long, algo: String,
+                               pqM: Int, pqK: Int, localMaxBytes: Long): Boolean = {
     val algoU = algo.toUpperCase(java.util.Locale.ROOT)
-    val m0 = manifest(tenant, index)
-    // whole snapshot lands in a fresh versioned dir; nothing below is
-    // visible to readers until the manifest swap at the end
-    val newVersion = m0.version + 1
-    val dir = s"${indexPath(tenant, index)}/v$newVersion"
+    val metricU = metric.toUpperCase(java.util.Locale.ROOT)
     algoU match {
-      case "IVF_FLAT" | "FLAT" =>
-        val idx = IvfFlat.build(keyed, if (algoU == "FLAT") 1 else nlist, metric, seed)
-        // keep the string id alongside the numeric surrogate used by the plans
-        idx.assigned.write.mode("overwrite").partitionBy("cluster_id")
-          .parquet(s"$dir/vectors")
-        idx.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-      case "HNSW" =>
-        val graphs = graft.operators.Hnsw.build(keyed.select("id", "vec"), metric,
-          numPartitions = math.max(1, nlist))
-        graft.operators.Hnsw.save(graphs, s"$dir/hnsw")
-        // surrogate→string map for hit resolution
-        keyed.select("id", "id_str").write.mode("overwrite")
-          .parquet(s"$dir/idmap")
+      case "IVF_FLAT" | "FLAT" | "HNSW" =>
       case "IVF_PQ" =>
         // PQ codes are L2-trained like the reference (IvfPqVectorIndex.cs:
         // 55-116). COSINE rides the normalization identity: on unit vectors
@@ -435,141 +588,71 @@ class GraftEngine(spark: SparkSession, root: String,
         // 163-199 comments). Only the coded tail is normalized; `records`
         // keeps raw vectors (hydration/export and the exact rerank, which
         // scores cosine directly — normalization-invariant).
-        val metricU = metric.toUpperCase(java.util.Locale.ROOT)
         require(metricU == "L2" || metricU == "COSINE" || metricU == "IP",
           s"IVF_PQ tails are L2-trained (COSINE via unit normalization, " +
             s"IP via MIPS augmentation); cannot build with metric=$metric")
-        // IP rides the MIPS→L2 reduction (see functions.vector_mips_augment):
-        // codes are trained over [x, sqrt(M²−‖x‖²), 0…] — zero-padded to
-        // the next multiple of M for PQ subspace divisibility — so L2
-        // geometry ranks by inner product. M² is persisted next to the
-        // codebooks; search folds ADC distances back onto the dot scale.
-        val (mipsMaxSq, mipsDim) =
-          if (metricU == "IP") {
-            val r = keyed.agg(
-              max(graft.functions.vector_dot(col("vec"), col("vec"))),
-              max(size(col("vec"))), min(size(col("vec")))).head
-            val rawDim = r.getInt(1)
-            // mixed dims would land the augmentation coordinate at a
-            // different subspace position per row — silently wrong IP
-            // ranks, so fail loudly (L2/COSINE paths fail in kernel
-            // alignment instead; IP would not)
-            require(rawDim == r.getInt(2),
-              s"IP IVF_PQ build needs uniform vector dims, " +
-                s"got ${r.getInt(2)}..$rawDim")
-            (r.getDouble(0), ((rawDim + 1 + pqM - 1) / pqM) * pqM)
-          } else (0.0, 0)
-        val forPq = metricU match {
-          case "COSINE" =>
-            keyed.withColumn("vec", graft.functions.vector_unit(col("vec")))
-          case "IP" =>
-            keyed.withColumn("vec",
-              graft.functions.vector_mips_augment(col("vec"), lit(mipsMaxSq),
-                lit(mipsDim)))
-          case _ => keyed
-        }
-        val cached = forPq.cache()
-        // Coarse build and PQ layer split (same composition IvfPq.build
-        // performs) so the coarse assignment can be persisted between
-        // them: Pq.train's sample collect and Pq.encode's codes pass are
-        // separate actions over `assigned`, and an unpersisted assignment
-        // re-runs the 512-centroid KMeans transform over the full corpus
-        // once per action (~nlist×dim FLOPs per row per pass at 10M).
-        val coarse = IvfFlat.build(
-          cached.select("id", "vec"), nlist, "L2", seed)
-        coarse.assigned.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val idx = graft.operators.IvfPq.buildFrom(
-          coarse, m = pqM, k = math.min(pqK, 256), seed = seed)
-        val withStr = idx.assigned.join(cached.select("id", "id_str"), Seq("id"))
-        withStr.write.mode("overwrite").partitionBy("cluster_id")
-          .parquet(s"$dir/ivfpq/codes")
-        idx.centroids.write.mode("overwrite").parquet(s"$dir/ivfpq/centroids")
-        graft.operators.Pq.saveCodebook(idx.cb, spark, s"$dir/ivfpq/codebooks")
-        if (metricU == "IP") {
-          import spark.implicits._
-          Seq(mipsMaxSq).toDF("max_sq")
-            .write.mode("overwrite").parquet(s"$dir/ivfpq/mips")
-        }
-        // SQ16 sidecar over the RAW vectors (2× compression): the
-        // refined rows tier reranks ADC candidates against these
-        // driver-side — raw floats are past any residency budget exactly
-        // when PQ is the right algo; uint16 is the rung between codes
-        // (M bytes) and floats whose error prices at exact (uint8's does
-        // not on near-equidistant data — the bench gauge measures it).
-        // Params are ScalarQuant's global min/max; the encode expression
-        // keeps its portable float-then-double choreography (FLOAT
-        // subtraction, DOUBLE scale, floor(x+0.5), clamp) at 65535
-        // levels, so a SQL oracle reproduces the codes bit-exactly. The
-        // rerank scores the TRUE metric on dequantized vectors, so one
-        // raw-space store serves L2/COSINE/IP alike.
-        val p16 = graft.operators.ScalarQuant.train(
-          state.select(col("vector").as("vec")))
-        graft.operators.ScalarQuant.saveParams(
-          p16, s"$dir/sq16/params.json")
-        val scale16 =
-          if (p16.max > p16.min) 65535.0 / (p16.max - p16.min) else 0.0
-        state.select(xxhash64(col("id")).as("id"),
-            transform(col("vector"), x =>
-              greatest(lit(0.0), least(lit(65535.0),
-                floor((x - lit(p16.min)) * lit(scale16) + lit(0.5))))
-                .cast("int")).as("qvec16"))
-          .write.mode("overwrite").parquet(s"$dir/sq16/codes")
-        // binary SEGMENT sidecar over the codes just written: the merged
-        // resident store persisted as raw sorted arrays, so a restarted
-        // engine (warmServing, or the first refined call after boot)
-        // loads the rerank store by sequential file read (~disk
-        // bandwidth) instead of re-running the parquet scan + encode +
-        // k-way merge every boot (measured ~27 s at the 10M rung —
-        // the r9 warm-boot regression). Build-time cost is two extra
-        // reads of the codes table (the sizing aggregation + the
-        // wave-fetch). Gated: written when the full store fits THIS
-        // engine's per-store budget (past it, serving would deny
-        // residency and the transient merge buys nothing), OR — for a
-        // u8-opted-in engine — when the HALF-SIZE store fits (the u8
-        // tier streams this sidecar; without it a budget-tight builder
-        // would strand its own serving on the plan fallback, the exact
-        // cliff the tier removes; the build then transiently holds the
-        // full-precision store it persists). The transient merge is
-        // additionally admitted on the ledger's refine line and counted
-        // there while alive, so a build inside a loaded serving JVM
-        // cannot stack an unaccounted multi-GB store on top of a
-        // near-full line. Reading BACK the parquet (rather than
-        // re-encoding from `state`) keeps the sidecar bit-identical to
-        // what a segment-less engine would build from the same
-        // snapshot, duplicate-surrogate resolution included (same
-        // files, same partition order).
-        locally {
-          val codesDf = spark.read.parquet(s"$dir/sq16/codes")
-          val st = codesDf.agg(count(lit(1)), min(size(col("qvec16"))),
-            max(size(col("qvec16")))).head
-          val n16 = st.getLong(0)
-          if (n16 > 0 && !st.isNullAt(1) && st.getInt(1) == st.getInt(2)) {
-            val d16 = st.getInt(1)
-            val est = graft.operators.Sq16Store.estimateBytes(n16, d16)
-            val wanted = est <= sq16MaxBytes ||
-              (refineU8Fallback &&
-                graft.operators.Sq8Store.estimateBytes(n16, d16) <= sq16MaxBytes)
-            // `wanted` is this store's per-handle check; the ledger's
-            // reservation covers the multi-second wave-fetch + merge
-            // itself, not just the finished store
-            if (wanted) Residency.admit(Residency.Refine, est, Long.MaxValue) {
-              graft.operators.Sq16Store.buildResident(
-                codesDf, d16, p16.min, p16.max, estBytes = est)
-            } match {
-              case Residency.Admitted(store) =>
-                try graft.operators.Sq16Store.save(store, s"$dir/sq16/segments")
-                finally Residency.release(store)
-              case _ =>
-            }
-          }
-        }
-        // centroids also at the IVF location so the cache's L2 layer can
-        // probe them without knowing the algo
-        idx.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-        coarse.assigned.unpersist()
-        cached.unpersist()
       case other => throw new IllegalArgumentException(s"unknown algo: $other")
+    }
+    val isPq = algoU == "IVF_PQ"
+    // The LWW state resolve is a full-log window sort (payload-wide
+    // exchange + sort). Every downstream consumer — the stats pass, the
+    // coarse/PQ build, the sq16 codes write, the records snapshot — is an
+    // independent action, so an unpersisted plan re-runs that window
+    // once PER ACTION (measured 5× at the 10M rung, the dominant share of
+    // a 296 s engine build). One materialization, many cache scans;
+    // released in the finally.
+    val state = currentState(tenant, index)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+    // Small IVF_PQ states build on the driver: the pass that computes the
+    // stats also returns the rows, then assignment, PQ train/encode and
+    // the SQ16 codes and store run over the same arrays. Past the bound
+    // (or on a ledger denial) the same artifacts come out of Spark jobs,
+    // bit for bit. The other algos write their one assignment or graph
+    // job from the cached state either way, so driver rows buy them none.
+    withStatePass(tenant, index, state, isPq, isPq && metricU == "IP",
+        if (isPq) localMaxBytes else 0L) { (st, local) =>
+    // IP rides the MIPS→L2 reduction (see functions.vector_mips_augment):
+    // codes are trained over [x, sqrt(M²−‖x‖²), 0…] — zero-padded to the
+    // next multiple of M for PQ subspace divisibility — so L2 geometry
+    // ranks by inner product. M² is persisted next to the codebooks;
+    // search folds ADC distances back onto the dot scale. Mixed dims
+    // would land the augmentation coordinate at a different subspace
+    // position per row — silently wrong IP ranks, so fail loudly (L2/
+    // COSINE paths fail in kernel alignment instead; IP would not).
+    if (isPq && metricU == "IP")
+      require(st.minDim == st.maxDim,
+        s"IP IVF_PQ build needs uniform vector dims, got ${st.minDim}..${st.maxDim}")
+    val pqDim =
+      if (isPq && metricU == "IP") ((st.maxDim + 1 + pqM - 1) / pqM) * pqM
+      else st.maxDim
+    val m0 = manifest(tenant, index)
+    // whole snapshot lands in a fresh versioned dir; nothing below is
+    // visible to readers until the manifest swap at the end
+    val newVersion = m0.version + 1
+    val dir = s"${indexPath(tenant, index)}/v$newVersion"
+    val keyed = state.select(xxhash64(col("id")).as("id"), col("vector").as("vec"),
+      col("id").as("id_str"))
+    algoU match {
+      case "IVF_FLAT" | "FLAT" =>
+        val centers = coarseCenters(keyed, if (algoU == "FLAT") 1 else nlist,
+          metric, seed, st.nVectors, st.maxDim)
+        // keep the string id alongside the numeric surrogate used by the plans
+        IvfFlat.assignByCenters(keyed, centers, IvfFlat.assignMetric(metric))
+          .write.mode("overwrite").partitionBy("cluster_id")
+          .parquet(s"$dir/vectors")
+        IvfFlat.centroidsFrame(spark, centers).write.mode("overwrite")
+          .parquet(s"$dir/centroids")
+      case "HNSW" =>
+        val graphs = graft.operators.Hnsw.build(keyed.select("id", "vec"), metric,
+          numPartitions = math.max(1, nlist))
+        graft.operators.Hnsw.save(graphs, s"$dir/hnsw")
+        // surrogate→string map for hit resolution
+        keyed.select("id", "id_str").write.mode("overwrite")
+          .parquet(s"$dir/idmap")
+      case "IVF_PQ" =>
+        buildPq(dir, keyed, state, st, local, metricU, nlist, seed, pqM,
+          math.min(pqK, 256), pqDim)
     }
     // meta/tags snapshot for hydration without re-reading the whole log.
     // IVF_PQ additionally retains the RAW vectors here (the reference
@@ -577,7 +660,7 @@ class GraftEngine(spark: SparkSession, root: String,
     // IvfPqVectorIndex.cs:18-19): codes alone can't serve the exact
     // rerank path, and the inverted lists hold only quantized codes.
     val recCols = Seq(col("id").as("id_str"), col("meta"), col("tags")) ++
-      (if (algoU == "IVF_PQ") Seq(col("vector").as("vec")) else Nil)
+      (if (isPq) Seq(col("vector").as("vec")) else Nil)
     state.select(recCols: _*)
       .write.mode("overwrite").parquet(s"$dir/records")
     // concurrent-writer guard (e.g. an upsertStream micro-batch landing
@@ -591,15 +674,197 @@ class GraftEngine(spark: SparkSession, root: String,
     withManifestLock(tenant, index) {
       val mNow = manifest(tenant, index)
       writeManifest(tenant, index,
-        Manifest(mNow.epoch + 1, watermark, algoU, nVectors, newVersion,
-          metric.toUpperCase(java.util.Locale.ROOT),
-          headDirty = if (mNow.epoch != m0.epoch) 1 else 0))
+        Manifest(mNow.epoch + 1, st.watermark, algoU, st.nVectors, newVersion,
+          metricU, headDirty = if (mNow.epoch != m0.epoch) 1 else 0))
     }
+    // the id pool's residency estimate, from the stats pass: every
+    // snapshot's id table holds one row per state row
+    residentEstCache.put(s"pool:$tenant/$index/v$newVersion",
+      st.nVectors * 12L + st.idBytes + 32L)
     // keep the previous snapshot too: lazy frames returned by search()
     // before this build may still resolve into it
     gcOldSnapshots(tenant, index, keep = newVersion - 1)
     evictStaleHandles(tenant, index, keep = newVersion - 1)
+    local.isDefined
+    }
     } finally state.unpersist()
+  }
+
+  /** The coarse codebook: MLlib KMeans over `vectors` (id, vec, …), or
+    * the single zero center of a FLAT (nlist ≤ 1) index. */
+  private def coarseCenters(vectors: DataFrame, nlist: Int, metric: String,
+                            seed: Long, nRows: Long,
+                            dim: Int): Array[Array[Double]] =
+    if (nlist <= 1) IvfFlat.flatCenters(dim)
+    else IvfFlat.trainCenters(vectors.select("id", "vec"), nlist, metric, seed,
+      maxIter = 10, nRows)
+
+  /** Each driver-held vector's nearest center under L2, with the
+    * assignment kernel the distributed path runs per row. */
+  private def assignLocal(vecs: Array[Array[Float]],
+                          centers: Array[Array[Double]]): Array[Int] = {
+    val kernel = new IvfFlat.CenterKernel(centers, "L2")
+    val out = new Array[Int](vecs.length)
+    java.util.stream.IntStream.range(0, vecs.length).parallel()
+      .forEach(i => out(i) = kernel.nearest(vecs(i)))
+    out
+  }
+
+  /** A driver-held table of `row(i)` for every i, ordered by `clusters`
+    * (stable), so a cluster-partitioned write of it leaves about one file
+    * per cluster. */
+  private def localFrame(fields: Seq[(String, DataType)], clusters: Array[Int])
+                        (row: Int => Row): DataFrame = {
+    val order = Array.range(0, clusters.length).sortBy(clusters(_))
+    spark.createDataFrame(
+      java.util.Arrays.asList(order.map(row): _*),
+      StructType(fields.map { case (n, t) => StructField(n, t) }))
+  }
+
+  /** The IVF_PQ artifacts: coarse lists + PQ codes over the (unit or
+    * MIPS-augmented) vectors, the codebooks and centroids, and the SQ16
+    * refine sidecar over the raw vectors. From driver arrays when
+    * `local` holds the state, else as Spark jobs. */
+  private def buildPq(dir: String, keyed: DataFrame, state: DataFrame,
+                      st: GraftEngine.BuildStats, local: Option[LocalState], metricU: String,
+                      nlist: Int, seed: Long, pqM: Int, pqK: Int,
+                      pqDim: Int): Unit = {
+    val forPq = metricU match {
+      case "COSINE" =>
+        keyed.withColumn("vec", graft.functions.vector_unit(col("vec")))
+      case "IP" =>
+        keyed.withColumn("vec",
+          graft.functions.vector_mips_augment(col("vec"), lit(st.maxSq),
+            lit(pqDim)))
+      case _ => keyed
+    }
+    // Coarse lists are L2 over the transformed vectors, like IvfPq.build.
+    val centers = coarseCenters(forPq, nlist, "L2", seed, st.nVectors, pqDim)
+    val centersF = centers.map(_.map(_.toFloat))
+    val cb = local match {
+      case Some(ls) =>
+        val pqVecs = metricU match {
+          case "COSINE" => ls.vecs.map(graft.functions.unitArray)
+          case "IP" =>
+            ls.vecs.map(graft.functions.mipsAugmentArray(_, st.maxSq, pqDim))
+          case _ => ls.vecs
+        }
+        val clusters = assignLocal(pqVecs, centers)
+        // residual = vec − its FLOAT centroid, in float arithmetic (the
+        // plan's zip_with over the centroid table)
+        val resid = Array.tabulate(pqVecs.length) { i =>
+          val v = pqVecs(i); val c = centersF(clusters(i))
+          Array.tabulate(v.length)(j => v(j) - c(j))
+        }
+        val cb = graft.operators.Pq.trainLocal(resid, pqDim, pqM, pqK, seed)
+        val fcb = new graft.operators.Pq.FlatCodebook(cb)
+        val codes = new Array[Array[Byte]](resid.length)
+        java.util.stream.IntStream.range(0, resid.length).parallel()
+          .forEach(i => codes(i) = graft.operators.Pq.encodeRow(resid(i), fcb))
+        localFrame(Seq("id" -> LongType, "cluster_id" -> IntegerType,
+          "codes" -> BinaryType, "id_str" -> StringType), clusters)(i =>
+          Row(ls.ids(i), clusters(i), codes(i), ls.idStr(i)))
+          .write.mode("overwrite").partitionBy("cluster_id")
+          .parquet(s"$dir/ivfpq/codes")
+        cb
+      case None =>
+        // the assignment is persisted: the codebook's sample and the
+        // codes write are separate actions over it, and an unpersisted
+        // assignment re-runs the nlist-centroid kernel over the full
+        // corpus once per action (~nlist×dim FLOPs per row per pass)
+        val assigned = IvfFlat.assignByCenters(forPq, centers, "L2")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val (codes, cb) = graft.operators.IvfPq.encodeResiduals(assigned,
+            IvfFlat.centroidsFrame(spark, centers), pqM, pqK, seed, pqDim,
+            keep = Seq("id_str"))
+          codes.write.mode("overwrite").partitionBy("cluster_id")
+            .parquet(s"$dir/ivfpq/codes")
+          cb
+        } finally assigned.unpersist()
+    }
+    IvfFlat.centroidsFrame(spark, centers).write.mode("overwrite")
+      .parquet(s"$dir/ivfpq/centroids")
+    // the same table at the IVF location, so the cache's L2 layer can
+    // probe centroids without knowing the algo: a file copy, not a job
+    copyTree(Paths.get(s"$dir/ivfpq/centroids"), Paths.get(s"$dir/centroids"))
+    graft.operators.Pq.saveCodebook(cb, spark, s"$dir/ivfpq/codebooks")
+    if (metricU == "IP") {
+      import spark.implicits._
+      Seq(st.maxSq).toDF("max_sq")
+        .write.mode("overwrite").parquet(s"$dir/ivfpq/mips")
+    }
+    // SQ16 sidecar over the RAW vectors (2× compression): the refined
+    // rows tier reranks ADC candidates against these driver-side — raw
+    // floats are past any residency budget exactly when PQ is the right
+    // algo; uint16 is the rung between codes (M bytes) and floats whose
+    // error prices at exact (uint8's does not on near-equidistant data —
+    // the bench gauge measures it). Params are the global element
+    // min/max from the stats pass; the encode keeps its portable
+    // float-then-double choreography (Sq16Store.encodeCol) at 65535
+    // levels, so a SQL oracle reproduces the codes bit-exactly. The
+    // rerank scores the TRUE metric on dequantized vectors, so one
+    // raw-space store serves L2/COSINE/IP alike.
+    val (mn, mx) = (st.elemMin, st.elemMax)
+    graft.operators.ScalarQuant.saveParams(
+      graft.operators.ScalarQuant.Params(mn, mx), s"$dir/sq16/params.json")
+    // (surrogates, codes) of a driver-local build: the codes table and
+    // the store below both come from these
+    val local16 = local.map(ls =>
+      (ls.ids, ls.vecs.map(graft.operators.Sq16Store.encodeRow(_, mn, mx))))
+    local16 match {
+      case Some((ids, c16)) =>
+        import spark.implicits._
+        ids.indices.map(i => (ids(i), c16(i))).toDF("id", "qvec16")
+          .write.mode("overwrite").parquet(s"$dir/sq16/codes")
+      case None =>
+        state.select(xxhash64(col("id")).as("id"),
+            graft.operators.Sq16Store.encodeCol(col("vector"), mn, mx).as("qvec16"))
+          .write.mode("overwrite").parquet(s"$dir/sq16/codes")
+    }
+    // binary SEGMENT sidecar: the merged resident store persisted as raw
+    // sorted arrays, so a restarted engine (warmServing, or the first
+    // refined call after boot) loads the rerank store by sequential file
+    // read (~disk bandwidth) instead of re-running the parquet scan +
+    // encode + k-way merge every boot (measured ~27 s at the 10M rung —
+    // the r9 warm-boot regression). Gated: written when the full store
+    // fits THIS engine's per-store budget (past it, serving would deny
+    // residency and the transient merge buys nothing), OR — for a
+    // u8-opted-in engine — when the HALF-SIZE store fits (the u8 tier
+    // streams this sidecar; without it a budget-tight builder would
+    // strand its own serving on the plan fallback, the exact cliff the
+    // tier removes; the build then transiently holds the full-precision
+    // store it persists). The transient merge is additionally admitted on
+    // the ledger's refine line and counted there while alive, so a build
+    // inside a loaded serving JVM cannot stack an unaccounted multi-GB
+    // store on top of a near-full line. A driver-local build merges the
+    // codes it just wrote; the distributed one reads them BACK, so the
+    // sidecar is what a segment-less engine would build from the same
+    // snapshot (same files, same partition order).
+    if (st.nVectors > 0 && st.minDim == st.maxDim) {
+      val d16 = st.maxDim
+      val est = graft.operators.Sq16Store.estimateBytes(st.nVectors, d16)
+      val wanted = est <= sq16MaxBytes ||
+        (refineU8Fallback &&
+          graft.operators.Sq8Store.estimateBytes(st.nVectors, d16) <= sq16MaxBytes)
+      // `wanted` is this store's per-handle check; the ledger's
+      // reservation covers the build itself, not just the finished store
+      if (wanted) Residency.admit(Residency.Refine, est, Long.MaxValue) {
+        local16 match {
+          case Some((ids, c16)) =>
+            graft.operators.Sq16Store.fromRows(ids, c16, d16, mn, mx)
+          case None =>
+            graft.operators.Sq16Store.buildResident(
+              spark.read.schema(Sq16CodesSchema).parquet(s"$dir/sq16/codes"),
+              d16, mn, mx, estBytes = est)
+        }
+      } match {
+        case Residency.Admitted(store) =>
+          try graft.operators.Sq16Store.save(store, s"$dir/sq16/segments")
+          finally Residency.release(store)
+        case _ =>
+      }
+    }
   }
 
   // -------------------------------------------------------------------
@@ -1357,7 +1622,7 @@ class GraftEngine(spark: SparkSession, root: String,
         // heads past the serve bound keep the shortfall (and should
         // compact).
         val graphs = graft.operators.Hnsw.load(spark, s"$snap/hnsw")
-        val idmap = spark.read.parquet(s"$snap/idmap")
+        val idmap = spark.read.schema(IdMapSchema).parquet(s"$snap/idmap")
         val maskExtra =
           if (m.headDirty == 0 || m.nVectors > RowsServeMaxRows) 0
           else headStateOf(tenant, index, m).map(_.maskInTail).getOrElse(0)
@@ -1489,7 +1754,8 @@ class GraftEngine(spark: SparkSession, root: String,
               s"$snap/sq16/params.json")
             val delta16 =
               if (p16.max > p16.min) (p16.max - p16.min) / 65535.0 else 0.0
-            val codes16 = spark.read.parquet(s"$snap/sq16/codes")
+            val codes16 = spark.read.schema(Sq16CodesSchema)
+              .parquet(s"$snap/sq16/codes")
             strMap.join(broadcast(codes16.join(broadcast(cut), Seq("id"))),
                 Seq("id"))
               .join(broadcast(baseQueries), Seq("query_id"))
@@ -1609,8 +1875,8 @@ class GraftEngine(spark: SparkSession, root: String,
     tailIndexCache.getOrElseUpdate(s"$tenant/$index/v${m.version}", {
       val snap = snapDir(tenant, index, m)
       IvfFlat.Index(
-        spark.read.parquet(s"$snap/vectors"),
-        spark.read.parquet(s"$snap/centroids"))
+        spark.read.schema(VectorsSchema).parquet(s"$snap/vectors"),
+        spark.read.schema(CentroidsSchema).parquet(s"$snap/centroids"))
     })
 
   // memoized IVF_PQ handle for the rows serving tier — same immutable-
@@ -1623,9 +1889,9 @@ class GraftEngine(spark: SparkSession, root: String,
     pqIndexCache.getOrElseUpdate(s"$tenant/$index/v${m.version}", {
       val snap = snapDir(tenant, index, m)
       graft.operators.IvfPq.Index(
-        spark.read.parquet(s"$snap/ivfpq/codes")
+        spark.read.schema(PqCodesSchema).parquet(s"$snap/ivfpq/codes")
           .select("id", "cluster_id", "codes"),
-        spark.read.parquet(s"$snap/ivfpq/centroids"),
+        spark.read.schema(CentroidsSchema).parquet(s"$snap/ivfpq/centroids"),
         graft.operators.Pq.loadCodebook(spark, s"$snap/ivfpq/codebooks"))
     })
 
@@ -1652,7 +1918,7 @@ class GraftEngine(spark: SparkSession, root: String,
     scala.collection.concurrent.TrieMap.empty[String, Double]
   private def mipsMaxSqOf(tenant: String, index: String, m: Manifest): Double =
     mipsMaxSqCache.getOrElseUpdate(s"$tenant/$index/v${m.version}",
-      spark.read.parquet(s"${snapDir(tenant, index, m)}/ivfpq/mips")
+      spark.read.schema(MipsSchema).parquet(s"${snapDir(tenant, index, m)}/ivfpq/mips")
         .head.getDouble(0))
 
   // measured-bytes estimates per snapshot version (the one Spark agg a
@@ -1674,12 +1940,13 @@ class GraftEngine(spark: SparkSession, root: String,
     Residency.memo(idPoolCache, s"$tenant/$index/v${m.version}") {
       // inverted-list snapshots keep (id, id_str) in vectors/; IVF_PQ
       // snapshots alongside the codes; HNSW in its idmap table
-      val sub = m.algo match {
-        case "IVF_PQ" => "ivfpq/codes"
-        case "HNSW" => "idmap"
-        case _ => "vectors"
+      val (sub, schema) = m.algo match {
+        case "IVF_PQ" => ("ivfpq/codes", PqCodesSchema)
+        case "HNSW" => ("idmap", IdMapSchema)
+        case _ => ("vectors", VectorsSchema)
       }
-      lazy val df = spark.read.parquet(s"${snapDir(tenant, index, m)}/$sub")
+      lazy val df = spark.read.schema(schema)
+        .parquet(s"${snapDir(tenant, index, m)}/$sub")
         .select(col("id"), col("id_str"))
       val est = residentEstCache.getOrElseUpdate(
         s"pool:$tenant/$index/v${m.version}", {
@@ -1728,7 +1995,7 @@ class GraftEngine(spark: SparkSession, root: String,
             if (n == 0) None else Some((n, d))
           } else if (!sq16TableExists(tenant, index, m)) None
           else {
-            val codes = spark.read.parquet(
+            val codes = spark.read.schema(Sq16CodesSchema).parquet(
               s"${snapDir(tenant, index, m)}/sq16/codes")
             val stats = codes.agg(count(lit(1)),
               min(size(col("qvec16"))),
@@ -1755,7 +2022,7 @@ class GraftEngine(spark: SparkSession, root: String,
             val store =
               if (useSidecar) graft.operators.Sq16Store.load(segDir)
               else {
-                val codes = spark.read.parquet(
+                val codes = spark.read.schema(Sq16CodesSchema).parquet(
                   s"${snapDir(tenant, index, m)}/sq16/codes")
                 val p = graft.operators.ScalarQuant.loadParams(
                   s"${snapDir(tenant, index, m)}/sq16/params.json")
@@ -1954,8 +2221,8 @@ class GraftEngine(spark: SparkSession, root: String,
   private def centroidsLocalOf(tenant: String, index: String,
                                m: Manifest): Array[(Int, Array[Float])] =
     centroidCache.getOrElseUpdate(s"$tenant/$index/v${m.version}",
-      spark.read.parquet(s"${snapDir(tenant, index, m)}/centroids")
-        .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      spark.read.schema(CentroidsSchema)
+        .parquet(s"${snapDir(tenant, index, m)}/centroids").collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
         .sortBy(_._1))
 
   /** Pre-materialize every built index's resident serving handles
@@ -2152,7 +2419,7 @@ class GraftEngine(spark: SparkSession, root: String,
     * build watermark surface through the delta head as usual. */
   def importSnapshot(tenant: String, index: String, src: String): Unit = {
     val srcFile = s"$src/manifest.json"
-    val imported = Manifest.parse(srcFile, Files.readString(Paths.get(srcFile)))
+    val imported = Manifest.parse(srcFile, Json.readFile(Paths.get(srcFile)))
     val m0 = manifest(tenant, index)
     val newVersion = m0.version + 1
     copyTree(Paths.get(s"$src/snapshot"),
@@ -2300,7 +2567,7 @@ class GraftEngine(spark: SparkSession, root: String,
   /** Raw cache-entry table (for tests / stats): one row per populated
     * (cache_key, layer). */
   def cacheEntries(tenant: String, index: String): DataFrame =
-    spark.read.parquet(cacheEntriesPath(tenant, index))
+    spark.read.schema(CacheEntrySchema).parquet(cacheEntriesPath(tenant, index))
 
   // separate tree from metrics/: billingUsage enumerates metrics/<tenant>/*
   // as per-index hit/miss logs and must not pick this up

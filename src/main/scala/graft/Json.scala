@@ -21,6 +21,18 @@ object Json {
     .enable(StreamReadFeature.STRICT_DUPLICATE_DETECTION)
     .build()
 
+  /** A record file's text. A file cut inside a UTF-8 character fails
+    * with an IllegalStateException naming the file, where
+    * `Files.readString` throws a MalformedInputException naming neither
+    * the file nor a field. */
+  def readFile(p: java.nio.file.Path): String =
+    try java.nio.file.Files.readString(p)
+    catch {
+      case e: java.nio.charset.CharacterCodingException =>
+        throw new IllegalStateException(
+          s"$p is not valid UTF-8 (cut inside a character?): $e", e)
+    }
+
   /** `s` as a JSON string literal, quotes included. */
   def quote(s: String): String =
     "\"" + String.valueOf(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""

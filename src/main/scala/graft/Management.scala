@@ -184,7 +184,7 @@ class Management(spark: SparkSession, val root: String) {
       val hit = parsed.get(f.toString)
       if (hit != null && hit._1 == stamp) hit._2.asInstanceOf[T]
       else {
-        val v = parse(f.toString, Files.readString(f))
+        val v = parse(f.toString, Json.readFile(f))
         parsed.put(f.toString, (stamp, v))
         v
       }
@@ -201,24 +201,27 @@ class Management(spark: SparkSession, val root: String) {
   def createTenant(tenantId: String, quota: TenantQuota = TenantQuota(),
                    apiKeyHash: String = ""): Unit = {
     requireName(tenantId, "tenant id")
-    require(!Files.exists(tenantFile(tenantId)),
-      s"tenant already exists: $tenantId")
+    if (Files.exists(tenantFile(tenantId)))
+      throw new ConflictException("tenant", s"tenant already exists: $tenantId")
     writeJson(tenantFile(tenantId), Management.renderTenant(quota, apiKeyHash))
   }
 
   def tenantExists(tenantId: String): Boolean = Files.exists(tenantFile(tenantId))
 
+  private def requireTenant(tenantId: String): Unit =
+    if (!tenantExists(tenantId)) throw new NotFoundException("tenant", s"no such tenant: $tenantId")
+
   /** (quota, apiKeyHash). */
   private def tenantConfig(tenantId: String): (TenantQuota, String) =
     read(tenantFile(tenantId))(Management.parseTenant).getOrElse(
-      throw new IllegalArgumentException(s"no such tenant: $tenantId"))
+      throw new NotFoundException("tenant", s"no such tenant: $tenantId"))
 
   def quota(tenantId: String): TenantQuota = tenantConfig(tenantId)._1
 
   def updateQuota(tenantId: String, q: TenantQuota,
                   actingUser: String = Management.SystemUser): Unit = {
     authorize(tenantId, actingUser, "admin")
-    require(tenantExists(tenantId), s"no such tenant: $tenantId")
+    requireTenant(tenantId)
     writeJson(tenantFile(tenantId), Management.renderTenant(q, apiKeyHash(tenantId)))
   }
 
@@ -229,7 +232,7 @@ class Management(spark: SparkSession, val root: String) {
   def updateApiKey(tenantId: String, newHash: String,
                    actingUser: String = Management.SystemUser): Unit = {
     authorize(tenantId, actingUser, "admin")
-    require(tenantExists(tenantId), s"no such tenant: $tenantId")
+    requireTenant(tenantId)
     writeJson(tenantFile(tenantId), Management.renderTenant(quota(tenantId), newHash))
   }
 
@@ -260,11 +263,11 @@ class Management(spark: SparkSession, val root: String) {
   def createUser(tenantId: String, userId: String, role: String,
                  actingUser: String = Management.SystemUser): Unit = {
     authorize(tenantId, actingUser, "admin")
-    require(tenantExists(tenantId), s"no such tenant: $tenantId")
+    requireTenant(tenantId)
     requireName(userId, "user id")
     require(Roles(role), s"unknown role: $role (allowed: ${Roles.mkString("/")})")
     val us = users(tenantId)
-    require(!us.contains(userId), s"user already exists: $userId")
+    if (us.contains(userId)) throw new ConflictException("user", s"user already exists: $userId")
     writeUsers(tenantId, us + (userId -> role))
   }
 
@@ -273,7 +276,7 @@ class Management(spark: SparkSession, val root: String) {
     authorize(tenantId, actingUser, "admin")
     require(Roles(role), s"unknown role: $role")
     val us = users(tenantId)
-    require(us.contains(userId), s"no such user: $userId")
+    if (!us.contains(userId)) throw new NotFoundException("user", s"no such user: $userId")
     writeUsers(tenantId, us + (userId -> role))
   }
 
@@ -281,7 +284,7 @@ class Management(spark: SparkSession, val root: String) {
                  actingUser: String = Management.SystemUser): Unit = {
     authorize(tenantId, actingUser, "admin")
     val us = users(tenantId)
-    require(us.contains(userId), s"no such user: $userId")
+    if (!us.contains(userId)) throw new NotFoundException("user", s"no such user: $userId")
     writeUsers(tenantId, us - userId)
   }
 
@@ -321,8 +324,8 @@ class Management(spark: SparkSession, val root: String) {
       s"unknown metric: ${cfg.metric}")
     require(Set("FLAT", "IVF_FLAT", "IVF_PQ", "HNSW")(cfg.algo.toUpperCase(java.util.Locale.ROOT)),
       s"unknown algo: ${cfg.algo}")
-    require(!Files.exists(indexFile(tenantId, indexName)),
-      s"index already exists: $tenantId/$indexName")
+    if (Files.exists(indexFile(tenantId, indexName)))
+      throw new ConflictException("index", s"index already exists: $tenantId/$indexName")
     writeJson(indexFile(tenantId, indexName), Management.renderIndex(cfg.copy(
       metric = cfg.metric.toUpperCase(java.util.Locale.ROOT),
       algo = cfg.algo.toUpperCase(java.util.Locale.ROOT))))
@@ -337,7 +340,7 @@ class Management(spark: SparkSession, val root: String) {
                  actingUser: String = Management.SystemUser): Unit = {
     authorize(tenantId, actingUser, "writer")
     val cfg = indexConfig(tenantId, indexName)
-      .getOrElse(throw new IllegalArgumentException(
+      .getOrElse(throw new NotFoundException("index",
         s"no such index: $tenantId/$indexName (createIndex first)"))
     engine.build(tenantId, indexName, nlist = cfg.nlist, metric = cfg.metric,
       seed = seed, algo = cfg.algo, pqM = cfg.pqM, pqK = cfg.pqK)
@@ -501,8 +504,8 @@ class Management(spark: SparkSession, val root: String) {
 
   def deployModel(name: String, version: Long): Unit = {
     val (latest, active, _) = registry(name)
-    require(version >= 1 && version <= latest,
-      s"no such version: $name v$version (latest: v$latest)")
+    if (version < 1 || version > latest)
+      throw new NotFoundException("version", s"no such version: $name v$version (latest: v$latest)")
     writeRegistry(name, latest, version, active)
   }
 

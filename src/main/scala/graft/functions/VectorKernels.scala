@@ -19,7 +19,7 @@ object VectorKernels {
   @inline private def checkDims(a: ArrayData, b: ArrayData): Int = {
     val n = a.numElements()
     if (b.numElements() != n) {
-      throw new IllegalArgumentException(
+      throw new graft.DimensionMismatchException(
         s"vector dimension mismatch: ${n} vs ${b.numElements()}")
     }
     n

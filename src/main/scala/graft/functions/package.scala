@@ -37,18 +37,25 @@ package object functions {
       if (v == null) null // NULL in → NULL out, like the native exprs
       else {
         val a = floatArray(v)
-        var s = 0.0
-        var i = 0
-        while (i < a.length) { s += a(i).toDouble * a(i); i += 1 }
-        if (s == 0) v
-        else {
-          val n = math.sqrt(s)
-          val out = new Array[Float](a.length)
-          i = 0
-          while (i < a.length) { out(i) = (a(i) / n).toFloat; i += 1 }
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
-        }
+        val out = unitArray(a)
+        if (out eq a) v else scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
       }
+    }
+  }
+
+  /** [[vector_unit]]'s kernel over one array; a zero vector comes back
+    * as the same array. */
+  private[graft] def unitArray(a: Array[Float]): Array[Float] = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { s += a(i).toDouble * a(i); i += 1 }
+    if (s == 0) a
+    else {
+      val n = math.sqrt(s)
+      val out = new Array[Float](a.length)
+      i = 0
+      while (i < a.length) { out(i) = (a(i) / n).toFloat; i += 1 }
+      out
     }
   }
 
@@ -69,20 +76,24 @@ package object functions {
     import org.apache.spark.sql.functions.udf
     udf { (v: Seq[Float], maxSq: Double, targetLen: Int) =>
       if (v == null) null
-      else {
-        val a = floatArray(v)
-        var s = 0.0
-        var i = 0
-        while (i < a.length) { s += a(i).toDouble * a(i); i += 1 }
-        val out = new Array[Float](math.max(targetLen, a.length + 1))
-        System.arraycopy(a, 0, out, 0, a.length)
-        out(a.length) = math.sqrt(math.max(0.0, maxSq - s)).toFloat
-        // positions past a.length + 1 stay 0f: zero pads keep every L2
-        // distance and dot product unchanged while restoring the PQ
-        // subspace divisibility (dim+1 is rarely divisible by M)
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
-      }
+      else scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        mipsAugmentArray(floatArray(v), maxSq, targetLen))
     }
+  }
+
+  /** [[vector_mips_augment]]'s kernel over one array. */
+  private[graft] def mipsAugmentArray(a: Array[Float], maxSq: Double,
+                                      targetLen: Int): Array[Float] = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { s += a(i).toDouble * a(i); i += 1 }
+    val out = new Array[Float](math.max(targetLen, a.length + 1))
+    System.arraycopy(a, 0, out, 0, a.length)
+    out(a.length) = math.sqrt(math.max(0.0, maxSq - s)).toFloat
+    // positions past a.length + 1 stay 0f: zero pads keep every L2
+    // distance and dot product unchanged while restoring the PQ
+    // subspace divisibility (dim+1 is rarely divisible by M)
+    out
   }
 
   def vector_mips_augment(v: Column, maxSq: Column, targetLen: Column): Column =

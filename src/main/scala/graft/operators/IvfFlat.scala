@@ -236,16 +236,46 @@ object IvfFlat {
     * vectors: (id BIGINT, vec ARRAY<FLOAT>). */
   def build(vectors: DataFrame, nlist: Int, metric: String = "L2",
             seed: Long = 42L, maxIter: Int = 10): Index = {
+    val spark = vectors.sparkSession
     if (nlist <= 1) {
       // degenerate FLAT index: one inverted list = exact full scan
       // (MLlib KMeans requires k >= 2)
-      val spark = vectors.sparkSession
-      import spark.implicits._
       val dim = vectors.select(size(col("vec"))).head.getInt(0)
-      return Index(
-        vectors.withColumn("cluster_id", lit(0)),
-        Seq((0, Seq.fill(dim)(0.0f))).toDF("cluster_id", "centroid"))
+      return Index(vectors.withColumn("cluster_id", lit(0)),
+        centroidsFrame(spark, flatCenters(dim)))
     }
+    val centers = trainCenters(vectors, nlist, metric, seed, maxIter,
+      vectors.count())
+    Index(assignByCenters(vectors, centers, assignMetric(metric)),
+      centroidsFrame(spark, centers))
+  }
+
+  /** The single all-zero center of a FLAT (nlist ≤ 1) index. */
+  private[graft] def flatCenters(dim: Int): Array[Array[Double]] =
+    Array(new Array[Double](dim))
+
+  /** The metric the assignment kernel scores with: COSINE, else L2. */
+  private[graft] def assignMetric(metric: String): String =
+    if (metric.equalsIgnoreCase("COSINE")) "COSINE" else "L2"
+
+  /** (cluster_id, centroid ARRAY<FLOAT>) — the centers narrowed to float,
+    * the table every snapshot writes. */
+  private[graft] def centroidsFrame(spark: org.apache.spark.sql.SparkSession,
+                                    centers: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    centers.zipWithIndex
+      .map { case (c, i) => (i, c.map(_.toFloat).toSeq) }
+      .toSeq.toDF("cluster_id", "centroid")
+  }
+
+  /** MLlib KMeans over a bounded deterministic sample of `vectors`
+    * (`nRows` of them, counted by the caller): the coarse codebook as
+    * DOUBLE centers. The training input's plan — hash order, limit,
+    * round-robin spread — is the same whoever calls, because its
+    * partition layout decides the k-means|| sampling. */
+  private[graft] def trainCenters(vectors: DataFrame, nlist: Int,
+                                  metric: String, seed: Long, maxIter: Int,
+                                  nRows: Long): Array[Array[Double]] = {
     // Train the coarse codebook on a bounded DETERMINISTIC sample and
     // assign the full corpus in one pass — 10 Lloyd iterations over all
     // of a 100-TB corpus is the classic IVF-build scale trap; sampled
@@ -277,7 +307,6 @@ object IvfFlat {
     // every oracle-gated config and the 100k recall gauges — keep the
     // exact original plan.
     val spark = vectors.sparkSession
-    val nRows = vectors.count()
     val preFiltered =
       if (nRows >= 8L * trainCap) {
         val frac = 4.0 * trainCap / nRows // ≤ 0.5 by the gate
@@ -296,28 +325,8 @@ object IvfFlat {
       .setSeed(seed)
       .setMaxIter(maxIter)
       .setDistanceMeasure(if (metric.equalsIgnoreCase("COSINE")) "cosine" else "euclidean")
-    val model = km.fit(train.withColumn("features", array_to_vector(col("vec"))))
-    // Assignment via a flat primitive kernel instead of model.transform
-    // (§1.2 step 2): MLlib's transform converts every row to a boxed
-    // double DenseVector and its norm-gap pruning bound collapses on
-    // same-norm corpora, so each row pays the full nlist×dim distance
-    // scan through Vector indirection. The kernel scans the same DOUBLE
-    // centers off one flat array with block-wise early abandonment —
-    // abandoning only when the partial sum already exceeds the current
-    // best, which cannot change the argmin; ties keep the lowest center
-    // index, MLlib's own findClosest order. (Float rounding of the
-    // distance differs from MLlib's norm-identity path in the last ulps;
-    // an argmin flip needs two centers equidistant to ~1e-15 relative —
-    // AssignKernelSpec pins transform-equality on random data, and every
-    // oracle-gated config is exact-by-construction, independent of
-    // assignment.)
-    val assigned = assignByCenters(vectors, model.clusterCenters.map(_.toArray),
-      if (metric.equalsIgnoreCase("COSINE")) "COSINE" else "L2")
-    import spark.implicits._
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat).toSeq) }
-      .toSeq.toDF("cluster_id", "centroid")
-    Index(assigned, centroids)
+    km.fit(train.withColumn("features", array_to_vector(col("vec"))))
+      .clusterCenters.map(_.toArray)
   }
 
   /** Nearest-center assignment against DOUBLE cluster centers: one flat
@@ -327,32 +336,40 @@ object IvfFlat {
     * computes, without per-row Vector boxing. COSINE matches MLlib's
     * cosine distance (1 − dot/(‖a‖·‖b‖)): argmin over it is argmax of
     * dot/‖c‖ at fixed query norm, computed that way (no abandonment —
-    * dot products have no monotone partial bound). */
-  private[operators] def assignByCenters(vectors: DataFrame,
-                                         centers: Array[Array[Double]],
-                                         metricU: String): DataFrame = {
-    val k = centers.length
-    val dim = centers.headOption.map(_.length).getOrElse(0)
-    val flat = new Array[Double](k * dim)
-    var ci = 0
-    while (ci < k) {
-      System.arraycopy(centers(ci), 0, flat, ci * dim, dim); ci += 1
+    * dot products have no monotone partial bound).
+    *
+    * Used instead of model.transform (§1.2 step 2): MLlib's transform
+    * converts every row to a boxed double DenseVector and its norm-gap
+    * pruning bound collapses on same-norm corpora, so each row pays the
+    * full nlist×dim distance scan through Vector indirection. (Float
+    * rounding of the distance differs from MLlib's norm-identity path in
+    * the last ulps; an argmin flip needs two centers equidistant to
+    * ~1e-15 relative — AssignKernelSpec pins transform-equality on
+    * random data, and every oracle-gated config is
+    * exact-by-construction, independent of assignment.) */
+  private[graft] final class CenterKernel(centers: Array[Array[Double]],
+                                          metricU: String) extends Serializable {
+    private val k = centers.length
+    private val dim = centers.headOption.map(_.length).getOrElse(0)
+    private val flat: Array[Double] = {
+      val out = new Array[Double](k * dim)
+      var ci = 0
+      while (ci < k) {
+        System.arraycopy(centers(ci), 0, out, ci * dim, dim); ci += 1
+      }
+      out
     }
-    val cnorm: Array[Double] =
-      if (metricU == "COSINE") centers.map(c => math.sqrt(c.map(x => x * x).sum))
-      else null
-    val spark = vectors.sparkSession
-    val bFlat = spark.sparkContext.broadcast(flat)
-    val bNorm = spark.sparkContext.broadcast(cnorm)
-    val isCos = metricU == "COSINE"
-    val nearest = udf { (v: Seq[Float]) =>
-      val a = graft.functions.floatArray(v)
-      val cs = bFlat.value
-      require(a.length == dim,
+    private val isCos = metricU == "COSINE"
+    private val cnorm: Array[Double] =
+      if (isCos) centers.map(c => math.sqrt(c.map(x => x * x).sum)) else null
+
+    def nearest(a: Array[Float]): Int = {
+      val cs = flat
+      if (a.length != dim) throw new graft.DimensionMismatchException(
         s"vector dimension mismatch: ${a.length} vs $dim")
       var best = 0
       if (isCos) {
-        val norms = bNorm.value
+        val norms = cnorm
         var bestS = Double.NegativeInfinity
         var c = 0
         while (c < k) {
@@ -383,6 +400,16 @@ object IvfFlat {
       }
       best
     }
+  }
+
+  /** [[CenterKernel]] as a `cluster_id` column over `vectors`. */
+  private[graft] def assignByCenters(vectors: DataFrame,
+                                         centers: Array[Array[Double]],
+                                         metricU: String): DataFrame = {
+    val bKernel = vectors.sparkSession.sparkContext
+      .broadcast(new CenterKernel(centers, metricU))
+    val nearest = udf((v: Seq[Float]) =>
+      bKernel.value.nearest(graft.functions.floatArray(v)))
     vectors.withColumn("cluster_id", nearest(col("vec")))
   }
 
@@ -467,7 +494,7 @@ object IvfFlat {
     val metricU = metric.toUpperCase(java.util.Locale.ROOT)
     val rows = qs.flatMap { case (qid, qv) =>
       cents.headOption.foreach { case (_, cv) =>
-        require(qv.length == cv.length,
+        if (qv.length != cv.length) throw new graft.DimensionMismatchException(
           s"vector dimension mismatch: ${qv.length} vs ${cv.length}")
       }
       val qArr = qv.toArray
@@ -598,7 +625,7 @@ object IvfFlat {
     val cents = index.centroidsLocal
     queries.headOption.foreach { case (_, qv) =>
       cents.headOption.foreach { case (_, cv) =>
-        require(qv.length == cv.length,
+        if (qv.length != cv.length) throw new graft.DimensionMismatchException(
           s"vector dimension mismatch: ${qv.length} vs ${cv.length}")
       }
     }

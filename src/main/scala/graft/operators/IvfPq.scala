@@ -383,14 +383,25 @@ object IvfPq {
     * the incremental quantization cost instead of a second KMeans. */
   def buildFrom(coarse: IvfFlat.Index, m: Int, k: Int,
                 seed: Long = 123L): Index = {
-    val residuals = coarse.assigned
-      .join(broadcast(coarse.centroids), Seq("cluster_id"))
+    val dim = coarse.assigned.select(size(col("vec"))).head.getInt(0)
+    val (codes, cb) = encodeResiduals(coarse.assigned, coarse.centroids, m, k,
+      seed, dim)
+    Index(codes, coarse.centroids, cb)
+  }
+
+  /** Residuals of `assigned` (id, cluster_id, vec, `keep`…) against their
+    * FLOAT centroids → a codebook trained on the residuals' bounded
+    * sample, and the (id, cluster_id, codes, `keep`…) table. */
+  private[graft] def encodeResiduals(assigned: DataFrame, centroids: DataFrame,
+                                     m: Int, k: Int, seed: Long, dim: Int,
+                                     keep: Seq[String] = Nil): (DataFrame, Pq.Codebook) = {
+    val residuals = assigned
+      .join(broadcast(centroids), Seq("cluster_id"))
       .withColumn("rvec", zip_with(col("vec"), col("centroid"), (x, y) => x - y))
-      .select("id", "cluster_id", "rvec")
-    val cb = Pq.train(residuals, m, k, seed, vecCol = "rvec")
-    val assigned = Pq.encode(residuals, cb, vecCol = "rvec")
-      .select("id", "cluster_id", "codes")
-    Index(assigned, coarse.centroids, cb)
+      .select((Seq("id", "cluster_id", "rvec") ++ keep).map(col): _*)
+    val cb = Pq.trainWithDim(residuals, dim, m, k, seed, vecCol = "rvec")
+    (Pq.encode(residuals, cb, vecCol = "rvec")
+      .select((Seq("id", "cluster_id", "codes") ++ keep).map(col): _*), cb)
   }
 
   /** Persist the IVF-PQ index: cluster-partitioned codes + centroids +

@@ -38,7 +38,10 @@ object Pq {
   }
 
   def loadCodebook(spark: org.apache.spark.sql.SparkSession, path: String): Codebook = {
-    val rows = spark.read.parquet(path).collect()
+    import org.apache.spark.sql.types._
+    val rows = spark.read.schema(StructType(Seq(StructField("m", IntegerType),
+        StructField("k", IntegerType), StructField("centroid", ArrayType(FloatType)))))
+      .parquet(path).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
     val m = rows.map(_._1).max + 1
     val k = rows.map(_._2).max + 1
@@ -63,17 +66,59 @@ object Pq {
     * previous centroid. */
   def train(vectors: DataFrame, m: Int, k: Int, seed: Long = 42L,
             maxIter: Int = 10, vecCol: String = "vec",
-            sampleCap: Int = 20000): Codebook = {
-    val dim = vectors.select(size(col(vecCol))).head.getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by M=$m")
-    val dsub = dim / m
+            sampleCap: Int = 20000): Codebook =
+    trainWithDim(vectors, vectors.select(size(col(vecCol))).head.getInt(0),
+      m, k, seed, maxIter, vecCol, sampleCap)
 
+  /** [[train]] for a caller that already knows the vector dimension. */
+  private[graft] def trainWithDim(vectors: DataFrame, dim: Int, m: Int, k: Int,
+                                  seed: Long = 42L, maxIter: Int = 10,
+                                  vecCol: String = "vec",
+                                  sampleCap: Int = 20000): Codebook = {
+    require(dim % m == 0, s"dim $dim not divisible by M=$m")
     // bounded deterministic sample: sampleCap hash-smallest vectors
     val rows = vectors
       .select(col(vecCol).as("v"), xxhash64(col(vecCol), lit(seed)).as("h"))
       .orderBy("h").limit(sampleCap)
       .collect().map(_.getSeq[Float](0).toArray)
+    lloyd(rows, dim, m, k, seed, maxIter)
+  }
+
+  /** [[trainWithDim]] over driver-held vectors: the same sample — the
+    * `sampleCap` smallest by [[sampleHash]], in that order, since the
+    * Lloyd sums below depend on it — and the same codebooks, bit for
+    * bit, without a job. */
+  private[graft] def trainLocal(vecs: Array[Array[Float]], dim: Int, m: Int,
+                                k: Int, seed: Long = 42L, maxIter: Int = 10,
+                                sampleCap: Int = 20000): Codebook = {
+    require(dim % m == 0, s"dim $dim not divisible by M=$m")
+    val hash = sampleHash(seed)
+    val hs = vecs.map(hash)
+    val order = Array.range(0, vecs.length).sortBy(hs(_))
+    lloyd(order.take(sampleCap).map(vecs(_)), dim, m, k, seed, maxIter)
+  }
+
+  /** Driver twin of the sample key `xxhash64(vec, lit(seed))`: Spark's
+    * own hash expression, evaluated on one row at a time. */
+  private def sampleHash(seed: Long): Array[Float] => Long = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, XxHash64}
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val expr = XxHash64(Seq(
+      BoundReference(0, ArrayType(FloatType, containsNull = true), nullable = true),
+      Literal(seed)), 42L)
+    v => {
+      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
+      row.update(0, org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(v))
+      expr.eval(row).asInstanceOf[Long]
+    }
+  }
+
+  /** Per-subspace Lloyd's over the sample `rows`, in their order. */
+  private def lloyd(rows: Array[Array[Float]], dim: Int, m: Int, k: Int,
+                    seed: Long, maxIter: Int): Codebook = {
     require(rows.nonEmpty, "PQ train: empty input")
+    val dsub = dim / m
     val n = rows.length
 
     val cbs = Array.fill(m, k)(new Array[Float](dsub))
@@ -134,7 +179,7 @@ object Pq {
     * `codebooks(mi)(ki)(i)` layout costs two pointer chases per
     * sub-centroid element on a path run m·k·dsub times per row
     * (~32k accesses/row at the 10M rung's M=8/K=256/dsub=16). */
-  private[operators] final class FlatCodebook(cb: Codebook) extends Serializable {
+  private[graft] final class FlatCodebook(cb: Codebook) extends Serializable {
     val m: Int = cb.m
     val dsub: Int = cb.dsub
     val ks: Array[Int] = Array.tabulate(m)(mi => cb.codebooks(mi).length)
@@ -166,8 +211,11 @@ object Pq {
     * ki with a strict `<`, and the early abandonment only skips a
     * center whose PARTIAL sum already reached the current best — its
     * full sum can only be ≥, so it could never have won. */
-  private def encodeOne(v0: Seq[Float], fcb: FlatCodebook): Array[Byte] = {
-    val v = graft.functions.floatArray(v0)
+  private def encodeOne(v0: Seq[Float], fcb: FlatCodebook): Array[Byte] =
+    encodeRow(graft.functions.floatArray(v0), fcb)
+
+  /** [[encodeOne]] over a driver-held row. */
+  private[graft] def encodeRow(v: Array[Float], fcb: FlatCodebook): Array[Byte] = {
     val flat = fcb.flat
     val dsub = fcb.dsub
     val out = new Array[Byte](fcb.m)

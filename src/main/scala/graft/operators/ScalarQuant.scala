@@ -28,7 +28,7 @@ object ScalarQuant {
   }
 
   def loadParams(path: String): Params =
-    parseParams(path, java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
+    parseParams(path, graft.Json.readFile(java.nio.file.Paths.get(path)))
 
   private[graft] def renderParams(p: Params): String =
     s"""{"min": ${p.min}, "max": ${p.max}}"""

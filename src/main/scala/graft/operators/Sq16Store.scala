@@ -439,7 +439,7 @@ object Sq16Store {
 
   private def readMeta(dir: String): Meta = {
     val p = java.nio.file.Paths.get(dir).resolve("meta.json")
-    parseMeta(p.toString, java.nio.file.Files.readString(p))
+    parseMeta(p.toString, graft.Json.readFile(p))
   }
 
   private def writeSegment(p: java.nio.file.Path, ids: Array[Long],
@@ -534,6 +534,43 @@ object Sq16Store {
     val nSegs = math.max(1L, (n + rowsPerSeg - 1) / rowsPerSeg)
     64L + n * (8L + 2L * dim) + 64L * nSegs
   }
+
+  /** 65535 levels over [mn, mx]: the step both encoders below use. */
+  private[graft] def scale(mn: Float, mx: Float): Double =
+    if (mx > mn) 65535.0 / (mx - mn) else 0.0
+
+  /** The sq16 codes of a FLOAT array column, as ARRAY<INT>: FLOAT
+    * subtraction, DOUBLE scale, floor(x + 0.5), clamp to [0, 65535] — a
+    * portable choreography a SQL oracle reproduces bit-exactly. */
+  private[graft] def encodeCol(v: org.apache.spark.sql.Column, mn: Float,
+                               mx: Float): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    val s = scale(mn, mx)
+    transform(v, x =>
+      greatest(lit(0.0), least(lit(65535.0),
+        floor((x - lit(mn)) * lit(s) + lit(0.5)))).cast("int"))
+  }
+
+  /** [[encodeCol]] over one driver-held vector, bit for bit: Spark's
+    * floor yields a BIGINT, which the clamp widens back to DOUBLE. */
+  private[graft] def encodeRow(v: Array[Float], mn: Float, mx: Float): Array[Int] = {
+    val s = scale(mn, mx)
+    val out = new Array[Int](v.length)
+    var i = 0
+    while (i < v.length) {
+      val q = math.floor((v(i) - mn).toDouble * s + 0.5).toLong.toDouble
+      out(i) = math.max(0.0, math.min(65535.0, q)).toInt
+      i += 1
+    }
+    out
+  }
+
+  /** A store over driver-held (id, codes) rows: the runs and merge of
+    * [[buildResident]], without a job. */
+  private[graft] def fromRows(ids: Array[Long], codes: Array[Array[Int]],
+                              dim: Int, mn: Float, mx: Float): Sq16Store =
+    merge(packRun(ids.indices.iterator.map(i => (ids(i), codes(i))), dim).toArray,
+      dim, mn, mx)
 
   /** One partition's pre-sorted run: ids ascending + aligned flat codes. */
   final case class Run(ids: Array[Long], codes: Array[Short])

@@ -326,12 +326,12 @@ final class HttpPlane(mgmt: Management, port: Int = 0) {
       case e: HttpPlane.HttpError => sendErr(ex, e.code, e.getMessage)
       case e: SecurityException => sendErr(ex, 403, e.getMessage)
       case e: IllegalArgumentException =>
-        val m = Option(e.getMessage).getOrElse("bad request")
-        val code =
-          if (m.contains("no such") || m.contains("not found")) 404
-          else if (m.contains("already exists")) 409
-          else 400
-        sendErr(ex, code, m)
+        val code = e match {
+          case _: graft.NotFoundException => 404
+          case _: graft.ConflictException => 409
+          case _ => 400
+        }
+        sendErr(ex, code, Option(e.getMessage).getOrElse("bad request"))
       case NonFatal(e) =>
         sendErr(ex, 500, Option(e.getMessage).getOrElse(e.getClass.getName))
     }

@@ -662,14 +662,16 @@ final class RespServer(engine: GraftEngine, mgmt: Management,
 
   /** Map engine exceptions onto the reference's error codes
     * (VectorCommandSet.cs:837-847 + write-path literals cs:607-615). */
-  private def writeKnown(out: OutputStream, e: Throwable): Unit = {
-    val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-    if (msg.toLowerCase(java.util.Locale.ROOT).contains("dimension"))
-      writeError(out, s"$ErrDim Vector dimension mismatch.")
-    else if (msg.contains("already exists"))
-      writeError(out, "ERR Vector already exists.")
-    else if (msg.contains("no built snapshot") || msg.contains("no such index"))
-      writeError(out, s"$ErrNotFound Index not found.")
-    else writeError(out, s"ERR $msg")
-  }
+  private def writeKnown(out: OutputStream, e: Throwable): Unit =
+    graft.Errors.kindOf(e) match {
+      case Some(_: graft.DimensionMismatchException) =>
+        writeError(out, s"$ErrDim Vector dimension mismatch.")
+      case Some(c: graft.ConflictException) if c.what == "vector" =>
+        writeError(out, "ERR Vector already exists.")
+      case Some(nf: graft.NotFoundException) if nf.what == "index" =>
+        writeError(out, s"$ErrNotFound Index not found.")
+      case _ =>
+        writeError(out, s"ERR ${Option(e.getMessage).getOrElse(e.getClass.getSimpleName)}")
+    }
+
 }

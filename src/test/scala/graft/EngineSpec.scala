@@ -1476,30 +1476,10 @@ class EngineSpec extends SparkSpec {
   }
 
   /** `f`'s result and the number of Spark jobs it submitted from this
-    * thread (its job group), counted once the listener bus has drained. */
+    * thread (its job group). */
   private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs-during-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "jobsDuring")
-    try {
-      val r = f
-      // the bus is private[spark]; its drain is public in bytecode
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      (r, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (r, jobs) = JobCount.byModule(spark)(f)
+    (r, jobs.values.sum)
   }
 
   test("warmServing materializes resident handles for every built index, skips unbuilt") {
@@ -1542,6 +1522,25 @@ class EngineSpec extends SparkSpec {
     assert(trI.path == "head+pqtail" && rowsI.nonEmpty, trI)
     val (rowsH, trH) = firstCall("hnsw")
     assert(trH.path == "head+hnswtail" && rowsH.nonEmpty, trH)
+  }
+
+  test("add's job budget: one grouped aggregation, one append, no touched-set job") {
+    val root = Files.createTempDirectory("engine_add_jobs").toString
+    val eng = new GraftEngine(spark, root)
+    val rng = new scala.util.Random(5)
+    def recs(from: Int, n: Int) = mkRecords((from until from + n).map(i =>
+      (s"v$i", Seq.fill(4)(rng.nextFloat()), null: String, Seq.empty[String], 100L)))
+    // the count and the touched set come from one aggregation (2 jobs:
+    // its exchange and its result), then the append: 5 jobs before
+    val (n1, emptyLog) = jobsDuring(eng.add(recs(0, 20)))
+    assert(n1 == 20L)
+    assert(emptyLog == 3, s"add on an empty log ran $emptyLog jobs")
+    // the duplicate check joins the LWW state in the same aggregation: 7 before
+    val (n2, nonEmptyLog) = jobsDuring(eng.add(recs(20, 5)))
+    assert(n2 == 5L)
+    assert(nonEmptyLog == 5, s"add on a non-empty log ran $nonEmptyLog jobs")
+    assert(eng.epoch("t1", "idx") == 2L)
+    intercept[ConflictException](eng.add(recs(0, 1)))
   }
 
   test("a truncated manifest fails with an error naming the file and the field") {

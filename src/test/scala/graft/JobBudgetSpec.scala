@@ -1,0 +1,89 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Job budgets, in the style of PlanShapeSpec: the number of Spark jobs
+  * each phase submits, per module, pinned. Most of a small build's wall
+  * time is the driver's per-job overhead, so a job that comes back shows
+  * up here by the module that submitted it. */
+class JobBudgetSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def records(index: String, n: Int, dim: Int, seed: Int,
+                      idFrom: Int = 0): DataFrame = {
+    val rng = new scala.util.Random(seed)
+    val centres = Array.fill(8, dim)(rng.nextGaussian().toFloat * 4f)
+    (0 until n).map { i =>
+      val c = centres(i % centres.length)
+      (s"v${idFrom + i}", c.map(x => x + rng.nextGaussian().toFloat).toSeq, 100L)
+    }.toDF("id", "vector", "updated_at")
+      .withColumn("meta", lit(null).cast("string"))
+      .withColumn("tags", lit(null).cast("array<string>"))
+      .withColumn("tenant_id", lit("t1"))
+      .withColumn("index_name", lit(index))
+  }
+
+  private def show(what: String, jobs: Map[String, Int]): Unit =
+    info(s"$what: ${jobs.values.sum} jobs ${jobs.toSeq.sorted.mkString(", ")}")
+
+  /** Adds a corpus, builds it, runs one rows-tier search; returns the
+    * per-module jobs of each phase. */
+  private def phases(algo: String, refine: Int = 0)
+      : (Map[String, Int], Map[String, Int], Map[String, Int], Map[String, Int]) = {
+    val root = Files.createTempDirectory(s"jobs_$algo").toString
+    val eng = new GraftEngine(spark, root)
+    val corpus = records("idx", 640, 16, 7)
+    val (_, addJobs) = JobCount.byModule(spark)(eng.add(corpus))
+    val (_, buildJobs) = JobCount.byModule(spark)(
+      eng.build("t1", "idx", nlist = 4, algo = algo, pqM = 4, pqK = 16))
+    val q = Array((1L, Array.fill(16)(0.5f)))
+    val ((rows, tr), searchJobs) = JobCount.byModule(spark)(
+      eng.searchRowsTraced("t1", "idx", q, k = 5, nprobe = 2, refine = refine))
+    assert(rows.length == 5, tr)
+    val (_, add2Jobs) = JobCount.byModule(spark)(
+      eng.add(records("idx", 4, 16, 8, idFrom = 10000)))
+    show(s"$algo add (empty log)", addJobs)
+    show(s"$algo build", buildJobs)
+    show(s"$algo first search (${tr.path})", searchJobs)
+    show(s"$algo add (non-empty log)", add2Jobs)
+    (addJobs, buildJobs, searchJobs, add2Jobs)
+  }
+
+  // "unattributed": the job that materializes the cached state for the
+  // build's one state pass runs on a query-stage thread with no graft frame.
+
+  test("job budget: IVF_FLAT add, build and first search") {
+    val (add, build, search, add2) = phases("IVF_FLAT")
+    assert(add.values.sum == 3 && add2.values.sum == 5, (add, add2))
+    // 26 jobs before (GraftEngine 7, IvfFlat 19): the count, the
+    // watermark aggregation's extra stages
+    assert(build == Map("GraftEngine" -> 5, "IvfFlat" -> 17, "unattributed" -> 1), build)
+    // 13 before: three schema-inference reads and the id-pool sizing
+    assert(search == Map("GraftEngine" -> 1, "IvfFlat" -> 6, "unattributed" -> 1), search)
+  }
+
+  test("job budget: IVF_PQ add, build and first refined search") {
+    val (add, build, search, add2) = phases("IVF_PQ", refine = 10)
+    assert(add.values.sum == 3 && add2.values.sum == 5, (add, add2))
+    // 43 before (GraftEngine 14, IvfFlat 20, Pq 6, ScalarQuant 2,
+    // Sq16Store 1): dim and sample jobs, the codes re-join, the SQ16
+    // min/max pass, read-back and wave fetch, a second centroids write
+    assert(build == Map("GraftEngine" -> 6, "IvfFlat" -> 17, "Pq" -> 1,
+      "unattributed" -> 1), build)
+    // 15 before
+    assert(search == Map("GraftEngine" -> 1, "IvfPq" -> 6, "Pq" -> 1,
+      "unattributed" -> 1), search)
+  }
+
+  test("job budget: HNSW add, build and first search") {
+    val (add, build, search, add2) = phases("HNSW")
+    assert(add.values.sum == 3 && add2.values.sum == 5, (add, add2))
+    // 11 before (GraftEngine 6, Hnsw 5)
+    assert(build == Map("GraftEngine" -> 4, "Hnsw" -> 5, "unattributed" -> 1), build)
+    // 15 before
+    assert(search == Map("GraftEngine" -> 1, "Hnsw" -> 11), search)
+  }
+}

@@ -66,6 +66,20 @@ class ManagementSpec extends SparkSpec {
     assert(m.quota("acme") == TenantQuota(maxQps = 7))
   }
 
+  test("a tenant config cut inside a UTF-8 character fails naming the file") {
+    val m = mkMgmt()
+    m.createTenant("utf", apiKeyHash = "clé-ключ")
+    val f = java.nio.file.Paths.get(s"${m.root}/tenants/utf/config.json")
+    val bytes = Files.readAllBytes(f)
+    // keep the first byte of the first two-byte character only
+    val cut = bytes.indexWhere(b => (b & 0xe0) == 0xc0) + 1
+    assert(cut > 0)
+    Files.write(f, java.util.Arrays.copyOf(bytes, cut))
+    val e = intercept[IllegalStateException](m.quota("utf"))
+    assert(e.getMessage.contains("config.json") && e.getMessage.contains("UTF-8"),
+      e.getMessage)
+  }
+
   test("a truncated model registry fails with a named error, not active = 0") {
     val m = mkMgmt()
     val f = java.nio.file.Paths.get(s"${m.root}/models/sem/registry.json")

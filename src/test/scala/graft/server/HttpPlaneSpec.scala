@@ -143,6 +143,20 @@ class HttpPlaneSpec extends SparkSpec {
     assert(!mgmt.tenantExists("cut"))
   }
 
+  test("the status comes from the error's kind, not from text the client sent") {
+    http("POST", "/v1/tenants", """{"tenantId": "kinds"}""")
+    val (ci, bi) = http("POST", "/v1/indexes",
+      """{"tenantId": "kinds", "indexName": "i", "dimension": 3, "metric": "not found"}""")
+    assert(ci == 400 && bi.contains("not found"), s"$ci $bi")
+    val (ct, bt) = http("POST", "/v1/tenants",
+      """{"tenantId": "kinds2", "maxQps": "already exists"}""")
+    assert(ct == 400 && bt.contains("maxQps"), s"$ct $bt")
+    assert(!mgmt.tenantExists("kinds2"))
+    // the kinds themselves still map: a missing tenant 404s, a duplicate 409s
+    assert(http("GET", "/v1/tenants/no-such-one/quotas")._1 == 404)
+    assert(http("POST", "/v1/tenants", """{"tenantId": "kinds"}""")._1 == 409)
+  }
+
   test("a damaged tenant config refuses the request instead of dropping the key check") {
     http("POST", "/v1/tenants", """{"tenantId": "dmg", "apiKey": "k1"}""")
     assert(http("GET", "/v1/tenants/dmg/quotas", Map("X-API-KEY" -> "k1"))._1 == 200)

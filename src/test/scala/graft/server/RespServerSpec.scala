@@ -415,6 +415,16 @@ class RespServerSpec extends SparkSpec {
     }
   }
 
+  test("an error's code comes from its kind, not from text the client sent") {
+    withClient { c =>
+      // the unknown token is echoed back; its text must not pick VEC_ERR_DIM
+      c.cmd("VEC.STATS", "echo", "idx", "dimension") match {
+        case Err(m) => assert(m.startsWith("ERR ") && m.contains("DIMENSION"), m)
+        case other => fail(s"expected an unknown-token error, got $other")
+      }
+    }
+  }
+
   test("VEC.STATS on a keyed tenant requires auth like every other tenant verb") {
     mgmt.createTenant("statsec", TenantQuota(), apiKeyHash = sha256Hex("sk"))
     eng.add(records("statsec", "idx", Seq(("a", Seq(1f, 0f, 0f, 0f), null, Nil))))
