@@ -499,7 +499,7 @@ object Bench {
     // packed tier — a zero-job in-heap scan, the honest analog of the
     // reference's in-process serving). Runs after the batch warmups;
     // one throwaway single-query call first so the one-time resident-tier
-    // materialization (sizeStats job + packed collect) isn't measured as
+    // materialization (the packed collect) isn't measured as
     // a per-call latency.
     IvfFlat.searchLocalRows(idx100k, Array(q100Local.head), "L2", 10,
       nprobe = 10, spark)

@@ -366,6 +366,15 @@ class GraftEngine(spark: SparkSession, root: String,
         .forEach(q => Files.deleteIfExists(q))
     }
 
+  /** The dir snapshot `version` is written into, emptied first: a build
+    * that died before its manifest rename leaves that dir behind, and
+    * none of its files may survive into the snapshot written over it. */
+  private def freshSnapshotDir(tenant: String, index: String, version: Long): String = {
+    val dir = s"${indexPath(tenant, index)}/v$version"
+    deleteTree(Paths.get(dir))
+    dir
+  }
+
   /** Best-effort GC of superseded snapshot dirs (single-writer model). */
   private def gcOldSnapshots(tenant: String, index: String, keep: Long): Unit = {
     val base = Paths.get(indexPath(tenant, index))
@@ -630,7 +639,7 @@ class GraftEngine(spark: SparkSession, root: String,
     // whole snapshot lands in a fresh versioned dir; nothing below is
     // visible to readers until the manifest swap at the end
     val newVersion = m0.version + 1
-    val dir = s"${indexPath(tenant, index)}/v$newVersion"
+    val dir = freshSnapshotDir(tenant, index, newVersion)
     val keyed = state.select(xxhash64(col("id")).as("id"), col("vector").as("vec"),
       col("id").as("id_str"))
     algoU match {
@@ -1657,8 +1666,7 @@ class GraftEngine(spark: SparkSession, root: String,
         require(!ipPq || m.metric.equalsIgnoreCase("IP"),
           s"IP IVF_PQ search needs an IP-built tail (MIPS-augmented " +
             s"codes); this index's build metric is '${m.metric}'")
-        val pqIdx = graft.operators.IvfPq.load(
-          spark, s"$snap/ivfpq")
+        val pqIdx = pqIndexOf(tenant, index, m)
         val pqQueries =
           if (cosinePq)
             baseQueries.withColumn("qvec", graft.functions.vector_unit(col("qvec")))
@@ -1671,7 +1679,8 @@ class GraftEngine(spark: SparkSession, root: String,
               concat(col("qvec"),
                 array_repeat(lit(0.0f), lit(cbDim) - size(col("qvec")))))
           } else baseQueries
-        val strMap = pqIdx.assigned.select("id", "id_str")
+        val strMap = spark.read.schema(PqCodesSchema)
+          .parquet(s"$snap/ivfpq/codes").select("id", "id_str")
         // Edge: a ZERO corpus vector passes vector_unit unchanged, so its
         // ADC distance to a unit query is ≈1 and the fold scores it ≈0.5
         // where exact cosine says 0 — a bounded mid-scale misplacement in
@@ -1683,11 +1692,7 @@ class GraftEngine(spark: SparkSession, root: String,
         val adcRaw = capScans(
           maskHead(
             graft.operators.IvfPq
-              .scoredCandidates(
-                graft.operators.IvfPq.Index(
-                  pqIdx.assigned.select("id", "cluster_id", "codes"),
-                  pqIdx.centroids, pqIdx.cb),
-                pqQueries, nprobe)
+              .scoredCandidates(pqIdx, pqQueries, nprobe)
               .join(strMap, Seq("id")))
             .select(col("query_id"), col("id_str"), adcScore),
           maxScans)
@@ -1871,12 +1876,13 @@ class GraftEngine(spark: SparkSession, root: String,
   // immutable once written, so safe to cache for the engine's lifetime
   private val tailIndexCache =
     scala.collection.concurrent.TrieMap.empty[String, IvfFlat.Index]
-  private def tailIndexOf(tenant: String, index: String, m: Manifest): IvfFlat.Index =
+  private[graft] def tailIndexOf(tenant: String, index: String, m: Manifest): IvfFlat.Index =
     tailIndexCache.getOrElseUpdate(s"$tenant/$index/v${m.version}", {
       val snap = snapDir(tenant, index, m)
       IvfFlat.Index(
         spark.read.schema(VectorsSchema).parquet(s"$snap/vectors"),
-        spark.read.schema(CentroidsSchema).parquet(s"$snap/centroids"))
+        spark.read.schema(CentroidsSchema).parquet(s"$snap/centroids"),
+        m.nVectors)
     })
 
   // memoized IVF_PQ handle for the rows serving tier — same immutable-
@@ -1884,15 +1890,16 @@ class GraftEngine(spark: SparkSession, root: String,
   // (resident byte codes) and codebook load lazily on first use
   private val pqIndexCache =
     scala.collection.concurrent.TrieMap.empty[String, graft.operators.IvfPq.Index]
-  private def pqIndexOf(tenant: String, index: String,
-                        m: Manifest): graft.operators.IvfPq.Index =
+  private[graft] def pqIndexOf(tenant: String, index: String,
+                               m: Manifest): graft.operators.IvfPq.Index =
     pqIndexCache.getOrElseUpdate(s"$tenant/$index/v${m.version}", {
       val snap = snapDir(tenant, index, m)
       graft.operators.IvfPq.Index(
         spark.read.schema(PqCodesSchema).parquet(s"$snap/ivfpq/codes")
           .select("id", "cluster_id", "codes"),
         spark.read.schema(CentroidsSchema).parquet(s"$snap/ivfpq/centroids"),
-        graft.operators.Pq.loadCodebook(spark, s"$snap/ivfpq/codebooks"))
+        graft.operators.Pq.loadCodebook(spark, s"$snap/ivfpq/codebooks"),
+        m.nVectors)
     })
 
   // memoized driver-resident HNSW graphs for the rows serving tier — a
@@ -2257,25 +2264,19 @@ class GraftEngine(spark: SparkSession, root: String,
           // the serving gates decide what warms ([[rowsTierOf]], the same
           // resolver every rows call runs): an index they deny can never
           // serve rows-native, so warming its handles would strand bytes
-          // on the ledger (ADVICE r9). Then force EVERY lazy the first
-          // call's tail kernel would pay, not just the big packed
-          // collects: clusterCounts is a corpus-wide groupBy job (~2.4 s
-          // at the 10M rung — measured as exactly the residue the r8
-          // warm-boot bench row exposed when warm only touched
-          // packedDriver), centroidsLocal a small collect, the MIPS fold
-          // constant a parquet read on IP-built PQ indexes.
+          // on the ledger (ADVICE r9). Then force every lazy the first
+          // call's tail kernel would pay: the packed collect (admitted
+          // from the manifest's row count; the dispatch reads its list
+          // lengths off the packed ranges), the centroid collect, and the
+          // MIPS fold constant, a parquet read on IP-built PQ indexes.
           rowsTierOf(tenant, index, m, refine = false, filtered = false,
               hnsw = true).foreach(_.tail match {
             case FlatTail =>
               val tail = tailIndexOf(tenant, index, m)
               tail.packedDriver
               tail.centroidsLocal
-              tail.clusterCounts
-              tail.sizeStats
             case PqTail(pq, _) =>
               pq.centroidsLocal
-              pq.clusterCounts
-              pq.sizeStats
               if (m.metric == "IP") mipsMaxSqOf(tenant, index, m)
             case HnswTail(_) => ()
           })
@@ -2423,7 +2424,7 @@ class GraftEngine(spark: SparkSession, root: String,
     val m0 = manifest(tenant, index)
     val newVersion = m0.version + 1
     copyTree(Paths.get(s"$src/snapshot"),
-      Paths.get(s"${indexPath(tenant, index)}/v$newVersion"))
+      Paths.get(freshSnapshotDir(tenant, index, newVersion)))
     // headDirty stays 1: the local log's relation to the imported
     // watermark is unknown, so the head path must stay on
     withManifestLock(tenant, index) {
@@ -2457,8 +2458,8 @@ class GraftEngine(spark: SparkSession, root: String,
         col("vector").as("vec"), col("meta"), col("tags"))
       .withColumn("id", xxhash64(col("id_str")))
     val newVersion = m0.version + 1
-    val dir = s"${indexPath(tenant, index)}/v$newVersion"
-    val idx0 = IvfFlat.Index(spark.emptyDataFrame, centroids)
+    val dir = freshSnapshotDir(tenant, index, newVersion)
+    val idx0 = IvfFlat.Index(spark.emptyDataFrame, centroids, 0L)
     // assignment MUST reproduce build()'s geometry: COSINE tails are
     // cosine-trained (cosine argmax), everything else euclidean-trained —
     // an L2 re-assignment of a cosine tail would silently reshape the

@@ -35,7 +35,9 @@ object IvfFlat {
                           val ranges: java.util.HashMap[Int, Array[Int]])
     extends Serializable
 
-  case class Index(assigned: DataFrame, centroids: DataFrame) {
+  /** `rows` is the row count of `assigned`, known to whoever wrote it
+    * (0 for a centroids-only handle, as [[assign]] needs). */
+  case class Index(assigned: DataFrame, centroids: DataFrame, rows: Long = 0L) {
     /** Driver-side centroid snapshot (nlist rows — driver-sized by
       * construction), fetched once per Index instance: repeated
       * small-batch searches against the same index skip the per-call
@@ -111,48 +113,24 @@ object IvfFlat {
       rdd
     }
 
-    /** (rows, dim) of the assigned table — one tiny job, memoized per
-      * Index handle; feeds the serving-tier dispatch and the residency
-      * bound. dim = 0 marks an empty corpus. */
-    @transient lazy val sizeStats: (Long, Int) = {
-      val row = assigned
-        .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)),
-          org.apache.spark.sql.functions.first(
-            org.apache.spark.sql.functions.size(
-              org.apache.spark.sql.functions.col("vec"))))
-        .head
-      if (row.isNullAt(1)) (0L, 0) else (row.getLong(0), row.getInt(1))
-    }
-
     /** Driver-RESIDENT packed lists for the zero-job serving tier, or
       * None while the [[graft.Residency.PackedFloats]] line denies them.
       * The reference's whole engine is one process's heap — for indexes
       * that fit the explicit byte bound, holding the packed arrays on
       * the driver serves single queries with no job submission at all
       * (the ~25 ms local scheduling floor dominates per-call latency
-      * otherwise). Admitted BEFORE collecting, from row count × vector
+      * otherwise). Admitted BEFORE collecting, from [[rows]] × vector
       * bytes; oversized indexes keep the distributed path, and a line
       * that is merely full is retried on the next call. */
     def packedDriver: Option[Array[PackedLists]] = packedResident.get
 
     @transient private lazy val packedResident =
       new graft.Residency.Memo[Array[PackedLists]]({
-        val (rows, dim) = sizeStats
+        val dim = centroidsLocal.headOption.fold(0)(_._2.length)
         if (rows == 0L) graft.Residency.Admitted(Array.empty[PackedLists])
         else graft.Residency.admit(graft.Residency.PackedFloats,
           rows * (4L * dim + 16L))(packed.collect())
       })
-
-    /** Per-cluster row counts (≤ nlist entries — driver-sized), memoized
-      * per Index handle: the serving-tier dispatch computes EXACT probed
-      * work from these, so skewed inverted lists can't slip a large scan
-      * onto the single-threaded driver path via a mean-size estimate. */
-    @transient lazy val clusterCounts: Map[Int, Long] =
-      assigned.groupBy("cluster_id")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
     /** cluster → packed-partition index, read FROM the packed data itself
       * (one tiny metadata job over the cached parts, memoized) rather
@@ -201,6 +179,15 @@ object IvfFlat {
     * batch, exactly what executors are for. */
   val DriverServeMaxScanElemsMT: Long = 8L << 30
 
+  /** Rows per inverted list, summed over driver-resident packed parts'
+    * `ranges` — no job: the parts already hold every list's length. */
+  private[graft] def listSizes(
+      ranges: Iterator[java.util.HashMap[Int, Array[Int]]]): scala.collection.Map[Int, Long] = {
+    val sizes = scala.collection.mutable.HashMap.empty[Int, Long]
+    ranges.foreach(_.forEach((c, r) => sizes(c) = sizes.getOrElse(c, 0L) + r(1)))
+    sizes
+  }
+
   /** Shared daemon pool for the multi-threaded driver tier. Sized to the
     * machine (local mode: same cores the executor threads would use —
     * the tiers trade the scheduler for a plain pool, not CPUs for CPUs). */
@@ -240,14 +227,15 @@ object IvfFlat {
     if (nlist <= 1) {
       // degenerate FLAT index: one inverted list = exact full scan
       // (MLlib KMeans requires k >= 2)
-      val dim = vectors.select(size(col("vec"))).head.getInt(0)
+      val shape = vectors.agg(count(lit(1)), max(size(col("vec")))).head
+      val dim = if (shape.isNullAt(1)) 0 else shape.getInt(1)
       return Index(vectors.withColumn("cluster_id", lit(0)),
-        centroidsFrame(spark, flatCenters(dim)))
+        centroidsFrame(spark, flatCenters(dim)), shape.getLong(0))
     }
-    val centers = trainCenters(vectors, nlist, metric, seed, maxIter,
-      vectors.count())
+    val rows = vectors.count()
+    val centers = trainCenters(vectors, nlist, metric, seed, maxIter, rows)
     Index(assignByCenters(vectors, centers, assignMetric(metric)),
-      centroidsFrame(spark, centers))
+      centroidsFrame(spark, centers), rows)
   }
 
   /** The single all-zero center of a FLAT (nlist ≤ 1) index. */
@@ -447,10 +435,10 @@ object IvfFlat {
     index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
   }
 
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): Index =
-    Index(
-      spark.read.parquet(s"$path/vectors"),
-      spark.read.parquet(s"$path/centroids"))
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): Index = {
+    val vectors = spark.read.parquet(s"$path/vectors")
+    Index(vectors, spark.read.parquet(s"$path/centroids"), vectors.count())
+  }
 
   /** Probe selection: top-nprobe clusters per query, ranked by the metric
     * score against the driver-held centroid snapshot (reference:
@@ -649,27 +637,22 @@ object IvfFlat {
     val probeMap = byCluster.map { case (c, qs) => (c, qs.toArray) }.toMap
     val kLoc = k
     // Tier dispatch on EXACT probed work — per probed cluster, its real
-    // row count × probing-query count × dim — so skewed inverted lists
-    // can't route a big scan to a driver tier (a rows/nlist mean
-    // estimate underestimates by up to nlist/nprobe× when the probed
-    // clusters are the heavy ones).
-    //   work ≤ 32M elems  → resident single-thread scan (zero handoff)
-    //   work ≤ 8G elems   → resident MULTI-THREADED scan (daemon pool)
+    // row count × probing-query count × dim, read off the resident
+    // parts' ranges — so skewed inverted lists can't route a big scan to
+    // a driver tier (a rows/nlist mean estimate underestimates by up to
+    // nlist/nprobe× when the probed clusters are the heavy ones).
+    //   work ≤ stBound → resident single-thread scan (zero handoff)
+    //   work ≤ mtBound → resident MULTI-THREADED scan (daemon pool)
     //   else / non-resident / forced → packed-RDD job
-    val scanElems: Long = {
-      val (rows, dim) = index.sizeStats
-      if (rows == 0L) 0L
-      else {
-        val counts = index.clusterCounts
-        var s = 0L
-        probeMap.foreach { case (cid, probing) =>
-          s += counts.getOrElse(cid, 0L) * probing.length * dim
-        }
-        s
+    val resident = if (forceDistributed) None else index.packedDriver
+    val scanElems: Long = resident.fold(0L) { parts =>
+      val sizes = listSizes(parts.iterator.map(_.ranges))
+      val dim = cents.headOption.fold(0)(_._2.length)
+      probeMap.foldLeft(0L) { case (s, (cid, probing)) =>
+        s + sizes.getOrElse(cid, 0L) * probing.length * dim
       }
     }
-    val driverEligible = !forceDistributed && scanElems <= mtBound
-    val residentParts = if (driverEligible) index.packedDriver else None
+    val residentParts = resident.filter(_ => scanElems <= mtBound)
     // resident-only callers (bitmap-only membership) get a null sentinel
     // instead of a distributed job their membership can't ride
     if (residentOnly && residentParts.isEmpty) return null

@@ -25,27 +25,16 @@ object IvfPq {
                           val ranges: java.util.HashMap[Int, Array[Int]])
     extends Serializable
 
+  /** `rows` is the row count of `assigned`, known to whoever wrote it. */
   case class Index(assigned: DataFrame, // (id, cluster_id, codes BINARY)
                    centroids: DataFrame, // (cluster_id, centroid ARRAY<FLOAT>)
-                   cb: Pq.Codebook) {
+                   cb: Pq.Codebook,
+                   rows: Long) {
 
     /** Driver-side centroid snapshot (nlist rows — driver-sized by
       * construction), fetched once per Index handle. */
     @transient lazy val centroidsLocal: Array[(Int, Array[Float])] =
       centroids.collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-
-    /** Row count of the assigned table — one tiny agg job, memoized;
-      * with the codebook's fixed M bytes/row it decides the residency
-      * bound BEFORE any collect. */
-    @transient lazy val sizeStats: Long =
-      assigned.agg(count(lit(1))).head.getLong(0)
-
-    /** Per-cluster row counts (≤ nlist entries), memoized — the serving
-      * dispatch computes EXACT probed work from these (same skew
-      * rationale as [[IvfFlat.Index.clusterCounts]]). */
-    @transient lazy val clusterCounts: Map[Int, Long] =
-      assigned.groupBy("cluster_id").agg(count(lit(1)))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
     /** Driver-RESIDENT packed code lists for the zero-job PQ serving
       * tier, or None while the [[graft.Residency.PqCodes]] line denies
@@ -53,13 +42,14 @@ object IvfPq {
       * [[IvfFlat.Index.packedDriver]]). Packing runs per-partition on the
       * executors after a cluster-keyed exchange (each inverted list whole
       * in one part — same shape as [[IvfFlat.Index.packed]]); the driver
-      * collects the already-flat parts, never 10M boxed rows. */
+      * collects the already-flat parts, never 10M boxed rows. Admitted
+      * BEFORE collecting, from [[rows]] × (M code bytes + id bytes). */
     def packedDriver: Option[Array[PackedCodes]] = packedResident.get
 
     @transient private lazy val packedResident =
       new graft.Residency.Memo[Array[PackedCodes]](
         graft.Residency.admit(graft.Residency.PqCodes,
-            sizeStats * (cb.m + 16L)) {
+            rows * (cb.m + 16L)) {
           val mWidth = cb.m
           assigned.select("id", "cluster_id", "codes")
             .repartition(col("cluster_id"))
@@ -214,28 +204,25 @@ object IvfPq {
       qi += 1
     }
     val probeMap = byCluster.map { case (c, qs) => (c, qs.toArray) }.toMap
-    val lookups: Long = {
-      val counts = index.clusterCounts
-      var s = 0L
-      probeMap.foreach { case (cid, probing) =>
-        s += counts.getOrElse(cid, 0L) * probing.length * index.cb.m
+    index.packedDriver.flatMap { parts =>
+      // exact probed work, read off the resident lists (IvfFlat's rationale)
+      val sizes = IvfFlat.listSizes(parts.iterator.map(_.ranges))
+      val lookups = probeMap.foldLeft(0L) { case (s, (cid, probing)) =>
+        s + sizes.getOrElse(cid, 0L) * probing.length * index.cb.m
       }
-      s
-    }
-    val resident =
-      if (lookups <= mtBound) index.packedDriver else None
-    resident.map { parts =>
-      val partials =
-        if (lookups <= stBound)
-          scanCodes(parts, queries.map(_._2), probeMap, centOf, index.cb, k,
-            allowedSorted, allowedHash, allowedBits)
-        else
-          scanCodesMT(parts, queries.map(_._2), probeMap, centOf, index.cb, k,
-            allowedSorted, allowedHash, allowedBits)
-      partials.groupBy(_._1).iterator.flatMap { case (i, rows) =>
-        rows.sortBy { case (_, id, s) => (-s, id) }.take(k).zipWithIndex
-          .map { case ((_, id, s), r) => (queries(i)._1, r + 1, id, s) }
-      }.toArray
+      Option.when(lookups <= mtBound) {
+        val partials =
+          if (lookups <= stBound)
+            scanCodes(parts, queries.map(_._2), probeMap, centOf, index.cb, k,
+              allowedSorted, allowedHash, allowedBits)
+          else
+            scanCodesMT(parts, queries.map(_._2), probeMap, centOf, index.cb, k,
+              allowedSorted, allowedHash, allowedBits)
+        partials.groupBy(_._1).iterator.flatMap { case (i, rows) =>
+          rows.sortBy { case (_, id, s) => (-s, id) }.take(k).zipWithIndex
+            .map { case ((_, id, s), r) => (queries(i)._1, r + 1, id, s) }
+        }.toArray
+      }
     }
   }
 
@@ -386,7 +373,7 @@ object IvfPq {
     val dim = coarse.assigned.select(size(col("vec"))).head.getInt(0)
     val (codes, cb) = encodeResiduals(coarse.assigned, coarse.centroids, m, k,
       seed, dim)
-    Index(codes, coarse.centroids, cb)
+    Index(codes, coarse.centroids, cb, coarse.rows)
   }
 
   /** Residuals of `assigned` (id, cluster_id, vec, `keep`…) against their
@@ -413,11 +400,11 @@ object IvfPq {
     Pq.saveCodebook(index.cb, index.centroids.sparkSession, s"$path/codebooks")
   }
 
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): Index =
-    Index(
-      spark.read.parquet(s"$path/codes"),
-      spark.read.parquet(s"$path/centroids"),
-      Pq.loadCodebook(spark, s"$path/codebooks"))
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): Index = {
+    val codes = spark.read.parquet(s"$path/codes")
+    Index(codes, spark.read.parquet(s"$path/centroids"),
+      Pq.loadCodebook(spark, s"$path/codebooks"), codes.count())
+  }
 
   /** Candidate generation without the final top-k: (query_id, id, score)
     * for every (query, probed-cluster member) pair — lets callers (the
@@ -425,7 +412,7 @@ object IvfPq {
   def scoredCandidates(index: Index, queries: DataFrame, nprobe: Int,
                        maxLocalQueries: Int = 10000): DataFrame = {
     val spark = queries.sparkSession
-    val coarse = IvfFlat.Index(index.assigned, index.centroids)
+    val coarse = IvfFlat.Index(index.assigned, index.centroids, index.rows)
     val probeSet = IvfFlat.probes(coarse, queries, "L2", nprobe)
       .join(broadcast(index.centroids), Seq("cluster_id"))
       .withColumn("rq", zip_with(col("qvec"), col("centroid"), (x, y) => x - y))

@@ -61,8 +61,8 @@ class JobBudgetSpec extends SparkSpec {
     // 26 jobs before (GraftEngine 7, IvfFlat 19): the count, the
     // watermark aggregation's extra stages
     assert(build == Map("GraftEngine" -> 5, "IvfFlat" -> 17, "unattributed" -> 1), build)
-    // 13 before: three schema-inference reads and the id-pool sizing
-    assert(search == Map("GraftEngine" -> 1, "IvfFlat" -> 6, "unattributed" -> 1), search)
+    // 8 before: the row count and the per-list counts, two jobs each
+    assert(search == Map("GraftEngine" -> 1, "IvfFlat" -> 2, "unattributed" -> 1), search)
   }
 
   test("job budget: IVF_PQ add, build and first refined search") {
@@ -73,8 +73,8 @@ class JobBudgetSpec extends SparkSpec {
     // min/max pass, read-back and wave fetch, a second centroids write
     assert(build == Map("GraftEngine" -> 6, "IvfFlat" -> 17, "Pq" -> 1,
       "unattributed" -> 1), build)
-    // 15 before
-    assert(search == Map("GraftEngine" -> 1, "IvfPq" -> 6, "Pq" -> 1,
+    // 9 before: the row count and the per-list counts, as for IVF_FLAT
+    assert(search == Map("GraftEngine" -> 1, "IvfPq" -> 2, "Pq" -> 1,
       "unattributed" -> 1), search)
   }
 

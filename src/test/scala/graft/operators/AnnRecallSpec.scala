@@ -331,7 +331,7 @@ class AnnRecallSpec extends SparkSpec {
     // whole list: per-cluster row counts inside the named partition match
     // the assigned table's counts exactly
     assert(byCluster.map { case (c, ps) => c -> ps.map(_._3).sum } ==
-      idx.clusterCounts.filter(_._2 > 0))
+      idx.assigned.groupBy("cluster_id").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
     assert(idx.packedPartsOf.keySet == byCluster.keySet)
     // and the pruned distributed path answers exactly like the resident
     // tier at a pruning-heavy config (nprobe=1: one task)
