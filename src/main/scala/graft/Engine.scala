@@ -699,14 +699,14 @@ class GraftEngine(spark: SparkSession, root: String,
     } finally state.unpersist()
   }
 
-  /** The coarse codebook: MLlib KMeans over `vectors` (id, vec, …), or
-    * the single zero center of a FLAT (nlist ≤ 1) index. */
+  /** The coarse codebook: MLlib's k-means over `vectors` (id, vec, …),
+    * or the single zero center of a FLAT (nlist ≤ 1) index. */
   private def coarseCenters(vectors: DataFrame, nlist: Int, metric: String,
                             seed: Long, nRows: Long,
                             dim: Int): Array[Array[Double]] =
     if (nlist <= 1) IvfFlat.flatCenters(dim)
     else IvfFlat.trainCenters(vectors.select("id", "vec"), nlist, metric, seed,
-      maxIter = 10, nRows)
+      maxIter = 10, nRows, dim)
 
   /** Each driver-held vector's nearest center under L2, with the
     * assignment kernel the distributed path runs per row. */

@@ -13,9 +13,11 @@ import graft.functions._
   * (reference: src/Pyrope.GarnetServer/Vector/IvfFlatVectorIndex.cs:85-218;
   * KMeans trainer Vector/KMeansUtils.cs:10-93) re-expressed Spark-first:
   *
-  *  - Build = MLlib KMeans (coarse codebook) + assignment column; at scale
-  *    the assigned table is written `partitionBy("cluster_id")` so nprobe
-  *    becomes parquet partition pruning (SURVEY §4.1).
+  *  - Build = k-means coarse codebook + assignment column. The codebook
+  *    trains on a bounded hash sample, on the driver, with MLlib's own
+  *    kernels (bit-equal to `ml.clustering.KMeans`, see [[trainCenters]]);
+  *    at scale the assigned table is written `partitionBy("cluster_id")`
+  *    so nprobe becomes parquet partition pruning (SURVEY §4.1).
   *  - Search = query×centroid coarse scoring (broadcast, nlist rows) →
   *    top-nprobe probe set → equi-join into the inverted lists → exact
   *    scoring → bounded top-k.
@@ -233,7 +235,9 @@ object IvfFlat {
         centroidsFrame(spark, flatCenters(dim)), shape.getLong(0))
     }
     val rows = vectors.count()
-    val centers = trainCenters(vectors, nlist, metric, seed, maxIter, rows)
+    // the first row's width sizes the training sample's reservation
+    val dim = if (rows == 0L) 0 else vectors.select(size(col("vec"))).head.getInt(0)
+    val centers = trainCenters(vectors, nlist, metric, seed, maxIter, rows, dim)
     Index(assignByCenters(vectors, centers, assignMetric(metric)),
       centroidsFrame(spark, centers), rows)
   }
@@ -256,14 +260,50 @@ object IvfFlat {
       .toSeq.toDF("cluster_id", "centroid")
   }
 
-  /** MLlib KMeans over a bounded deterministic sample of `vectors`
-    * (`nRows` of them, counted by the caller): the coarse codebook as
-    * DOUBLE centers. The training input's plan — hash order, limit,
-    * round-robin spread — is the same whoever calls, because its
-    * partition layout decides the k-means|| sampling. */
+  /** MLlib's k-means over a bounded deterministic sample of `vectors`
+    * (`nRows` rows of `dim` elements, counted by the caller): the coarse
+    * codebook as DOUBLE centers. The training input's plan — hash order,
+    * limit, round-robin spread — is the same whoever calls, because its
+    * partition layout decides the k-means|| sampling.
+    *
+    * The sample comes to the driver in one collect, partition by
+    * partition, and [[org.apache.spark.mllib.clustering.DriverKMeans]]
+    * trains on it with MLlib's own kernels: the centers are bit-equal to
+    * `ml.clustering.KMeans.fit` on the same frame, without its ~2 jobs
+    * per Lloyd iteration and k-means|| round. The collect first reserves
+    * `rows × (12·dim + 96)` bytes on [[graft.Residency.PackedFloats]];
+    * on a Denied or Busy answer (large dim × nlist) MLlib fits the same
+    * frame with Spark jobs. */
   private[graft] def trainCenters(vectors: DataFrame, nlist: Int,
                                   metric: String, seed: Long, maxIter: Int,
-                                  nRows: Long): Array[Array[Double]] = {
+                                  nRows: Long, dim: Int): Array[Array[Double]] = {
+    val train = trainingSample(vectors, nlist, seed, nRows)
+    val measure = if (metric.equalsIgnoreCase("COSINE")) "cosine" else "euclidean"
+    val sampleBytes = math.min(nRows, trainCap(nlist).toLong) * (12L * dim + 96L)
+    graft.Residency.admit(graft.Residency.PackedFloats, sampleBytes)(
+        collectSample(train)) match {
+      case graft.Residency.Admitted(parts) =>
+        try {
+          checkSample(parts)
+          org.apache.spark.mllib.clustering.DriverKMeans
+            .train(parts, nlist, maxIter, seed, measure)
+        } finally graft.Residency.release(parts)
+      case _ =>
+        new KMeans().setK(nlist).setSeed(seed).setMaxIter(maxIter)
+          .setDistanceMeasure(measure)
+          .fit(train.withColumn("features", array_to_vector(col("vec"))))
+          .clusterCenters.map(_.toArray)
+    }
+  }
+
+  /** Rows the coarse codebook trains on, at most. */
+  private def trainCap(nlist: Int): Int = math.max(nlist * 256, 16384)
+
+  /** The training frame: the `trainCap` rows of `vectors` (`nRows` of
+    * them) first in seeded id-hash order, spread round-robin over
+    * `defaultParallelism` partitions. */
+  private[graft] def trainingSample(vectors: DataFrame, nlist: Int, seed: Long,
+                                    nRows: Long): DataFrame = {
     // Train the coarse codebook on a bounded DETERMINISTIC sample and
     // assign the full corpus in one pass — 10 Lloyd iterations over all
     // of a 100-TB corpus is the classic IVF-build scale trap; sampled
@@ -274,13 +314,13 @@ object IvfFlat {
     // (seed, id), independent of partition layout), so builds are
     // reproducible across cluster layouts. Corpora at or under the cap
     // train on every row, as before.
-    val trainCap = math.max(nlist * 256, 16384)
+    val cap = trainCap(nlist)
     val hashExpr = xxhash64(col("id"), lit(seed))
     // Sample SELECTION without a corpus-wide sort (guide §1.2 step 1 /
     // §2.4): `orderBy(hash).limit(cap)` plans a full range-partitioned
     // sort of the corpus — two whole-corpus jobs (range-boundary sample
     // + sort shuffle) just to pick the cap hash-smallest rows (measured
-    // ~127 s of the 10M rung's 255 s build, IvfBuildProbeMain r11).
+    // ~127 s of the 10M rung's 255 s build in r11).
     // The hash is uniform on the Long range, so the cap-th smallest
     // hash sits near MinValue + (cap/n)·2^64: pre-filter at 4× that
     // quantile (a codegen filter pass that column-prunes to `id` — no
@@ -296,26 +336,46 @@ object IvfFlat {
     // exact original plan.
     val spark = vectors.sparkSession
     val preFiltered =
-      if (nRows >= 8L * trainCap) {
-        val frac = 4.0 * trainCap / nRows // ≤ 0.5 by the gate
+      if (nRows >= 8L * cap) {
+        val frac = 4.0 * cap / nRows // ≤ 0.5 by the gate
         val cutoff = Long.MinValue + (frac * math.pow(2.0, 64)).toLong
         val pre = vectors.filter(hashExpr <= lit(cutoff))
-        if (pre.count() >= trainCap) pre else vectors
+        if (pre.count() >= cap) pre else vectors
       } else vectors
-    val train = preFiltered
+    preFiltered
       .orderBy(hashExpr, col("id"))
-      .limit(trainCap)
+      .limit(cap)
       // a global limit lands in ONE partition — spread the (small)
-      // sample back out or Lloyd's runs single-threaded
+      // sample back out, one part per core for the trainer
       .repartition(spark.sparkContext.defaultParallelism)
-    val km = new KMeans()
-      .setK(nlist)
-      .setSeed(seed)
-      .setMaxIter(maxIter)
-      .setDistanceMeasure(if (metric.equalsIgnoreCase("COSINE")) "cosine" else "euclidean")
-    km.fit(train.withColumn("features", array_to_vector(col("vec"))))
-      .clusterCenters.map(_.toArray)
   }
+
+  /** The training frame's `vec` column as doubles, one array per
+    * partition in partition order (one job); a null vector or element
+    * arrives as a null row for [[checkSample]] to reject. */
+  private def collectSample(train: DataFrame): Array[Array[Array[Double]]] =
+    train.select("vec").queryExecution.toRdd.mapPartitions { it =>
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
+      it.foreach { r =>
+        val a = if (r.isNullAt(0)) null else r.getArray(0)
+        rows += (if (a == null) null else {
+          val d = new Array[Double](a.numElements())
+          var i = 0
+          while (i < d.length && !a.isNullAt(i)) { d(i) = a.getFloat(i); i += 1 }
+          if (i < d.length) null else d
+        })
+      }
+      Iterator(rows.toArray)
+    }.collect()
+
+  /** The vectors `ml.clustering.KMeans` rejects (`checkNonNanVectors`),
+    * rejected before the driver trains on them. */
+  private def checkSample(parts: Array[Array[Array[Double]]]): Unit =
+    parts.foreach(_.foreach { v =>
+      require(v != null, "KMeans training sample holds a null vector or element")
+      require(v.forall(x => !x.isNaN && !x.isInfinite),
+        "KMeans training sample holds a NaN/Inf element")
+    })
 
   /** Nearest-center assignment against DOUBLE cluster centers: one flat
     * centers array, sequential per-center accumulation (same summation
