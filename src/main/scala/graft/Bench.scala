@@ -583,9 +583,9 @@ object Bench {
     // proves only the provably-exact configuration (COVERAGE.md
     // divergence 1); these rows track the realistic-ef regime like the
     // nprobe rows above track pruned IVF. 4 graph partitions (25k nodes
-    // each) keep the per-graph beam honest — a HnswTuneMain sweep showed
-    // 8+ partitions pin recall at 1.0 (the n-way top-k union hides beam
-    // quality, the r5 tripwire failure mode), and m=16 tops out at 0.89:
+    // each) keep the per-graph beam honest: at 8+ partitions recall pins
+    // at 1.0 (the n-way top-k union hides beam quality, the r5 tripwire
+    // failure mode), and m=16 tops out at 0.89:
     // m=32/efC=200/4 parts lands 0.85/0.92/0.97 at ef 32/64/128 — a
     // gradient strictly inside (0.8, 1.0) that → 1.0 with ef.
     val hnswC = graft.operators.Hnsw.build(synthC, metric = "L2", m = 32,
@@ -615,9 +615,9 @@ object Bench {
     // the limiter is quantization, not pruning. That is the honest
     // price of 64× compression on hard data, and the refine rows show
     // the designed answer: exact re-scoring of the top k·refine ADC
-    // candidates recovers 0.675 (refine 10) → 0.995 (refine 50). A
-    // builder M-sweep (PqRecallProbeMain) places the compression axis:
-    // ADC-only 0.156 / 0.365 / 0.590 at M = 8/16/32. Same coarse
+    // candidates recovers 0.675 (refine 10) → 0.995 (refine 50). On the
+    // compression axis, ADC-only recall is 0.156 / 0.365 / 0.590 at
+    // M = 8/16/32. Same coarse
     // clusters as idxC (buildFrom), so rows are apples-to-apples.
     val pqC = graft.operators.IvfPq.buildFrom(idxC, m = 8, k = 256)
     pqC.assigned.cache().count()

@@ -680,16 +680,17 @@ class GraftEngine(spark: SparkSession, root: String,
     // writer can't slip its bump between them (it either lands before the
     // re-read — seen in mNow — or after the rename, where bumpEpoch itself
     // re-sets headDirty=1).
-    withManifestLock(tenant, index) {
+    val mNew = withManifestLock(tenant, index) {
       val mNow = manifest(tenant, index)
-      writeManifest(tenant, index,
-        Manifest(mNow.epoch + 1, st.watermark, algoU, st.nVectors, newVersion,
-          metricU, headDirty = if (mNow.epoch != m0.epoch) 1 else 0))
+      val mNew = Manifest(mNow.epoch + 1, st.watermark, algoU, st.nVectors, newVersion,
+        metricU, headDirty = if (mNow.epoch != m0.epoch) 1 else 0)
+      writeManifest(tenant, index, mNew)
+      mNew
     }
     // the id pool's residency estimate, from the stats pass: every
     // snapshot's id table holds one row per state row
-    residentEstCache.put(s"pool:$tenant/$index/v$newVersion",
-      st.nVectors * 12L + st.idBytes + 32L)
+    handles.putIfAbsent((tenant, index, newVersion), new SnapshotHandles(dir, mNew,
+      poolEstSeed = Some(st.nVectors * 12L + st.idBytes + 32L)))
     // keep the previous snapshot too: lazy frames returned by search()
     // before this build may still resolve into it
     gcOldSnapshots(tenant, index, keep = newVersion - 1)
@@ -1038,7 +1039,8 @@ class GraftEngine(spark: SparkSession, root: String,
   /** What [[rowsTierOf]] admitted for one index: the tail, the id pool
     * that resolves its result surrogates, and (filtered calls only) the
     * tag index. */
-  private case class RowsTier(m: Manifest, tail: RowsTail, pool: IdPool,
+  private case class RowsTier(m: Manifest, handles: SnapshotHandles,
+                              tail: RowsTail, pool: IdPool,
                               tagIdx: Map[String, Array[Long]])
 
   /** The rows tier's admission gates, in the one order that serving and
@@ -1061,30 +1063,29 @@ class GraftEngine(spark: SparkSession, root: String,
   private def rowsTierOf(tenant: String, index: String, m: Manifest,
                          refine: Boolean, filtered: Boolean,
                          hnsw: Boolean): Option[RowsTier] = {
+    lazy val h = handlesOf(tenant, index, m)
     val tail: Option[RowsTail] =
       if (m.nVectors > RowsServeMaxRows) None
       else m.algo match {
         case "IVF_FLAT" | "FLAT" => Some(FlatTail)
-        case "IVF_PQ" =>
-          val pq = pqIndexOf(tenant, index, m)
-          pq.packedDriver.map(_ => PqTail(pq, None))
-        case "HNSW" if hnsw => hnswGraphsOf(tenant, index, m).map(HnswTail)
+        case "IVF_PQ" => h.pqIndex.packedDriver.map(_ => PqTail(h.pqIndex, None))
+        case "HNSW" if hnsw => h.hnswGraphs.get.map(HnswTail)
         case _ => None
       }
     for {
       t0 <- tail
-      pool <- idPoolOf(tenant, index, m)
+      pool <- h.idPool.get
       t <- t0 match {
         case PqTail(pq, _) if refine =>
-          sq16StoreOf(tenant, index, m)
-            .orElse(if (refineU8Fallback) sq8StoreOf(tenant, index, m) else None)
+          h.sq16.get
+            .orElse(if (refineU8Fallback) h.sq8.get else None)
             .map(store => PqTail(pq, Some(store)))
         case _ => Some(t0)
       }
       tagIdx <-
-        if (filtered) tagSurrogatesOf(tenant, index, m)
+        if (filtered) h.tagIndex.get
         else Some(Map.empty[String, Array[Long]])
-    } yield RowsTier(m, t, pool, tagIdx)
+    } yield RowsTier(m, h, t, pool, tagIdx)
   }
 
   /** Serves one admitted call: fresh-head state → head-work and top-k
@@ -1200,7 +1201,7 @@ class GraftEngine(spark: SparkSession, root: String,
                        allowed: AllowedSet): Option[Array[(Long, Int, Long, Double)]] =
     tier.tail match {
       case FlatTail =>
-        Option(IvfFlat.searchLocalRowsPath(tailIndexOf(tenant, index, tier.m),
+        Option(IvfFlat.searchLocalRowsPath(tier.handles.tailIndex,
           queries, metric, kTail, nprobe, spark, forceDistributed = false,
           allowedSorted = allowed.sorted, allowedHash = allowed.hash,
           allowedBits = allowed.bits,
@@ -1230,7 +1231,6 @@ class GraftEngine(spark: SparkSession, root: String,
                            queries: Array[(Long, Array[Float])], metric: String,
                            kTail: Int, nprobe: Int,
                            tags: Seq[String]): Option[Array[(Long, Int, Long, Double)]] = {
-    val m = tier.m
     val lists = tags.map(t => tier.tagIdx.getOrElse(t, Array.empty[Long]))
     // conjunctive allowed set: intersect per-tag lists, smallest first —
     // cost |smallest| × (T-1) binary searches, driver-local. The
@@ -1253,7 +1253,7 @@ class GraftEngine(spark: SparkSession, root: String,
     // non-resident floats scan distributed)
     def residentIds: Option[Array[Array[Long]]] = tier.tail match {
       case PqTail(pq, _) => pq.packedDriver.map(_.map(_.ids))
-      case FlatTail => tailIndexOf(tenant, index, m).packedDriver.map(_.map(_.ids))
+      case FlatTail => tier.handles.tailIndex.packedDriver.map(_.map(_.ids))
       case HnswTail(_) => None
     }
     // Multi-LARGE-tag fast path: a per-call intersection of T sorted
@@ -1277,9 +1277,9 @@ class GraftEngine(spark: SparkSession, root: String,
             // hundreds of MB at 10M just to save a single build pass.
             // Reuse a set a single-tag call already memoized; else the
             // construction binary-searches the sorted array
-            val hs = tagHashSetCache
-              .get(s"$tenant/$index/v${m.version}#$t").flatten.orNull
-            tagRowBitsOf(tenant, index, m, t, partsIds, hs, sorted = arr)
+            val hs = Option(tier.handles.tagHashSets.get(t))
+              .flatMap(_.settled.flatten).orNull
+            tier.handles.tagRowBits(t, partsIds, hs, arr)
           }
           if (per.exists(_ == null)) None
           else Some(per.reduce(GraftEngine.andBits))
@@ -1299,20 +1299,20 @@ class GraftEngine(spark: SparkSession, root: String,
       val allowedHash: graft.operators.LongHashSet =
         if (tags.lengthCompare(1) == 0 &&
             allowed.length >= HashAllowedMinEntries)
-          tagHashSetOf(tenant, index, m, tags.head, allowed)
+          tier.handles.tagHashSet(tags.head, allowed)
         else null
       // same gate again, one level better: when the tail is RESIDENT,
       // pre-resolve the membership into per-part row bitmaps once per
       // (snapshot, tag) — the scan then tests a sequential bit instead
       // of probing any table at all. Gated on the tag SIZE, not on the
       // hash set having been admitted: a budget-denied set falls back
-      // to sorted-array construction inside tagRowBitsOf, and the
+      // to sorted-array construction inside tagRowBits, and the
       // bitmap still serves (it is ~100× smaller than the set)
       val allowedBits: Array[Array[Long]] =
         if (tags.lengthCompare(1) != 0 ||
             allowed.length < HashAllowedMinEntries) null
-        else residentIds.map(tagRowBitsOf(tenant, index, m, tags.head, _,
-          allowedHash, sorted = allowed)).orNull
+        else residentIds.map(tier.handles.tagRowBits(tags.head, _,
+          allowedHash, allowed)).orNull
       if (allowed.isEmpty) Some(Array.empty[(Long, Int, Long, Double)])
       else scanTail(tenant, index, tier, queries, metric, kTail, nprobe,
         AllowedSet(allowed, allowedHash, allowedBits))
@@ -1451,7 +1451,7 @@ class GraftEngine(spark: SparkSession, root: String,
           (_, s) => 1.0 + s / 2)
       case "IP" =>
         val cbDim = pqIdx.cb.m * pqIdx.cb.dsub
-        val maxSq = mipsMaxSqOf(tenant, index, m)
+        val maxSq = handlesOf(tenant, index, m).mipsMaxSq
         val qn2 = queries.map { case (qid, qv) =>
           var s = 0.0; var i = 0
           while (i < qv.length) { s += qv(i).toDouble * qv(i).toDouble; i += 1 }
@@ -1535,7 +1535,7 @@ class GraftEngine(spark: SparkSession, root: String,
           // tail-mask pricing needs the resident id pool; a pool past
           // its byte budgets means no rows tier for this index anyway,
           // so the head state has no consumer — fall back
-          idPoolOf(tenant, index, m) match {
+          handlesOf(tenant, index, m).idPool.get match {
             case None => None
             case Some(tailIds) =>
               def surr(s: String): Long =
@@ -1666,7 +1666,7 @@ class GraftEngine(spark: SparkSession, root: String,
         require(!ipPq || m.metric.equalsIgnoreCase("IP"),
           s"IP IVF_PQ search needs an IP-built tail (MIPS-augmented " +
             s"codes); this index's build metric is '${m.metric}'")
-        val pqIdx = pqIndexOf(tenant, index, m)
+        val pqIdx = handlesOf(tenant, index, m).pqIndex
         val pqQueries =
           if (cosinePq)
             baseQueries.withColumn("qvec", graft.functions.vector_unit(col("qvec")))
@@ -1705,7 +1705,7 @@ class GraftEngine(spark: SparkSession, root: String,
             // broadcast join); M² was persisted at build (memoized per
             // snapshot — constant, keep the read job off the hot path).
             // The head's exact dot rows then merge on the same scale.
-            val maxSq = mipsMaxSqOf(tenant, index, m)
+            val maxSq = handlesOf(tenant, index, m).mipsMaxSq
             val qn = baseQueries.select(col("query_id"),
               graft.functions.vector_dot(col("qvec"), col("qvec")).as("qn2"))
             adcRaw.join(broadcast(qn), Seq("query_id"))
@@ -1752,7 +1752,7 @@ class GraftEngine(spark: SparkSession, root: String,
             // the IN-SCOPE manifest m: a second manifest read here could
             // disagree with the snapshot dir derived from m under a
             // concurrent rebuild (check v+1, read v)
-            require(sq16TableExists(tenant, index, m),
+            require(sq16TableExists(snap),
               s"$tenant/$index snapshot has no sq16 sidecar; " +
                 "rebuild the index or use refineStore=exact")
             val p16 = graft.operators.ScalarQuant.loadParams(
@@ -1792,7 +1792,7 @@ class GraftEngine(spark: SparkSession, root: String,
           }
         }
       case _ => // IVF_FLAT / FLAT share the inverted-list layout
-        val tailIdx = tailIndexOf(tenant, index, m)
+        val tailIdx = handlesOf(tenant, index, m).tailIndex
         val probeSet = IvfFlat.probes(tailIdx, baseQueries, metric, nprobe)
         val tailCandidates = maskHead(
           tailIdx.assigned.join(broadcast(probeSet), Seq("cluster_id")))
@@ -1871,252 +1871,124 @@ class GraftEngine(spark: SparkSession, root: String,
     }
   }
 
-  // memoized per-snapshot read handles: the tail Index (lazy driver-side
-  // centroid snapshot + packed serving RDD) and the raw centroid table —
-  // immutable once written, so safe to cache for the engine's lifetime
-  private val tailIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, IvfFlat.Index]
-  private[graft] def tailIndexOf(tenant: String, index: String, m: Manifest): IvfFlat.Index =
-    tailIndexCache.getOrElseUpdate(s"$tenant/$index/v${m.version}", {
-      val snap = snapDir(tenant, index, m)
-      IvfFlat.Index(
+  /** Everything the engine serves one snapshot version from: the read
+    * handles, the measured residency estimates, and the resident
+    * structures the rows tier admits on the [[Residency]] ledger. All of
+    * it is immutable per version. The engine keeps one instance per
+    * (tenant, index, version) in [[handles]] and calls [[release]] when
+    * the version leaves the retention window. Only the version's fixed
+    * manifest fields are read: algo and row count.
+    *
+    * Each resident is a [[Residency.Memo]]: concurrent first callers wait
+    * for one admission, a per-handle denial is kept (the rows tier then
+    * falls back to the plan on every later call without re-measuring),
+    * and a Busy line is retried. Each estimate is a lazy val apart from
+    * its admission, so a retry never reruns a measuring job. Lazy vals
+    * share this object's monitor, so no lazy initializer may call a Memo:
+    * a Memo admission that reads an estimate would deadlock against it.
+    * Initializers only read. */
+  private[graft] final class SnapshotHandles(snap: String, m: Manifest,
+                                             poolEstSeed: Option[Long]) {
+    // release() must not open a read handle that was never opened:
+    // opening resolves files that the snapshot GC has deleted by then
+    @volatile private var tailOpened, pqOpened = false
+
+    /** Inverted-list handle: lazy driver-side centroids, the packed
+      * serving RDD and its resident copy. */
+    lazy val tailIndex: IvfFlat.Index = {
+      val t = IvfFlat.Index(
         spark.read.schema(VectorsSchema).parquet(s"$snap/vectors"),
         spark.read.schema(CentroidsSchema).parquet(s"$snap/centroids"),
         m.nVectors)
-    })
+      tailOpened = true
+      t
+    }
 
-  // memoized IVF_PQ handle for the rows serving tier — same immutable-
-  // per-version rationale as tailIndexOf; the handle's packedDriver
-  // (resident byte codes) and codebook load lazily on first use
-  private val pqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.IvfPq.Index]
-  private[graft] def pqIndexOf(tenant: String, index: String,
-                               m: Manifest): graft.operators.IvfPq.Index =
-    pqIndexCache.getOrElseUpdate(s"$tenant/$index/v${m.version}", {
-      val snap = snapDir(tenant, index, m)
-      graft.operators.IvfPq.Index(
+    /** IVF_PQ handle; its resident byte codes and codebook load on first
+      * use. */
+    lazy val pqIndex: graft.operators.IvfPq.Index = {
+      val p = graft.operators.IvfPq.Index(
         spark.read.schema(PqCodesSchema).parquet(s"$snap/ivfpq/codes")
           .select("id", "cluster_id", "codes"),
         spark.read.schema(CentroidsSchema).parquet(s"$snap/ivfpq/centroids"),
         graft.operators.Pq.loadCodebook(spark, s"$snap/ivfpq/codebooks"),
         m.nVectors)
-    })
-
-  // memoized driver-resident HNSW graphs for the rows serving tier — a
-  // per-handle denial (over the graph line's cap) memoizes None, so
-  // oversized graph sets pay the meta read once and every later call
-  // short-circuits; a full line retries against the memoized estimate
-  private val hnswGraphsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[Array[(Int, graft.operators.Hnsw.Graph)]]]
-  private def hnswGraphsOf(tenant: String, index: String,
-                           m: Manifest): Option[Array[(Int, graft.operators.Hnsw.Graph)]] =
-    Residency.memo(hnswGraphsCache, s"$tenant/$index/v${m.version}") {
-      val path = s"${snapDir(tenant, index, m)}/hnsw"
-      val est = residentEstCache.getOrElseUpdate(
-        s"hnsw:$tenant/$index/v${m.version}",
-        graft.operators.Hnsw.residentBytes(spark, path))
-      graft.operators.Hnsw.loadResident(spark, path, est)
+      pqOpened = true
+      p
     }
 
-  // MIPS fold constant M² for IP-built IVF_PQ snapshots — immutable per
-  // version like the handles above; reading it per search call would put
-  // a parquet-listing + head job on the serving hot path
-  private val mipsMaxSqCache =
-    scala.collection.concurrent.TrieMap.empty[String, Double]
-  private def mipsMaxSqOf(tenant: String, index: String, m: Manifest): Double =
-    mipsMaxSqCache.getOrElseUpdate(s"$tenant/$index/v${m.version}",
-      spark.read.schema(MipsSchema).parquet(s"${snapDir(tenant, index, m)}/ivfpq/mips")
-        .head.getDouble(0))
+    /** The raw centroid table, apart from [[tailIndex]]'s: every algo but
+      * HNSW writes it (IVF_PQ for the cache layer), while opening an
+      * IvfFlat.Index resolves `vectors/`, which HNSW and IVF_PQ
+      * snapshots don't have. */
+    lazy val centroids: Array[(Int, Array[Float])] =
+      spark.read.schema(CentroidsSchema).parquet(s"$snap/centroids").collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
 
-  // measured-bytes estimates per snapshot version (the one Spark agg a
-  // residency decision costs) — memoized apart from the handles so a
-  // contention retry never re-runs the measuring job
-  private val residentEstCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+    /** MIPS fold constant M² of an IP-built IVF_PQ snapshot: reading it
+      * per call would put a parquet listing and a head job on the serving
+      * hot path. */
+    lazy val mipsMaxSq: Double =
+      spark.read.schema(MipsSchema).parquet(s"$snap/ivfpq/mips").head.getDouble(0)
 
-  // surrogate → user-facing string id for the rows serving entry — a
-  // compact [[IdPool]], immutable per snapshot. Residency is decided by
-  // EXACT measured bytes (one bounded agg) BEFORE any collect, on the
-  // ledger's ids-tags line; per-handle denial memoizes None and the rows
-  // tier falls back to the plan. The pool itself is built
-  // from executor-side pre-sorted packed runs (never n boxed driver rows).
-  private val idPoolCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[IdPool]]
-  private def idPoolOf(tenant: String, index: String,
-                       m: Manifest): Option[IdPool] =
-    Residency.memo(idPoolCache, s"$tenant/$index/v${m.version}") {
-      // inverted-list snapshots keep (id, id_str) in vectors/; IVF_PQ
-      // snapshots alongside the codes; HNSW in its idmap table
+    // (id, id_str): inverted-list snapshots keep it in vectors/, IVF_PQ
+    // alongside the codes, HNSW in its idmap table
+    private lazy val idTable: DataFrame = {
       val (sub, schema) = m.algo match {
         case "IVF_PQ" => ("ivfpq/codes", PqCodesSchema)
         case "HNSW" => ("idmap", IdMapSchema)
         case _ => ("vectors", VectorsSchema)
       }
-      lazy val df = spark.read.schema(schema)
-        .parquet(s"${snapDir(tenant, index, m)}/$sub")
-        .select(col("id"), col("id_str"))
-      val est = residentEstCache.getOrElseUpdate(
-        s"pool:$tenant/$index/v${m.version}", {
-          val stats = df.agg(count(lit(1)),
-            sum(octet_length(col("id_str")))).head
-          val n = stats.getLong(0)
-          val strBytes = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-          n * 12L + strBytes + 32L
-        })
-      Residency.admit(Residency.IdsTags, est, idPoolMaxBytes) {
-        IdPool.merge(df.queryExecution.toRdd.mapPartitions { it =>
+      spark.read.schema(schema).parquet(s"$snap/$sub").select(col("id"), col("id_str"))
+    }
+
+    private lazy val poolEst: Long = poolEstSeed.getOrElse {
+      val stats = idTable.agg(count(lit(1)), sum(octet_length(col("id_str")))).head
+      val n = stats.getLong(0)
+      val strBytes = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+      n * 12L + strBytes + 32L
+    }
+
+    /** Surrogate → user-facing string id: a compact [[IdPool]], admitted
+      * on the ids-tags line by exact measured bytes before any collect,
+      * and built from executor-side pre-sorted packed runs (never n boxed
+      * driver rows). */
+    val idPool = new Residency.Memo[IdPool](
+      Residency.admit(Residency.IdsTags, poolEst, idPoolMaxBytes) {
+        IdPool.merge(idTable.queryExecution.toRdd.mapPartitions { it =>
           // toString materializes an owned copy — UnsafeRow buffers are
           // reused across next() calls, so the bytes must not alias them
           IdPool.packRun(it.map(r => (r.getLong(0),
             r.getUTF8String(1).toString
               .getBytes(java.nio.charset.StandardCharsets.UTF_8))))
         }.collect())
-      }
+      })
+
+    private lazy val records = spark.read.parquet(s"$snap/records")
+    // size() yields -1 for null arrays under legacy configs; coalesce
+    // makes it 0
+    private def tagsCol = coalesce(col("tags"), array().cast("array<string>"))
+
+    // ≈ 8 bytes per (record, tag) entry: the per-DISTINCT-tag key strings
+    // are noise next to the long arrays
+    private lazy val tagsEst: Long = {
+      val stats = records.agg(sum(size(tagsCol))).head
+      val entries = if (stats.isNullAt(0)) 0L else stats.getLong(0)
+      entries * 8L + 64L
     }
 
-  /** Resident SQ16 rerank store per snapshot version, or None when the
-    * snapshot predates the sq16 sidecar, the vectors have mixed dims (no
-    * flat layout), or the measured bytes exceed `sq16MaxBytes` on the
-    * ledger's refine line ([[Residency.Refine]] — separate from the
-    * ids-tags line so refine residency can't starve pools). Permanent
-    * denial memoizes; refined calls then keep the plan fallback. A full
-    * line retries (see [[Residency.memo]]). */
-  private val sq16StoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[graft.operators.Sq16Store]]
-  // (n, dim) per version; None = permanently ineligible (no sidecar,
-  // empty, or mixed dims)
-  private val sq16StatsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[(Long, Int)]]
-  private def sq16StoreOf(tenant: String, index: String,
-                          m: Manifest): Option[graft.operators.Sq16Store] =
-    Residency.memo(sq16StoreCache, s"$tenant/$index/v${m.version}") {
-      val segDir = s"${snapDir(tenant, index, m)}/sq16/segments"
-      val useSidecar = graft.operators.Sq16Store.sidecarExists(segDir)
-      val ndOpt = sq16StatsCache.getOrElseUpdate(
-        s"$tenant/$index/v${m.version}", {
-          if (useSidecar) {
-            // segment sidecar: rows/dim from its meta — no Spark job
-            // (the parquet aggregation below scans the full array
-            // column just to size it)
-            val (n, d) = graft.operators.Sq16Store.sidecarStats(segDir)
-            if (n == 0) None else Some((n, d))
-          } else if (!sq16TableExists(tenant, index, m)) None
-          else {
-            val codes = spark.read.schema(Sq16CodesSchema).parquet(
-              s"${snapDir(tenant, index, m)}/sq16/codes")
-            val stats = codes.agg(count(lit(1)),
-              min(size(col("qvec16"))),
-              max(size(col("qvec16")))).head
-            val n = stats.getLong(0)
-            if (n == 0 || stats.isNullAt(1) ||
-                stats.getInt(1) != stats.getInt(2)) None
-            else Some((n, stats.getInt(1)))
-          }
-        })
-      ndOpt match {
-        case None => Residency.Denied
-        case Some((n, dim)) =>
-          // shared estimator — includes per-segment headers, so the
-          // admitted estimate can never undercount what the built store
-          // registers (ADVICE r9). Byte budgets are the ONLY capacity
-          // gate: the store is segmented (Sq16Store.SegMaxCodes), so no
-          // Int-indexed-array ceiling exists to deny around
-          val est = graft.operators.Sq16Store.estimateBytes(n, dim)
-          Residency.admit(Residency.Refine, est, sq16MaxBytes) {
-            // segment sidecar when the snapshot carries it (sequential
-            // file read, no Spark jobs); wave-fetch build for
-            // pre-sidecar snapshots
-            val store =
-              if (useSidecar) graft.operators.Sq16Store.load(segDir)
-              else {
-                val codes = spark.read.schema(Sq16CodesSchema).parquet(
-                  s"${snapDir(tenant, index, m)}/sq16/codes")
-                val p = graft.operators.ScalarQuant.loadParams(
-                  s"${snapDir(tenant, index, m)}/sq16/params.json")
-                graft.operators.Sq16Store.buildResident(
-                  codes, dim, p.min, p.max, estBytes = est)
-              }
-            // upgrade path (ADVICE r10): a u8 store admitted while sq16
-            // was Busy would otherwise stay counted on the refine line
-            // for the snapshot's lifetime while never served again (the
-            // serve path's orElse short-circuits once this store exists)
-            // — evict its memo and return its share
-            sq8StoreCache.remove(s"$tenant/$index/v${m.version}")
-              .foreach(_.foreach(Residency.release))
-            store
-          }
-      }
-    }
-
-  /** Degraded-tier u8 store (see `refineU8Fallback`): derived by
-    * streaming the sq16 SEGMENT sidecar at half size, against the SAME
-    * budget line as the sq16 store (it is the refine-store budget;
-    * the whole point is fitting where the full-precision copy did not).
-    * Snapshots without a segment sidecar memoize None — the degraded
-    * tier exists for budget-tight serving, which reads sidecars written
-    * at build time. */
-  private val sq8StoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[graft.operators.Sq8Store]]
-  private def sq8StoreOf(tenant: String, index: String,
-                         m: Manifest): Option[graft.operators.Sq8Store] =
-    Residency.memo(sq8StoreCache, s"$tenant/$index/v${m.version}") {
-      val segDir = s"${snapDir(tenant, index, m)}/sq16/segments"
-      if (!graft.operators.Sq16Store.sidecarExists(segDir)) Residency.Denied
-      else {
-        val (n, dim) = graft.operators.Sq16Store.sidecarStats(segDir)
-        if (n == 0) Residency.Denied
-        else Residency.admit(Residency.Refine,
-            graft.operators.Sq8Store.estimateBytes(n, dim), sq16MaxBytes)(
-          graft.operators.Sq16Store.loadAsU8(segDir))
-      }
-    }
-
-  private def sq16TableExists(tenant: String, index: String,
-                              m: Manifest): Boolean =
-    Files.isDirectory(
-      Paths.get(s"${snapDir(tenant, index, m)}/sq16/codes"))
-
-  /** Refine-store choice for PLAN-path refined calls (the rows tier's
-    * fallback, the wire's WITH_META branch and any other direct
-    * [[search]] caller that wants tier parity): "sq16" when the snapshot
-    * carries the sidecar — the same dequantized floats the rows tier
-    * reranks with — else "exact" (pre-sidecar snapshots). */
-  private[graft] def refineStoreFor(tenant: String, index: String,
-                                    m: Manifest): String =
-    if (m.algo == "IVF_PQ" && sq16TableExists(tenant, index, m)) "sq16"
-    else "exact"
-
-  // tag → sorted surrogate-id array for the FILTERED rows serving tier
-  // (the reference keeps per-record tags in the same process heap it
-  // scans, VectorCommandSet.cs:461-480). Immutable per snapshot version;
-  // sorted arrays (not hash sets) so the scan kernel's membership test
-  // is one allocation-free binary search. Built like [[IdPool]]: each
-  // partition groups its (tag, surrogate) pairs into per-tag arrays on
-  // the EXECUTORS, the driver concatenates + sorts per tag — transient
-  // driver footprint = the final index, never one boxed row per
-  // (record, tag). Residency by exact measured bytes (one bounded agg)
-  // on the id pool's ids-tags line; denial memoizes None and filtered
-  // calls keep the distributed filtered plan.
-  private val tagSurrogatesCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[Map[String, Array[Long]]]]
-  private def tagSurrogatesOf(tenant: String, index: String,
-                              m: Manifest): Option[Map[String, Array[Long]]] =
-    Residency.memo(tagSurrogatesCache, s"$tenant/$index/v${m.version}") {
-      val recs = spark.read.parquet(s"${snapDir(tenant, index, m)}/records")
-      val tagsCol = coalesce(col("tags"), array().cast("array<string>"))
-      // size() yields -1 for null arrays under legacy configs; coalesce
-      // makes it 0. Bytes ≈ 8 per (record, tag) entry — the per-DISTINCT-
-      // tag key strings are noise next to the long arrays.
-      val est = residentEstCache.getOrElseUpdate(
-        s"tags:$tenant/$index/v${m.version}", {
-          val stats = recs.agg(sum(size(tagsCol))).head
-          val entries = if (stats.isNullAt(0)) 0L else stats.getLong(0)
-          entries * 8L + 64L
-        })
-      Residency.admit(Residency.IdsTags, est, idPoolMaxBytes) {
-        val parts = recs
-          .select(xxhash64(col("id_str")).as("sg"),
-            explode(tagsCol).as("tag"))
+    /** Tag → sorted surrogate array for the filtered rows tier (the
+      * reference keeps per-record tags in the same heap it scans,
+      * VectorCommandSet.cs:461-480). Sorted arrays, not hash sets, so the
+      * scan kernel's membership test is one allocation-free binary
+      * search. Built like [[idPool]]: each partition groups its (tag,
+      * surrogate) pairs on the executors and the driver concatenates and
+      * sorts per tag, so the transient driver footprint is the final
+      * index. A denial keeps filtered calls on the distributed plan. */
+    val tagIndex = new Residency.Memo[Map[String, Array[Long]]](
+      Residency.admit(Residency.IdsTags, tagsEst, idPoolMaxBytes) {
+        val parts = records
+          .select(xxhash64(col("id_str")).as("sg"), explode(tagsCol).as("tag"))
           .queryExecution.toRdd.mapPartitions { it =>
             val local = scala.collection.mutable.HashMap
               .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
@@ -2138,8 +2010,180 @@ class GraftEngine(spark: SparkSession, root: String,
           java.util.Arrays.sort(a)
           t -> a
         }
+      })
+
+    private lazy val hnswEst: Long =
+      graft.operators.Hnsw.residentBytes(spark, s"$snap/hnsw")
+
+    /** Driver-resident HNSW graphs: an oversized graph set pays the meta
+      * read once and every later call short-circuits. */
+    val hnswGraphs = new Residency.Memo[Array[(Int, graft.operators.Hnsw.Graph)]](
+      graft.operators.Hnsw.loadResident(spark, s"$snap/hnsw", hnswEst))
+
+    private def segDir = s"$snap/sq16/segments"
+    private lazy val sq16Sidecar = graft.operators.Sq16Store.sidecarExists(segDir)
+
+    // (n, dim); None = permanently ineligible: no sidecar, empty, or
+    // mixed dims (no flat layout)
+    private lazy val sq16Stats: Option[(Long, Int)] =
+      if (sq16Sidecar) {
+        // segment sidecar: rows/dim from its meta, no Spark job (the
+        // parquet aggregation below scans the whole array column just
+        // to size it)
+        val (n, d) = graft.operators.Sq16Store.sidecarStats(segDir)
+        if (n == 0) None else Some((n, d))
+      } else if (!sq16TableExists(snap)) None
+      else {
+        val stats = spark.read.schema(Sq16CodesSchema).parquet(s"$snap/sq16/codes")
+          .agg(count(lit(1)), min(size(col("qvec16"))), max(size(col("qvec16")))).head
+        val n = stats.getLong(0)
+        if (n == 0 || stats.isNullAt(1) || stats.getInt(1) != stats.getInt(2)) None
+        else Some((n, stats.getInt(1)))
       }
+
+    /** Resident SQ16 rerank store, on the ledger's refine line (apart from
+      * ids-tags, so refine residency can't starve the pools) under
+      * `sq16MaxBytes`. A denial keeps refined calls on the plan. */
+    val sq16 = new Residency.Memo[graft.operators.Sq16Store](sq16Stats match {
+      case None => Residency.Denied
+      case Some((n, dim)) =>
+        // shared estimator: it counts the per-segment headers, so the
+        // admitted estimate never undercounts what the built store
+        // registers. Byte budgets are the only capacity gate: the store
+        // is segmented (Sq16Store.SegMaxCodes), so no Int-indexed array
+        // ceiling exists to deny around
+        val est = graft.operators.Sq16Store.estimateBytes(n, dim)
+        Residency.admit(Residency.Refine, est, sq16MaxBytes) {
+          // the segment sidecar when the snapshot carries it (a
+          // sequential file read, no Spark job); the wave-fetch build
+          // for pre-sidecar snapshots
+          val store =
+            if (sq16Sidecar) graft.operators.Sq16Store.load(segDir)
+            else {
+              val codes = spark.read.schema(Sq16CodesSchema).parquet(s"$snap/sq16/codes")
+              val p = graft.operators.ScalarQuant.loadParams(s"$snap/sq16/params.json")
+              graft.operators.Sq16Store.buildResident(codes, dim, p.min, p.max,
+                estBytes = est)
+            }
+          // a u8 store admitted while sq16 was Busy is never served
+          // again once this store exists (the serve path's orElse
+          // short-circuits): drop it and return its share
+          sq8.release()
+          store
+        }
+    })
+
+    /** Degraded-tier u8 store (see `refineU8Fallback`): the sq16 segment
+      * sidecar streamed at half size, on the same refine-store budget (the
+      * point is fitting where the full-precision copy did not). Snapshots
+      * without a segment sidecar are denied: the degraded tier exists for
+      * budget-tight serving, which reads sidecars written at build. */
+    val sq8 = new Residency.Memo[graft.operators.Sq8Store](
+      if (!sq16Sidecar) Residency.Denied
+      else {
+        val (n, dim) = graft.operators.Sq16Store.sidecarStats(segDir)
+        if (n == 0) Residency.Denied
+        else Residency.admit(Residency.Refine,
+            graft.operators.Sq8Store.estimateBytes(n, dim), sq16MaxBytes)(
+          graft.operators.Sq16Store.loadAsU8(segDir))
+      })
+
+    // per-tag hash sets and row bitmaps, only for tags that serve large
+    // filtered calls; private[graft]: specs read their settled answers
+    private[graft] val tagHashSets =
+      new java.util.concurrent.ConcurrentHashMap[String, Residency.Memo[graft.operators.LongHashSet]]()
+    private[graft] val tagBits =
+      new java.util.concurrent.ConcurrentHashMap[String, Residency.Memo[Array[Array[Long]]]]()
+
+    // the Memo is made inside computeIfAbsent; its admission runs outside
+    private def tagMemo[T >: Null <: AnyRef](
+        memos: java.util.concurrent.ConcurrentHashMap[String, Residency.Memo[T]],
+        tag: String)(admission: => Residency.Admission[T]): T =
+      memos.computeIfAbsent(tag, _ => new Residency.Memo(admission)).get.orNull
+
+    /** Hash membership for a large single-tag filter, ~2× the sorted
+      * array's bytes, on the ids-tags line. Budgeted before building: a
+      * half-corpus tag's set is ~128 MB at 10M rows (capacity = next
+      * pow2 ≥ 2n, 8 B/slot), and many large tags could otherwise starve
+      * future id pools. A denial is null to the kernels, which keep the
+      * binary search: slower, never wrong. The shared estimator keeps the
+      * estimate equal to what the built set registers. */
+    def tagHashSet(tag: String, sorted: Array[Long]): graft.operators.LongHashSet =
+      tagMemo(tagHashSets, tag)(Residency.admit(Residency.IdsTags,
+        graft.operators.LongHashSet.estimateBytes(sorted.length),
+        idPoolMaxBytes)(graft.operators.LongHashSet.from(sorted)))
+
+    /** Row-position bitmaps for `tag`, aligned with the resident tier's
+      * parts (`idsPerPart`): filtered membership becomes a sequential bit
+      * test in scan order (~nRows/8 bytes per tag). Alignment is sound
+      * because the parts are the handles' resident arrays, whose identity
+      * and row order are fixed for the version's lifetime. The estimate
+      * is exact: it is what the built bitmaps occupy. */
+    def tagRowBits(tag: String, idsPerPart: Array[Array[Long]],
+                   member: graft.operators.LongHashSet,
+                   sorted: Array[Long]): Array[Array[Long]] =
+      tagMemo(tagBits, tag) {
+        val est = idsPerPart.iterator
+          .map(ids => ((ids.length + 63) >>> 6).toLong * 8L).sum + 64L
+        Residency.admit(Residency.IdsTags, est, idPoolMaxBytes) {
+          // membership via the probe set when one exists; a budget-denied
+          // hash set must not take the bitmap down with it: the one-time
+          // construction binary-searches the sorted array instead
+          // (~nRows·log|tag| comparisons). The bitmap is ~100× smaller
+          // than the set (nRows/8 bytes vs 16 B/entry), so at 10M rows the
+          // corpora whose hash sets blow the budget most need this path
+          idsPerPart.map { ids =>
+            val b = new Array[Long]((ids.length + 63) >>> 6)
+            var r = 0
+            while (r < ids.length) {
+              val in =
+                if (member != null) member.contains(ids(r))
+                else java.util.Arrays.binarySearch(sorted, ids(r)) >= 0
+              if (in) b(r >>> 6) |= 1L << (r & 63)
+              r += 1
+            }
+            b
+          }
+        }
+      }
+
+    /** Return every admitted resident's ledger share and unpersist the
+      * packed RDD: called once the version is out of [[handles]]. */
+    def release(): Unit = {
+      if (tailOpened) {
+        // packedIfBuilt, not packed: forcing the lazy would launch the
+        // pack job against the snapshot files the GC just deleted
+        tailIndex.packedIfBuilt.foreach(_.unpersist(blocking = false))
+        tailIndex.packedResident.release()
+      }
+      if (pqOpened) pqIndex.packedResident.release()
+      Seq(idPool, tagIndex, hnswGraphs, sq16, sq8).foreach(_.release())
+      tagHashSets.values.forEach(_.release())
+      tagBits.values.forEach(_.release())
     }
+  }
+
+  /** One [[SnapshotHandles]] per (tenant, index, version). */
+  private[graft] val handles =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), SnapshotHandles]()
+
+  private[graft] def handlesOf(tenant: String, index: String,
+                               m: Manifest): SnapshotHandles =
+    handles.computeIfAbsent((tenant, index, m.version),
+      _ => new SnapshotHandles(snapDir(tenant, index, m), m, poolEstSeed = None))
+
+  private def sq16TableExists(snap: String): Boolean =
+    Files.isDirectory(Paths.get(s"$snap/sq16/codes"))
+
+  /** Refine-store choice for PLAN-path refined calls (the rows tier's
+    * fallback, the wire's WITH_META branch and any other direct
+    * [[search]] caller that wants tier parity): "sq16" when the snapshot
+    * carries the sidecar — the same dequantized floats the rows tier
+    * reranks with — else "exact" (pre-sidecar snapshots). */
+  private[graft] def refineStoreFor(tenant: String, index: String,
+                                    m: Manifest): String =
+    if (m.algo == "IVF_PQ" && sq16TableExists(snapDir(tenant, index, m))) "sq16"
+    else "exact"
 
   /** Allowed-set size from which the filtered scan kernels test a
     * [[graft.operators.LongHashSet]] / row bitmap instead of
@@ -2148,89 +2192,6 @@ class GraftEngine(spark: SparkSession, root: String,
     * probed row pays ~5-7 cache-missing levels. Constructor-tunable so
     * specs can force the hash/bitmap wiring on small fixtures. */
   private val HashAllowedMinEntries = hashAllowedMinEntries
-
-  // memoized per-(snapshot, tag) hash membership for large single-tag
-  // filters — same ledger line as the pools/tag arrays (the set
-  // is ~2× the array's bytes; only tags that actually serve large
-  // filtered calls pay it)
-  // private[graft]: specs assert budget-denial memoization directly
-  private[graft] val tagHashSetCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[graft.operators.LongHashSet]]
-  private def tagHashSetOf(tenant: String, index: String, m: Manifest,
-                           tag: String,
-                           sorted: Array[Long]): graft.operators.LongHashSet =
-    Residency.memo(tagHashSetCache, s"$tenant/$index/v${m.version}#$tag") {
-      // budget BEFORE building: a half-corpus tag's set is ~128 MB at
-      // 10M rows (capacity = next pow2 ≥ 2n, 8 B/slot) and memoizes per
-      // (version, tag) — many large tags could otherwise grow driver
-      // heap unboundedly and starve future id pools. Per-handle denial
-      // memoizes None (null to the kernels) and the scan keeps the
-      // sorted-array binary search — slower, never wrong.
-      // shared estimator: a hand-copied capacity formula here would
-      // silently diverge from the bytes the built set registers if the
-      // set's load factor or header ever changed
-      Residency.admit(Residency.IdsTags,
-          graft.operators.LongHashSet.estimateBytes(sorted.length),
-          idPoolMaxBytes)(graft.operators.LongHashSet.from(sorted))
-    }.orNull
-
-  // per-(snapshot, tag) ROW-POSITION bitmaps aligned with the resident
-  // tier's parts array: filtered membership becomes a sequential bit
-  // test in scan order — no per-row probe into any large table (the
-  // allowed-set endgame; ~nRows/8 bytes per tag, registered like the
-  // rest). Alignment is sound because parts arrays are lazy vals on the
-  // per-version memoized handles, so their identity and row order are
-  // fixed for the snapshot's lifetime.
-  // private[graft]: specs assert bits survive hash-set budget denial
-  private[graft] val tagBitsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[Array[Array[Long]]]]
-  private def tagRowBitsOf(tenant: String, index: String, m: Manifest,
-                           tag: String, idsPerPart: Array[Array[Long]],
-                           member: graft.operators.LongHashSet,
-                           sorted: Array[Long] = null): Array[Array[Long]] =
-    Residency.memo(tagBitsCache, s"$tenant/$index/v${m.version}#$tag") {
-      // same budget gate as the hash set (est BEFORE building, permanent
-      // denial memoized): bitmaps are small (~nRows/8 bytes per tag) but
-      // per-(version, tag) residents all draw from one pool
-      // (the estimate is exact: it is what the built bitmaps occupy)
-      val est = idsPerPart.iterator
-        .map(ids => ((ids.length + 63) >>> 6).toLong * 8L).sum + 64L
-      Residency.admit(Residency.IdsTags, est, idPoolMaxBytes) {
-        // membership via the probe set when one exists; a BUDGET-DENIED
-        // hash set must not take the bitmap down with it — the one-time
-        // construction pass binary-searches the sorted array instead
-        // (~nRows·log|tag| comparisons, memoized per (version, tag)),
-        // and the bitmap itself is ~100× smaller than the set it
-        // replaces (nRows/8 bytes vs 16 B/entry), so at 10M rows the
-        // exact corpora whose hash sets blow the budget are the ones
-        // that most need this path
-        idsPerPart.map { ids =>
-          val b = new Array[Long]((ids.length + 63) >>> 6)
-          var r = 0
-          while (r < ids.length) {
-            val in =
-              if (member != null) member.contains(ids(r))
-              else java.util.Arrays.binarySearch(sorted, ids(r)) >= 0
-            if (in) b(r >>> 6) |= 1L << (r & 63)
-            r += 1
-          }
-          b
-        }
-      }
-    }.orNull
-
-  // Deliberately separate from tailIndexOf's Index.centroidsLocal: the
-  // centroid table exists for EVERY algo (IVF_PQ writes it for the cache
-  // layer), while constructing an IvfFlat.Index eagerly resolves the
-  // $snap/vectors path, which HNSW/IVF_PQ snapshots don't have.
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Int, Array[Float])]]
-  private def centroidsLocalOf(tenant: String, index: String,
-                               m: Manifest): Array[(Int, Array[Float])] =
-    centroidCache.getOrElseUpdate(s"$tenant/$index/v${m.version}",
-      spark.read.schema(CentroidsSchema)
-        .parquet(s"${snapDir(tenant, index, m)}/centroids").collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-        .sortBy(_._1))
 
   /** Pre-materialize every built index's resident serving handles
     * (packed floats / byte codes / graphs, plus the id pool) so the
@@ -2272,12 +2233,12 @@ class GraftEngine(spark: SparkSession, root: String,
           rowsTierOf(tenant, index, m, refine = false, filtered = false,
               hnsw = true).foreach(_.tail match {
             case FlatTail =>
-              val tail = tailIndexOf(tenant, index, m)
+              val tail = handlesOf(tenant, index, m).tailIndex
               tail.packedDriver
               tail.centroidsLocal
             case PqTail(pq, _) =>
               pq.centroidsLocal
-              if (m.metric == "IP") mipsMaxSqOf(tenant, index, m)
+              if (m.metric == "IP") handlesOf(tenant, index, m).mipsMaxSq
             case HnswTail(_) => ()
           })
           // refined calls' store: the resolver's last gate on PQ indexes
@@ -2294,46 +2255,15 @@ class GraftEngine(spark: SparkSession, root: String,
     (ok, skipped)
   }
 
-  /** Drop memoized read handles (and their cached packed RDD blocks) for
-    * snapshot versions older than `keep` — mirrors [[gcOldSnapshots]]'s
-    * retention window, so repeated builds/compactions don't accumulate
-    * stale Index handles and pinned storage for the engine's lifetime. */
-  private def evictStaleHandles(tenant: String, index: String, keep: Long): Unit = {
-    val prefix = s"$tenant/$index/v"
-    def versionOf(k: String): Option[Long] = {
-      val v = k.stripPrefix(prefix)
-      if (k.startsWith(prefix) && v.forall(_.isDigit)) Some(v.toLong) else None
+  /** Release the handle sets of snapshot versions older than `keep`,
+    * [[gcOldSnapshots]]'s retention window, so repeated builds and
+    * compactions don't pin stale residents and packed RDDs for the
+    * engine's lifetime. */
+  private def evictStaleHandles(tenant: String, index: String, keep: Long): Unit =
+    handles.forEach { (k, h) =>
+      if (k._1 == tenant && k._2 == index && k._3 < keep && handles.remove(k, h))
+        h.release()
     }
-    def evict[V](cache: scala.collection.concurrent.TrieMap[String, V],
-                 versionKey: String => String = k => k)(drop: V => Unit): Unit =
-      cache.keys.toSeq.foreach { k =>
-        if (versionOf(versionKey(k)).exists(_ < keep)) cache.remove(k).foreach(drop)
-      }
-    val forget = (_: Any) => ()
-    val release = (_: Option[AnyRef]).foreach(Residency.release)
-    val tagged = (_: String).takeWhile(_ != '#') // "#tag" after the version
-    // packedIfBuilt, NOT packed: forcing the lazy here would launch the
-    // pack job against the snapshot files this GC just deleted
-    evict(tailIndexCache)(_.packedIfBuilt.foreach(_.unpersist(blocking = false)))
-    evict(centroidCache)(forget)
-    evict(mipsMaxSqCache)(forget)
-    evict(idPoolCache)(release)
-    evict(tagSurrogatesCache)(release)
-    evict(tagHashSetCache, tagged)(release)
-    evict(tagBitsCache, tagged)(release)
-    evict(hnswGraphsCache)(release)
-    evict(sq16StoreCache)(release)
-    evict(sq8StoreCache)(release)
-    // IVF_FLAT/IVF_PQ handles hold their packed parts themselves:
-    // dropping the handle releases them to GC, which also returns their
-    // weak-keyed ledger share — without this, every rebuild leaks its
-    // predecessor's resident arrays for the engine's lifetime
-    evict(pqIndexCache)(forget)
-    // measurement memos (bytes, not handles); estimate keys carry a
-    // "pool:"/"tags:"/"hnsw:" prefix before tenant/index/vN
-    evict(sq16StatsCache)(forget)
-    evict(residentEstCache, _.dropWhile(_ != ':').drop(1))(forget)
-  }
 
   // -------------------------------------------------------------------
   // semantic-cluster override for the L2 cache layer (reference:
@@ -2368,7 +2298,7 @@ class GraftEngine(spark: SparkSession, root: String,
       // keys there; L0/L0.5/L1 still serve. A pushed semantic-cluster
       // model (the override above) re-enables L2 for any algo.
       if (m.algo == "HNSW") Array.empty
-      else centroidsLocalOf(tenant, index, m)
+      else handlesOf(tenant, index, m).centroids
     }
 
   /** Install an externally trained semantic-cluster model for the L2 cache
@@ -2498,7 +2428,7 @@ class GraftEngine(spark: SparkSession, root: String,
     * count past which NO pool could be admitted even with zero-length
     * ids — the gate skips the residency-estimate jobs for corpora the
     * byte budgets could never accept, and everything under it is decided
-    * by exact measured bytes in [[idPoolOf]] / [[sq16StoreOf]] /
+    * by exact measured bytes in [[SnapshotHandles.idPool]] / `sq16` /
     * packedDriver, each admitted by the [[Residency]] ledger against its
     * per-handle cap, its line's cap and the JVM total (half the heap).
     * Corpora past any cap fall back to the DataFrame plan, which
@@ -3696,7 +3626,7 @@ class GraftEngine(spark: SparkSession, root: String,
       case None =>
         // tail clustering IS the cache clustering: probe exactly the
         // predicted inverted list with its own centroid as the query
-        val tailIdx = tailIndexOf(tenant, index, m)
+        val tailIdx = handlesOf(tenant, index, m).tailIndex
         val assigned = tailIdx.assigned
         val queries = predicted.select("cluster_id").distinct()
           .join(broadcast(tailIdx.centroids), Seq("cluster_id"))

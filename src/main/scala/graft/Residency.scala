@@ -19,10 +19,9 @@ package graft
   *
   * Accounting is weak-keyed by the resident object. Eviction releases a
   * share explicitly; a handle dropped without eviction (a discarded
-  * engine, a lost build race) returns its share when it is collected — a
-  * plain counter would leak those bytes for the JVM's lifetime. Keys
-  * compare by `equals`, so residents are arrays or classes with identity
-  * equality. */
+  * engine) returns its share when it is collected — a plain counter would
+  * leak those bytes for the JVM's lifetime. Keys compare by `equals`, so
+  * residents are arrays or classes with identity equality. */
 object Residency {
 
   /** One budget line: `handleMax` is the default cap on one resident (the
@@ -140,38 +139,33 @@ object Residency {
 
   /** One handle's admission, remembered the way a lazy val would be —
     * except that [[Busy]] is not remembered: the next `get` tries again.
-    * An admitted value keeps its identity for good (tag row bitmaps align
-    * to the parts arrays they were built over). */
-  final class Memo[T](admission: => Admission[T]) {
-    @volatile private var settled: Option[Option[T]] = None
-    def get: Option[T] = settled.getOrElse(synchronized {
-      if (settled.isEmpty) admission match {
-        case Admitted(v) => settled = Some(Some(v))
-        case Denied => settled = Some(None)
+    * Keeping a Busy would make it permanent: a fresh engine on a root
+    * whose previous instance still held the line at first touch would
+    * refuse the handle long after the old instance's share was collected.
+    * [[Denied]] is kept (over the cap, or no such table: fixed for the
+    * snapshot's lifetime). Concurrent first callers wait for the one
+    * admission. An admitted value keeps its identity until [[release]]
+    * (tag row bitmaps align to the parts arrays they were built over). */
+  final class Memo[T <: AnyRef](admission: => Admission[T]) {
+    @volatile private var state: Option[Option[T]] = None
+    def get: Option[T] = state.getOrElse(synchronized {
+      if (state.isEmpty) admission match {
+        case Admitted(v) => state = Some(Some(v))
+        case Denied => state = Some(None)
         case Busy =>
       }
-      settled.getOrElse(None)
+      state.getOrElse(None)
     })
-  }
 
-  /** [[Memo]] for a keyed cache of per-snapshot residents: keeps Admitted
-    * and Denied (over the cap, or no such table — fixed for the
-    * snapshot's lifetime) under `key`, retries after Busy. Keeping a Busy
-    * would make it permanent: a fresh engine on a root whose previous
-    * instance still held the line at first touch would refuse the handle
-    * long after the old instance's share was collected. A racing build
-    * that loses the `putIfAbsent` returns its share at once. */
-  def memo[T <: AnyRef](cache: scala.collection.concurrent.TrieMap[String, Option[T]],
-                        key: String)(admission: => Admission[T]): Option[T] =
-    cache.get(key).getOrElse(admission match {
-      case Admitted(v) =>
-        cache.putIfAbsent(key, Some(v)) match {
-          case Some(won) =>
-            if (!won.exists(_ eq v)) release(v)
-            won
-          case None => Some(v)
-        }
-      case Denied => cache.putIfAbsent(key, None).getOrElse(None)
-      case Busy => None
-    })
+    /** The answer `get` settled on, without admitting: None before one
+      * (or after a Busy), Some(None) for a denial. */
+    def settled: Option[Option[T]] = state
+
+    /** Return the admitted value's share and forget the answer: a later
+      * `get` admits again. */
+    def release(): Unit = synchronized {
+      state.flatten.foreach(Residency.release)
+      state = None
+    }
+  }
 }

@@ -126,7 +126,7 @@ object IvfFlat {
       * that is merely full is retried on the next call. */
     def packedDriver: Option[Array[PackedLists]] = packedResident.get
 
-    @transient private lazy val packedResident =
+    @transient private[graft] lazy val packedResident =
       new graft.Residency.Memo[Array[PackedLists]]({
         val dim = centroidsLocal.headOption.fold(0)(_._2.length)
         if (rows == 0L) graft.Residency.Admitted(Array.empty[PackedLists])

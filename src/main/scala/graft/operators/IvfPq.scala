@@ -46,7 +46,7 @@ object IvfPq {
       * BEFORE collecting, from [[rows]] × (M code bytes + id bytes). */
     def packedDriver: Option[Array[PackedCodes]] = packedResident.get
 
-    @transient private lazy val packedResident =
+    @transient private[graft] lazy val packedResident =
       new graft.Residency.Memo[Array[PackedCodes]](
         graft.Residency.admit(graft.Residency.PqCodes,
             rows * (cb.m + 16L)) {

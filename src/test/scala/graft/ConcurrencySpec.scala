@@ -31,8 +31,36 @@ class ConcurrencySpec extends SparkSpec {
     threads.foreach(_.setUncaughtExceptionHandler((_, e) => errs.add(e)))
     threads.foreach(_.start())
     threads.foreach(_.join(300000))
+    val alive = threads.filter(_.isAlive)
+    assert(alive.isEmpty, s"still running after the join: ${alive.map(_.getName)}")
     import scala.jdk.CollectionConverters._
     errs.asScala.toSeq
+  }
+
+  /** Eight threads released together on the first `call` of a fresh
+    * engine over `root`'s built snapshot: every answer equals one
+    * thread's first call on another fresh engine, and the burst submits,
+    * module by module, the same jobs as that one call — concurrent first
+    * callers wait for one admission per handle. */
+  private def firstCallBurst(root: String)(
+      call: GraftEngine => Array[(Long, Int, String, Double)]): Unit = {
+    val (single, singleJobs) = JobCount.byModule(spark)(call(new GraftEngine(spark, root)))
+    assert(single.nonEmpty)
+    val eng = new GraftEngine(spark, root)
+    val answers = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(Long, Int, String, Double)]]()
+    val (errs, burstJobs) = JobCount.byModule(spark) {
+      val barrier = new java.util.concurrent.CyclicBarrier(8)
+      runAll((1 to 8).map { t =>
+        new Thread(() => {
+          barrier.await(60, TimeUnit.SECONDS)
+          answers.add(call(eng).toSeq)
+        }, s"first-call-$t")
+      })
+    }
+    assert(errs.isEmpty, s"first-call burst threw: ${errs.map(_.toString)}")
+    import scala.jdk.CollectionConverters._
+    assert(answers.size == 8 && answers.asScala.forall(_ == single.toSeq), answers)
+    assert(burstJobs == singleJobs, s"burst $burstJobs, one call $singleJobs")
   }
 
   test("searchCachedRows stays correct while flush/compact rewrite the entry dir") {
@@ -321,6 +349,39 @@ class ConcurrencySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3)))
     assert(fast.get._1.sortBy(_._2).toSeq == slow.sortBy(_._2).toSeq)
     assert(fast.get._1.nonEmpty)
+  }
+
+  test("concurrent first refined IVF_PQ calls share one admission per handle") {
+    val root = Files.createTempDirectory("conc_first_pq").toString
+    val rng = new scala.util.Random(17)
+    val eng = new GraftEngine(spark, root)
+    eng.add(mkRecords((0 until 60).map(i =>
+      (s"v$i", Seq.fill(4)(rng.nextFloat()), 100L))))
+    eng.build("t1", "idx", nlist = 2, algo = "IVF_PQ", pqM = 2, pqK = 8)
+    val qs = Array((0L, Array(0.5f, 0.5f, 0.5f, 0.5f)))
+    firstCallBurst(root) { e =>
+      val (rows, tr) = e.searchRowsTraced("t1", "idx", qs, k = 5, nprobe = 2,
+        refine = 4)
+      assert(tr.path == "head+pqtail-refined", tr)
+      rows
+    }
+  }
+
+  test("concurrent first filtered IVF_FLAT calls share one admission per handle") {
+    val root = Files.createTempDirectory("conc_first_flat").toString
+    val rng = new scala.util.Random(19)
+    val eng = new GraftEngine(spark, root)
+    eng.add(mkRecords((0 until 60).map(i =>
+      (s"v$i", Seq.fill(4)(rng.nextFloat()), 100L)))
+      .withColumn("tags", when(xxhash64(col("id")) % 2 === 0, typedLit(Seq("even")))
+        .otherwise(typedLit(Seq("odd")))))
+    eng.build("t1", "idx", nlist = 2)
+    val qs = Array((0L, Array(0.5f, 0.5f, 0.5f, 0.5f)))
+    firstCallBurst(root) { e =>
+      val res = e.searchRowsFilteredTraced("t1", "idx", qs, 5, "L2", 2, Seq("even"))
+      assert(res.exists(_._2.path == "head+tail-filtered"), res.map(_._2))
+      res.get._1
+    }
   }
 
   test("residency ledger: concurrent admissions never overshoot a line or the total") {

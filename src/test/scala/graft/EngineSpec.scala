@@ -1926,6 +1926,18 @@ class EngineSpec extends SparkSpec {
       "an at-quota filtered miss must not populate")
   }
 
+  /** The settled per-tag answers of `eng`'s current snapshot, keyed by
+    * tag: None for a denial. */
+  private def settled[T <: AnyRef](memos: java.util.concurrent.ConcurrentHashMap[
+      String, Residency.Memo[T]]): Map[String, Option[T]] = {
+    import scala.jdk.CollectionConverters._
+    memos.asScala.toMap.flatMap { case (t, m) => m.settled.map(t -> _) }
+  }
+  private def tagHashSets(eng: GraftEngine) =
+    settled(eng.handlesOf("t1", "idx", eng.manifest("t1", "idx")).tagHashSets)
+  private def tagBits(eng: GraftEngine) =
+    settled(eng.handlesOf("t1", "idx", eng.manifest("t1", "idx")).tagBits)
+
   test("tag hash-set budget denial: memoized None, sorted-array path serves identically") {
     val root = Files.createTempDirectory("engine_tagbudget").toString
     val rng = new scala.util.Random(67)
@@ -1945,18 +1957,18 @@ class EngineSpec extends SparkSpec {
       Array((1L, qv)), 5, "L2", 2, Seq("all"))
     assert(res.isDefined, "denied hash set must NOT block rows serving")
     // the denial is memoized (None), not silently rebuilt per call
-    assert(eng.tagHashSetCache.values.toSeq == Seq(None),
-      eng.tagHashSetCache.toMap)
+    assert(tagHashSets(eng).values.toSeq == Seq(None),
+      tagHashSets(eng))
     // the BITMAP survives the hash-set denial (construction falls back
     // to binary search over the sorted array; the bitmap is ~100×
     // smaller than the set, so the budget that denied the set admits it)
-    assert(eng.tagBitsCache.values.toSeq.forall(_.isDefined),
-      eng.tagBitsCache.toMap)
+    assert(tagBits(eng).values.toSeq.forall(_.isDefined),
+      tagBits(eng))
     // parity with an unconstrained engine whose set IS built
     val free = new GraftEngine(spark, root, hashAllowedMinEntries = 1)
     val resFree = free.searchRowsFilteredTraced("t1", "idx",
       Array((1L, qv)), 5, "L2", 2, Seq("all"))
-    assert(resFree.isDefined && free.tagHashSetCache.values.forall(_.isDefined))
+    assert(resFree.isDefined && tagHashSets(free).values.forall(_.isDefined))
     assert(res.get._1.toSeq == resFree.get._1.toSeq)
     // multi-tag conjunction under the same denial: the per-tag bitmap
     // AND path must serve (no hash sets exist), equal to the free engine
@@ -1980,7 +1992,7 @@ class EngineSpec extends SparkSpec {
     assert(res2.get._1.toSeq == resFree2.get._1.toSeq)
     assert(res2.get._1.forall { case (_, _, id, _) =>
       id.drop(1).toInt % 2 == 0 })
-    assert(eng2.tagBitsCache.size == 2 &&
-      eng2.tagBitsCache.values.forall(_.isDefined), eng2.tagBitsCache.toMap)
+    assert(tagBits(eng2).size == 2 &&
+      tagBits(eng2).values.forall(_.isDefined), tagBits(eng2))
   }
 }

@@ -90,4 +90,33 @@ class JobBudgetSpec extends SparkSpec {
     // 15 before
     assert(search == Map("GraftEngine" -> 1, "Hnsw" -> 11), search)
   }
+
+  /** The first filtered search on a tagged corpus: besides the tail and
+    * the id pool, it admits the tag index. */
+  private def firstFiltered(algo: String): Map[String, Int] = {
+    val root = Files.createTempDirectory(s"jobs_filtered_$algo").toString
+    val eng = new GraftEngine(spark, root)
+    eng.add(records("idx", 640, 16, 7).withColumn("tags", array(
+      when(substring(col("id"), 2, 9).cast("int") % 2 === 0, "even").otherwise("odd"))))
+    eng.build("t1", "idx", nlist = 4, algo = algo, pqM = 4, pqK = 16)
+    val q = Array((1L, Array.fill(16)(0.5f)))
+    val (res, jobs) = JobCount.byModule(spark)(
+      eng.searchRowsFilteredTraced("t1", "idx", q, 5, "L2", 2, Seq("even")))
+    assert(res.exists(_._1.length == 5), res.map(_._2))
+    show(s"$algo first filtered search (${res.get._2.path})", jobs)
+    jobs
+  }
+
+  // GraftEngine 5: the id pool's collect, then the tag index's records
+  // schema read, size aggregation and collect
+  test("job budget: IVF_FLAT first filtered search") {
+    val jobs = firstFiltered("IVF_FLAT")
+    assert(jobs == Map("GraftEngine" -> 5, "IvfFlat" -> 2, "unattributed" -> 1), jobs)
+  }
+
+  test("job budget: IVF_PQ first filtered search") {
+    val jobs = firstFiltered("IVF_PQ")
+    assert(jobs == Map("GraftEngine" -> 5, "IvfPq" -> 2, "Pq" -> 1,
+      "unattributed" -> 1), jobs)
+  }
 }

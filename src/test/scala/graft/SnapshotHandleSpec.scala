@@ -39,10 +39,10 @@ class SnapshotHandleSpec extends SparkSpec {
     val m = eng.manifest("t1", "idx")
     val (assigned, rows, ranges) =
       if (algo == "IVF_PQ") {
-        val h = eng.pqIndexOf("t1", "idx", m)
+        val h = eng.handlesOf("t1", "idx", m).pqIndex
         (h.assigned, h.rows, h.packedDriver.get.map(_.ranges))
       } else {
-        val h = eng.tailIndexOf("t1", "idx", m)
+        val h = eng.handlesOf("t1", "idx", m).tailIndex
         (h.assigned, h.rows, h.packedDriver.get.map(_.ranges))
       }
     assert(rows == assigned.count(), s"$algo after $what")
@@ -68,6 +68,58 @@ class SnapshotHandleSpec extends SparkSpec {
         Files.createTempDirectory(s"handles_${algo}_import").toString)
       other.importSnapshot("t1", "idx", dest)
       checkHandle(other, algo, "importSnapshot")
+    }
+
+  /** Serves `eng`'s tagged corpus every way the rows tier admits a
+    * resident: unfiltered, refined (IVF_PQ), and filtered with the per-tag
+    * hash set and row bitmaps (the engine's `hashAllowedMinEntries` = 1). */
+  private def serveAllWays(eng: GraftEngine, algo: String): Unit = {
+    val qs = Array((1L, Array.fill(8)(0.5f)))
+    val tail = if (algo == "IVF_PQ") "pqtail" else "tail"
+    val (_, tr) = eng.searchRowsTraced("t1", "idx", qs, 5, "L2", nprobe = 2)
+    assert(tr.path == s"head+$tail", tr)
+    if (algo == "IVF_PQ") {
+      val (_, trRefined) = eng.searchRowsTraced("t1", "idx", qs, 5, "L2",
+        nprobe = 2, refine = 5)
+      assert(trRefined.path == "head+pqtail-refined", trRefined)
+    }
+    val filtered = eng.searchRowsFilteredTraced("t1", "idx", qs, 5, "L2", 2, Seq("even"))
+    assert(filtered.map(_._2.path).contains(s"head+$tail-filtered"), filtered.map(_._2))
+  }
+
+  for (algo <- Seq("IVF_FLAT", "IVF_PQ"))
+    test(s"$algo: evicting a snapshot version releases everything its handles admitted") {
+      val root = Files.createTempDirectory(s"evict_$algo").toString
+      val eng = new GraftEngine(spark, root, hashAllowedMinEntries = 1)
+      def used = Residency.Lines.map(l => l -> Residency.used(l)).toMap
+      // residents of earlier cases return their shares when collected;
+      // collect them before the baseline, so they can't mask a leak
+      System.gc()
+      val baseline = used
+      eng.add(records(90, 8, 11).withColumn("tags", array(
+        when(substring(col("id"), 2, 9).cast("int") % 2 === 0, "even").otherwise("odd"))))
+      build(eng, algo)
+      serveAllWays(eng, algo)
+      val served = used.map { case (l, u) => l -> (u - baseline(l)) }
+      val first = eng.handlesOf("t1", "idx", eng.manifest("t1", "idx"))
+      def admitted(m: Residency.Memo[_]) = m.settled.exists(_.isDefined)
+      assert(admitted(first.idPool) && admitted(first.tagIndex) &&
+        admitted(first.tagHashSets.get("even")) && admitted(first.tagBits.get("even")))
+      assert(algo != "IVF_PQ" || admitted(first.sq16))
+      val packed = if (algo == "IVF_PQ") None else first.tailIndex.packedIfBuilt.map(_.id)
+      assert(algo == "IVF_PQ" || packed.exists(spark.sparkContext.getPersistentRDDs.contains))
+
+      build(eng, algo)
+      build(eng, algo)
+      val keep = eng.manifest("t1", "idx").version - 1
+      import scala.jdk.CollectionConverters._
+      assert(eng.handles.keySet.asScala.forall(_._3 >= keep), eng.handles.keySet)
+      assert(packed.forall(id => !spark.sparkContext.getPersistentRDDs.contains(id)))
+      serveAllWays(eng, algo)
+      Residency.Lines.foreach { l =>
+        assert(Residency.used(l) <= baseline(l) + served(l),
+          s"${l.name}: used ${Residency.used(l)}, baseline ${baseline(l)}, served ${served(l)}")
+      }
     }
 
   private def copyTree(src: Path, dest: Path): Unit =
