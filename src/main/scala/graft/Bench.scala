@@ -915,17 +915,17 @@ object Bench {
     }
 
     // Sidecar decision loop on the bench (r7 optional item 8): the
-    // engine-side halves of the reference's 10 s reporter loop
+    // engine-side half of the reference's 10 s reporter loop
     // (SidecarMetricsReporter.cs:52-110 → DynamicPolicyEngine.cs:31-45)
     // measured against a warm serving state — `sidecar_tick_ms` is the
-    // per-tick cost the loop thread pays (publish live counters + read/
-    // apply the newest policy frame), `policy_apply_lag_ms` the wall
-    // time from a policy frame LANDING in the contract dir to the
-    // engine serving under its TTL. Both must be ~ms-scale so the 10 s
-    // cadence — not the engine — stays the only real decision lag.
-    val (sidecarTickMs, policyApplyLagMs, sidecarWireTickMs) = {
+    // per-tick cost the loop thread pays: live counters out as one
+    // ReportSystemMetrics frame, the reply's policy applied. Over a
+    // request/reply RPC the apply lag is the tick itself; it must be
+    // ~ms-scale so the 10 s cadence — not the engine — stays the only
+    // real decision lag.
+    val sidecarTickMs = {
+      import graft.streaming.{SidecarLoop, SidecarProto, SidecarWire}
       val scRoot = tempDir("bench_sidecar_engine")
-      val contract = tempDir("bench_sidecar_contract")
       val engSc = new GraftEngine(spark, scRoot)
       engSc.upsert(spark.range(2000)
         // vector BEFORE the string alias: a same-select reference to
@@ -947,48 +947,23 @@ object Bench {
           Array.fill(16)(rngSc.nextFloat()), k = 5, nprobe = 2,
           now = 1000L + i)
       }
-      val loop = new graft.streaming.SidecarLoop(engSc, spark, contract)
-      val tickRuns = (1 to 3).map(w => timeOnce(loop.tick(w.toLong)))
+      // the sidecar's half: the same decision as Policy.heuristic
+      val srv = new SidecarWire.Server(req => Some(
+        if (req.missRate > 0.5)
+          SidecarProto.WarmPathPolicy(0.05, 300, SidecarProto.evictionCode("aggressive"))
+        else SidecarProto.WarmPathPolicy(0.2, 60, SidecarProto.evictionCode("normal"))))
+      val tickRuns = try {
+        val loop = new SidecarLoop(engSc,
+          new SidecarWire.Client("127.0.0.1", srv.port))
+        (1 to 5).map(w => timeOnce(loop.tick(10L + w)))
+      } finally srv.close()
       System.err.println("# bench-runs sidecar_tick " +
         tickRuns.map(r => f"$r%.4f").mkString(" "))
-      // the sidecar's half (heuristic decision) runs out-of-band; the
-      // measured lag starts when its frame lands in the contract dir
-      val pol = graft.streaming.Policy.heuristic(
-          graft.streaming.SidecarContract.readMetrics(spark, contract, 1L)
-            .drop("window"))
-        .drop("miss_rate", "aggressive").cache()
-      pol.count()
-      val t0 = System.nanoTime()
-      graft.streaming.SidecarContract.writePolicies(pol, contract, 5L)
-      loop.tick(6L)
-      val lagMs = (System.nanoTime() - t0) / 1e6
       require(engSc.servingTtl("t9") == 300,
         s"policy must be live after the tick, ttl=${engSc.servingTtl("t9")}")
-      pol.unpersist()
-      System.err.println(f"# bench-runs policy_apply_lag_ms $lagMs%.3f")
-      // the framed TCP transport form of the same loop (SidecarWire):
-      // counters out, decision frame back, TTL applied — one round trip,
-      // no Spark job on either half, so the row should read ~ms
-      import graft.streaming.SidecarWire
-      val wireSrv = new SidecarWire.Server(ms => ms.map { m =>
-        val missRate =
-          if (m.nRequests == 0) 0.0 else m.nMisses.toDouble / m.nRequests
-        if (missRate > 0.5)
-          SidecarWire.PolicyRow(m.tenant, m.window, 300, 0.05, "aggressive")
-        else SidecarWire.PolicyRow(m.tenant, m.window, 60, 0.15, "normal")
-      })
-      val wireTickMs = try {
-        val cl = new SidecarWire.Client("127.0.0.1", wireSrv.port)
-        val runs = (1 to 5).map(w => timeOnce(loop.tickWire(10L + w, cl)))
-        System.err.println("# bench-runs sidecar_wire_tick " +
-          runs.map(r => f"$r%.4f").mkString(" "))
-        runs.min * 1000.0
-      } finally wireSrv.close()
-      require(engSc.servingTtl("t9") == 300,
-        "wire-applied policy must be live after tickWire")
-      scrubOne(scRoot); scrubOne(contract)
+      scrubOne(scRoot)
       // ms rows belong in `rates` (excluded from the wall-seconds total)
-      (tickRuns.min * 1000.0, lagMs, wireTickMs)
+      tickRuns.min * 1000.0
     }
 
     // Write-heavy delta serving (reference: 5k vectors dim 32, load then
@@ -1948,8 +1923,6 @@ object Bench {
       "ivf_500k_p50_ms" -> lat500P50,
       "ivf_500k_p99_ms" -> lat500P99,
       "sidecar_tick_ms" -> sidecarTickMs,
-      "sidecar_wire_tick_ms" -> sidecarWireTickMs,
-      "policy_apply_lag_ms" -> policyApplyLagMs,
       "delta_head_p50_ms" -> deltaP50,
       "delta_head_p99_ms" -> deltaP99,
       "delta_head_qps" -> deltaQps,
@@ -2359,7 +2332,7 @@ object Bench {
     "engine_pq_10m_u8_cold_sec",
     "warm_boot_warm_sec", "resp_miss_filtered_p99_ms", "resp_hit_p50_ms",
     "delta_head_p50_ms", "delta_head_p99_ms",
-    "sidecar_tick_ms", "sidecar_wire_tick_ms", "policy_apply_lag_ms",
+    "sidecar_tick_ms",
     "ivf_10m_build_sec", "engine_10m_build_sec",
     "components_rounds_1m", "span_dedup_1m_removed_docs")
 

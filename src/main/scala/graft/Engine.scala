@@ -1964,7 +1964,9 @@ class GraftEngine(spark: SparkSession, root: String,
         }.collect())
       })
 
-    private lazy val records = spark.read.parquet(s"$snap/records")
+    private lazy val records = spark.read
+      .schema("id_str STRING, meta STRING, tags ARRAY<STRING>")
+      .parquet(s"$snap/records")
     // size() yields -1 for null arrays under legacy configs; coalesce
     // makes it 0
     private def tagsCol = coalesce(col("tags"), array().cast("array<string>"))
@@ -2954,7 +2956,7 @@ class GraftEngine(spark: SparkSession, root: String,
     // request too, VectorCommandSet.cs:432-433). Misses are counted from
     // the MISS SET (nQ − nHit), not the result rows — a miss whose search
     // returns zero hits (selective tags, empty probes) still bills.
-    appendMetricsRow(tenant, index, now, nHit, nQ - nHit)
+    appendServingMetrics(tenant, index, now, nHit, nQ - nHit)
 
     keyed.unpersist()
     out.orderBy("query_id", "rank")
@@ -2972,7 +2974,7 @@ class GraftEngine(spark: SparkSession, root: String,
     * (one full job per [[searchCached]] call). parquet-mr writes the same
     * schema Spark did, so every consumer (statsText, billingUsage,
     * the fold) reads the mixed dir unchanged. */
-  private def writeMetricsRowLocal(dir: String, ts: Long, hits: Long,
+  private def writeServingMetricsLocal(dir: String, ts: Long, hits: Long,
                                    misses: Long): Unit = {
     Files.createDirectories(Paths.get(dir))
     val file = s"$dir/part-local-${java.util.UUID.randomUUID()}.parquet"
@@ -3055,17 +3057,17 @@ class GraftEngine(spark: SparkSession, root: String,
     * fold-read and its swap would be silently destroyed. The fold's tmp
     * dir lives under root/tmp so billingUsage's enumeration of the
     * metrics/<tenant> children can never pick up a half-written fold. */
-  private def appendMetricsRow(tenant: String, index: String, now: Long,
+  private def appendServingMetrics(tenant: String, index: String, now: Long,
                                hits: Long, misses: Long): Unit =
     withManifestLock(tenant, index) {
       val p = s"$root/metrics/$tenant/$index"
-      writeMetricsRowLocal(p, now, hits, misses)
+      writeServingMetricsLocal(p, now, hits, misses)
       if (dirFileCount(p) > CacheGcFileThreshold) {
         val r = spark.read.parquet(p)
           .agg(max("ts"), sum("hits"), sum("misses")).head
         val tmp = tmpPath(s"metrics/$tenant/$index")
         deleteTree(Paths.get(tmp))
-        writeMetricsRowLocal(tmp, r.getLong(0), r.getLong(1), r.getLong(2))
+        writeServingMetricsLocal(tmp, r.getLong(0), r.getLong(1), r.getLong(2))
         swapInto(tmp, Paths.get(p))
       }
     }
@@ -3586,7 +3588,7 @@ class GraftEngine(spark: SparkSession, root: String,
       val nh = st.hits.get()
       val nm = st.misses.get()
       if (nh > 0 || nm > 0) {
-        appendMetricsRow(tenant, index, now, nh, nm)
+        appendServingMetrics(tenant, index, now, nh, nm)
         st.hits.addAndGet(-nh)
         st.misses.addAndGet(-nm)
       }

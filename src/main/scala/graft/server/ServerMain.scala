@@ -9,19 +9,19 @@ import graft.Management
   * shape of the reference (GarnetService + ASP.NET host in one process,
   * Program.cs). Usage:
   *
-  *   sbt "runMain graft.server.ServerMain [root] [respPort] [httpPort] [sidecarDir]"
+  *   sbt "runMain graft.server.ServerMain [root] [respPort] [httpPort] [sidecarHost:port]"
   *
   * Defaults: root=/tmp/graft-server, RESP 6380, HTTP 8080 (0 = ephemeral;
   * chosen ports are printed). On a cluster this process is the driver (or
   * a thin gateway): per-call serving stays on the engine's zero-job
   * resident tiers; index builds and batch analytics run as Spark jobs.
   *
-  * Passing a 4th arg (or SPARK_GRAFT_SIDECAR_DIR) enables the sidecar
-  * decision loop against that contract directory: every
+  * Passing a 4th arg (or SPARK_GRAFT_SIDECAR_ADDR), a sidecar's
+  * host:port, enables the sidecar decision loop against it: every
   * SPARK_GRAFT_SIDECAR_INTERVAL_MS (default 10 000 — the reference's
   * Sidecar:MetricsIntervalSeconds, SidecarMetricsReporter.cs:52-58) the
-  * loop publishes serving metrics and applies the newest policy frame's
-  * TTLs to live cache inserts. */
+  * loop reports the serving counters in one ReportSystemMetrics call and
+  * applies the reply's TTL to live cache inserts. */
 object ServerMain {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/graft-server")
@@ -46,11 +46,15 @@ object ServerMain {
     val http = new HttpPlane(mgmt, httpPort)
     val rp = resp.start()
     val hp = http.start()
-    val sidecarDir = args.lift(3).orElse(sys.env.get("SPARK_GRAFT_SIDECAR_DIR"))
-    val sidecar = sidecarDir.map { dir =>
-      val loop = new graft.streaming.SidecarLoop(mgmt.engine, spark, dir)
+    val sidecarAddr = args.lift(3).orElse(sys.env.get("SPARK_GRAFT_SIDECAR_ADDR"))
+    val sidecar = sidecarAddr.map { addr =>
+      val at = addr.lastIndexOf(':')
+      require(at > 0, s"sidecar address must be host:port, got '$addr'")
+      val client = new graft.streaming.SidecarWire.Client(
+        addr.substring(0, at), addr.substring(at + 1).toInt)
+      val loop = new graft.streaming.SidecarLoop(mgmt.engine, client)
       loop.start(sys.env.getOrElse("SPARK_GRAFT_SIDECAR_INTERVAL_MS", "10000").toLong)
-      println(s"sidecar loop up: contract=$dir")
+      println(s"sidecar loop up: sidecar=$addr")
       loop
     }
     // warm the resident serving tiers in the background: the planes are

@@ -1,11 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import scala.util.control.NonFatal
-
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 import graft.GraftEngine
 
@@ -13,116 +8,26 @@ import graft.GraftEngine
   * reference runs a 10-second background reporter that pushes serving
   * metrics to the AI sidecar and applies the policy replies to its live
   * cache config (reference: Services/SidecarMetricsReporter.cs:52-110 →
-  * Policies/DynamicPolicyEngine.cs:31-45). Here the boundary is the
-  * versioned [[SidecarContract]] directory instead of gRPC, and each tick
-  * does the same two halves:
+  * Policies/DynamicPolicyEngine.cs:31-45). Each [[tick]] is one
+  * ReportSystemMetrics call over [[SidecarWire]]'s proto frames: the
+  * reference's RPC is GLOBAL, so the tick aggregates the engine's live
+  * serving counters across tenants into one SystemMetricsRequest and
+  * applies the single WarmPathPolicy the sidecar replies with to every
+  * tenant currently serving ([[GraftEngine.applyServingPolicy]]), so
+  * subsequent wire misses cache under the new TTL. A tick submits no
+  * Spark job.
   *
-  *  1. publish — snapshot the engine's live per-index serving counters
-  *     into the contract's metrics frame for the current window;
-  *  2. apply — read the NEWEST policy frame the sidecar has produced
-  *     (the sidecar lags by design: it decides off a window it has seen)
-  *     and apply each tenant's TTL to the live engine
-  *     ([[GraftEngine.applyServingPolicy]]), so subsequent wire misses
-  *     cache under the new TTL.
-  *
-  * Ticks are deterministic and callable directly ([[tick]]) for tests;
-  * [[start]] wraps them in a daemon thread at the reference's cadence.
-  * A tick never throws into the loop thread — a malformed/skewed frame
-  * fails that tick's apply half loudly in the log and the engine keeps
-  * serving under its last applied policy (the reference likewise treats
-  * sidecar failure as "keep current policy", SidecarMetricsReporter's
-  * catch path). */
-final class SidecarLoop(engine: GraftEngine, spark: SparkSession,
-                        contractDir: String) {
+  * Ticks are deterministic and callable directly for tests; [[start]]
+  * wraps them in a daemon thread at the reference's cadence. A tick never
+  * throws into the loop thread — a refused, skewed or timed-out exchange
+  * fails that tick loudly in the log and the engine keeps serving under
+  * its last applied policy (the reference likewise treats sidecar failure
+  * as "keep current policy", SidecarMetricsReporter's catch path). */
+final class SidecarLoop(engine: GraftEngine, client: SidecarWire.Client) {
 
-  /** Publish the live serving counters as this window's metrics frame.
-    * One row per (tenant, index) pair folded to the contract's tenant
-    * grain: n_requests = hits + misses since the last durable flush. */
-  def publishMetrics(window: Long): Unit = {
-    val perTenant = engine.servingCountersLive
-      .groupBy(_._1)
-      .map { case (t, rows) =>
-        val h = rows.map(_._3).sum; val m = rows.map(_._4).sum
-        Row(t, window, h + m, m)
-      }.toSeq
-    if (perTenant.nonEmpty) {
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(perTenant, 1),
-        StructType(SidecarContract.MetricsSchema.fields))
-      SidecarContract.writeMetrics(df, contractDir, window)
-    }
-  }
-
-  /** Newest policy window the sidecar has published, if any. */
-  private[streaming] def latestPolicyWindow: Option[Long] = {
-    val dir = Paths.get(s"$contractDir/policies")
-    if (!Files.exists(dir)) None
-    else {
-      val it = Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator().asScala
-          .map(_.getFileName.toString)
-          .collect { case s if s.startsWith("window=") =>
-            s.stripPrefix("window=")
-          }
-          .collect { case s if s.forall(_.isDigit) && s.nonEmpty => s.toLong }
-          .maxOption
-      } finally it.close()
-    }
-  }
-
-  /** Apply the newest published policy frame to the live engine. Returns
-    * the applied window, or None when the sidecar has not produced one
-    * yet (the engine keeps serving under its current policy). */
-  def applyPolicies(): Option[Long] =
-    latestPolicyWindow.map { w =>
-      SidecarContract.readPolicies(spark, contractDir, w)
-        .collect()
-        .foreach { r =>
-          engine.applyServingPolicy(
-            r.getAs[String]("tenant"),
-            r.getAs[Int]("ttl_seconds"),
-            r.getAs[Double]("admission_threshold"),
-            r.getAs[String]("eviction_priority"))
-        }
-      w
-    }
-
-  /** One full loop iteration: publish this window's metrics, then apply
-    * whatever policy frame is newest. */
-  def tick(window: Long): Unit = {
-    publishMetrics(window)
-    applyPolicies()
-  }
-
-  /** One loop iteration over the framed TCP/mTLS channel
-    * ([[SidecarWire]]) instead of the contract directory: same two
-    * halves, but the sidecar's reply frame IS this window's policy
-    * application — the request/response form of the reference's gRPC
-    * exchange. Skew or refusal throws (the caller keeps the engine on
-    * its last applied policy, like [[start]]'s catch path). */
-  def tickWire(window: Long, client: SidecarWire.Client): Unit = {
-    val rows = engine.servingCountersLive
-      .groupBy(_._1)
-      .map { case (t, rs) =>
-        val h = rs.map(_._3).sum; val m = rs.map(_._4).sum
-        SidecarWire.MetricsRow(t, window, h + m, m)
-      }.toSeq
-    client.exchange(rows).foreach { p =>
-      engine.applyServingPolicy(p.tenant, p.ttlSeconds,
-        p.admissionThreshold, p.evictionPriority)
-    }
-  }
-
-  /** One loop iteration over the gRPC-style proto framing
-    * ([[SidecarProto]]): the reference's ReportSystemMetrics RPC is
-    * GLOBAL — SidecarMetricsReporter.cs:52-110 reports one system-wide
-    * snapshot and DynamicPolicyEngine.cs:31-45 applies the single
-    * returned WarmPathPolicy — so this tick aggregates across tenants,
-    * sends one SystemMetricsRequest, and applies the reply's policy to
-    * every tenant currently serving. */
-  def tickWireProto(windowMs: Long, client: SidecarWire.Client): Unit = {
+  /** One loop iteration: report the live counters stamped `windowMs`,
+    * apply the reply's policy. The exchange fails after `timeoutMs`. */
+  def tick(windowMs: Long, timeoutMs: Int = SidecarWire.DefaultTimeoutMs): Unit = {
     val counters = engine.servingCountersLive
     val hits = counters.map(_._3).sum
     val misses = counters.map(_._4).sum
@@ -130,12 +35,11 @@ final class SidecarLoop(engine: GraftEngine, spark: SparkSession,
     val resp = client.exchangeProto(SidecarProto.SystemMetricsRequest(
       missRate = if (total > 0) misses.toDouble / total else 0.0,
       cacheHitTotal = hits, cacheMissTotal = misses,
-      timestampUnixMs = windowMs))
+      timestampUnixMs = windowMs), timeoutMs)
     resp.policy.foreach { p =>
-      val tenants = counters.map(_._1).distinct
-      (if (tenants.nonEmpty) tenants else Seq(SidecarWire.GlobalTenant))
-        .foreach(t => engine.applyServingPolicy(t, p.ttlSeconds,
-          p.admissionThreshold, SidecarProto.evictionName(p.evictionPriority)))
+      counters.map(_._1).distinct.foreach(t => engine.applyServingPolicy(t,
+        p.ttlSeconds, p.admissionThreshold,
+        SidecarProto.evictionName(p.evictionPriority)))
     }
   }
 
@@ -144,20 +48,22 @@ final class SidecarLoop(engine: GraftEngine, spark: SparkSession,
   private val pause = new Object
 
   /** Run [[tick]] every `intervalMs` (reference default: 10 s) on a
-    * daemon thread; windows are epoch-milli / interval, so engine and
-    * sidecar agree on window ids from wall clock alone. */
+    * daemon thread. Each exchange is bounded by the interval: a tick that
+    * cannot finish before the next one is due has failed. */
   def start(intervalMs: Long = 10000L): Unit = {
     require(runner == null, "sidecar loop already started")
+    require(intervalMs > 0, s"sidecar interval must be positive: $intervalMs")
+    val timeoutMs = math.min(intervalMs, Int.MaxValue.toLong).toInt
     running = true
     runner = new Thread(() => {
       while (running) {
-        try tick(System.currentTimeMillis() / intervalMs)
+        try tick(System.currentTimeMillis(), timeoutMs)
         catch {
           case NonFatal(e) =>
             System.err.println(s"[sidecar-loop] tick failed: ${e.getMessage}")
         }
-        // wait/notify, NOT sleep+interrupt: close() must never interrupt
-        // a tick's in-flight Spark write (a spurious TASK_WRITE_FAILED)
+        // wait/notify, NOT sleep+interrupt: close() lets an in-flight
+        // exchange finish (it is bounded by the interval)
         pause.synchronized { if (running) pause.wait(intervalMs) }
       }
     }, "graft-sidecar-loop")

@@ -4,28 +4,28 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Hand-rolled proto3 wire codec for the sidecar boundary's gRPC message
-  * shapes — the last literal transport divergence the verdicts tracked.
+  * shapes — the one encoding [[SidecarWire]] frames carry.
   *
   * The reference defines the boundary in protobuf and speaks it over
   * gRPC (reference: src/Protos/policy_service.proto — `SystemMetricsRequest`
   * fields 1-8, `SystemMetricsResponse` 1-3, `WarmPathPolicy` 1-3,
-  * `ClusterAccess`/`PrefetchRule` et al.; server
+  * `GetPrefetchRulesRequest`/`PrefetchRule`; server
   * src/Pyrope.AISidecar/server.py:268-291, consumer
-  * Services/PredictivePrefetcher.cs:235-264). The contract SEMANTICS were
-  * already modeled ([[SidecarContract]]) and driven over a real socket
-  * ([[SidecarWire]]); this module supplies the proto3 WIRE ENCODING of
-  * those messages — exact field numbers and wire types from the
-  * reference's .proto — plus gRPC's 5-byte length-prefixed message frame,
-  * so a frame produced here is byte-identical to what a protoc-generated
-  * encoder emits for the same message. Encoding rules are the public
-  * proto3 wire format: varint (base-128, LSB-first, MSB continuation),
-  * fixed64 little-endian for doubles, length-delimited for
-  * strings/sub-messages; fields at their proto3 default are omitted on
-  * encode and read back as defaults; unknown tags are skipped by wire
-  * type (the proto version-skew posture — new fields never break an old
-  * reader). What remains unbuilt of the literal transport is ONLY the
-  * HTTP/2 layer gRPC rides on (stream multiplexing + HPACK); framing,
-  * message encoding, and the mTLS channel all exist.
+  * Services/PredictivePrefetcher.cs:235-264). This module supplies the
+  * proto3 WIRE ENCODING of the messages its two unary RPCs
+  * (ReportSystemMetrics, GetPrefetchRules) exchange — exact field numbers
+  * and wire types from the reference's .proto — plus gRPC's 5-byte
+  * length-prefixed message frame, so a frame produced here is
+  * byte-identical to what a protoc-generated encoder emits for the same
+  * message. Encoding rules are the public proto3 wire format: varint
+  * (base-128, LSB-first, MSB continuation), fixed64 little-endian for
+  * doubles, length-delimited for strings/sub-messages; fields at their
+  * proto3 default are omitted on encode and read back as defaults;
+  * unknown tags are skipped by wire type (the proto version-skew posture
+  * — new fields never break an old reader). What remains unbuilt of the
+  * literal transport is ONLY the HTTP/2 layer gRPC rides on (stream
+  * multiplexing + HPACK); framing, message encoding, and the mTLS channel
+  * all exist.
   *
   * Decode hardening matches the repo's other wire codecs: every length
   * is bounds-checked against the buffer BEFORE allocation, varints are
@@ -57,12 +57,6 @@ object SidecarProto {
                                          nextReportIntervalMs: Int = 0,
                                          policy: Option[WarmPathPolicy] = None)
 
-  final case class ClusterAccess(timestamp: Long = 0L, clusterId: Int = 0)
-
-  final case class ReportClusterAccessRequest(tenantId: String = "",
-                                              indexName: String = "",
-                                              accesses: Seq[ClusterAccess] = Nil)
-
   final case class GetPrefetchRulesRequest(tenantId: String = "",
                                            indexName: String = "")
 
@@ -72,8 +66,8 @@ object SidecarProto {
   final case class GetPrefetchRulesResponse(rules: Seq[PrefetchRule] = Nil)
 
   /** policy_engine.py's eviction_priority domain is int 0..2 (default 0,
-    * aggressive 1 — tests/test_policy_engine.py:17,25); the repo's policy
-    * frames carry the names. Unknown names encode as 0 (the reference's
+    * aggressive 1 — tests/test_policy_engine.py:17,25); the engine applies
+    * policies by name. Unknown names encode as 0 (the reference's
     * default), unknown codes decode to a stable synthetic name. */
   def evictionCode(name: String): Int = name match {
     case "aggressive" => 1
@@ -282,54 +276,6 @@ object SidecarProto {
   }
 
   // ---- prefetch RPC messages -----------------------------------------
-
-  def encodeClusterAccess(a: ClusterAccess): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt64Field(out, 1, a.timestamp)
-    writeInt32Field(out, 2, a.clusterId)
-    out.toByteArray
-  }
-
-  private def decodeClusterAccess(buf: Array[Byte], from: Int, until: Int): ClusterAccess = {
-    val r = new Reader(buf, from, until)
-    var a = ClusterAccess()
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      val (f, w) = ((tag >>> 3).toInt, (tag & 7).toInt)
-      (f, w) match {
-        case (1, WireVarint) => a = a.copy(timestamp = r.readVarint())
-        case (2, WireVarint) => a = a.copy(clusterId = r.readVarint().toInt)
-        case _ => r.skip(w)
-      }
-    }
-    a
-  }
-
-  def encodeReportClusterAccessRequest(m: ReportClusterAccessRequest): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeStringField(out, 1, m.tenantId)
-    writeStringField(out, 2, m.indexName)
-    m.accesses.foreach(a => writeMessageField(out, 3, encodeClusterAccess(a)))
-    out.toByteArray
-  }
-
-  def decodeReportClusterAccessRequest(buf: Array[Byte]): ReportClusterAccessRequest = {
-    val r = new Reader(buf, 0, buf.length)
-    var m = ReportClusterAccessRequest()
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      val (f, w) = ((tag >>> 3).toInt, (tag & 7).toInt)
-      (f, w) match {
-        case (1, WireLenDelim) => m = m.copy(tenantId = str(buf, r.readLenDelim()))
-        case (2, WireLenDelim) => m = m.copy(indexName = str(buf, r.readLenDelim()))
-        case (3, WireLenDelim) =>
-          val (s, e) = r.readLenDelim()
-          m = m.copy(accesses = m.accesses :+ decodeClusterAccess(buf, s, e))
-        case _ => r.skip(w)
-      }
-    }
-    m
-  }
 
   def encodeGetPrefetchRulesRequest(m: GetPrefetchRulesRequest): Array[Byte] = {
     val out = new ByteArrayOutputStream()

@@ -1,109 +1,63 @@
 package graft.streaming
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, FilterInputStream, InputStream, OutputStream}
+import java.net.{InetAddress, InetSocketAddress, ServerSocket, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import javax.net.ssl.SSLContext
 
 import scala.util.control.NonFatal
 
-import graft.Json
-
-/** The engine ↔ sidecar boundary as a NETWORK transport: length-prefixed
-  * frames over TCP, optionally under mutually-authenticated TLS —
-  * carrying the same versioned payloads as the [[SidecarContract]]
-  * directory form.
+/** The engine ↔ sidecar boundary: length-prefixed frames over TCP,
+  * optionally under mutually-authenticated TLS, each carrying one
+  * gRPC-framed proto3 message ([[SidecarProto]]).
   *
   * The reference's sidecar speaks gRPC with mTLS (reference:
   * src/Pyrope.AISidecar/server.py:268-291, consumer
-  * Services/PredictivePrefetcher.cs:235-264). The contract SEMANTICS
-  * (field sets, version skew behavior) were already modeled by
-  * [[SidecarContract]]; this module supplies the transport encoding that
-  * verdict after verdict listed as the one unbuilt piece: framing,
-  * version handshake, and the mutual-auth channel (JDK TLS with
-  * client-auth required — certificate provisioning is the deployment's
-  * business, so both endpoints take a pre-built [[SSLContext]]).
+  * Services/PredictivePrefetcher.cs:235-264). This module supplies the
+  * transport around its two unary RPCs, ReportSystemMetrics and
+  * GetPrefetchRules: framing, version handshake, and the mutual-auth
+  * channel (JDK TLS with client-auth required — certificate provisioning
+  * is the deployment's business, so both endpoints take a pre-built
+  * [[SSLContext]]).
   *
   * Frame layout (all ints big-endian):
   * {{{
   *   magic   u32  0x47524654 ("GRFT")
-  *   type    u8   1 = METRICS (engine→sidecar)  2 = POLICIES (reply)
-  *                3 = ERR (reply; payload = message)
-  *   version i32  SidecarContract.Version of the SENDER
+  *   type    u8   3 = ERR (reply; payload = UTF-8 message)
+  *                4 = SystemMetricsRequest   5 = SystemMetricsResponse
+  *                6 = GetPrefetchRulesRequest 7 = GetPrefetchRulesResponse
+  *   version i32  [[Version]] of the SENDER
   *   length  i32  payload byte count (bounded; oversize refused loudly)
-  *   payload      UTF-8, one JSON object per row, '\n'-separated
+  *   payload      gRPC 5-byte-prefixed proto3 message (or the ERR text)
   * }}}
   *
   * Version skew fails the exchange loudly on BOTH sides — the server
   * replies ERR naming both versions (never a silently re-interpreted
   * frame), and a client that receives a reply stamped with a version it
-  * does not speak throws before decoding a single row — exactly the
-  * failure posture the directory contract pins. Scale shape: one frame
-  * per decision window, a few rows per tenant — driver-light by design;
-  * the 16 MB payload bound is a refusal threshold, not a target.
+  * does not speak throws before decoding it. Scale shape: one frame per
+  * decision window — driver-light by design; the 16 MB payload bound is
+  * a refusal threshold, not a target.
   */
 object SidecarWire {
 
+  /** Boundary version this module speaks. */
+  val Version = 1
+
   val Magic = 0x47524654
-  val TypeMetrics: Byte = 1
-  val TypePolicies: Byte = 2
   val TypeErr: Byte = 3
-  // proto-framed RPCs: payloads are gRPC 5-byte-prefixed proto3 messages
-  // ([[SidecarProto]]) — the reference's ReportSystemMetrics and
-  // GetPrefetchRules unary calls (policy_service.proto), byte-compatible
-  // with a protoc encoder. Reply to 4 is 5; reply to 6 is 7.
+  // payloads are gRPC 5-byte-prefixed proto3 messages ([[SidecarProto]])
+  // — the reference's ReportSystemMetrics and GetPrefetchRules unary
+  // calls (policy_service.proto), byte-compatible with a protoc encoder.
+  // Reply to 4 is 5; reply to 6 is 7.
   val TypeMetricsProto: Byte = 4
   val TypePoliciesProto: Byte = 5
   val TypePrefetchReqProto: Byte = 6
   val TypePrefetchRulesProto: Byte = 7
   val MaxPayloadBytes: Int = 16 << 20
 
-  /** Tenant key the global (tenant-less) proto metrics RPC folds onto
-    * when it meets the per-tenant row handler. */
-  val GlobalTenant = "__global__"
-
-  /** One metrics row — mirrors [[SidecarContract.MetricsSchema]]. */
-  final case class MetricsRow(tenant: String, window: Long,
-                              nRequests: Long, nMisses: Long)
-
-  /** One policy row — mirrors [[SidecarContract.PoliciesSchema]]. */
-  final case class PolicyRow(tenant: String, window: Long,
-                             ttlSeconds: Int, admissionThreshold: Double,
-                             evictionPriority: String)
-
-  // ---- row codecs: JSON lines, one object per row -------------------
-
-  private def decodeRows[A](payload: Array[Byte])(row: Json.Obj => A): Seq[A] =
-    new String(payload, UTF_8).split('\n').toSeq.filter(_.nonEmpty)
-      .map(j => row(Json.parse(s"frame row $j", j)))
-
-  private[graft] def encodeMetrics(rows: Seq[MetricsRow]): Array[Byte] =
-    rows.map(r =>
-      s"""{"tenant":${Json.quote(r.tenant)},"window":${r.window},""" +
-        s""""n_requests":${r.nRequests},"n_misses":${r.nMisses}}""")
-      .mkString("\n").getBytes(UTF_8)
-
-  private[graft] def decodeMetrics(payload: Array[Byte]): Seq[MetricsRow] =
-    decodeRows(payload) { o =>
-      MetricsRow(o.need("tenant")(o.string), o.need("window")(o.long),
-        o.need("n_requests")(o.long), o.need("n_misses")(o.long))
-    }
-
-  private[graft] def encodePolicies(rows: Seq[PolicyRow]): Array[Byte] =
-    rows.map(r =>
-      s"""{"tenant":${Json.quote(r.tenant)},"window":${r.window},""" +
-        s""""ttl_seconds":${r.ttlSeconds},""" +
-        s""""admission_threshold":${r.admissionThreshold},""" +
-        s""""eviction_priority":${Json.quote(r.evictionPriority)}}""")
-      .mkString("\n").getBytes(UTF_8)
-
-  private[graft] def decodePolicies(payload: Array[Byte]): Seq[PolicyRow] =
-    decodeRows(payload) { o =>
-      PolicyRow(o.need("tenant")(o.string), o.need("window")(o.long),
-        o.need("ttl_seconds")(o.int), o.need("admission_threshold")(o.double),
-        o.need("eviction_priority")(o.string))
-    }
+  /** An exchange's default bound: the reference's 10 s report interval. */
+  val DefaultTimeoutMs = 10000
 
   // ---- framing -------------------------------------------------------
 
@@ -114,7 +68,7 @@ object SidecarWire {
     val d = new DataOutputStream(out)
     d.writeInt(Magic)
     d.writeByte(msgType)
-    d.writeInt(SidecarContract.Version)
+    d.writeInt(Version)
     d.writeInt(payload.length)
     d.write(payload)
     d.flush()
@@ -139,14 +93,16 @@ object SidecarWire {
 
   // ---- endpoints -----------------------------------------------------
 
-  /** Sidecar-side server: one policy decision per metrics frame.
+  /** Sidecar-side server: one [[SidecarProto.WarmPathPolicy]] decision
+    * per SystemMetricsRequest, and `prefetchRules(tenant, index)` per
+    * GetPrefetchRulesRequest.
     *
     * `ssl = Some(ctx)` serves TLS with client auth REQUIRED (mTLS): a
     * peer without a certificate the server's trust material accepts
     * never reaches the handler. Handler failures become ERR frames, not
     * dropped connections. Connections are handled on daemon threads;
     * each carries any number of sequential exchanges. */
-  final class Server(handler: Seq[MetricsRow] => Seq[PolicyRow],
+  final class Server(handler: SidecarProto.SystemMetricsRequest => Option[SidecarProto.WarmPathPolicy],
                      ssl: Option[SSLContext] = None,
                      prefetchRules: (String, String) => Seq[(Int, Int)] =
                        (_, _) => Seq.empty) extends AutoCloseable {
@@ -163,6 +119,17 @@ object SidecarWire {
 
     def port: Int = server.getLocalPort
 
+    /** Reply with `body`'s message, or ERR when decoding or the handler
+      * fails. */
+    private def reply(out: OutputStream, replyType: Byte, what: String)(
+        body: => Array[Byte]): Unit =
+      try writeFrame(out, replyType, SidecarProto.grpcFrame(body))
+      catch {
+        case NonFatal(e) =>
+          writeFrame(out, TypeErr,
+            s"$what handler failed: ${e.getMessage}".getBytes(UTF_8))
+      }
+
     private def serve(sock: Socket): Unit = {
       val in = new BufferedInputStream(sock.getInputStream)
       val out = new BufferedOutputStream(sock.getOutputStream)
@@ -171,58 +138,33 @@ object SidecarWire {
           val (msgType, version, payload) =
             try readFrame(in)
             catch { case _: EOFException => return } // peer done
-          if (version != SidecarContract.Version)
+          if (version != Version)
             writeFrame(out, TypeErr,
               (s"contract version skew: peer speaks v$version, " +
-                s"this sidecar speaks v${SidecarContract.Version}").getBytes(UTF_8))
-          else if (msgType == TypeMetrics) {
-            try writeFrame(out, TypePolicies,
-              encodePolicies(handler(decodeMetrics(payload))))
-            catch {
-              case NonFatal(e) =>
-                writeFrame(out, TypeErr,
-                  s"policy handler failed: ${e.getMessage}".getBytes(UTF_8))
-            }
-          } else if (msgType == TypeMetricsProto) {
+                s"this sidecar speaks v$Version").getBytes(UTF_8))
+          else msgType match {
             // the reference's ReportSystemMetrics RPC is GLOBAL (no
-            // tenant field — policy_service.proto SystemMetricsRequest);
-            // fold it onto the row handler as the global tenant and
-            // reply with the head policy as a WarmPathPolicy
-            try {
+            // tenant field — policy_service.proto SystemMetricsRequest)
+            case TypeMetricsProto => reply(out, TypePoliciesProto, "policy") {
               val req = SidecarProto.decodeSystemMetricsRequest(
                 SidecarProto.grpcUnframe(payload))
-              val rows = Seq(MetricsRow(GlobalTenant, req.timestampUnixMs,
-                req.cacheHitTotal + req.cacheMissTotal, req.cacheMissTotal))
-              val policy = handler(rows).headOption.map(p =>
-                SidecarProto.WarmPathPolicy(p.admissionThreshold, p.ttlSeconds,
-                  SidecarProto.evictionCode(p.evictionPriority)))
-              writeFrame(out, TypePoliciesProto, SidecarProto.grpcFrame(
-                SidecarProto.encodeSystemMetricsResponse(
-                  SidecarProto.SystemMetricsResponse("ok",
-                    nextReportIntervalMs = 10000, policy = policy))))
-            } catch {
-              case NonFatal(e) =>
-                writeFrame(out, TypeErr,
-                  s"policy handler failed: ${e.getMessage}".getBytes(UTF_8))
+              SidecarProto.encodeSystemMetricsResponse(
+                SidecarProto.SystemMetricsResponse("ok",
+                  nextReportIntervalMs = 10000, policy = handler(req)))
             }
-          } else if (msgType == TypePrefetchReqProto) {
-            try {
+            case TypePrefetchReqProto => reply(out, TypePrefetchRulesProto, "prefetch rules") {
               val req = SidecarProto.decodeGetPrefetchRulesRequest(
                 SidecarProto.grpcUnframe(payload))
-              val rules = prefetchRules(req.tenantId, req.indexName)
-                .map { case (cur, nxt) => SidecarProto.PrefetchRule(cur, nxt) }
-              writeFrame(out, TypePrefetchRulesProto, SidecarProto.grpcFrame(
-                SidecarProto.encodeGetPrefetchRulesResponse(
-                  SidecarProto.GetPrefetchRulesResponse(rules))))
-            } catch {
-              case NonFatal(e) =>
-                writeFrame(out, TypeErr,
-                  s"prefetch rules handler failed: ${e.getMessage}".getBytes(UTF_8))
+              SidecarProto.encodeGetPrefetchRulesResponse(
+                SidecarProto.GetPrefetchRulesResponse(
+                  prefetchRules(req.tenantId, req.indexName)
+                    .map { case (cur, nxt) => SidecarProto.PrefetchRule(cur, nxt) }))
             }
-          } else
-            writeFrame(out, TypeErr,
-              (s"unexpected frame type $msgType — sidecar accepts METRICS, " +
-                "METRICS_PROTO, PREFETCH_REQ_PROTO").getBytes(UTF_8))
+            case _ =>
+              writeFrame(out, TypeErr,
+                (s"unexpected frame type $msgType — sidecar accepts " +
+                  "METRICS_PROTO, PREFETCH_REQ_PROTO").getBytes(UTF_8))
+          }
         }
       } catch {
         case NonFatal(e) if running =>
@@ -254,46 +196,50 @@ object SidecarWire {
     override def close(): Unit = { running = false; server.close() }
   }
 
-  /** Engine-side client: one metrics→policies round trip per call. A
-    * fresh connection per exchange keeps the client stateless (a window
-    * tick every 10 s amortizes nothing worth a pooled socket). */
+  /** Engine-side client: one request/reply round trip per call, bounded
+    * by `timeoutMs`: the connect, the TLS handshake and each reply read
+    * wait at most the time left. A fresh connection per exchange keeps
+    * the client stateless (a window tick every 10 s amortizes nothing
+    * worth a pooled socket). */
   final class Client(host: String, port: Int,
                      ssl: Option[SSLContext] = None) {
-    def exchange(metrics: Seq[MetricsRow]): Seq[PolicyRow] =
-      roundTrip(TypeMetrics, encodeMetrics(metrics), TypePolicies,
-        decodePolicies)
 
-    /** The reference's unary ReportSystemMetrics over the proto framing:
-      * one gRPC-framed SystemMetricsRequest out, one SystemMetricsResponse
-      * back. Same skew/refusal posture as [[exchange]]. */
-    def exchangeProto(req: SidecarProto.SystemMetricsRequest): SidecarProto.SystemMetricsResponse =
+    /** The reference's unary ReportSystemMetrics: one gRPC-framed
+      * SystemMetricsRequest out, one SystemMetricsResponse back. */
+    def exchangeProto(req: SidecarProto.SystemMetricsRequest,
+                      timeoutMs: Int = DefaultTimeoutMs): SidecarProto.SystemMetricsResponse =
       roundTrip(TypeMetricsProto,
         SidecarProto.grpcFrame(SidecarProto.encodeSystemMetricsRequest(req)),
-        TypePoliciesProto, p =>
+        TypePoliciesProto, timeoutMs)(p =>
           SidecarProto.decodeSystemMetricsResponse(SidecarProto.grpcUnframe(p)))
 
-    /** The reference's unary GetPrefetchRules over the proto framing. */
+    /** The reference's unary GetPrefetchRules. */
     def prefetchRulesProto(req: SidecarProto.GetPrefetchRulesRequest): SidecarProto.GetPrefetchRulesResponse =
       roundTrip(TypePrefetchReqProto,
         SidecarProto.grpcFrame(SidecarProto.encodeGetPrefetchRulesRequest(req)),
-        TypePrefetchRulesProto, p =>
+        TypePrefetchRulesProto, DefaultTimeoutMs)(p =>
           SidecarProto.decodeGetPrefetchRulesResponse(SidecarProto.grpcUnframe(p)))
 
     private def roundTrip[A](reqType: Byte, reqPayload: Array[Byte],
-                             wantType: Byte, decode: Array[Byte] => A): A = {
-      val sock: Socket = ssl match {
-        case Some(ctx) => ctx.getSocketFactory.createSocket(host, port)
-        case None => new Socket(host, port)
-      }
+                             wantType: Byte, timeoutMs: Int)(
+        decode: Array[Byte] => A): A = {
+      require(timeoutMs > 0, s"exchange timeout must be positive: $timeoutMs")
+      val deadlineNs = System.nanoTime() + timeoutMs * 1000000L
+      val raw = new Socket()
+      val sock = try {
+        raw.connect(new InetSocketAddress(host, port), timeoutMs)
+        arm(raw, deadlineNs) // bounds the TLS handshake's reads too
+        ssl.fold(raw)(_.getSocketFactory.createSocket(raw, host, port, true))
+      } catch { case NonFatal(e) => raw.close(); throw e }
       try {
         sock.setTcpNoDelay(true)
         val out = new BufferedOutputStream(sock.getOutputStream)
         writeFrame(out, reqType, reqPayload)
         val (msgType, version, payload) =
-          readFrame(new BufferedInputStream(sock.getInputStream))
-        require(version == SidecarContract.Version,
+          readFrame(new BufferedInputStream(new DeadlineInput(sock, deadlineNs)))
+        require(version == Version,
           s"contract version skew: sidecar replied v$version, " +
-            s"this engine speaks v${SidecarContract.Version}")
+            s"this engine speaks v$Version")
         msgType match {
           case t if t == wantType => decode(payload)
           case TypeErr =>
@@ -303,6 +249,24 @@ object SidecarWire {
             throw new IllegalStateException(s"unexpected reply type $other")
         }
       } finally sock.close()
+    }
+  }
+
+  /** Set `sock`'s read timeout to the time left before `deadlineNs`. */
+  private def arm(sock: Socket, deadlineNs: Long): Unit = {
+    val leftMs = (deadlineNs - System.nanoTime()) / 1000000L
+    if (leftMs <= 0) throw new SocketTimeoutException("sidecar exchange deadline passed")
+    sock.setSoTimeout(leftMs.toInt)
+  }
+
+  /** A socket's input whose reads share one deadline: each read re-arms
+    * the read timeout to the time left, so a peer that dribbles bytes
+    * cannot stretch an exchange past it. */
+  private final class DeadlineInput(sock: Socket, deadlineNs: Long)
+      extends FilterInputStream(sock.getInputStream) {
+    override def read(): Int = { arm(sock, deadlineNs); super.read() }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      arm(sock, deadlineNs); super.read(b, off, len)
     }
   }
 }

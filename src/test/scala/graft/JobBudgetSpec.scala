@@ -107,16 +107,16 @@ class JobBudgetSpec extends SparkSpec {
     jobs
   }
 
-  // GraftEngine 5: the id pool's collect, then the tag index's records
-  // schema read, size aggregation and collect
+  // GraftEngine 4: the id pool's collect, then the tag index's size
+  // aggregation and collect over the records table's declared schema
   test("job budget: IVF_FLAT first filtered search") {
     val jobs = firstFiltered("IVF_FLAT")
-    assert(jobs == Map("GraftEngine" -> 5, "IvfFlat" -> 2, "unattributed" -> 1), jobs)
+    assert(jobs == Map("GraftEngine" -> 4, "IvfFlat" -> 2, "unattributed" -> 1), jobs)
   }
 
   test("job budget: IVF_PQ first filtered search") {
     val jobs = firstFiltered("IVF_PQ")
-    assert(jobs == Map("GraftEngine" -> 5, "IvfPq" -> 2, "Pq" -> 1,
+    assert(jobs == Map("GraftEngine" -> 4, "IvfPq" -> 2, "Pq" -> 1,
       "unattributed" -> 1), jobs)
   }
 }

@@ -254,14 +254,14 @@ class PropertySpec extends SparkSpec {
   private def few[A](g: Gen[A]): Gen[A] = Gen.resize(4, g)
 
   /** render → parse is the identity (compared through `view`), and every
-    * strict prefix of the rendered text, from `from` chars on, throws
-    * `err` with a message naming `label` — never reads as defaults. */
+    * strict prefix of the rendered text throws `err` with a message
+    * naming `label` — never reads as defaults. */
   private def roundTrips[A, B](gen: Gen[A], err: Class[_ <: RuntimeException],
-                               label: String, from: Int = 0)(render: A => String)(
+                               label: String)(render: A => String)(
                                parse: String => B)(view: A => B): Unit =
     check(Prop.forAll(gen) { a =>
       val text = render(a)
-      parse(text) == view(a) && (from until text.length).forall { n =>
+      parse(text) == view(a) && (0 until text.length).forall { n =>
         try { parse(text.substring(0, n)); false }
         catch { case e: RuntimeException =>
           err.isInstance(e) && e.getMessage.contains(label) }
@@ -269,12 +269,8 @@ class PropertySpec extends SparkSpec {
     })
 
   test("strict JSON codec: every record round-trips; no strict prefix reads as defaults") {
-    import java.nio.charset.StandardCharsets.UTF_8
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
     import org.scalacheck.Arbitrary.arbitrary
     import graft.operators.{ScalarQuant, Sq16Store}
-    import graft.streaming.{SidecarContract, SidecarWire}
     val ise = classOf[IllegalStateException]
     val iae = classOf[IllegalArgumentException]
     // the writers render ±Infinity and NaN as Scala prints them
@@ -318,38 +314,5 @@ class PropertySpec extends SparkSpec {
     roundTrips(Gen.zip(flt, flt).map(ScalarQuant.Params.tupled),
       iae, "bad params file q")(ScalarQuant.renderParams)(
       t => paramsView(ScalarQuant.parseParams("q", t)))(paramsView)
-
-    // one row per case: a prefix ending at a row boundary of a longer
-    // payload is a shorter valid frame, and the empty payload is the
-    // valid empty frame, so prefixes start at one char
-    val metrics = for { t <- nasty; w <- long; n <- long; m <- long }
-      yield SidecarWire.MetricsRow(t, w, n, m)
-    roundTrips(metrics, iae, "frame row", from = 1)(r =>
-      new String(SidecarWire.encodeMetrics(Seq(r)), UTF_8))(t =>
-      SidecarWire.decodeMetrics(t.getBytes(UTF_8)))(Seq(_))
-    val policies = for { t <- nasty; w <- long; ttl <- int; th <- dbl; e <- nasty }
-      yield SidecarWire.PolicyRow(t, w, ttl, th, e)
-    roundTrips(policies, iae, "frame row", from = 1)(r =>
-      new String(SidecarWire.encodePolicies(Seq(r)), UTF_8))(t =>
-      SidecarWire.decodePolicies(t.getBytes(UTF_8)))(Seq(_))
-
-    // CONTRACT.json: the version stamp plus named schemas of field → type
-    val schema = few(Gen.mapOf(Gen.zip(nasty,
-      Gen.oneOf[DataType](StringType, LongType, IntegerType, DoubleType))))
-    val contract = Gen.zip(int, few(Gen.mapOf(Gen.zip(nasty.suchThat(_ != "version"), schema))))
-    roundTrips(contract, ise, "unparseable CONTRACT.json at c") { case (v, schemas) =>
-      SidecarContract.renderContract(v, schemas.toSeq.map { case (n, fs) =>
-        n -> StructType(fs.toSeq.map { case (f, t) => StructField(f, t) }) }: _*)
-    } { text =>
-      // the reader reads only the version; the schemas are checked with
-      // a general JSON parser
-      val v = SidecarContract.contractVersion("c", text)
-      val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      (v, tree.properties.asScala.filter(_.getKey != "version").map { e =>
-        e.getKey -> e.getValue.properties.asScala.map(f => f.getKey -> f.getValue.asText).toMap
-      }.toMap)
-    } { case (v, schemas) =>
-      (v, schemas.map { case (n, fs) => n -> fs.map { case (f, t) => f -> t.simpleString } })
-    }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{ScalarQuant, Sq16Store}
-import graft.streaming.SidecarContract
 
 /** Every on-disk record type the strict JSON codec reads, pinned to the
   * exact bytes the writers produced before the codec existed (regex
@@ -51,10 +50,5 @@ class RecordFormatSpec extends SparkSpec {
     pinned("""{"min": 1.0E-7, "max": 3.4028235E38}""",
       ScalarQuant.Params(1.0e-7f, Float.MaxValue))(ScalarQuant.renderParams)(
       ScalarQuant.parseParams)
-
-    val contract = """{"version":1,"metrics":{"tenant":"string","window":"bigint","n_requests":"bigint","n_misses":"bigint"},"policies":{"tenant":"string","window":"bigint","ttl_seconds":"int","admission_threshold":"double","eviction_priority":"string"}}"""
-    assert(SidecarContract.contractVersion("fixture", contract) == 1)
-    assert(SidecarContract.renderContract(1, "metrics" -> SidecarContract.MetricsSchema,
-      "policies" -> SidecarContract.PoliciesSchema) == contract)
   }
 }

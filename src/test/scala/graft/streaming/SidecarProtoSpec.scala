@@ -1,15 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
+import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.functions._
-
-import graft.{GraftEngine, SparkSpec}
 import graft.streaming.SidecarProto._
-import graft.streaming.SidecarWire.{MetricsRow, PolicyRow}
 
-class SidecarProtoSpec extends SparkSpec {
-  import spark.implicits._
+class SidecarProtoSpec extends AnyFunSuite {
 
   private def hex(b: Array[Byte]): String =
     b.map(x => f"${x & 0xFF}%02x").mkString(" ")
@@ -50,12 +45,8 @@ class SidecarProtoSpec extends SparkSpec {
       Some(WarmPathPolicy(0.05, 300, 2)))
     assert(decodeSystemMetricsResponse(encodeSystemMetricsResponse(resp)) == resp)
     assert(decodeSystemMetricsResponse(Array.empty) == SystemMetricsResponse())
-    val acc = ReportClusterAccessRequest("tenant-a", "idx/1", Seq(
-      ClusterAccess(1000L, 3), ClusterAccess(1001L, 7), ClusterAccess(1002L, 3)))
-    assert(decodeReportClusterAccessRequest(
-      encodeReportClusterAccessRequest(acc)) == acc)
     val rules = GetPrefetchRulesResponse(Seq(
-      PrefetchRule(1, 2), PrefetchRule(2, 9)))
+      PrefetchRule(1, 2), PrefetchRule(2, 9), PrefetchRule(1, 2)))
     assert(decodeGetPrefetchRulesResponse(
       encodeGetPrefetchRulesResponse(rules)) == rules)
     val pre = GetPrefetchRulesRequest("t", "unicode-ix-é中")
@@ -132,15 +123,8 @@ class SidecarProtoSpec extends SparkSpec {
 
   // ---- end-to-end over the wire --------------------------------------
 
-  private def handler(ms: Seq[MetricsRow]): Seq[PolicyRow] =
-    ms.map { m =>
-      val missRate = if (m.nRequests == 0) 0.0 else m.nMisses.toDouble / m.nRequests
-      if (missRate > 0.5) PolicyRow(m.tenant, m.window, 300, 0.05, "aggressive")
-      else PolicyRow(m.tenant, m.window, 60, 0.15, "normal")
-    }
-
   test("proto metrics RPC over TCP: global request in, WarmPathPolicy back") {
-    val srv = new SidecarWire.Server(handler,
+    val srv = new SidecarWire.Server(SidecarWireSpec.heuristic,
       prefetchRules = (t, ix) => if (t == "t1" && ix == "idx") Seq((1, 2), (3, 4))
         else Seq.empty)
     try {
@@ -153,40 +137,12 @@ class SidecarProtoSpec extends SparkSpec {
       // low miss rate → the normal policy
       assert(client.exchangeProto(SystemMetricsRequest(
         cacheHitTotal = 99, cacheMissTotal = 1)).policy
-        .contains(WarmPathPolicy(0.15, 60, 0)))
+        .contains(WarmPathPolicy(0.2, 60, 0)))
       // prefetch rules RPC on the same server
       val rules = client.prefetchRulesProto(GetPrefetchRulesRequest("t1", "idx"))
       assert(rules.rules == Seq(PrefetchRule(1, 2), PrefetchRule(3, 4)))
       assert(client.prefetchRulesProto(
         GetPrefetchRulesRequest("nobody", "idx")).rules.isEmpty)
-    } finally srv.close()
-  }
-
-  test("tickWireProto: global aggregation, reply applied to every live tenant") {
-    val root = Files.createTempDirectory("sidecar-proto-eng").toString
-    val eng = new GraftEngine(spark, root)
-    val recs = (0 until 30).map(i =>
-        (s"v$i", Seq(i.toFloat, 1f, 0f), null: String, Seq.empty[String], 100L))
-      .toDF("id", "vector", "meta", "tags", "updated_at")
-      .withColumn("tenant_id", lit("t1"))
-      .withColumn("index_name", lit("idx"))
-      .withColumn("deleted", lit(false))
-    eng.add(recs)
-    eng.build("t1", "idx", nlist = 2)
-    // two misses of three requests → global miss rate 2/3 → aggressive
-    eng.searchCachedRows("t1", "idx", 1L, Array(4f, 1f, 0f), k = 3,
-      nprobe = 2, now = 1000L)
-    eng.searchCachedRows("t1", "idx", 1L, Array(4f, 1f, 0f), k = 3,
-      nprobe = 2, now = 1001L)
-    eng.searchCachedRows("t1", "idx", 2L, Array(9f, 1f, 0f), k = 8,
-      nprobe = 2, now = 1002L)
-    assert(eng.servingTtl("t1") == 60)
-    val srv = new SidecarWire.Server(handler)
-    try {
-      val loop = new SidecarLoop(eng, spark, root + "/unused-contract")
-      loop.tickWireProto(5L, new SidecarWire.Client("127.0.0.1", srv.port))
-      assert(eng.servingTtl("t1") == 300)
-      assert(eng.servingPolicyOf("t1").map(_._3).contains("aggressive"))
     } finally srv.close()
   }
 }

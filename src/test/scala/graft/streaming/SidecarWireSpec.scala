@@ -7,117 +7,82 @@ import java.security.cert.{CertificateFactory, X509Certificate}
 
 import javax.net.ssl.{KeyManagerFactory, SSLContext, TrustManagerFactory}
 
-import org.apache.spark.sql.functions.lit
+import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftEngine, SparkSpec}
-import SidecarWire.{MetricsRow, PolicyRow}
+import SidecarProto._
 
-/** The sidecar boundary's NETWORK transport: framed exchange end to end
-  * (with a live engine on the client side), version-skew and garbage
-  * refusal at the frame layer, and the mutual-TLS channel — client auth
-  * required, certificate-less peers rejected in the handshake. */
-class SidecarWireSpec extends SparkSpec {
-  import spark.implicits._
+object SidecarWireSpec {
 
-  // deterministic sidecar half for the tests: the same shape as
-  // Policy.heuristic — high miss rate buys a longer TTL
-  private def handler(ms: Seq[MetricsRow]): Seq[PolicyRow] =
-    ms.map { m =>
-      val missRate = if (m.nRequests == 0) 0.0 else m.nMisses.toDouble / m.nRequests
-      if (missRate > 0.5) PolicyRow(m.tenant, m.window, 300, 0.05, "aggressive")
-      else PolicyRow(m.tenant, m.window, 60, 0.15, "normal")
-    }
-
-  test("codec roundtrip, including escapes in tenant names") {
-    val ms = Seq(
-      MetricsRow("t0", 7L, 100L, 80L),
-      MetricsRow("we\"ird\\ten\nant", 7L, 5L, 0L),
-      // value ENDING in a backslash: a lookbehind scanner misreads the
-      // escaped backslash before the closing quote and runs past it,
-      // corrupting the row (review finding) — pin the escape-pair scan
-      MetricsRow("trailing\\", 9L, 1L, 1L),
-      MetricsRow("\\", 10L, 2L, 0L))
-    assert(SidecarWire.decodeMetrics(SidecarWire.encodeMetrics(ms)) == ms)
-    val ps = Seq(
-      PolicyRow("t0", 7L, 300, 0.05, "aggressive"),
-      PolicyRow("a\\b\"c", 8L, 60, 0.15, "nor\"mal"),
-      PolicyRow("t1", 9L, 60, 0.15, "ends\\"))
-    assert(SidecarWire.decodePolicies(SidecarWire.encodePolicies(ps)) == ps)
-    assert(SidecarWire.decodeMetrics(Array.empty[Byte]).isEmpty)
+  /** Deterministic sidecar half for the tests: the same decision as
+    * Policy.heuristic — a miss rate above 0.5 buys a longer TTL. */
+  def heuristic(req: SystemMetricsRequest): Option[WarmPathPolicy] = {
+    val total = req.cacheHitTotal + req.cacheMissTotal
+    val missRate = if (total == 0) 0.0 else req.cacheMissTotal.toDouble / total
+    Some(if (missRate > 0.5) WarmPathPolicy(0.05, 300, evictionCode("aggressive"))
+      else WarmPathPolicy(0.2, 60, evictionCode("normal")))
   }
+
+  def metricsFrame(req: SystemMetricsRequest): Array[Byte] =
+    grpcFrame(encodeSystemMetricsRequest(req))
+}
+
+/** The sidecar boundary's NETWORK transport: version-skew and garbage
+  * refusal at the frame layer, truncation anywhere in a frame, and the
+  * mutual-TLS channel — client auth required, certificate-less peers
+  * rejected in the handshake. */
+class SidecarWireSpec extends AnyFunSuite {
+  import SidecarWireSpec._
+
+  private val aggressive = WarmPathPolicy(0.05, 300, 1)
 
   test("truncated frames throw the contract error, never an index exception") {
-    // each truncation class must surface as the descriptive
-    // IllegalArgumentException the other parse paths throw — a raw
-    // StringIndexOutOfBoundsException from the scanner leaks an
-    // unattributed crash to the transport loop (ADVICE r9)
-    def reject(js: String): Unit = {
-      val e = intercept[IllegalArgumentException] {
-        SidecarWire.decodeMetrics(js.getBytes(UTF_8))
-      }
-      assert(e.getMessage.contains("frame row") ||
-        e.getMessage.contains("escape"), e.getMessage)
+    val req = SystemMetricsRequest(qps = 12.5, missRate = 0.25,
+      cacheHitTotal = 150, cacheMissTotal = 50, timestampUnixMs = 1723800000123L)
+    // a wire frame cut at any length is an EOF on the reading side
+    val whole = new java.io.ByteArrayOutputStream()
+    SidecarWire.writeFrame(whole, SidecarWire.TypeMetricsProto, metricsFrame(req))
+    (0 until whole.size).foreach { cut =>
+      intercept[java.io.EOFException](SidecarWire.readFrame(
+        new java.io.ByteArrayInputStream(whole.toByteArray.take(cut))))
     }
-    reject("""{"tenant":"a""") // unterminated string value
-    reject("""{"tenant":"a\""") // lone trailing backslash inside string
-    reject("""{"tenant":"a""" + "\\u12") // truncated \u escape
-    reject("""{"tenant":"t","window":7""") // numeric value, no terminator
-    reject("""{"tenant":""") // key present, value missing entirely
-  }
-
-  test("plain TCP exchange: metrics out, policy decisions back") {
-    val srv = new SidecarWire.Server(handler)
+    // a whole frame whose message is cut: the sidecar replies ERR naming
+    // the gRPC/proto error (or decodes clean at a field boundary), and
+    // the connection keeps serving
+    val msg = encodeSystemMetricsRequest(req)
+    val cuts = (0 until 5).map(n => metricsFrame(req).take(n)) ++
+      (0 until msg.length).map(n => metricsFrame(req).take(5 + n)) ++
+      (0 until msg.length).map(n => grpcFrame(msg.take(n)))
+    val srv = new SidecarWire.Server(heuristic)
+    val sock = new java.net.Socket("127.0.0.1", srv.port)
     try {
-      val client = new SidecarWire.Client("127.0.0.1", srv.port)
-      val got = client.exchange(Seq(
-        MetricsRow("t0", 1L, 100L, 80L), MetricsRow("t1", 1L, 100L, 10L)))
-      assert(got.toSet == Set(
-        PolicyRow("t0", 1L, 300, 0.05, "aggressive"),
-        PolicyRow("t1", 1L, 60, 0.15, "normal")))
-      // second exchange over a fresh connection — server stays up
-      assert(client.exchange(Seq(MetricsRow("t2", 2L, 10L, 9L))).head
-        .ttlSeconds == 300)
-    } finally srv.close()
-  }
-
-  test("tickWire: live engine counters over the wire, reply applied as TTL") {
-    val root = Files.createTempDirectory("sidecar-wire-eng").toString
-    val eng = new GraftEngine(spark, root)
-    val recs = (0 until 30).map(i =>
-        (s"v$i", Seq(i.toFloat, 1f, 0f), null: String, Seq.empty[String], 100L))
-      .toDF("id", "vector", "meta", "tags", "updated_at")
-      .withColumn("tenant_id", lit("t1"))
-      .withColumn("index_name", lit("idx"))
-      .withColumn("deleted", lit(false))
-    eng.add(recs)
-    eng.build("t1", "idx", nlist = 2)
-    // two misses of three requests → miss rate 2/3 → aggressive policy
-    eng.searchCachedRows("t1", "idx", 1L, Array(4f, 1f, 0f), k = 3,
-      nprobe = 2, now = 1000L)
-    eng.searchCachedRows("t1", "idx", 1L, Array(4f, 1f, 0f), k = 3,
-      nprobe = 2, now = 1001L)
-    eng.searchCachedRows("t1", "idx", 2L, Array(9f, 1f, 0f), k = 8,
-      nprobe = 2, now = 1002L)
-    assert(eng.servingTtl("t1") == 60)
-    val srv = new SidecarWire.Server(handler)
-    try {
-      val loop = new SidecarLoop(eng, spark, root + "/unused-contract")
-      loop.tickWire(5L, new SidecarWire.Client("127.0.0.1", srv.port))
-      assert(eng.servingTtl("t1") == 300) // the wire reply was applied
-    } finally srv.close()
+      val out = new java.io.BufferedOutputStream(sock.getOutputStream)
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      cuts.foreach { payload =>
+        SidecarWire.writeFrame(out, SidecarWire.TypeMetricsProto, payload)
+        val (t, _, p) = SidecarWire.readFrame(in)
+        val txt = new String(p, UTF_8)
+        assert(t == SidecarWire.TypePoliciesProto || (t == SidecarWire.TypeErr &&
+          (txt.contains("proto") || txt.contains("gRPC")) &&
+          !txt.contains("Index")), s"${payload.length} B: $txt")
+      }
+      SidecarWire.writeFrame(out, SidecarWire.TypeMetricsProto, metricsFrame(req))
+      val (t, _, p) = SidecarWire.readFrame(in)
+      assert(t == SidecarWire.TypePoliciesProto &&
+        decodeSystemMetricsResponse(grpcUnframe(p)).policy.isDefined)
+    } finally { sock.close(); srv.close() }
   }
 
   test("version skew: server refuses loudly; client refuses a skewed reply") {
-    val srv = new SidecarWire.Server(handler)
+    val srv = new SidecarWire.Server(heuristic)
     try {
       // raw peer stamping version+1 → ERR frame naming both versions
       val sock = new java.net.Socket("127.0.0.1", srv.port)
       try {
         val out = new java.io.DataOutputStream(sock.getOutputStream)
-        val payload = SidecarWire.encodeMetrics(Seq(MetricsRow("t", 1, 1, 1)))
+        val payload = metricsFrame(SystemMetricsRequest(cacheMissTotal = 1))
         out.writeInt(SidecarWire.Magic)
-        out.writeByte(SidecarWire.TypeMetrics)
-        out.writeInt(SidecarContract.Version + 1)
+        out.writeByte(SidecarWire.TypeMetricsProto)
+        out.writeInt(SidecarWire.Version + 1)
         out.writeInt(payload.length); out.write(payload); out.flush()
         val in = new java.io.DataInputStream(sock.getInputStream)
         assert(in.readInt() == SidecarWire.Magic)
@@ -126,23 +91,47 @@ class SidecarWireSpec extends SparkSpec {
         val msg = new Array[Byte](in.readInt()); in.readFully(msg)
         val txt = new String(msg, UTF_8)
         assert(txt.contains("version skew") &&
-          txt.contains(s"v${SidecarContract.Version + 1}"))
+          txt.contains(s"v${SidecarWire.Version + 1}"))
       } finally sock.close()
-      // and the ERR reply path surfaces as a loud client failure
-      val e = intercept[IllegalStateException] {
-        // wrong TYPE from a versioned peer — server replies ERR
-        val s2 = new java.net.Socket("127.0.0.1", srv.port)
-        try {
-          val out = new java.io.BufferedOutputStream(s2.getOutputStream)
-          SidecarWire.writeFrame(out, SidecarWire.TypePolicies, Array.empty)
-          val (t, _, p) = SidecarWire.readFrame(
-            new java.io.BufferedInputStream(s2.getInputStream))
-          if (t == SidecarWire.TypeErr)
-            throw new IllegalStateException(new String(p, UTF_8))
-        } finally s2.close()
-      }
-      assert(e.getMessage.contains("unexpected frame type"))
+      // a versioned peer still sending the retired JSON-lines METRICS
+      // type (1) gets the ERR reply too
+      val s2 = new java.net.Socket("127.0.0.1", srv.port)
+      try {
+        SidecarWire.writeFrame(new java.io.BufferedOutputStream(s2.getOutputStream),
+          1.toByte, "{}".getBytes(UTF_8))
+        val (t, _, p) = SidecarWire.readFrame(
+          new java.io.BufferedInputStream(s2.getInputStream))
+        assert(t == SidecarWire.TypeErr &&
+          new String(p, UTF_8).contains("unexpected frame type 1"))
+      } finally s2.close()
     } finally srv.close()
+
+    // a sidecar replying under another version: the client throws before
+    // decoding the reply
+    val skewed = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
+    val replier = new Thread(() => {
+      val s = skewed.accept()
+      try {
+        SidecarWire.readFrame(new java.io.BufferedInputStream(s.getInputStream))
+        val out = new java.io.DataOutputStream(s.getOutputStream)
+        val payload = grpcFrame(encodeSystemMetricsResponse(
+          SystemMetricsResponse("ok", 10000, Some(aggressive))))
+        out.writeInt(SidecarWire.Magic)
+        out.writeByte(SidecarWire.TypePoliciesProto)
+        out.writeInt(SidecarWire.Version + 1)
+        out.writeInt(payload.length); out.write(payload); out.flush()
+      } finally s.close()
+    })
+    replier.setDaemon(true)
+    replier.start()
+    try {
+      val e = intercept[IllegalArgumentException] {
+        new SidecarWire.Client("127.0.0.1", skewed.getLocalPort)
+          .exchangeProto(SystemMetricsRequest(cacheMissTotal = 1))
+      }
+      assert(e.getMessage.contains("version skew") &&
+        e.getMessage.contains(s"replied v${SidecarWire.Version + 1}"))
+    } finally skewed.close()
   }
 
   test("frame layer refuses bad magic and oversized payloads") {
@@ -153,14 +142,14 @@ class SidecarWireSpec extends SparkSpec {
     val big = new java.io.ByteArrayOutputStream()
     val d = new java.io.DataOutputStream(big)
     d.writeInt(SidecarWire.Magic); d.writeByte(1)
-    d.writeInt(SidecarContract.Version)
+    d.writeInt(SidecarWire.Version)
     d.writeInt(SidecarWire.MaxPayloadBytes + 1)
     val e2 = intercept[IllegalArgumentException](SidecarWire.readFrame(
       new java.io.ByteArrayInputStream(big.toByteArray)))
     assert(e2.getMessage.contains("out of bounds"))
     intercept[IllegalArgumentException](
       SidecarWire.writeFrame(new java.io.ByteArrayOutputStream(),
-        SidecarWire.TypeMetrics, new Array[Byte](SidecarWire.MaxPayloadBytes + 1)))
+        SidecarWire.TypeMetricsProto, new Array[Byte](SidecarWire.MaxPayloadBytes + 1)))
   }
 
   // ---- mTLS ----------------------------------------------------------
@@ -221,24 +210,25 @@ class SidecarWireSpec extends SparkSpec {
     val (clientKs, clientCert) = genIdentity(dir, "engine")
     val serverCtx = sslCtx(Some(serverKs), Seq(clientCert))
     val clientCtx = sslCtx(Some(clientKs), Seq(serverCert))
-    val srv = new SidecarWire.Server(handler, ssl = Some(serverCtx))
+    val srv = new SidecarWire.Server(heuristic, ssl = Some(serverCtx))
     try {
       val got = new SidecarWire.Client("127.0.0.1", srv.port,
         ssl = Some(clientCtx))
-        .exchange(Seq(MetricsRow("t0", 3L, 10L, 9L)))
-      assert(got == Seq(PolicyRow("t0", 3L, 300, 0.05, "aggressive")))
+        .exchangeProto(SystemMetricsRequest(cacheHitTotal = 1, cacheMissTotal = 9))
+      assert(got.policy.contains(aggressive))
 
       // same trust of the server but NO client identity → the server's
       // required client auth fails the handshake before any frame
       val anonCtx = sslCtx(None, Seq(serverCert))
       intercept[java.io.IOException] {
         new SidecarWire.Client("127.0.0.1", srv.port, ssl = Some(anonCtx))
-          .exchange(Seq(MetricsRow("t0", 4L, 1L, 1L)))
+          .exchangeProto(SystemMetricsRequest(cacheMissTotal = 1))
       }
       // and the authenticated channel still serves afterwards
       assert(new SidecarWire.Client("127.0.0.1", srv.port,
         ssl = Some(clientCtx))
-        .exchange(Seq(MetricsRow("t1", 5L, 10L, 1L))).head.ttlSeconds == 60)
+        .exchangeProto(SystemMetricsRequest(cacheHitTotal = 9, cacheMissTotal = 1))
+        .policy.map(_.ttlSeconds).contains(60))
     } finally srv.close()
   }
 }
