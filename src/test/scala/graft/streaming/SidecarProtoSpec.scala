@@ -1,10 +1,15 @@
 package graft.streaming
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.sql.functions.lit
+
+import graft.{GraftEngine, SparkSpec}
 import graft.streaming.SidecarProto._
 
-class SidecarProtoSpec extends AnyFunSuite {
+class SidecarProtoSpec extends SparkSpec {
+  import spark.implicits._
 
   private def hex(b: Array[Byte]): String =
     b.map(x => f"${x & 0xFF}%02x").mkString(" ")
@@ -143,6 +148,46 @@ class SidecarProtoSpec extends AnyFunSuite {
       assert(rules.rules == Seq(PrefetchRule(1, 2), PrefetchRule(3, 4)))
       assert(client.prefetchRulesProto(
         GetPrefetchRulesRequest("nobody", "idx")).rules.isEmpty)
+    } finally srv.close()
+  }
+
+  test("tickWireProto: global aggregation, reply applied to every live tenant") {
+    val root = Files.createTempDirectory("sidecar-proto-eng").toString
+    val eng = new GraftEngine(spark, root)
+    Seq("t1", "t2").foreach { t =>
+      val recs = (0 until 30).map(i =>
+          (s"v$i", Seq(i.toFloat, 1f, 0f), null: String, Seq.empty[String], 100L))
+        .toDF("id", "vector", "meta", "tags", "updated_at")
+        .withColumn("tenant_id", lit(t))
+        .withColumn("index_name", lit("idx"))
+        .withColumn("deleted", lit(false))
+      eng.add(recs)
+      eng.build(t, "idx", nlist = 2)
+    }
+    // t1: two misses; t2: one miss, one hit. t2 alone (miss rate 1/2)
+    // would get the normal policy; the GLOBAL rate 3/4 is aggressive
+    eng.searchCachedRows("t1", "idx", 1L, Array(4f, 1f, 0f), k = 3,
+      nprobe = 2, now = 1000L)
+    eng.searchCachedRows("t1", "idx", 2L, Array(9f, 1f, 0f), k = 8,
+      nprobe = 2, now = 1001L)
+    eng.searchCachedRows("t2", "idx", 1L, Array(4f, 1f, 0f), k = 3,
+      nprobe = 2, now = 1000L)
+    eng.searchCachedRows("t2", "idx", 1L, Array(4f, 1f, 0f), k = 3,
+      nprobe = 2, now = 1001L)
+    assert(eng.servingTtl("t1") == 60 && eng.servingTtl("t2") == 60)
+    val seen = new ConcurrentLinkedQueue[SystemMetricsRequest]()
+    val srv = new SidecarWire.Server(req => { seen.add(req); SidecarWireSpec.heuristic(req) })
+    try {
+      new SidecarLoop(eng, new SidecarWire.Client("127.0.0.1", srv.port))
+        .tick(windowMs = 5L)
+      assert(seen.size == 1, "one global request per tick, not one per tenant")
+      val req = seen.peek()
+      assert(req.cacheHitTotal == 1L && req.cacheMissTotal == 3L, req)
+      assert(req.missRate == 0.75 && req.timestampUnixMs == 5L, req)
+      Seq("t1", "t2").foreach { t =>
+        assert(eng.servingTtl(t) == 300, t)
+        assert(eng.servingPolicyOf(t).contains((300, 0.05, "aggressive")), t)
+      }
     } finally srv.close()
   }
 }
