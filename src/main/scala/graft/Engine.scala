@@ -414,12 +414,12 @@ class GraftEngine(spark: SparkSession, root: String,
       if (records.columns.contains("numeric_fields")) records
       else records.withColumn("numeric_fields",
         lit(null).cast("map<string,double>"))
-    withNum
+    Stage.run(spark, "write.append")(withNum
       .select("tenant_id", "index_name", "id", "vector", "meta", "tags",
         "numeric_fields", "updated_at", "deleted")
       .write.mode("append")
       .partitionBy("tenant_id", "index_name")
-      .parquet(recordsPath)
+      .parquet(recordsPath))
   }
 
   private def recordsLogExists: Boolean =
@@ -436,7 +436,7 @@ class GraftEngine(spark: SparkSession, root: String,
     // so the append can write `records` directly without re-running the
     // anti-join
     val keys = Seq("tenant_id", "index_name")
-    val perIndex =
+    val perIndex = Stage.run(spark, "write.dupCheck") {
       if (!recordsLogExists)
         records.groupBy(keys.map(col): _*).agg(count(lit(1)), lit(0L)).collect()
       else {
@@ -448,6 +448,7 @@ class GraftEngine(spark: SparkSession, root: String,
           .groupBy(keys.map(col): _*)
           .agg(count(lit(1)), count(col("dup"))).collect()
       }
+    }
     val dups = perIndex.map(_.getLong(3)).sum
     if (dups != 0L) throw new ConflictException("vector", s"Vector already exists: $dups duplicate id(s)")
     appendLog(records.withColumn("deleted", lit(false)))
@@ -461,8 +462,8 @@ class GraftEngine(spark: SparkSession, root: String,
     * pure fixed overhead on the streaming path where this runs once per
     * micro-batch. */
   def upsert(records: DataFrame): Long = {
-    val touchedCounts = records.groupBy("tenant_id", "index_name")
-      .agg(count(lit(1))).collect()
+    val touchedCounts = Stage.run(spark, "write.count")(
+      records.groupBy("tenant_id", "index_name").agg(count(lit(1))).collect())
     val n = touchedCounts.map(_.getLong(2)).sum
     appendLog(records.withColumn("deleted", lit(false)))
     touchedCounts.foreach(r => bumpEpoch(r.getString(0), r.getString(1)))
@@ -549,11 +550,13 @@ class GraftEngine(spark: SparkSession, root: String,
   private def withStatePass[T](tenant: String, index: String, state: DataFrame,
                                pq: Boolean, ip: Boolean, localMaxBytes: Long)
                               (f: (GraftEngine.BuildStats, Option[LocalState]) => T): T = {
-    val rdd = state.select(col("updated_at"), col("id"), col("vector"),
-      xxhash64(col("id"))).queryExecution.toRdd
-    def pass(partBytes: Long) = new GraftEngine.StateParts(rdd
-      .mapPartitions(it => Iterator(GraftEngine.foldState(it, pq, ip, partBytes)))
-      .collect())
+    // under AQE, planning the RDD already runs the state's exchange
+    val rdd = Stage.run(spark, "build.state")(state.select(col("updated_at"),
+      col("id"), col("vector"), xxhash64(col("id"))).queryExecution.toRdd)
+    def pass(partBytes: Long) = Stage.run(spark, "build.state")(
+      new GraftEngine.StateParts(rdd
+        .mapPartitions(it => Iterator(GraftEngine.foldState(it, pq, ip, partBytes)))
+        .collect()))
     // the bound is held while the pass runs; the rows that arrived stay
     // counted until the build is done with them
     val admitted =
@@ -647,18 +650,22 @@ class GraftEngine(spark: SparkSession, root: String,
         val centers = coarseCenters(keyed, if (algoU == "FLAT") 1 else nlist,
           metric, seed, st.nVectors, st.maxDim)
         // keep the string id alongside the numeric surrogate used by the plans
-        IvfFlat.assignByCenters(keyed, centers, IvfFlat.assignMetric(metric))
-          .write.mode("overwrite").partitionBy("cluster_id")
-          .parquet(s"$dir/vectors")
-        IvfFlat.centroidsFrame(spark, centers).write.mode("overwrite")
-          .parquet(s"$dir/centroids")
+        Stage.run(spark, "build.assign")(
+          IvfFlat.assignByCenters(keyed, centers, IvfFlat.assignMetric(metric))
+            .write.mode("overwrite").partitionBy("cluster_id")
+            .parquet(s"$dir/vectors"))
+        Stage.run(spark, "build.centroids")(
+          IvfFlat.centroidsFrame(spark, centers).write.mode("overwrite")
+            .parquet(s"$dir/centroids"))
       case "HNSW" =>
-        val graphs = graft.operators.Hnsw.build(keyed.select("id", "vec"), metric,
-          numPartitions = math.max(1, nlist))
-        graft.operators.Hnsw.save(graphs, s"$dir/hnsw")
+        Stage.run(spark, "build.hnsw") {
+          val graphs = graft.operators.Hnsw.build(keyed.select("id", "vec"), metric,
+            numPartitions = math.max(1, nlist))
+          graft.operators.Hnsw.save(graphs, s"$dir/hnsw")
+        }
         // surrogate→string map for hit resolution
-        keyed.select("id", "id_str").write.mode("overwrite")
-          .parquet(s"$dir/idmap")
+        Stage.run(spark, "build.idmap")(keyed.select("id", "id_str")
+          .write.mode("overwrite").parquet(s"$dir/idmap"))
       case "IVF_PQ" =>
         buildPq(dir, keyed, state, st, local, metricU, nlist, seed, pqM,
           math.min(pqK, 256), pqDim)
@@ -670,8 +677,8 @@ class GraftEngine(spark: SparkSession, root: String,
     // rerank path, and the inverted lists hold only quantized codes.
     val recCols = Seq(col("id").as("id_str"), col("meta"), col("tags")) ++
       (if (isPq) Seq(col("vector").as("vec")) else Nil)
-    state.select(recCols: _*)
-      .write.mode("overwrite").parquet(s"$dir/records")
+    Stage.run(spark, "build.records")(state.select(recCols: _*)
+      .write.mode("overwrite").parquet(s"$dir/records"))
     // concurrent-writer guard (e.g. an upsertStream micro-batch landing
     // between the state read and this commit): any write bumps the epoch,
     // so an epoch moved since m0 means the log holds rows this snapshot
@@ -706,8 +713,8 @@ class GraftEngine(spark: SparkSession, root: String,
                             seed: Long, nRows: Long,
                             dim: Int): Array[Array[Double]] =
     if (nlist <= 1) IvfFlat.flatCenters(dim)
-    else IvfFlat.trainCenters(vectors.select("id", "vec"), nlist, metric, seed,
-      maxIter = 10, nRows, dim)
+    else Stage.run(spark, "build.train")(IvfFlat.trainCenters(
+      vectors.select("id", "vec"), nlist, metric, seed, maxIter = 10, nRows, dim))
 
   /** Each driver-held vector's nearest center under L2, with the
     * assignment kernel the distributed path runs per row. */
@@ -751,7 +758,7 @@ class GraftEngine(spark: SparkSession, root: String,
     // Coarse lists are L2 over the transformed vectors, like IvfPq.build.
     val centers = coarseCenters(forPq, nlist, "L2", seed, st.nVectors, pqDim)
     val centersF = centers.map(_.map(_.toFloat))
-    val cb = local match {
+    val cb = Stage.run(spark, "build.pq")(local match {
       case Some(ls) =>
         val pqVecs = metricU match {
           case "COSINE" => ls.vecs.map(graft.functions.unitArray)
@@ -792,14 +799,15 @@ class GraftEngine(spark: SparkSession, root: String,
             .parquet(s"$dir/ivfpq/codes")
           cb
         } finally assigned.unpersist()
-    }
-    IvfFlat.centroidsFrame(spark, centers).write.mode("overwrite")
-      .parquet(s"$dir/ivfpq/centroids")
+    })
+    Stage.run(spark, "build.centroids")(IvfFlat.centroidsFrame(spark, centers)
+      .write.mode("overwrite").parquet(s"$dir/ivfpq/centroids"))
     // the same table at the IVF location, so the cache's L2 layer can
     // probe centroids without knowing the algo: a file copy, not a job
     copyTree(Paths.get(s"$dir/ivfpq/centroids"), Paths.get(s"$dir/centroids"))
-    graft.operators.Pq.saveCodebook(cb, spark, s"$dir/ivfpq/codebooks")
-    if (metricU == "IP") {
+    Stage.run(spark, "build.codebooks")(
+      graft.operators.Pq.saveCodebook(cb, spark, s"$dir/ivfpq/codebooks"))
+    if (metricU == "IP") Stage.run(spark, "build.mips") {
       import spark.implicits._
       Seq(st.maxSq).toDF("max_sq")
         .write.mode("overwrite").parquet(s"$dir/ivfpq/mips")
@@ -822,7 +830,7 @@ class GraftEngine(spark: SparkSession, root: String,
     // the store below both come from these
     val local16 = local.map(ls =>
       (ls.ids, ls.vecs.map(graft.operators.Sq16Store.encodeRow(_, mn, mx))))
-    local16 match {
+    Stage.run(spark, "build.sq16")(local16 match {
       case Some((ids, c16)) =>
         import spark.implicits._
         ids.indices.map(i => (ids(i), c16(i))).toDF("id", "qvec16")
@@ -831,7 +839,7 @@ class GraftEngine(spark: SparkSession, root: String,
         state.select(xxhash64(col("id")).as("id"),
             graft.operators.Sq16Store.encodeCol(col("vector"), mn, mx).as("qvec16"))
           .write.mode("overwrite").parquet(s"$dir/sq16/codes")
-    }
+    })
     // binary SEGMENT sidecar: the merged resident store persisted as raw
     // sorted arrays, so a restarted engine (warmServing, or the first
     // refined call after boot) loads the rerank store by sequential file
@@ -863,10 +871,10 @@ class GraftEngine(spark: SparkSession, root: String,
         local16 match {
           case Some((ids, c16)) =>
             graft.operators.Sq16Store.fromRows(ids, c16, d16, mn, mx)
-          case None =>
+          case None => Stage.run(spark, "build.sq16")(
             graft.operators.Sq16Store.buildResident(
               spark.read.schema(Sq16CodesSchema).parquet(s"$dir/sq16/codes"),
-              d16, mn, mx, estBytes = est)
+              d16, mn, mx, estBytes = est))
         }
       } match {
         case Residency.Admitted(store) =>
@@ -1332,8 +1340,8 @@ class GraftEngine(spark: SparkSession, root: String,
       .map { case (qid, qv) => (qid, qv.toSeq) }.toDF("query_id", "qvec")
     val qDf = if (tags.isEmpty) base
       else base.withColumn("filter_tags", typedLit(tags))
-    search(tenant, index, qDf, k, metric, nprobe, refine = refine,
-        refineStore = refineStoreFor(tenant, index, m)).collect()
+    Stage.run(spark, "search.plan")(search(tenant, index, qDf, k, metric, nprobe,
+        refine = refine, refineStore = refineStoreFor(tenant, index, m)).collect())
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3)))
   }
 
@@ -1510,7 +1518,7 @@ class GraftEngine(spark: SparkSession, root: String,
     val key = s"$tenant/$index"
     headStateCache.get(key).filter(_._1 == m.epoch).map(_._2).orElse {
       if (!recordsLogExists) Some(HeadServeState.empty)
-      else {
+      else Stage.run(spark, "serve.head") {
         val rows = readLog()
           .filter(col("tenant_id") === tenant && col("index_name") === index &&
             col("updated_at") > m.buildWatermark)
@@ -1571,7 +1579,8 @@ class GraftEngine(spark: SparkSession, root: String,
                          metric: String, nprobe: Int,
                          withMeta: Boolean = false, maxScans: Int = 0,
                          refine: Int = 0,
-                         refineStore: String = "exact"): DataFrame = {
+                         refineStore: String = "exact"): DataFrame =
+      Stage.run(spark, "search.plan") {
     val m = manifest(tenant, index)
     // the tail's geometry (KMeans clusters, HNSW links, PQ codebooks) is
     // trained for the build metric — scoring probes with a different one
@@ -1906,7 +1915,7 @@ class GraftEngine(spark: SparkSession, root: String,
 
     /** IVF_PQ handle; its resident byte codes and codebook load on first
       * use. */
-    lazy val pqIndex: graft.operators.IvfPq.Index = {
+    lazy val pqIndex: graft.operators.IvfPq.Index = Stage.run(spark, "open.pqIndex") {
       val p = graft.operators.IvfPq.Index(
         spark.read.schema(PqCodesSchema).parquet(s"$snap/ivfpq/codes")
           .select("id", "cluster_id", "codes"),
@@ -1921,15 +1930,15 @@ class GraftEngine(spark: SparkSession, root: String,
       * HNSW writes it (IVF_PQ for the cache layer), while opening an
       * IvfFlat.Index resolves `vectors/`, which HNSW and IVF_PQ
       * snapshots don't have. */
-    lazy val centroids: Array[(Int, Array[Float])] =
-      spark.read.schema(CentroidsSchema).parquet(s"$snap/centroids").collect()
+    lazy val centroids: Array[(Int, Array[Float])] = Stage.run(spark, "open.centroids")(
+      spark.read.schema(CentroidsSchema).parquet(s"$snap/centroids").collect())
         .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
 
     /** MIPS fold constant M² of an IP-built IVF_PQ snapshot: reading it
       * per call would put a parquet listing and a head job on the serving
       * hot path. */
-    lazy val mipsMaxSq: Double =
-      spark.read.schema(MipsSchema).parquet(s"$snap/ivfpq/mips").head.getDouble(0)
+    lazy val mipsMaxSq: Double = Stage.run(spark, "open.mips")(
+      spark.read.schema(MipsSchema).parquet(s"$snap/ivfpq/mips").head.getDouble(0))
 
     // (id, id_str): inverted-list snapshots keep it in vectors/, IVF_PQ
     // alongside the codes, HNSW in its idmap table
@@ -1953,7 +1962,7 @@ class GraftEngine(spark: SparkSession, root: String,
       * on the ids-tags line by exact measured bytes before any collect,
       * and built from executor-side pre-sorted packed runs (never n boxed
       * driver rows). */
-    val idPool = new Residency.Memo[IdPool](
+    val idPool = new Residency.Memo[IdPool](Stage.run(spark, "admit.idPool")(
       Residency.admit(Residency.IdsTags, poolEst, idPoolMaxBytes) {
         IdPool.merge(idTable.queryExecution.toRdd.mapPartitions { it =>
           // toString materializes an owned copy — UnsafeRow buffers are
@@ -1962,7 +1971,7 @@ class GraftEngine(spark: SparkSession, root: String,
             r.getUTF8String(1).toString
               .getBytes(java.nio.charset.StandardCharsets.UTF_8))))
         }.collect())
-      })
+      }))
 
     private lazy val records = spark.read
       .schema("id_str STRING, meta STRING, tags ARRAY<STRING>")
@@ -1987,7 +1996,7 @@ class GraftEngine(spark: SparkSession, root: String,
       * surrogate) pairs on the executors and the driver concatenates and
       * sorts per tag, so the transient driver footprint is the final
       * index. A denial keeps filtered calls on the distributed plan. */
-    val tagIndex = new Residency.Memo[Map[String, Array[Long]]](
+    val tagIndex = new Residency.Memo[Map[String, Array[Long]]](Stage.run(spark, "admit.tagIndex")(
       Residency.admit(Residency.IdsTags, tagsEst, idPoolMaxBytes) {
         val parts = records
           .select(xxhash64(col("id_str")).as("sg"), explode(tagsCol).as("tag"))
@@ -2012,7 +2021,7 @@ class GraftEngine(spark: SparkSession, root: String,
           java.util.Arrays.sort(a)
           t -> a
         }
-      })
+      }))
 
     private lazy val hnswEst: Long =
       graft.operators.Hnsw.residentBytes(spark, s"$snap/hnsw")
@@ -2020,7 +2029,8 @@ class GraftEngine(spark: SparkSession, root: String,
     /** Driver-resident HNSW graphs: an oversized graph set pays the meta
       * read once and every later call short-circuits. */
     val hnswGraphs = new Residency.Memo[Array[(Int, graft.operators.Hnsw.Graph)]](
-      graft.operators.Hnsw.loadResident(spark, s"$snap/hnsw", hnswEst))
+      Stage.run(spark, "admit.hnsw")(
+        graft.operators.Hnsw.loadResident(spark, s"$snap/hnsw", hnswEst)))
 
     private def segDir = s"$snap/sq16/segments"
     private lazy val sq16Sidecar = graft.operators.Sq16Store.sidecarExists(segDir)
@@ -2046,7 +2056,7 @@ class GraftEngine(spark: SparkSession, root: String,
     /** Resident SQ16 rerank store, on the ledger's refine line (apart from
       * ids-tags, so refine residency can't starve the pools) under
       * `sq16MaxBytes`. A denial keeps refined calls on the plan. */
-    val sq16 = new Residency.Memo[graft.operators.Sq16Store](sq16Stats match {
+    val sq16 = new Residency.Memo[graft.operators.Sq16Store](Stage.run(spark, "admit.sq16")(sq16Stats match {
       case None => Residency.Denied
       case Some((n, dim)) =>
         // shared estimator: it counts the per-segment headers, so the
@@ -2073,7 +2083,7 @@ class GraftEngine(spark: SparkSession, root: String,
           sq8.release()
           store
         }
-    })
+    }))
 
     /** Degraded-tier u8 store (see `refineU8Fallback`): the sq16 segment
       * sidecar streamed at half size, on the same refine-store budget (the
@@ -2285,9 +2295,8 @@ class GraftEngine(spark: SparkSession, root: String,
     cacheCentroidMemo.getOrElseUpdate(s"$tenant/$index", {
       val p = cacheCentroidsPath(tenant, index)
       if (!Files.exists(Paths.get(p))) None
-      else Some(spark.read.parquet(p)
-        .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-        .sortBy(_._1))
+      else Some(Stage.run(spark, "cache.reload")(spark.read.parquet(p).collect())
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1))
     })
 
   /** Centroids driving the L2 semantic-cache layer: the pushed override
@@ -2310,9 +2319,9 @@ class GraftEngine(spark: SparkSession, root: String,
     * reference's UpdateCentroids epoch bump (IndexController.cs:277).
     * centroids: (cluster_id INT, centroid ARRAY<FLOAT>). */
   def setCacheCentroids(tenant: String, index: String, centroids: DataFrame): Unit = {
-    centroids.select(col("cluster_id").cast("int").as("cluster_id"),
-        col("centroid"))
-      .write.mode("overwrite").parquet(cacheCentroidsPath(tenant, index))
+    Stage.run(spark, "cache.centroids")(centroids
+      .select(col("cluster_id").cast("int").as("cluster_id"), col("centroid"))
+      .write.mode("overwrite").parquet(cacheCentroidsPath(tenant, index)))
     cacheCentroidMemo.remove(s"$tenant/$index")
     invalidateCache(tenant, index)
   }
@@ -2376,7 +2385,8 @@ class GraftEngine(spark: SparkSession, root: String,
     * At scale this is the routine compaction: KMeans retraining is the
     * expensive step and cluster geometry drifts slowly, so retrain on a
     * cadence and fold incrementally in between. IVF_FLAT/FLAT only. */
-  def compactIncremental(tenant: String, index: String): Unit = {
+  def compactIncremental(tenant: String, index: String): Unit =
+      Stage.run(spark, "compact") {
     val m0 = manifest(tenant, index)
     require(m0.algo == "IVF_FLAT" || m0.algo == "FLAT",
       s"incremental compaction needs an inverted-list tail, got ${m0.algo}")
@@ -2494,8 +2504,9 @@ class GraftEngine(spark: SparkSession, root: String,
     * (reference: DataModel/CanonicalKeyMap.cs:18-44). aliases:
     * (source_key LONG, canonical_key LONG, confidence DOUBLE). */
   def putAliases(tenant: String, index: String, aliases: DataFrame): Unit =
-    aliases.select("source_key", "canonical_key", "confidence")
-      .write.mode("append").parquet(cacheAliasPath(tenant, index))
+    Stage.run(spark, "cache.aliases")(aliases
+      .select("source_key", "canonical_key", "confidence")
+      .write.mode("append").parquet(cacheAliasPath(tenant, index)))
 
   /** Raw cache-entry table (for tests / stats): one row per populated
     * (cache_key, layer). */
@@ -2548,7 +2559,7 @@ class GraftEngine(spark: SparkSession, root: String,
   def compactCacheEntries(tenant: String, index: String, now: Long): Long = {
     val p = cacheEntriesPath(tenant, index)
     if (!Files.exists(Paths.get(p))) 0L
-    else withManifestLock(tenant, index) {
+    else withManifestLock(tenant, index)(Stage.run(spark, "cache.compact") {
       val m = manifest(tenant, index)
       // live rows sort first, so vrn==1 ∧ live picks the newest LIVE entry
       // per key — identical to the entry searchCached's probe would serve
@@ -2581,7 +2592,7 @@ class GraftEngine(spark: SparkSession, root: String,
         }
       } else counted.unpersist()
       evicted
-    }
+    })
   }
 
   /** The entry table's winner order per cache_key, shared by the batch
@@ -2707,7 +2718,8 @@ class GraftEngine(spark: SparkSession, root: String,
                    metric: String = "L2", nprobe: Int = 4, now: Long = 0L,
                    ttlSeconds: Int = 60,
                    hotClusters: Option[DataFrame] = None,
-                   options: SearchOptions = SearchOptions()): DataFrame = {
+                   options: SearchOptions = SearchOptions()): DataFrame =
+      Stage.run(spark, "cache.probe") {
     import graft.operators.Caching
     val m = manifest(tenant, index)
     require(m.algo == "FLAT" || m.metric.isEmpty ||
@@ -2939,8 +2951,8 @@ class GraftEngine(spark: SparkSession, root: String,
         (lit(now) + col("e.ttl")).as("expires_at"),
         lit(now).as("written_at"))
     if (anyMiss && !options.cacheOnly)
-      appendCacheEntries(tenant, index, now, options.cacheMemoryMb, ttlSeconds)(
-        newEntries.write.mode("append").parquet(_))
+      appendCacheEntries(tenant, index, now, options.cacheMemoryMb, ttlSeconds)(dir =>
+        Stage.run(spark, "cache.populate")(newEntries.write.mode("append").parquet(dir)))
 
     val freshOut0 = fresh
       .withColumn("cache_hit", lit(false))
@@ -3063,8 +3075,8 @@ class GraftEngine(spark: SparkSession, root: String,
       val p = s"$root/metrics/$tenant/$index"
       writeServingMetricsLocal(p, now, hits, misses)
       if (dirFileCount(p) > CacheGcFileThreshold) {
-        val r = spark.read.parquet(p)
-          .agg(max("ts"), sum("hits"), sum("misses")).head
+        val r = Stage.run(spark, "cache.metrics")(spark.read.parquet(p)
+          .agg(max("ts"), sum("hits"), sum("misses")).head)
         val tmp = tmpPath(s"metrics/$tenant/$index")
         deleteTree(Paths.get(tmp))
         writeServingMetricsLocal(tmp, r.getLong(0), r.getLong(1), r.getLong(2))
@@ -3078,7 +3090,8 @@ class GraftEngine(spark: SparkSession, root: String,
     * clock and therefore not engine-recorded — determinism rule)
     * (reference: VectorCommandSet.cs:103-133 → MetricsCollector.GetStats). */
   def statsText(tenant: String, index: String,
-                latencies: Option[DataFrame] = None): String = {
+                latencies: Option[DataFrame] = None): String =
+      Stage.run(spark, "stats") {
     import graft.operators.Governance
     val p = s"$root/metrics/$tenant/$index"
     val (h, m) =
@@ -3359,12 +3372,12 @@ class GraftEngine(spark: SparkSession, root: String,
             // ranked BY Spark in the batch probe's winner order — the
             // resident map only caches the plan's own ordering; runtime
             // expiry is applied at probe time like the batch plan's filter
-            cacheEntries(tenant, index)
+            Stage.run(spark, "cache.reload")(cacheEntries(tenant, index)
               .filter(col("epoch") === m.epoch)
               .select(col("cache_key"), col("expires_at"), col("hits"),
                 row_number().over(Window.partitionBy("cache_key")
                   .orderBy(entryWinnerOrder: _*)).as("wrn"))
-              .collect()
+              .collect())
               .groupBy(_.getLong(0))
               .foreach { case (ck, rows) =>
                 map.put(ck, rows.sortBy(_.getInt(3)).map { r =>
@@ -3399,8 +3412,9 @@ class GraftEngine(spark: SparkSession, root: String,
         try {
           val map =
             if (!Files.exists(Paths.get(dir))) Map.empty[Long, Long]
-            else spark.read.parquet(dir).filter(col("confidence") >= 0.8)
-              .select("source_key", "canonical_key").collect()
+            else Stage.run(spark, "cache.reload")(spark.read.parquet(dir)
+              .filter(col("confidence") >= 0.8)
+              .select("source_key", "canonical_key").collect())
               .map(r => r.getLong(0) -> r.getLong(1)).toMap
           st.aliases = Some((fp, map))
           map
@@ -3608,7 +3622,8 @@ class GraftEngine(spark: SparkSession, root: String,
     * predicted: (cluster_id INT). Returns the number of entries written. */
   def prefetchIntoCache(tenant: String, index: String, predicted: DataFrame,
                         k: Int, metric: String = "L2", now: Long = 0L,
-                        ttlSeconds: Int = 300, nprobe: Int = 4): Long = {
+                        ttlSeconds: Int = 300, nprobe: Int = 4): Long =
+      Stage.run(spark, "cache.prefetch") {
     import graft.operators.{Caching, TopK}
     val m = manifest(tenant, index)
     val ranked = cacheCentroidOverride(tenant, index) match {
@@ -3664,7 +3679,8 @@ class GraftEngine(spark: SparkSession, root: String,
     // through the one writer, with no quota: under the lock, so a
     // concurrent compaction's swap cannot delete the files just written
     appendCacheEntries(tenant, index, now, quotaMb = Int.MaxValue,
-      sweepWindow = ttlSeconds)(entries.write.mode("append").parquet(_))
+      sweepWindow = ttlSeconds)(dir =>
+        Stage.run(spark, "cache.populate")(entries.write.mode("append").parquet(dir)))
     entries.count()
   }
 
@@ -3682,12 +3698,13 @@ class GraftEngine(spark: SparkSession, root: String,
 
   /** Append one audit event. `ts` is caller-supplied epoch-millis so
     * replays stay deterministic. */
-  def audit(actor: String, action: String, resource: String, ts: Long): Unit = {
-    import spark.implicits._
-    Seq((ts, actor, action, resource))
-      .toDF("ts", "actor", "action", "resource")
-      .write.mode("append").parquet(s"$root/audit")
-  }
+  def audit(actor: String, action: String, resource: String, ts: Long): Unit =
+    Stage.run(spark, "audit") {
+      import spark.implicits._
+      Seq((ts, actor, action, resource))
+        .toDF("ts", "actor", "action", "resource")
+        .write.mode("append").parquet(s"$root/audit")
+    }
 
   def auditLog(): DataFrame = spark.read.parquet(s"$root/audit")
 }

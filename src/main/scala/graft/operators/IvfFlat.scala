@@ -45,7 +45,8 @@ object IvfFlat {
       * small-batch searches against the same index skip the per-call
       * centroid job entirely. */
     @transient lazy val centroidsLocal: Array[(Int, Array[Float])] =
-      centroids.collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      graft.Stage.run(centroids.sparkSession, "open.centroids")(centroids.collect())
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
 
     /** Serving snapshot: per-partition packed inverted lists, cached as an
       * RDD of LIVE objects (RDD cache stores deserialized objects — no
@@ -70,7 +71,8 @@ object IvfFlat {
     @transient @volatile private var packedBuilt: Option[org.apache.spark.rdd.RDD[PackedLists]] = None
     def packedIfBuilt: Option[org.apache.spark.rdd.RDD[PackedLists]] = packedBuilt
 
-    @transient lazy val packed: org.apache.spark.rdd.RDD[PackedLists] = {
+    @transient lazy val packed: org.apache.spark.rdd.RDD[PackedLists] =
+        graft.Stage.run(assigned.sparkSession, "admit.packedFloats") {
       val rdd = assigned.select("id", "vec", "cluster_id")
         .repartition(col("cluster_id"))
         .queryExecution.toRdd.mapPartitions { it =>
@@ -131,7 +133,8 @@ object IvfFlat {
         val dim = centroidsLocal.headOption.fold(0)(_._2.length)
         if (rows == 0L) graft.Residency.Admitted(Array.empty[PackedLists])
         else graft.Residency.admit(graft.Residency.PackedFloats,
-          rows * (4L * dim + 16L))(packed.collect())
+          rows * (4L * dim + 16L))(graft.Stage.run(assigned.sparkSession,
+            "admit.packedFloats")(packed.collect()))
       })
 
     /** cluster → packed-partition index, read FROM the packed data itself
@@ -141,15 +144,15 @@ object IvfFlat {
       * partition-pruned serving job: a probe set touches only the
       * partitions this map names (parquet partition-pruning semantics,
       * applied to the serving snapshot). */
-    @transient lazy val packedPartsOf: Map[Int, Int] = {
-      val pairs = packed.mapPartitionsWithIndex { (pid, it) =>
-        it.flatMap { p =>
-          import scala.jdk.CollectionConverters._
-          p.ranges.keySet.asScala.iterator.map(c => (c.intValue, pid))
-        }
-      }.collect()
-      pairs.toMap
-    }
+    @transient lazy val packedPartsOf: Map[Int, Int] =
+      graft.Stage.run(assigned.sparkSession, "admit.packedFloats") {
+        packed.mapPartitionsWithIndex { (pid, it) =>
+          it.flatMap { p =>
+            import scala.jdk.CollectionConverters._
+            p.ranges.keySet.asScala.iterator.map(c => (c.intValue, pid))
+          }
+        }.collect()
+      }.toMap
   }
 
   /** Work bound for dispatching a call to the SINGLE-THREADED

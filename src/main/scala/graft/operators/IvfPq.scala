@@ -34,7 +34,8 @@ object IvfPq {
     /** Driver-side centroid snapshot (nlist rows — driver-sized by
       * construction), fetched once per Index handle. */
     @transient lazy val centroidsLocal: Array[(Int, Array[Float])] =
-      centroids.collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      graft.Stage.run(centroids.sparkSession, "open.centroids")(centroids.collect())
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
 
     /** Driver-RESIDENT packed code lists for the zero-job PQ serving
       * tier, or None while the [[graft.Residency.PqCodes]] line denies
@@ -49,7 +50,7 @@ object IvfPq {
     @transient private[graft] lazy val packedResident =
       new graft.Residency.Memo[Array[PackedCodes]](
         graft.Residency.admit(graft.Residency.PqCodes,
-            rows * (cb.m + 16L)) {
+            rows * (cb.m + 16L))(graft.Stage.run(assigned.sparkSession, "admit.packedCodes") {
           val mWidth = cb.m
           assigned.select("id", "cluster_id", "codes")
             .repartition(col("cluster_id"))
@@ -83,7 +84,7 @@ object IvfPq {
                 Iterator(new PackedCodes(mWidth, pIds, pCodes, ranges))
               }
             }.collect()
-        })
+        }))
   }
 
   /** Work bound for the single-thread resident scan, in ADC lookups

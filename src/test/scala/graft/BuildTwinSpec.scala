@@ -62,7 +62,7 @@ class BuildTwinSpec extends SparkSpec {
     val root = Files.createTempDirectory(s"twin_$metric")
     val eng = new GraftEngine(spark, root.toString)
     eng.add(corpus("idx", nullAt))
-    val (local, jobs) = JobCount.byModule(spark)(
+    val (local, jobs) = JobCount.byStage(spark)(
       eng.buildWith("t1", "idx", nlist = nlist, metric = metric, seed = 42L,
         algo = "IVF_PQ", pqM = 4, pqK = 16, localMaxBytes = localMaxBytes))
     (root.resolve("indexes/t1/idx"), local, jobs.values.sum)

@@ -40,15 +40,15 @@ class ConcurrencySpec extends SparkSpec {
   /** Eight threads released together on the first `call` of a fresh
     * engine over `root`'s built snapshot: every answer equals one
     * thread's first call on another fresh engine, and the burst submits,
-    * module by module, the same jobs as that one call — concurrent first
+    * stage by stage, the same jobs as that one call — concurrent first
     * callers wait for one admission per handle. */
   private def firstCallBurst(root: String)(
       call: GraftEngine => Array[(Long, Int, String, Double)]): Unit = {
-    val (single, singleJobs) = JobCount.byModule(spark)(call(new GraftEngine(spark, root)))
+    val (single, singleJobs) = JobCount.byStage(spark)(call(new GraftEngine(spark, root)))
     assert(single.nonEmpty)
     val eng = new GraftEngine(spark, root)
     val answers = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(Long, Int, String, Double)]]()
-    val (errs, burstJobs) = JobCount.byModule(spark) {
+    val (errs, burstJobs) = JobCount.byStage(spark) {
       val barrier = new java.util.concurrent.CyclicBarrier(8)
       runAll((1 to 8).map { t =>
         new Thread(() => {

@@ -1478,7 +1478,7 @@ class EngineSpec extends SparkSpec {
   /** `f`'s result and the number of Spark jobs it submitted from this
     * thread (its job group). */
   private def jobsDuring[T](f: => T): (T, Int) = {
-    val (r, jobs) = JobCount.byModule(spark)(f)
+    val (r, jobs) = JobCount.byStage(spark)(f)
     (r, jobs.values.sum)
   }
 

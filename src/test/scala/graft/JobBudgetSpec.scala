@@ -6,9 +6,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Job budgets, in the style of PlanShapeSpec: the number of Spark jobs
-  * each phase submits, per module, pinned. Most of a small build's wall
-  * time is the driver's per-job overhead, so a job that comes back shows
-  * up here by the module that submitted it. */
+  * each phase submits, per engine stage ([[Stage]]), pinned. Most of a
+  * small build's wall time is the driver's per-job overhead, so a job that
+  * comes back shows up here by the stage that submitted it, wherever its
+  * code lives. */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,20 +31,20 @@ class JobBudgetSpec extends SparkSpec {
     info(s"$what: ${jobs.values.sum} jobs ${jobs.toSeq.sorted.mkString(", ")}")
 
   /** Adds a corpus, builds it, runs one rows-tier search; returns the
-    * per-module jobs of each phase. */
+    * per-stage jobs of each phase. */
   private def phases(algo: String, refine: Int = 0)
       : (Map[String, Int], Map[String, Int], Map[String, Int], Map[String, Int]) = {
     val root = Files.createTempDirectory(s"jobs_$algo").toString
     val eng = new GraftEngine(spark, root)
     val corpus = records("idx", 640, 16, 7)
-    val (_, addJobs) = JobCount.byModule(spark)(eng.add(corpus))
-    val (_, buildJobs) = JobCount.byModule(spark)(
+    val (_, addJobs) = JobCount.byStage(spark)(eng.add(corpus))
+    val (_, buildJobs) = JobCount.byStage(spark)(
       eng.build("t1", "idx", nlist = 4, algo = algo, pqM = 4, pqK = 16))
     val q = Array((1L, Array.fill(16)(0.5f)))
-    val ((rows, tr), searchJobs) = JobCount.byModule(spark)(
+    val ((rows, tr), searchJobs) = JobCount.byStage(spark)(
       eng.searchRowsTraced("t1", "idx", q, k = 5, nprobe = 2, refine = refine))
     assert(rows.length == 5, tr)
-    val (_, add2Jobs) = JobCount.byModule(spark)(
+    val (_, add2Jobs) = JobCount.byStage(spark)(
       eng.add(records("idx", 4, 16, 8, idFrom = 10000)))
     show(s"$algo add (empty log)", addJobs)
     show(s"$algo build", buildJobs)
@@ -52,43 +53,49 @@ class JobBudgetSpec extends SparkSpec {
     (addJobs, buildJobs, searchJobs, add2Jobs)
   }
 
-  // "unattributed": the job that materializes the cached state for the
-  // build's one state pass runs on a query-stage thread with no graft frame.
+  // Every add: the duplicate check's grouped aggregation (2 jobs on an
+  // empty log; 4 once it joins the log's LWW state) and one append.
+  private val addEmpty = Map("write.dupCheck" -> 2, "write.append" -> 1)
+  private val addNonEmpty = Map("write.dupCheck" -> 4, "write.append" -> 1)
+
+  // The state pass is 3 jobs: the cached LWW state's exchange, which AQE
+  // runs while the pass's RDD is planned, then the fold. The driver
+  // k-means trainer's sample collect is 2 (MLlib KMeans was 17: k-means||
+  // rounds, one job per Lloyd iteration, the summary).
 
   test("job budget: IVF_FLAT add, build and first search") {
     val (add, build, search, add2) = phases("IVF_FLAT")
-    assert(add.values.sum == 3 && add2.values.sum == 5, (add, add2))
-    // 26 jobs before (GraftEngine 7, IvfFlat 19): the count, the
-    // watermark aggregation's extra stages. IvfFlat 17 before (MLlib
-    // KMeans: k-means|| rounds, one job per Lloyd iteration, the summary);
-    // the driver trainer's sample collect is 2 (its shuffle map stage runs
-    // on a query-stage thread, hence unattributed 2)
-    assert(build == Map("GraftEngine" -> 5, "IvfFlat" -> 1, "unattributed" -> 2), build)
-    // 8 before: the row count and the per-list counts, two jobs each
-    assert(search == Map("GraftEngine" -> 1, "IvfFlat" -> 2, "unattributed" -> 1), search)
+    assert(add == addEmpty && add2 == addNonEmpty, (add, add2))
+    // 26 jobs before the one state pass
+    assert(build == Map("build.state" -> 3, "build.train" -> 2, "build.assign" -> 1,
+      "build.centroids" -> 1, "build.records" -> 1), build)
+    // the pack's exchange and collect, then the centroids; 8 before the
+    // handles took their sizes from the snapshot
+    assert(search == Map("admit.idPool" -> 1, "admit.packedFloats" -> 2,
+      "open.centroids" -> 1), search)
   }
 
   test("job budget: IVF_PQ add, build and first refined search") {
     val (add, build, search, add2) = phases("IVF_PQ", refine = 10)
-    assert(add.values.sum == 3 && add2.values.sum == 5, (add, add2))
-    // 43 before (GraftEngine 14, IvfFlat 20, Pq 6, ScalarQuant 2,
-    // Sq16Store 1): dim and sample jobs, the codes re-join, the SQ16
-    // min/max pass, read-back and wave fetch, a second centroids write
-    // IvfFlat 17 before, as for IVF_FLAT
-    assert(build == Map("GraftEngine" -> 6, "IvfFlat" -> 1, "Pq" -> 1,
-      "unattributed" -> 2), build)
-    // 9 before: the row count and the per-list counts, as for IVF_FLAT
-    assert(search == Map("GraftEngine" -> 1, "IvfPq" -> 2, "Pq" -> 1,
-      "unattributed" -> 1), search)
+    assert(add == addEmpty && add2 == addNonEmpty, (add, add2))
+    // 43 before the driver-local build: dim and sample jobs, the codes
+    // re-join, the SQ16 min/max pass, read-back and wave fetch
+    assert(build == Map("build.state" -> 3, "build.train" -> 2, "build.pq" -> 1,
+      "build.centroids" -> 1, "build.codebooks" -> 1, "build.sq16" -> 1,
+      "build.records" -> 1), build)
+    // the codebook read opens the handle; 9 before, as for IVF_FLAT
+    assert(search == Map("admit.idPool" -> 1, "admit.packedCodes" -> 2,
+      "open.centroids" -> 1, "open.pqIndex" -> 1), search)
   }
 
   test("job budget: HNSW add, build and first search") {
     val (add, build, search, add2) = phases("HNSW")
-    assert(add.values.sum == 3 && add2.values.sum == 5, (add, add2))
-    // 11 before (GraftEngine 6, Hnsw 5)
-    assert(build == Map("GraftEngine" -> 4, "Hnsw" -> 5, "unattributed" -> 1), build)
+    assert(add == addEmpty && add2 == addNonEmpty, (add, add2))
+    // 11 before the one state pass
+    assert(build == Map("build.state" -> 3, "build.hnsw" -> 5, "build.idmap" -> 1,
+      "build.records" -> 1), build)
     // 15 before
-    assert(search == Map("GraftEngine" -> 1, "Hnsw" -> 11), search)
+    assert(search == Map("admit.idPool" -> 1, "admit.hnsw" -> 11), search)
   }
 
   /** The first filtered search on a tagged corpus: besides the tail and
@@ -100,23 +107,24 @@ class JobBudgetSpec extends SparkSpec {
       when(substring(col("id"), 2, 9).cast("int") % 2 === 0, "even").otherwise("odd"))))
     eng.build("t1", "idx", nlist = 4, algo = algo, pqM = 4, pqK = 16)
     val q = Array((1L, Array.fill(16)(0.5f)))
-    val (res, jobs) = JobCount.byModule(spark)(
+    val (res, jobs) = JobCount.byStage(spark)(
       eng.searchRowsFilteredTraced("t1", "idx", q, 5, "L2", 2, Seq("even")))
     assert(res.exists(_._1.length == 5), res.map(_._2))
     show(s"$algo first filtered search (${res.get._2.path})", jobs)
     jobs
   }
 
-  // GraftEngine 4: the id pool's collect, then the tag index's size
-  // aggregation and collect over the records table's declared schema
+  // the tag index: its size aggregation (2 jobs) and its collect over
+  // the records table's declared schema
   test("job budget: IVF_FLAT first filtered search") {
     val jobs = firstFiltered("IVF_FLAT")
-    assert(jobs == Map("GraftEngine" -> 4, "IvfFlat" -> 2, "unattributed" -> 1), jobs)
+    assert(jobs == Map("admit.idPool" -> 1, "admit.tagIndex" -> 3,
+      "admit.packedFloats" -> 2, "open.centroids" -> 1), jobs)
   }
 
   test("job budget: IVF_PQ first filtered search") {
     val jobs = firstFiltered("IVF_PQ")
-    assert(jobs == Map("GraftEngine" -> 4, "IvfPq" -> 2, "Pq" -> 1,
-      "unattributed" -> 1), jobs)
+    assert(jobs == Map("admit.idPool" -> 1, "admit.tagIndex" -> 3,
+      "admit.packedCodes" -> 2, "open.centroids" -> 1, "open.pqIndex" -> 1), jobs)
   }
 }

@@ -131,7 +131,7 @@ class SidecarLoopSpec extends SparkSpec {
     val sidecar = new Sidecar()
     try {
       val loop = new SidecarLoop(eng, sidecar.client)
-      val (_, jobs) = JobCount.byModule(spark)(loop.tick(windowMs = 1L))
+      val (_, jobs) = JobCount.byStage(spark)(loop.tick(windowMs = 1L))
       assert(jobs.isEmpty, jobs)
       assert(eng.servingTtl("t1") == 300) // the tick did its work
     } finally sidecar.close()
