@@ -63,6 +63,10 @@ object GraftEngine {
     * 300); while the SQ16 codes are written, its Int codes and their row
     * in that write's relation (8d + 180). The resident SQ16 store is
     * reserved on its own line. */
+  /** Keys one top-k task may hash-aggregate before its session falls
+    * back to sort-based aggregation; see the engine's constructor. */
+  private val TopKHashKeys = 1000000L
+
   private def localRowBytes(dim: Int, idBytes: Long): Long =
     12L * dim + 3L * idBytes + 640L
 
@@ -170,7 +174,7 @@ object GraftEngine {
     * and the cache writers write. Opening a table with its schema
     * declared submits no footer-inference job, and `cluster_id`, last as
     * in an inferred read, stays the partition column probes prune on. */
-  private def schemaOf(fields: (String, DataType)*): StructType =
+  private[graft] def schemaOf(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, t) => StructField(n, t) })
   private[graft] val VectorsSchema = schemaOf("id" -> LongType,
     "vec" -> ArrayType(FloatType), "id_str" -> StringType, "cluster_id" -> IntegerType)
@@ -232,6 +236,15 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
   // ids-tags and refine lines of the residency ledger ([[Residency]]);
   // the line caps and the JVM total are shared by every engine.
 
+  // Plan fallbacks' top-k aggregation keeps one bounded buffer per
+  // (query, task). Past the session's key threshold (Spark's default is
+  // 128) each scoring task falls back to sort-based aggregation, ~13×
+  // slower, so the engine raises it on its session and never lowers it.
+  locally {
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    if (spark.conf.get(key).toLong < TopKHashKeys) spark.conf.set(key, TopKHashKeys)
+  }
+
   private[graft] def withManifestLock[T](tenant: String, index: String)(f: => T): T =
     GraftEngine.lockFor(root, tenant, index).synchronized(f)
 
@@ -242,19 +255,11 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
     * log mixing pre-`numeric_fields` files with new ones stays
     * deterministic (absent columns read as null) without mergeSchema's
     * all-footers cost. */
-  private val recordSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("id", StringType),
-      StructField("vector", ArrayType(FloatType)),
-      StructField("meta", StringType),
-      StructField("tags", ArrayType(StringType)),
-      StructField("numeric_fields", MapType(StringType, DoubleType)),
-      StructField("updated_at", LongType),
-      StructField("deleted", BooleanType),
-      StructField("tenant_id", StringType),
-      StructField("index_name", StringType)))
-  }
+  private val recordSchema = schemaOf("id" -> StringType,
+    "vector" -> ArrayType(FloatType), "meta" -> StringType,
+    "tags" -> ArrayType(StringType),
+    "numeric_fields" -> MapType(StringType, DoubleType), "updated_at" -> LongType,
+    "deleted" -> BooleanType, "tenant_id" -> StringType, "index_name" -> StringType)
 
   private[graft] def readLog(): DataFrame =
     spark.read.schema(recordSchema).parquet(recordsPath)
@@ -540,29 +545,12 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
       (if (isPq) Seq(col("vector").as("vec")) else Nil)
     Stage.run(spark, "build.records")(state.select(recCols: _*)
       .write.mode("overwrite").parquet(s"$dir/records"))
-    // concurrent-writer guard (e.g. an upsertStream micro-batch landing
-    // between the state read and this commit): any write bumps the epoch,
-    // so an epoch moved since m0 means the log holds rows this snapshot
-    // never saw — the head must stay dirty or they'd be invisible. The
-    // re-read and the rename sit under the per-index manifest lock, so a
-    // writer can't slip its bump between them (it either lands before the
-    // re-read — seen in mNow — or after the rename, where bumpEpoch itself
-    // re-sets headDirty=1).
-    val mNew = withManifestLock(tenant, index) {
-      val mNow = manifest(tenant, index)
-      val mNew = Manifest(mNow.epoch + 1, st.watermark, algoU, st.nVectors, newVersion,
-        metricU, headDirty = if (mNow.epoch != m0.epoch) 1 else 0)
-      writeManifest(tenant, index, mNew)
-      mNew
-    }
+    val mNew = commitSnapshot(tenant, index, m0.epoch, Manifest(0L, st.watermark,
+      algoU, st.nVectors, newVersion, metricU, headDirty = 0))
     // the id pool's residency estimate, from the stats pass: every
     // snapshot's id table holds one row per state row
     handles.putIfAbsent((tenant, index, newVersion), new SnapshotHandles(dir, mNew,
       poolEstSeed = Some(st.nVectors * 12L + st.idBytes + 32L)))
-    // keep the previous snapshot too: lazy frames returned by search()
-    // before this build may still resolve into it
-    gcOldSnapshots(tenant, index, keep = newVersion - 1)
-    evictStaleHandles(tenant, index, keep = newVersion - 1)
     local.isDefined
     }
     } finally state.unpersist()
@@ -594,9 +582,7 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
   private def localFrame(fields: Seq[(String, DataType)], clusters: Array[Int])
                         (row: Int => Row): DataFrame = {
     val order = Array.range(0, clusters.length).sortBy(clusters(_))
-    spark.createDataFrame(
-      java.util.Arrays.asList(order.map(row): _*),
-      StructType(fields.map { case (n, t) => StructField(n, t) }))
+    spark.createDataFrame(java.util.Arrays.asList(order.map(row): _*), schemaOf(fields: _*))
   }
 
   /** The IVF_PQ artifacts: coarse lists + PQ codes over the (unit or
@@ -805,19 +791,13 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
     * (the cached cascade) re-order once at their own output, and the
     * range-sort costs a sampling pass per call. */
   private[graft] def searchImpl(tenant: String, index: String, queries: DataFrame, k: Int,
-                         metric: String, nprobe: Int,
-                         withMeta: Boolean = false, maxScans: Int = 0,
-                         refine: Int = 0,
-                         refineStore: String = "exact"): DataFrame =
+                                metric: String, nprobe: Int,
+                                withMeta: Boolean = false, maxScans: Int = 0,
+                                refine: Int = 0,
+                                refineStore: String = "exact"): DataFrame =
       Stage.run(spark, "search.plan") {
     val m = manifest(tenant, index)
-    // the tail's geometry (KMeans clusters, HNSW links, PQ codebooks) is
-    // trained for the build metric — scoring probes with a different one
-    // silently degrades recall, so reject the mismatch. FLAT tails are a
-    // single exact-scanned list: metric-agnostic by construction.
-    require(m.algo == "FLAT" || m.metric.isEmpty ||
-        metric.equalsIgnoreCase(m.metric),
-      s"index built with metric=${m.metric}; cannot search with metric=$metric")
+    m.requireMetric(metric)
     val snap = snapDir(tenant, index, m)
     val snapshot = spark.read.parquet(s"$snap/records")
 

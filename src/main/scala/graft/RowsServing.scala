@@ -119,8 +119,8 @@ private[graft] trait RowsServing { self: GraftEngine =>
     * that resolves its result surrogates, and (filtered calls only) the
     * tag index. */
   private[graft] case class RowsTier(m: Manifest, handles: SnapshotHandles,
-                              tail: RowsTail, pool: IdPool,
-                              tagIdx: Map[String, Array[Long]])
+                                     tail: RowsTail, pool: IdPool,
+                                     tagIdx: Map[String, Array[Long]])
 
   /** The rows tier's admission gates, in the one order that serving and
     * [[warmServing]] share. Cheap manifest gates come first, so a
@@ -140,8 +140,8 @@ private[graft] trait RowsServing { self: GraftEngine =>
     * residency is memoized per snapshot version, so a denied handle
     * short-circuits later calls. None = the call takes the plan. */
   private[graft] def rowsTierOf(tenant: String, index: String, m: Manifest,
-                         refine: Boolean, filtered: Boolean,
-                         hnsw: Boolean): Option[RowsTier] = {
+                                refine: Boolean, filtered: Boolean,
+                                hnsw: Boolean): Option[RowsTier] = {
     lazy val h = handlesOf(tenant, index, m)
     val tail: Option[RowsTail] =
       if (m.nVectors > RowsServeMaxRows) None
@@ -201,10 +201,7 @@ private[graft] trait RowsServing { self: GraftEngine =>
       headWork <= IvfFlat.DriverServeMaxScanElems &&
         queries.length.toLong * tailFetch <= 4_000_000L // top-k buffer budget
     }.flatMap { hs =>
-      // same metric gate as searchImpl (FLAT tails are metric-agnostic)
-      require(m.algo == "FLAT" || m.metric.isEmpty ||
-          metric.equalsIgnoreCase(m.metric),
-        s"index built with metric=${m.metric}; cannot search with metric=$metric")
+      m.requireMetric(metric)
       val metricU = metric.toUpperCase(java.util.Locale.ROOT)
       // over-fetch from the tail so masking re-written/tombstoned ids
       // can't leave a query short (≤ maskInTail tail rows can be masked)
@@ -403,9 +400,9 @@ private[graft] trait RowsServing { self: GraftEngine =>
     * [[refineStoreFor]]'s store, so plan and rows tiers give the SAME
     * refined answer whichever one served. */
   private[graft] def planRows(tenant: String, index: String, m: Manifest,
-                       queries: Array[(Long, Array[Float])], k: Int,
-                       metric: String, nprobe: Int, refine: Int,
-                       tags: Seq[String]): Array[(Long, Int, String, Double)] = {
+                              queries: Array[(Long, Array[Float])], k: Int,
+                              metric: String, nprobe: Int, refine: Int,
+                              tags: Seq[String]): Array[(Long, Int, String, Double)] = {
     import spark.implicits._
     val base = queries.toSeq
       .map { case (qid, qv) => (qid, qv.toSeq) }.toDF("query_id", "qvec")
@@ -526,7 +523,7 @@ private[graft] trait RowsServing { self: GraftEngine =>
                               metricU: String): (Array[(Long, Array[Float])], (Long, Double) => Double) =
     metricU match {
       case "COSINE" =>
-        (queries.map { case (qid, qv) => (qid, unitLocal(qv)) },
+        (queries.map { case (qid, qv) => (qid, graft.functions.unitArray(qv)) },
           (_, s) => 1.0 + s / 2)
       case "IP" =>
         val cbDim = pqIdx.cb.m * pqIdx.cb.dsub
@@ -541,23 +538,6 @@ private[graft] trait RowsServing { self: GraftEngine =>
           (qid, s) => (s + qn2(qid) + maxSq) / 2)
       case _ => (queries, (_, s) => s)
     }
-
-  /** Bit-exact local mirror of the `vector_unit` UDF (same norm
-    * accumulation, same Float division) — the COSINE PQ tail transforms
-    * queries with it so resident and plan tiers see identical floats. */
-  private def unitLocal(a: Array[Float]): Array[Float] = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length) { s += a(i).toDouble * a(i); i += 1 }
-    if (s == 0) a
-    else {
-      val n = math.sqrt(s)
-      val out = new Array[Float](a.length)
-      i = 0
-      while (i < a.length) { out(i) = (a(i) / n).toFloat; i += 1 }
-      out
-    }
-  }
 
   /** Driver-resident fresh-head state for [[searchRows]]: the post-
     * watermark log reduced to LWW per id — mask surrogates (every
@@ -585,7 +565,7 @@ private[graft] trait RowsServing { self: GraftEngine =>
     scala.collection.concurrent.TrieMap.empty[String, (Long, HeadServeState)]
 
   private[graft] def headStateOf(tenant: String, index: String,
-                          m: Manifest): Option[HeadServeState] = {
+                                 m: Manifest): Option[HeadServeState] = {
     val key = s"$tenant/$index"
     headStateCache.get(key).filter(_._1 == m.epoch).map(_._2).orElse {
       if (!recordsLogExists) Some(HeadServeState.empty)

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
 
 import GraftEngine._
 
@@ -13,6 +14,7 @@ import GraftEngine._
   * compaction, the resident maps, the serving policy, billing and
   * VEC.STATS. */
 private[graft] trait SemanticCache { self: GraftEngine =>
+  import SemanticCache._
 
   // -------------------------------------------------------------------
   // semantic-cluster override for the L2 cache layer (reference:
@@ -89,11 +91,7 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     * machinery, VectorIndexRegistry.cs:52-68): bumping the epoch makes
     * every cached entry stale at probe time without touching the files. */
   def invalidateCache(tenant: String, index: String): Unit =
-    withManifestLock(tenant, index) {
-      // epoch-only bump: no data changed, so head-dirtiness is untouched
-      val m = manifest(tenant, index)
-      writeManifest(tenant, index, m.copy(epoch = m.epoch + 1))
-    }
+    bumpEpoch(tenant, index, dirty = false)
 
   /** Cache flush (reference: CacheController flush endpoint) — removes all
     * entries and aliases for the index, including rows-path inserts still
@@ -106,7 +104,7 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     * in-heap entries keep serving. The billing counters survive. */
   def flushCache(tenant: String, index: String): Unit =
     withManifestLock(tenant, index) {
-      cacheStates.get(s"$tenant/$index").foreach(_.resetEntries())
+      cacheStates.get((tenant, index)).foreach(_.resetEntries())
       Seq(cacheEntriesPath(tenant, index), cacheAliasPath(tenant, index))
         .foreach(d => deleteTree(Paths.get(d)))
     }
@@ -128,27 +126,6 @@ private[graft] trait SemanticCache { self: GraftEngine =>
   // as per-index hit/miss logs and must not pick this up
   private def evictionsPath(tenant: String, index: String) =
     s"$root/metrics_gc/$tenant/$index"
-
-  private def dirBytes(dir: String): Long = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) 0L
-    else {
-      val s = Files.walk(p)
-      try s.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
-      finally s.close()
-    }
-  }
-
-  private def dirFileCount(dir: String): Long = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) 0L
-    else {
-      val s = Files.walk(p)
-      try s.filter(f => Files.isRegularFile(f) &&
-        f.getFileName.toString.endsWith(".parquet")).count()
-      finally s.close()
-    }
-  }
 
   /** Entry-table GC (reference: lazy expiry eviction + bounded cache,
     * MemoryCacheStorage.cs:20-86): rewrite the entry table keeping only
@@ -190,7 +167,7 @@ private[graft] trait SemanticCache { self: GraftEngine =>
       // rewrite also when the FILE count (not just the row count) is what
       // triggered us: 65 one-row appends of live entries evict nothing but
       // still need coalescing, or the per-call probe scan keeps growing
-      if (evicted > 0 || dirFileCount(p) > CacheGcFileThreshold) {
+      if (evicted > 0 || scanDir(p).parquetFiles > CacheGcFileThreshold) {
         counted.filter(col("keep"))
           .drop("live", "vrn", "keep")
           .write.mode("overwrite").parquet(tmpPath(s"entries/$tenant/$index"))
@@ -227,28 +204,34 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     *  4. file-count GC: every append adds a file set and the per-call
     *     probe scans all of them, so compaction past
     *     [[CacheGcFileThreshold]] keeps the probe cost flat over time.
-    * Returns whether `append` ran. */
+    * One dir walk before the append and one after serve all four steps.
+    * Returns, when `append` ran, the dir's fingerprint just before it and
+    * once it (and any GC it triggered) is done; None when rejected. */
   private def appendCacheEntries(tenant: String, index: String, now: Long,
                                  quotaMb: Int, sweepWindow: Long)
-                                (append: String => Unit): Boolean =
+                                (append: String => Unit): Option[(Long, Long)] =
     withManifestLock(tenant, index) {
       val dir = cacheEntriesPath(tenant, index)
       val quotaBytes = quotaMb.toLong << 20
       val st = cacheStateOf(tenant, index)
-      var cur = dirBytes(dir)
-      if (cur >= quotaBytes && !st.fruitlessSweep.exists {
-            case (sz, t) => sz == cur && now < t + sweepWindow }) {
+      var cur = scanDir(dir)
+      if (cur.bytes >= quotaBytes && !st.fruitlessSweep.exists {
+            case (sz, t) => sz == cur.bytes && now < t + sweepWindow }) {
         compactCacheEntries(tenant, index, now)
-        cur = dirBytes(dir)
-        if (cur >= quotaBytes) st.fruitlessSweep = Some((cur, now))
+        cur = scanDir(dir)
+        if (cur.bytes >= quotaBytes) st.fruitlessSweep = Some((cur.bytes, now))
       }
-      val underQuota = cur < quotaBytes
-      if (underQuota) {
+      if (cur.bytes >= quotaBytes) None
+      else {
         append(dir)
-        if (dirFileCount(dir) > CacheGcFileThreshold)
+        val after = scanDir(dir)
+        if (after.parquetFiles <= CacheGcFileThreshold)
+          Some((cur.fingerprint, after.fingerprint))
+        else {
           compactCacheEntries(tenant, index, now)
+          Some((cur.fingerprint, scanDir(dir).fingerprint))
+        }
       }
-      underQuota
     }
 
   /** Scratch dir OUTSIDE every enumerated tree (billingUsage lists the
@@ -333,9 +316,7 @@ private[graft] trait SemanticCache { self: GraftEngine =>
       Stage.run(spark, "cache.probe") {
     import graft.operators.Caching
     val m = manifest(tenant, index)
-    require(m.algo == "FLAT" || m.metric.isEmpty ||
-        metric.equalsIgnoreCase(m.metric),
-      s"index built with metric=${m.metric}; cannot search with metric=$metric")
+    m.requireMetric(metric)
 
     // one key set per DISTINCT query id: duplicates would defeat the
     // fully-warm fast path (row counts vs per-query hit rows), bill
@@ -470,16 +451,10 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     // zero-JOB empty frame (an eager localCheckpoint of a limit(0) plan
     // still scheduled a job per fully-warm call), decoupled from the
     // cache files by construction
-    def emptyResult() = {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("query_id", queries.schema("query_id").dataType),
-          StructField("rank", IntegerType),
-          StructField("id", StringType),
-          StructField("score", DoubleType))))
-    }
+    def emptyResult() = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      schemaOf("query_id" -> queries.schema("query_id").dataType,
+        "rank" -> IntegerType, "id" -> StringType, "score" -> DoubleType))
 
     // miss path: the real delta search (steps 10-12); materialized so the
     // populate write below doesn't trigger a second full search and the
@@ -585,6 +560,32 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     out.orderBy("query_id", "rank")
   }
 
+  /** Writes `rows` into `dir` as one new snappy parquet file, on the
+    * driver with parquet-mr: no Spark job. `fill` sets one row's fields
+    * on an empty record of `schema`. */
+  private def writeParquetLocal[R](dir: String,
+                                   schema: org.apache.parquet.schema.MessageType,
+                                   rows: Iterable[R])
+                                  (fill: (org.apache.parquet.example.data.Group, R) => Unit): Unit = {
+    Files.createDirectories(Paths.get(dir))
+    val file = s"$dir/part-local-${java.util.UUID.randomUUID()}.parquet"
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(file))
+      .withType(schema)
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .withCompressionCodec(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    try {
+      val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      rows.foreach { r =>
+        val g = groups.newGroup()
+        fill(g, r)
+        w.write(g)
+      }
+    } finally w.close()
+  }
+
   // message schema for the driver-side metrics writer; matches the shape
   // Spark itself wrote (ts/hits/misses int64), so mixed dirs read fine
   private lazy val metricsRowSchema =
@@ -598,23 +599,10 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     * schema Spark did, so every consumer (statsText, billingUsage,
     * the fold) reads the mixed dir unchanged. */
   private def writeServingMetricsLocal(dir: String, ts: Long, hits: Long,
-                                   misses: Long): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val file = s"$dir/part-local-${java.util.UUID.randomUUID()}.parquet"
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file))
-      .withType(metricsRowSchema)
-      .withConf(spark.sparkContext.hadoopConfiguration)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try {
-      val g = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
-        metricsRowSchema).newGroup()
+                                   misses: Long): Unit =
+    writeParquetLocal(dir, metricsRowSchema, Seq(())) { (g, _) =>
       g.add("ts", ts); g.add("hits", hits); g.add("misses", misses)
-      w.write(g)
-    } finally w.close()
-  }
+    }
 
   /** Parquet-mr twin of the batch populate's entry rows — byte-compatible
     * with what Spark itself writes for the entry table (same column
@@ -642,34 +630,20 @@ private[graft] trait SemanticCache { self: GraftEngine =>
         |  optional int64 written_at;
         |}""".stripMargin)
 
-  private def writeCacheEntryRowsLocal(
-      dir: String,
-      rows: Seq[(Long, String, Array[(Int, String, Double)], Long, Long, Long)]): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val file = s"$dir/part-local-${java.util.UUID.randomUUID()}.parquet"
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file))
-      .withType(entryRowSchema)
-      .withConf(spark.sparkContext.hadoopConfiguration)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try rows.foreach { case (ck, layer, hits, epoch, expiresAt, writtenAt) =>
-      val g = new org.apache.parquet.example.data.simple.SimpleGroupFactory(
-        entryRowSchema).newGroup()
-      g.add("cache_key", ck)
-      g.add("layer", layer)
-      val hg = g.addGroup("hits")
-      hits.foreach { case (r, id, s) =>
-        val eg = hg.addGroup("list").addGroup("element")
-        eg.add("rank", r); eg.add("id", id); eg.add("score", s)
-      }
-      g.add("epoch", epoch)
-      g.add("expires_at", expiresAt)
-      g.add("written_at", writtenAt)
-      w.write(g)
-    } finally w.close()
-  }
+  private def writeCacheEntryRowsLocal(dir: String, rows: Seq[EntryRow]): Unit =
+    writeParquetLocal(dir, entryRowSchema, rows) {
+      case (g, (ck, layer, hits, epoch, expiresAt, writtenAt)) =>
+        g.add("cache_key", ck)
+        g.add("layer", layer)
+        val hg = g.addGroup("hits")
+        hits.foreach { case (r, id, s) =>
+          val eg = hg.addGroup("list").addGroup("element")
+          eg.add("rank", r); eg.add("id", id); eg.add("score", s)
+        }
+        g.add("epoch", epoch)
+        g.add("expires_at", expiresAt)
+        g.add("written_at", writtenAt)
+    }
 
   /** The one billing write: append one (ts, hits, misses) row to the
     * index's metrics log, then fold the log into a single summed row
@@ -685,7 +659,7 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     withManifestLock(tenant, index) {
       val p = s"$root/metrics/$tenant/$index"
       writeServingMetricsLocal(p, now, hits, misses)
-      if (dirFileCount(p) > CacheGcFileThreshold) {
+      if (scanDir(p).parquetFiles > CacheGcFileThreshold) {
         val r = Stage.run(spark, "cache.metrics")(spark.read.parquet(p)
           .agg(max("ts"), sum("hits"), sum("misses")).head)
         val tmp = tmpPath(s"metrics/$tenant/$index")
@@ -730,7 +704,7 @@ private[graft] trait SemanticCache { self: GraftEngine =>
       }
     // live resident-tier hits/misses (not yet flushed to the log) fold in
     // so VEC.STATS is current even mid-serving-burst
-    val (memHits, memMisses) = cacheStates.get(s"$tenant/$index")
+    val (memHits, memMisses) = cacheStates.get((tenant, index))
       .fold((0L, 0L))(st => (st.hits.get(), st.misses.get()))
     Governance.metricsText(
       Governance.standardCounters(h + memHits, m + memMisses, evictions = ev,
@@ -817,23 +791,19 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     }
   }
 
-  // one CacheState per "$tenant/$index"
+  // one CacheState per (tenant, index)
   private val cacheStates =
-    scala.collection.concurrent.TrieMap.empty[String, CacheState]
+    scala.collection.concurrent.TrieMap.empty[(String, String), CacheState]
   private def cacheStateOf(tenant: String, index: String): CacheState =
-    cacheStates.getOrElseUpdate(s"$tenant/$index", new CacheState)
+    cacheStates.getOrElseUpdate((tenant, index), new CacheState)
 
   /** Live (not-yet-flushed) serving counters per index — the sidecar
     * loop's metrics snapshot (the reference's GetMetricsSnapshot payload,
     * server.py:138-160). Read-only: [[flushServingMetrics]] owns the
     * reset, so these are "since the last durable flush". */
   def servingCountersLive: Seq[(String, String, Long, Long)] =
-    cacheStates.toSeq.filter(_._2.served).sortBy(_._1).flatMap {
-      case (key, st) =>
-        key.split("/", 2) match {
-          case Array(t, i) => Some((t, i, st.hits.get(), st.misses.get()))
-          case _ => None
-        }
+    cacheStates.toSeq.filter(_._2.served).sortBy(_._1).map {
+      case ((t, i), st) => (t, i, st.hits.get(), st.misses.get())
     }
 
   // -------------------------------------------------------------------
@@ -881,7 +851,7 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     * billing becomes durable on the same amortized cadence as the
     * entries themselves. */
   def flushCachePending(tenant: String, index: String): Unit = {
-    val st = cacheStates.get(s"$tenant/$index").orNull
+    val st = cacheStates.get((tenant, index)).orNull
     if (st == null || st.pending.isEmpty) return
     withManifestLock(tenant, index) {
       val buf = scala.collection.mutable.ArrayBuffer.empty[EntryRow]
@@ -895,14 +865,9 @@ private[graft] trait SemanticCache { self: GraftEngine =>
         st.pendingSince.compareAndSet(NoPending, System.nanoTime())
       if (buf.nonEmpty) {
         val logicalNow = buf.map(_._6).max
-        var fpBefore = 0L
-        val appended = appendCacheEntries(tenant, index, logicalNow, st.quotaMb,
-            sweepWindow = buf.map(r => r._5 - r._6).min) { dir =>
-          fpBefore = entriesFingerprint(dir)
-          writeCacheEntryRowsLocal(dir, buf.toSeq)
-        }
-        if (appended) {
-          val fpAfter = entriesFingerprint(cacheEntriesPath(tenant, index))
+        appendCacheEntries(tenant, index, logicalNow, st.quotaMb,
+            sweepWindow = buf.map(r => r._5 - r._6).min)(
+            writeCacheEntryRowsLocal(_, buf.toSeq)).foreach { case (fpBefore, fpAfter) =>
           st.entries match {
             // restamp ONLY when the map provably holds the drained
             // entries (same key + expiry): a map reloaded from the dir
@@ -929,45 +894,27 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     * cache entries survive a restart (the reference loses its whole
     * in-memory cache here; we only lose nothing). */
   def flushAllServingMetrics(now: Long = System.currentTimeMillis() / 1000L): Unit =
-    cacheStates.keySet.foreach { key =>
-      key.split("/", 2) match {
-        case Array(t, i) =>
-          flushCachePending(t, i)
-          flushServingMetrics(t, i, now)
-        case _ => ()
-      }
+    cacheStates.keySet.foreach { case (t, i) =>
+      flushCachePending(t, i)
+      flushServingMetrics(t, i, now)
     }
 
-  /** Order-independent content fingerprint of the entry dir (file name,
-    * size, mtime) — cheap driver-side staleness check for the resident
-    * map (the dir is bounded at [[CacheGcFileThreshold]] files). */
+  /** [[scanDir]]'s fingerprint for the serving path's staleness check of
+    * a resident map (the dir is bounded at [[CacheGcFileThreshold]]
+    * files). */
   // forces a reload (and mismatches any cached value) when a concurrent
   // GC-swap/flush deletes files mid-walk — monotonically unique
   private val fpRaceMarker = new java.util.concurrent.atomic.AtomicLong(
     Long.MinValue)
-  private def entriesFingerprint(dir: String): Long = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) 0L
-    else
-      try {
-        val s = Files.walk(p)
-        try {
-          var h = 1125899906842597L
-          s.filter(Files.isRegularFile(_)).forEach { f =>
-            h ^= (f.getFileName.toString.hashCode.toLong * 31 +
-              Files.size(f)) * 1099511628211L +
-              Files.getLastModifiedTime(f).toMillis
-          }
-          h
-        } finally s.close()
-      } catch {
-        // compactCacheEntries' swapInto (deleteTree + move) or flushCache
-        // can delete files mid-walk; serving must degrade to a reload or
-        // a batch-path miss, never crash
-        case _: java.io.IOException | _: java.io.UncheckedIOException =>
-          fpRaceMarker.incrementAndGet()
-      }
-  }
+  private def entriesFingerprint(dir: String): Long =
+    try scanDir(dir).fingerprint
+    catch {
+      // compactCacheEntries' swapInto (deleteTree + move) or flushCache
+      // can delete files mid-walk; serving must degrade to a reload or
+      // a batch-path miss, never crash
+      case _: java.io.IOException | _: java.io.UncheckedIOException =>
+        fpRaceMarker.incrementAndGet()
+    }
 
   private def residentL0Of(tenant: String, index: String, m: Manifest,
                            st: CacheState)
@@ -1205,7 +1152,7 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     * (one summed row) so billing/offline consumers see them;
     * [[statsText]] already folds the live value in. */
   def flushServingMetrics(tenant: String, index: String, now: Long = 0L): Unit =
-    cacheStates.get(s"$tenant/$index").foreach { st =>
+    cacheStates.get((tenant, index)).foreach { st =>
       // write FIRST, subtract only after the append commits — a getAndSet
       // before a failed write would silently drop billable calls (calls
       // that land during the write stay in the counters for the next
@@ -1288,5 +1235,34 @@ private[graft] trait SemanticCache { self: GraftEngine =>
       sweepWindow = ttlSeconds)(dir =>
         Stage.run(spark, "cache.populate")(entries.write.mode("append").parquet(dir)))
     entries.count()
+  }
+}
+
+private[graft] object SemanticCache {
+  /** One walk of a cache dir: its file bytes (the quota check), its
+    * parquet part files (the GC trigger) and an order-independent content
+    * fingerprint over (file name, size, mtime) — the resident maps'
+    * staleness check. A missing dir is all zeros. */
+  final case class DirScan(bytes: Long, parquetFiles: Long, fingerprint: Long)
+
+  def scanDir(dir: String): DirScan = {
+    val p = Paths.get(dir)
+    if (!Files.exists(p)) DirScan(0L, 0L, 0L)
+    else {
+      val s = Files.walk(p)
+      try {
+        var bytes, parquet = 0L
+        var h = 1125899906842597L
+        s.filter(Files.isRegularFile(_)).forEach { f =>
+          val name = f.getFileName.toString
+          val size = Files.size(f)
+          bytes += size
+          if (name.endsWith(".parquet")) parquet += 1
+          h ^= (name.hashCode.toLong * 31 + size) * 1099511628211L +
+            Files.getLastModifiedTime(f).toMillis
+        }
+        DirScan(bytes, parquet, h)
+      } finally s.close()
+    }
   }
 }

@@ -34,6 +34,15 @@ private[graft] trait SnapshotStore { self: GraftEngine =>
       * [[Manifest.parse]] reads it back. */
     def render: String =
       s"""{"epoch": $epoch, "buildWatermark": $buildWatermark, "algo": ${Json.quote(algo)}, "nVectors": $nVectors, "version": $version, "metric": ${Json.quote(metric)}, "headDirty": $headDirty}"""
+
+    /** The tail's geometry (KMeans clusters, HNSW links, PQ codebooks) is
+      * trained for the build metric: scoring probes with another one
+      * silently degrades recall, so a search must use it. FLAT tails are
+      * one exact-scanned list, metric-agnostic; an unknown ("") metric
+      * skips the check. */
+    def requireMetric(metric: String): Unit =
+      require(algo == "FLAT" || this.metric.isEmpty || metric.equalsIgnoreCase(this.metric),
+        s"index built with metric=${this.metric}; cannot search with metric=$metric")
   }
 
   object Manifest {
@@ -154,10 +163,40 @@ private[graft] trait SnapshotStore { self: GraftEngine =>
 
   def epoch(tenant: String, index: String): Long = manifest(tenant, index).epoch
 
-  private[graft] def bumpEpoch(tenant: String, index: String): Unit =
+  /** Commits `snap`, the manifest of a version just written into its
+    * fresh dir, as the index's current one, with the next epoch (its own
+    * epoch field is ignored). Concurrent-writer guard (e.g. an
+    * upsertStream micro-batch landing between the state read and this
+    * commit): any write bumps the epoch, so an epoch moved since
+    * `readEpoch` means the log holds rows this snapshot never saw — the
+    * head must stay dirty or they'd be invisible. The re-read and the
+    * rename sit under the per-index manifest lock, so a writer can't slip
+    * its bump between them (it either lands before the re-read or after
+    * the rename, where [[bumpEpoch]] itself re-sets headDirty=1). The
+    * previous version stays, since lazy frames that search() returned
+    * before the commit may still resolve into it; older ones are GC'd
+    * and their handles released. */
+  private[graft] def commitSnapshot(tenant: String, index: String, readEpoch: Long,
+                                    snap: Manifest): Manifest = {
+    val committed = withManifestLock(tenant, index) {
+      val now = manifest(tenant, index)
+      val m = snap.copy(epoch = now.epoch + 1,
+        headDirty = if (now.epoch != readEpoch) 1 else snap.headDirty)
+      writeManifest(tenant, index, m)
+      m
+    }
+    gcOldSnapshots(tenant, index, keep = snap.version - 1)
+    evictStaleHandles(tenant, index, keep = snap.version - 1)
+    committed
+  }
+
+  /** A write's epoch bump marks the head dirty; `dirty = false` bumps
+    * the epoch alone (no data changed). */
+  private[graft] def bumpEpoch(tenant: String, index: String, dirty: Boolean = true): Unit =
     withManifestLock(tenant, index) {
       val m = manifest(tenant, index)
-      writeManifest(tenant, index, m.copy(epoch = m.epoch + 1, headDirty = 1))
+      writeManifest(tenant, index,
+        m.copy(epoch = m.epoch + 1, headDirty = if (dirty) 1 else m.headDirty))
     }
 
   // -------------------------------------------------------------------
@@ -202,13 +241,7 @@ private[graft] trait SnapshotStore { self: GraftEngine =>
       Paths.get(freshSnapshotDir(tenant, index, newVersion)))
     // headDirty stays 1: the local log's relation to the imported
     // watermark is unknown, so the head path must stay on
-    withManifestLock(tenant, index) {
-      val mNow = manifest(tenant, index)
-      writeManifest(tenant, index,
-        imported.copy(epoch = mNow.epoch + 1, version = newVersion, headDirty = 1))
-    }
-    gcOldSnapshots(tenant, index, keep = newVersion - 1)
-    evictStaleHandles(tenant, index, keep = newVersion - 1)
+    commitSnapshot(tenant, index, m0.epoch, imported.copy(version = newVersion, headDirty = 1))
   }
 
   /** Incremental compaction: fold the current state into a fresh tail
@@ -247,14 +280,7 @@ private[graft] trait SnapshotStore { self: GraftEngine =>
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     keyed.select("id_str", "meta", "tags")
       .write.mode("overwrite").parquet(s"$dir/records")
-    // same concurrent-writer guard as build(), same lock discipline
-    withManifestLock(tenant, index) {
-      val mNow = manifest(tenant, index)
-      writeManifest(tenant, index, Manifest(mNow.epoch + 1, wmRow.getLong(0),
-        m0.algo, wmRow.getLong(1), newVersion, m0.metric,
-        headDirty = if (mNow.epoch != m0.epoch) 1 else 0))
-    }
-    gcOldSnapshots(tenant, index, keep = newVersion - 1)
-    evictStaleHandles(tenant, index, keep = newVersion - 1)
+    commitSnapshot(tenant, index, m0.epoch, Manifest(0L, wmRow.getLong(0),
+      m0.algo, wmRow.getLong(1), newVersion, m0.metric, headDirty = 0))
   }
 }

@@ -11,18 +11,8 @@ import org.apache.spark.sql.SparkSession
   * own jobs and restores the outer name on exit.
   *
   * Only code that submits jobs is wrapped: a rows-tier call whose handles
-  * are settled, or a cache hit, sets no property. The names, by family:
-  *   write.dupCheck, write.count, write.append;
-  *   build.state, build.train, build.assign, build.pq, build.hnsw and one
-  *   per artifact write: build.centroids, build.codebooks, build.mips,
-  *   build.sq16, build.idmap, build.records; compact;
-  *   open.pqIndex, open.centroids, open.mips (lazy snapshot reads);
-  *   admit.idPool, admit.tagIndex, admit.hnsw, admit.sq16,
-  *   admit.packedFloats, admit.packedCodes (resident handle admissions);
-  *   serve.head (the fresh-head re-read); search.plan;
-  *   cache.probe, cache.reload, cache.populate, cache.compact,
-  *   cache.metrics, cache.prefetch, cache.centroids, cache.aliases;
-  *   stats; audit. */
+  * are settled, or a cache hit, sets no property. README.md lists the
+  * stage names. */
 object Stage {
   val Key = "graft.stage"
 

@@ -34,10 +34,6 @@ object ServerMain {
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // plan fallbacks' top-k aggregation keeps one bounded buffer per
-      // (query, task); the default 128-key fallback would push each
-      // scoring batch into sort-based aggregation, ~13× slower
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1995,4 +1995,76 @@ class EngineSpec extends SparkSpec {
     assert(tagBits(eng2).size == 2 &&
       tagBits(eng2).values.forall(_.isDefined), tagBits(eng2))
   }
+
+  test("a cached miss serves through the overridable searchRowsTraced; a hit does not") {
+    // subclasses that wrap the rows tier (a tracing engine, say) see every
+    // miss the per-call cascade answers, and no hit
+    val root = Files.createTempDirectory("engine_override").toString
+    val rowsCalls = new java.util.concurrent.atomic.AtomicInteger()
+    val eng = new GraftEngine(spark, root) {
+      override def searchRowsTraced(tenant: String, index: String,
+                                    queries: Array[(Long, Array[Float])], k: Int,
+                                    metric: String, nprobe: Int, refine: Int)
+          : (Array[(Long, Int, String, Double)], SearchTrace) = {
+        rowsCalls.incrementAndGet()
+        super.searchRowsTraced(tenant, index, queries, k, metric, nprobe, refine)
+      }
+    }
+    eng.add(mkRecords((0 until 30).map(i =>
+      (s"v$i", Seq(i.toFloat, 1f, 0f), null: String, Seq.empty[String], 100L))))
+    eng.build("t1", "idx", nlist = 2)
+    val qv = Array(3f, 1f, 0f)
+    val (miss, missRows, missTr) = eng.searchCachedRowsTraced("t1", "idx", 7L, qv,
+      k = 5, nprobe = 2, now = 1000L)
+    assert(miss == "MISS" && rowsCalls.get == 1, (miss, rowsCalls.get, missTr))
+    val (hit, hitRows, hitTr) = eng.searchCachedRowsTraced("t1", "idx", 7L, qv,
+      k = 5, nprobe = 2, now = 1001L)
+    assert(hit == "L0" && rowsCalls.get == 1, (hit, rowsCalls.get, hitTr))
+    assert(hitRows.toSeq == missRows.toSeq)
+  }
+
+  /** Every plan node of an executed query, through AQE's query stages. */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      planNodes(a.executedPlan)
+    case st: org.apache.spark.sql.execution.adaptive.QueryStageExec => planNodes(st.plan)
+    case other => other +: other.children.flatMap(planNodes)
+  }
+
+  test("an engine keeps the plan's top-k hash-aggregated on a session without the threshold") {
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val session = spark.newSession()
+    assert(session.conf.get(key) == "128", "the session must start at Spark's default")
+    val root = Files.createTempDirectory("engine_topk_threshold").toString
+    val eng = new GraftEngine(session, root)
+    val rng = new scala.util.Random(11)
+    eng.add(session.createDataFrame((0 until 64).map(i =>
+        (s"v$i", Seq.fill(4)(rng.nextFloat()), 100L)))
+      .toDF("id", "vector", "updated_at")
+      .withColumn("meta", lit(null).cast("string"))
+      .withColumn("tags", lit(null).cast("array<string>"))
+      .withColumn("tenant_id", lit("t1"))
+      .withColumn("index_name", lit("idx"))
+      .withColumn("deleted", lit(false)))
+    eng.build("t1", "idx", nlist = 2)
+    // 256 queries probing both lists: every scoring task aggregates 256
+    // query keys, past the default's 128
+    val queries = session.createDataFrame((0 until 256).map(i =>
+      (i.toLong, Seq.fill(4)(rng.nextFloat())))).toDF("query_id", "qvec")
+    val df = eng.search("t1", "idx", queries, k = 5, nprobe = 2)
+    assert(df.collect().length == 256 * 5)
+    val aggs = planNodes(df.queryExecution.executedPlan).collect {
+      case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
+    }
+    assert(aggs.nonEmpty, df.queryExecution.executedPlan)
+    assert(aggs.map(_.metrics("numTasksFallBacked").value).sum == 0,
+      aggs.map(_.metrics("numTasksFallBacked").value))
+    assert(session.conf.get(key) == "1000000")
+    // a caller's higher setting stays
+    val roomy = spark.newSession()
+    roomy.conf.set(key, "2000000")
+    new GraftEngine(roomy, root)
+    assert(roomy.conf.get(key) == "2000000")
+  }
 }

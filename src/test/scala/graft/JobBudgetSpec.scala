@@ -60,17 +60,14 @@ class JobBudgetSpec extends SparkSpec {
 
   // The state pass is 3 jobs: the cached LWW state's exchange, which AQE
   // runs while the pass's RDD is planned, then the fold. The driver
-  // k-means trainer's sample collect is 2 (MLlib KMeans was 17: k-means||
-  // rounds, one job per Lloyd iteration, the summary).
+  // k-means trainer's sample collect is 2.
 
   test("job budget: IVF_FLAT add, build and first search") {
     val (add, build, search, add2) = phases("IVF_FLAT")
     assert(add == addEmpty && add2 == addNonEmpty, (add, add2))
-    // 26 jobs before the one state pass
     assert(build == Map("build.state" -> 3, "build.train" -> 2, "build.assign" -> 1,
       "build.centroids" -> 1, "build.records" -> 1), build)
-    // the pack's exchange and collect, then the centroids; 8 before the
-    // handles took their sizes from the snapshot
+    // the pack's exchange and collect, then the centroids
     assert(search == Map("admit.idPool" -> 1, "admit.packedFloats" -> 2,
       "open.centroids" -> 1), search)
   }
@@ -78,12 +75,11 @@ class JobBudgetSpec extends SparkSpec {
   test("job budget: IVF_PQ add, build and first refined search") {
     val (add, build, search, add2) = phases("IVF_PQ", refine = 10)
     assert(add == addEmpty && add2 == addNonEmpty, (add, add2))
-    // 43 before the driver-local build: dim and sample jobs, the codes
-    // re-join, the SQ16 min/max pass, read-back and wave fetch
+    // PQ codes, codebooks and SQ16 codes come from driver-held rows
     assert(build == Map("build.state" -> 3, "build.train" -> 2, "build.pq" -> 1,
       "build.centroids" -> 1, "build.codebooks" -> 1, "build.sq16" -> 1,
       "build.records" -> 1), build)
-    // the codebook read opens the handle; 9 before, as for IVF_FLAT
+    // the codebook read opens the handle
     assert(search == Map("admit.idPool" -> 1, "admit.packedCodes" -> 2,
       "open.centroids" -> 1, "open.pqIndex" -> 1), search)
   }
@@ -91,10 +87,9 @@ class JobBudgetSpec extends SparkSpec {
   test("job budget: HNSW add, build and first search") {
     val (add, build, search, add2) = phases("HNSW")
     assert(add == addEmpty && add2 == addNonEmpty, (add, add2))
-    // 11 before the one state pass
     assert(build == Map("build.state" -> 3, "build.hnsw" -> 5, "build.idmap" -> 1,
       "build.records" -> 1), build)
-    // 15 before
+    // the graphs' size estimate and their collect
     assert(search == Map("admit.idPool" -> 1, "admit.hnsw" -> 11), search)
   }
 
