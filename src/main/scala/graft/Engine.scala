@@ -2,35 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{IvfFlat, TopK}
 
-/** The user-facing engine: the reference's command surface (VEC.ADD /
-  * VEC.UPSERT / VEC.DEL / VEC.SEARCH / index build / stats — SURVEY §3)
-  * re-expressed as batch table operations over an append-only record log.
-  *
-  * Storage layout under `root`:
-  *   records/tenant_id=?/index_name=?/...    append-only write log
-  *   indexes/<tenant>/<index>/manifest.json  epoch + watermark + version (commit point)
-  *   indexes/<tenant>/<index>/v<N>/...       immutable build snapshot N:
-  *     vectors/ (cluster-partitioned tail) + centroids/ + records/
-  *     [hnsw/ + idmap/ | ivfpq/{codes,centroids,codebooks}] per algo
-  *   cache/<tenant>/<index>/entries|aliases  result-cache tables
-  *
-  * Write semantics mirror the reference: ADD rejects duplicate live ids
-  * (VectorCommandSet.cs:605-615), UPSERT is last-write-wins preserving
-  * created_at (VectorStore.cs:23-33), DEL appends a tombstone
-  * (VectorStore.cs:41-58). Every write/build bumps the per-index epoch,
-  * which invalidates cached results (VectorIndexRegistry.cs:52-68).
-  *
-  * Search consults the built tail (IVF, partition-pruned by nprobe) AND
-  * the fresh head — records written after the build watermark — exactly
-  * like the reference's Delta head/tail index (DeltaVectorIndex.cs:76-122).
-  */
 /** Per-call observability record for the rows-serving entries — the
   * reference attaches TRACE JSON fields to each reply
   * (VectorCommandSet.cs:849-912); this is the library-call analog.
@@ -54,6 +32,10 @@ object GraftEngine {
     * at 100k). */
   private val LocalBuildMaxBytes: Long = 64L << 20
 
+  /** Keys one top-k task may hash-aggregate before its session falls
+    * back to sort-based aggregation; see the engine's constructor. */
+  private val TopKHashKeys = 1000000L
+
   /** Peak driver bytes one collected row costs a driver-local IVF_PQ
     * build, so the ledger reservation covers the build and not just the
     * collect. The row itself is 4d + 2b + 96 (floats, id string,
@@ -63,10 +45,6 @@ object GraftEngine {
     * 300); while the SQ16 codes are written, its Int codes and their row
     * in that write's relation (8d + 180). The resident SQ16 store is
     * reserved on its own line. */
-  /** Keys one top-k task may hash-aggregate before its session falls
-    * back to sort-based aggregation; see the engine's constructor. */
-  private val TopKHashKeys = 1000000L
-
   private def localRowBytes(dim: Int, idBytes: Long): Long =
     12L * dim + 3L * idBytes + 640L
 
@@ -167,8 +145,6 @@ object GraftEngine {
     * which would let build commit headDirty=0 and hide the fresh rows. */
   private val manifestLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
-  private def lockFor(root: String, tenant: String, index: String): Object =
-    manifestLocks.getOrElseUpdate(s"$root#$tenant/$index", new Object)
 
   /** Declared schemas of the snapshot and cache tables — what the build
     * and the cache writers write. Opening a table with its schema
@@ -192,6 +168,11 @@ object GraftEngine {
       "score" -> DoubleType)),
     "epoch" -> LongType, "expires_at" -> LongType, "written_at" -> LongType)
 
+  /** An array<string> column with null read as the empty array (size()
+    * yields -1 for null arrays under legacy configs). */
+  private[graft] def emptyTags: Column = array().cast("array<string>")
+  private[graft] def orEmpty(tags: Column): Column = coalesce(tags, emptyTags)
+
   /** Per-part AND of two aligned row-position bitmap sets (the
     * multi-tag conjunction on the resident tier). */
   private[graft] def andBits(a: Array[Array[Long]],
@@ -208,7 +189,29 @@ object GraftEngine {
   }
 }
 
-/** `refineU8Fallback` (OPT-IN, default off): when the sq16 refine
+/** The user-facing engine: the reference's command surface (VEC.ADD /
+  * VEC.UPSERT / VEC.DEL / VEC.SEARCH / index build / stats — SURVEY §3)
+  * re-expressed as batch table operations over an append-only record log.
+  *
+  * Storage layout under `root`:
+  *   records/tenant_id=?/index_name=?/...    append-only write log
+  *   indexes/<tenant>/<index>/manifest.json  epoch + watermark + version (commit point)
+  *   indexes/<tenant>/<index>/v<N>/...       immutable build snapshot N:
+  *     vectors/ (cluster-partitioned tail) + centroids/ + records/
+  *     [hnsw/ + idmap/ | ivfpq/{codes,centroids,codebooks}] per algo
+  *   cache/<tenant>/<index>/entries|aliases  result-cache tables
+  *
+  * Write semantics mirror the reference: ADD rejects duplicate live ids
+  * (VectorCommandSet.cs:605-615), UPSERT is last-write-wins preserving
+  * created_at (VectorStore.cs:23-33), DEL appends a tombstone
+  * (VectorStore.cs:41-58). Every write/build bumps the per-index epoch,
+  * which invalidates cached results (VectorIndexRegistry.cs:52-68).
+  *
+  * Search consults the built tail (IVF, partition-pruned by nprobe) AND
+  * the fresh head — records written after the build watermark — exactly
+  * like the reference's Delta head/tail index (DeltaVectorIndex.cs:76-122).
+  *
+  * `refineU8Fallback` (OPT-IN, default off): when the sq16 refine
   * store is budget-denied but a HALF-SIZE uint8 copy fits, serve
   * refined rows from the u8 store instead of dropping to the
   * distributed plan — the degraded tier trades measured recall
@@ -246,7 +249,7 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
   }
 
   private[graft] def withManifestLock[T](tenant: String, index: String)(f: => T): T =
-    GraftEngine.lockFor(root, tenant, index).synchronized(f)
+    manifestLocks.getOrElseUpdate(s"$root#$tenant/$index", new Object).synchronized(f)
 
   private def recordsPath = s"$root/records"
   private[graft] def indexPath(tenant: String, index: String) = s"$root/indexes/$tenant/$index"
@@ -361,8 +364,7 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
       .withColumn("tags", lit(null).cast("array<string>"))
       .withColumn("updated_at", lit(version))
       .withColumn("deleted", lit(true))
-    appendLog(tombs.select("tenant_id", "index_name", "id", "vector", "meta",
-      "tags", "updated_at", "deleted"))
+    appendLog(tombs)
     bumpEpoch(tenant, index)
   }
 
@@ -736,6 +738,17 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
   // read path (SURVEY §3.1 steps 10-12)
   // -------------------------------------------------------------------
 
+  /** Deterministic scan cap: keep the `maxScans` hash-smallest candidate
+    * ids per query (see [[search]]). Applied uniformly to tail AND head
+    * candidate streams. */
+  private def capScans(candidates: DataFrame, maxScans: Int): DataFrame =
+    if (maxScans <= 0) candidates
+    else {
+      val wScan = Window.partitionBy("query_id").orderBy(xxhash64(col("id_str")))
+      candidates.withColumn("scan_rn", row_number().over(wScan))
+        .filter(col("scan_rn") <= maxScans).drop("scan_rn")
+    }
+
   /** Batch search. queries: (query_id BIGINT, qvec ARRAY<FLOAT>,
     * filter_tags ARRAY<STRING> optional). Returns (query_id, rank, id,
     * score[, meta]) — id is the user-facing string id.
@@ -747,33 +760,24 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
     * the merge. The tag filter runs BEFORE top-k (better recall than the
     * reference's post-filter — deliberate, documented divergence:
     * SURVEY §4.1); hydration joins the ≤k hit ids back to the record
-    * snapshot (reference steps 10-12, VectorCommandSet.cs:457-480). */
-  /** `maxScans` > 0 caps the number of scored tail candidates per query —
+    * snapshot (reference steps 10-12, VectorCommandSet.cs:457-480).
+    *
+    * `maxScans` > 0 caps the number of scored tail candidates per query —
     * the reference's cost-ceiling / budget-degradation knob (F6,
     * BruteForceVectorIndex.cs:288-344; budget halving
     * VectorCommandSet.cs:436-456). The reference truncates its
     * insertion-order scan; a distributed table has no insertion order, so
     * the deterministic analog keeps the `maxScans` hash-smallest candidate
-    * ids per query (documented divergence, COVERAGE.md). */
-  /** Deterministic scan cap: keep the `maxScans` hash-smallest candidate
-    * ids per query (see maxScans doc above). Applied uniformly to tail AND
-    * head candidate streams. */
-  private def capScans(candidates: DataFrame, maxScans: Int): DataFrame =
-    if (maxScans <= 0) candidates
-    else {
-      val wScan = Window.partitionBy("query_id").orderBy(xxhash64(col("id_str")))
-      candidates.withColumn("scan_rn", row_number().over(wScan))
-        .filter(col("scan_rn") <= maxScans).drop("scan_rn")
-    }
-
-  /** `refine` > 0 (IVF_PQ only) re-scores the top `k·refine` ADC
+    * ids per query (documented divergence, COVERAGE.md).
+    *
+    * `refine` > 0 (IVF_PQ only) re-scores the top `k·refine` ADC
     * candidates per query against the raw vectors retained in the build
     * snapshot — the classic PQ refine step. ADC ranks are approximate;
     * the rerank makes the served top-k exact whenever the true top-k
     * survives the ADC cut (guaranteed at refine·k ≥ candidates), and also
     * removes the approximate-tail/exact-head score asymmetry of the delta
-    * merge. 0 = raw ADC scores (the reference's serving behavior). */
-  /** `refineStore` picks the rerank vectors when `refine` > 0: "exact"
+    * merge. 0 = raw ADC scores (the reference's serving behavior).
+    * `refineStore` picks the rerank vectors when `refine` > 0: "exact"
     * (default) re-scores against the snapshot's retained raw vectors;
     * "sq16" against the SQ16 sidecar's dequantized vectors — the SAME
     * floats the resident rows tier reranks with, so the two tiers give
@@ -817,8 +821,7 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
         val headIds = headState.select(col("id").as("id_str")).distinct()
         val headLive = headState.filter(!col("deleted"))
           .select(col("id").as("id_str"), col("vector").as("vec"),
-            coalesce(col("tags"), array().cast("array<string>")).as("tags"),
-            col("meta"))
+            orEmpty(col("tags")).as("tags"), col("meta"))
         Some((headIds, headLive))
       }
 
@@ -834,6 +837,13 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
     val baseQueries = queries.select("query_id", "qvec")
 
     val tagFilter = queries.columns.contains("filter_tags")
+    // F1: every filter tag on the candidate's tags (`tagsOf`: id_str, tags)
+    def tagFiltered(cands: DataFrame, tagsOf: DataFrame): DataFrame =
+      cands.join(broadcast(queries.select("query_id", "filter_tags")), "query_id")
+        .join(tagsOf, Seq("id_str"), "left")
+        .filter(coalesce(size(col("filter_tags")), lit(0)) === 0 ||
+          forall(col("filter_tags"), t => array_contains(orEmpty(col("tags")), t)))
+        .select("query_id", "id_str", "score")
 
     // tail candidates per the built algo, minus ids re-written in head
     val tailScored = m.algo match {
@@ -943,17 +953,8 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
           // after this branch and the downstream filter handles them.
           val adcEligible =
             if (!tagFilter) adcCands
-            else adcCands
-              .join(broadcast(queries.select("query_id", "filter_tags")),
-                "query_id")
-              .join(snapshot.select(col("id_str"),
-                coalesce(col("tags"), array().cast("array<string>"))
-                  .as("tags")), Seq("id_str"), "left")
-              .filter(coalesce(size(col("filter_tags")), lit(0)) === 0 ||
-                forall(col("filter_tags"),
-                  t => array_contains(coalesce(col("tags"),
-                    array().cast("array<string>")), t)))
-              .select("query_id", "id_str", "score")
+            else tagFiltered(adcCands,
+              snapshot.select(col("id_str"), orEmpty(col("tags")).as("tags")))
           // bounded ADC cut (≤ k·refine rows per query), shared by both
           // rerank stores
           val cut = TopK.perGroup(
@@ -1037,22 +1038,13 @@ class GraftEngine(private[graft] val spark: SparkSession, private[graft] val roo
     val filtered =
       if (!tagFilter) candidates
       else {
-        val snapTags = snapshot.select(col("id_str"),
-          coalesce(col("tags"), array().cast("array<string>")).as("tags"))
-        val tagsOf = headOpt match {
+        val snapTags = snapshot.select(col("id_str"), orEmpty(col("tags")).as("tags"))
+        tagFiltered(candidates, headOpt match {
           case None => snapTags
           case Some((headIds, headLive)) =>
             headLive.select(col("id_str"), col("tags"))
               .unionByName(snapTags.join(headIds, Seq("id_str"), "left_anti"))
-        }
-        candidates
-          .join(broadcast(queries.select("query_id", "filter_tags")), "query_id")
-          .join(tagsOf, Seq("id_str"), "left")
-          .filter(coalesce(size(col("filter_tags")), lit(0)) === 0 ||
-            forall(col("filter_tags"),
-              t => array_contains(coalesce(col("tags"),
-                array().cast("array<string>")), t)))
-          .select("query_id", "id_str", "score")
+        })
       }
 
     // bounded top-k on a numeric surrogate, then map back to string ids.

@@ -110,9 +110,7 @@ private[graft] trait ResidentHandles { self: GraftEngine =>
     private lazy val records = spark.read
       .schema("id_str STRING, meta STRING, tags ARRAY<STRING>")
       .parquet(s"$snap/records")
-    // size() yields -1 for null arrays under legacy configs; coalesce
-    // makes it 0
-    private def tagsCol = coalesce(col("tags"), array().cast("array<string>"))
+    private def tagsCol = orEmpty(col("tags"))
 
     // ≈ 8 bytes per (record, tag) entry: the per-DISTINCT-tag key strings
     // are noise next to the long arrays
@@ -193,11 +191,9 @@ private[graft] trait ResidentHandles { self: GraftEngine =>
     val sq16 = new Residency.Memo[graft.operators.Sq16Store](Stage.run(spark, "admit.sq16")(sq16Stats match {
       case None => Residency.Denied
       case Some((n, dim)) =>
-        // shared estimator: it counts the per-segment headers, so the
-        // admitted estimate never undercounts what the built store
-        // registers. Byte budgets are the only capacity gate: the store
-        // is segmented (Sq16Store.SegMaxCodes), so no Int-indexed array
-        // ceiling exists to deny around
+        // the shared estimator counts the per-segment headers, so the
+        // admitted estimate never undercounts the built store; segmented
+        // (Sq16Store.SegMaxCodes), it has no Int-indexed array ceiling
         val est = graft.operators.Sq16Store.estimateBytes(n, dim)
         Residency.admit(Residency.Refine, est, sq16MaxBytes) {
           // the segment sidecar when the snapshot carries it (a
@@ -360,14 +356,11 @@ private[graft] trait ResidentHandles { self: GraftEngine =>
       try {
         val m = manifest(tenant, index)
         if (m.version > 0) {
-          // the serving gates decide what warms ([[rowsTierOf]], the same
-          // resolver every rows call runs): an index they deny can never
-          // serve rows-native, so warming its handles would strand bytes
-          // on the ledger (ADVICE r9). Then force every lazy the first
-          // call's tail kernel would pay: the packed collect (admitted
-          // from the manifest's row count; the dispatch reads its list
-          // lengths off the packed ranges), the centroid collect, and the
-          // MIPS fold constant, a parquet read on IP-built PQ indexes.
+          // the serving gates decide what warms ([[rowsTierOf]], the
+          // resolver every rows call runs): warming an index they deny
+          // would strand bytes on the ledger. Then force every lazy the
+          // first call's tail kernel would pay: the packed collect, the
+          // centroid collect, and the MIPS fold constant of IP-built PQ.
           rowsTierOf(tenant, index, m, refine = false, filtered = false,
               hnsw = true).foreach(_.tail match {
             case FlatTail =>

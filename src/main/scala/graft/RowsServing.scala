@@ -64,28 +64,23 @@ private[graft] trait RowsServing { self: GraftEngine =>
   /** Tag-filtered zero-job serving: [[searchRowsTraced]] with the F1
     * conjunctive tag filter applied DURING the scan, not by delegating to
     * the batch cascade — the reference filters in-process inside its scan
-    * loop at ~no extra cost (VectorCommandSet.cs:461-480), and before this
-    * path a FILTER wire miss paid the ~20-action batch plan, an invisible
-    * latency cliff next to the ~5 ms unfiltered miss.
+    * loop at ~no extra cost (VectorCommandSet.cs:461-480).
     *
     * Parity with the batch plan's filter-then-top-k (spec-pinned): the
-    * filter tags resolve to a sorted surrogate set from the snapshot's own
-    * tag table (intersection for the conjunction), the packed scan skips
-    * non-members before scoring, head candidates check their OWN head tags
-    * (head wins over snapshot for re-written ids, exactly the batch
-    * `tagsOf` union), and masking/tie-breaks are unchanged. IVF_PQ
-    * indexes serve through the resident byte-code tier (same allowed-set
-    * kernel hook, plan-exact metric folds). Returns None when the
-    * index/batch is outside the rows-tier gates (HNSW, non-resident PQ,
-    * oversized corpus or head, top-k budget) — the caller keeps the
-    * always-correct distributed filtered plan. */
-  /** `hnswBeam = true` opts a FILTERED call on an HNSW index into the
-    * FILTER-DURING-BEAM semantics ([[graft.operators.Hnsw.searchLocalRowsFiltered]])
-    * — a NEW capability flag, not reference parity: the default keeps
-    * the batch plan's fetch-k×10-then-filter (which the reference's
-    * post-filter shape demands and the F1 parity spec pins). Beam mode
-    * is resident-only; outside the rows gates the call falls back to
-    * the plan's post-filter semantics (callers see that in the trace). */
+    * tags resolve to a sorted surrogate set from the snapshot's tag table
+    * (intersected for the conjunction), the scan skips non-members before
+    * scoring, head candidates check their OWN head tags (head wins over
+    * snapshot, like the batch `tagsOf` union), and masking/tie-breaks are
+    * unchanged. Returns None outside the rows-tier gates (HNSW, non-resident
+    * PQ, oversized corpus or head, top-k budget): the caller keeps the
+    * distributed filtered plan.
+    *
+    * `hnswBeam = true` opts a FILTERED call on an HNSW index into
+    * filter-during-beam ([[graft.operators.Hnsw.searchLocalRowsFiltered]]),
+    * a capability beyond the reference: the default keeps the plan's
+    * fetch-k×10-then-filter, which the F1 parity spec pins. Beam mode is
+    * resident-only; outside the rows gates the call gets the plan's
+    * post-filter semantics (the trace shows which). */
   private[graft] def searchRowsFilteredTraced(
       tenant: String, index: String,
       queries: Array[(Long, Array[Float])], k: Int,
@@ -414,23 +409,17 @@ private[graft] trait RowsServing { self: GraftEngine =>
   }
 
   /** PQ tail for the rows serving tier: zero-job ADC scan over the
-    * resident packed codes, scores folded onto the SAME scale the batch
-    * plan merges on (COSINE: unit-normalized query, fold 1 + s/2; IP:
-    * MIPS zero-padded query, fold (s + ‖q‖² + M²)/2; L2: raw −ADC
-    * distance² — the head's exact scores merge against it with the same
-    * asymmetry as the plan, DeltaVectorIndex.cs:76-122). Every float/
-    * double op mirrors the plan's kernels exactly (vector_unit UDF,
-    * concat-pad, vector_dot accumulation), so tier parity is bit-level —
-    * spec-pinned including exact ties. Folds are strictly monotone per
-    * query, so folding AFTER the local top-k preserves ranks/ties.
-    * The engine's constructor bound, not the compiled-in default,
+    * resident packed codes, scores folded by [[pqFoldedQueries]] onto the
+    * SAME scale the batch plan merges on (L2 stays raw −ADC distance²,
+    * merged against the head's exact scores with the plan's asymmetry,
+    * DeltaVectorIndex.cs:76-122). Every float/double op mirrors the
+    * plan's kernels, so tier parity is bit-level, spec-pinned including
+    * exact ties. The engine's constructor bound, not the compiled-in default,
     * governs every PQ rows path. Unfiltered, an over-bound batch takes
     * the distributed ADC plan. That plan has no filter hook, so a
     * filtered call serves ONLY from the resident byte-code tier: None
     * (over-budget batch or non-resident codes) keeps the caller's
-    * distributed filtered plan instead of throwing at serve time (the r7
-    * ADVICE failure: a filtered batch past PqServeMaxLookupsMT hit the
-    * unfiltered fallback's require). */
+    * distributed filtered plan instead of throwing at serve time. */
   private def pqTailRows(tenant: String, index: String, m: Manifest,
                          pq: graft.operators.IvfPq.Index,
                          queries: Array[(Long, Array[Float])],
@@ -447,6 +436,16 @@ private[graft] trait RowsServing { self: GraftEngine =>
     rows.map(_.map { case (qid, rank, surr, s) => (qid, rank, surr, fold(qid, s)) })
   }
 
+  /** k·refine rerank cut size, computed in Long: the wire caps REFINE at
+    * 10k but the engine API takes any Int, and an Int product overflows
+    * NEGATIVE — max(1, negative) would silently degrade the ADC cut to 1
+    * candidate per query instead of failing. */
+  private[graft] def refineCutSize(k: Int, refine: Int): Int = {
+    val c = math.max(1L, k.toLong * refine.toLong)
+    require(c <= Int.MaxValue, s"k*refine overflows Int: $k * $refine")
+    c.toInt
+  }
+
   /** Refined PQ tail for the rows tier — the zero-job twin of the plan's
     * refine branch (searchImpl's IVF_PQ refine): take the plan's ADC cut
     * (post-mask top k·refine by ADC order, reproduced here as a pre-mask
@@ -459,16 +458,6 @@ private[graft] trait RowsServing { self: GraftEngine =>
     * metric scale — no ADC fold — so the head merge compares exact with
     * exact (the refine rationale: the delta merge's score asymmetry is
     * gone). Returns the per-query top k, already masked. */
-  /** k·refine rerank cut size, computed in Long: the wire caps REFINE at
-    * 10k but the engine API takes any Int, and an Int product overflows
-    * NEGATIVE — max(1, negative) would silently degrade the ADC cut to 1
-    * candidate per query instead of failing. */
-  private[graft] def refineCutSize(k: Int, refine: Int): Int = {
-    val c = math.max(1L, k.toLong * refine.toLong)
-    require(c <= Int.MaxValue, s"k*refine overflows Int: $k * $refine")
-    c.toInt
-  }
-
   private def pqTailRowsRefined(tenant: String, index: String, m: Manifest,
                                 pqIdx: graft.operators.IvfPq.Index,
                                 queries: Array[(Long, Array[Float])],
@@ -623,31 +612,18 @@ private[graft] trait RowsServing { self: GraftEngine =>
     }
   }
 
-  /** Row ceiling for the rows serving tier's manifest gate — a cheap
-    * PRE-gate, not the admission decision: every rows-tier serve needs
-    * the resident [[IdPool]] (sorted longs + one UTF-8 blob, ≥ 12 bytes
-    * per entry before the id text), so `idPoolMaxBytes / 12` is the row
-    * count past which NO pool could be admitted even with zero-length
-    * ids — the gate skips the residency-estimate jobs for corpora the
-    * byte budgets could never accept, and everything under it is decided
-    * by exact measured bytes in [[SnapshotHandles.idPool]] / `sq16` /
-    * packedDriver, each admitted by the [[Residency]] ledger against its
-    * per-handle cap, its line's cap and the JVM total (half the heap).
-    * Corpora past any cap fall back to the DataFrame plan, which
-    * resolves ids with a broadcast semi-join instead of a resident map.
-    * Floored at 16M so deliberately tiny test budgets still exercise the
-    * measured-byte denial paths rather than this gate. At the 512 MB
-    * default the gate sits at ~44.7M rows; a 20M×dim128 IVF_PQ corpus
-    * (packed codes ~480 MB at 24 B/vec — the BINDING cap on the plain
-    * path, denying at ~22.4M of the pq-codes line's 512 MB per index;
-    * pool ~420 MB of the ids-tags line's 512 MB; segmented sq16 refine
-    * store 5.3 GB under the refine line's 8 GiB per store, ~6.2 GB in
-    * all under a 32 GiB heap's 16 GiB total) now serves RESIDENT on the
-    * plain, refined, AND filtered paths (Engine10mServeMain 20000000
-    * measures exactly that).
-    * (Was a scalar 16M; before that 1M when the resolver was a boxed
-    * Map — the compact pool is what lets the wire serve 10M+ rungs
-    * driver-side.) */
+  /** Row ceiling for the rows tier's manifest gate — a cheap PRE-gate,
+    * not the admission decision. Every rows-tier serve needs the resident
+    * [[IdPool]] (≥ 12 bytes per entry before the id text), so past
+    * `idPoolMaxBytes / 12` rows no pool could be admitted and the gate
+    * skips the residency-estimate jobs. Under it the [[Residency]] ledger
+    * admits each handle by exact measured bytes against its per-handle
+    * cap, its line's cap and the JVM total; corpora past any cap take the
+    * DataFrame plan. Floored at 16M so tiny test budgets still exercise
+    * the measured-byte denials. At the 512 MB default the gate sits at
+    * ~44.7M rows; a 20M × dim 128 IVF_PQ corpus (codes ~480 MB, the
+    * binding cap; pool ~420 MB; sq16 store 5.3 GB) serves resident on the
+    * plain, refined and filtered paths (Engine10mServeMain 20000000). */
   private[graft] val RowsServeMaxRows =
     math.max(16000000L, idPoolMaxBytes / 12L)
 

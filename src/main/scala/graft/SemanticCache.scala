@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType,
+  StringType}
 
 import GraftEngine._
 
@@ -16,13 +17,9 @@ import GraftEngine._
 private[graft] trait SemanticCache { self: GraftEngine =>
   import SemanticCache._
 
-  // -------------------------------------------------------------------
-  // semantic-cluster override for the L2 cache layer (reference:
-  // SemanticClusterRegistry fed by POST centroids, IndexController.cs:251-292
-  // + sidecar semantic_model.py:30-53 — the cache clustering is allowed to
-  // come from an externally trained model, independent of the index tail)
-  // -------------------------------------------------------------------
-
+  // The L2 layer's clustering may come from an externally trained model,
+  // independent of the index tail (reference: SemanticClusterRegistry fed
+  // by POST centroids, IndexController.cs:251-292, semantic_model.py:30-53).
   private def cacheCentroidsPath(tenant: String, index: String) =
     s"$root/cache/$tenant/$index/centroids"
 
@@ -64,10 +61,6 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     cacheCentroidMemo.remove(s"$tenant/$index")
     invalidateCache(tenant, index)
   }
-
-  // -------------------------------------------------------------------
-  // cached search (SURVEY §3.1 steps 6-13 assembled)
-  // -------------------------------------------------------------------
 
   /** Parquet part-file ceiling for the entry table before an inline
     * compaction pass: the per-call validity probe scans every entry file,
@@ -302,8 +295,8 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     *
     * Scale shape: keys are column expressions; the probe is an equi-join
     * of the (small) request batch against the keyed entry table; only
-    * misses reach the index scan. No driver-side per-query loop. */
-  /** `options` carries the step-8/9 resolution ([[resolveSearchOptions]]):
+    * misses reach the index scan. No driver-side per-query loop.
+    * `options` carries the step-8/9 resolution ([[resolveSearchOptions]]):
     * `cacheOnly` sheds each missing query as one (rank 0, null id,
     * layer "SHED") row — the batch analog of the reference's
     * `VEC_ERR_BUSY "SLO mode: cache-only."` per-request error — and
@@ -319,30 +312,17 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     m.requireMetric(metric)
 
     // one key set per DISTINCT query id: duplicates would defeat the
-    // fully-warm fast path (row counts vs per-query hit rows), bill
-    // phantom misses, and double-write entries (the old crossJoin+window
-    // key derivation deduplicated as a side effect). Dedup on the FULL
-    // payload, not query_id alone — a query_id reused with a different
-    // vector/filter would otherwise keep an arbitrary row and make
-    // results nondeterministic; the uniqueness check below fails fast on
-    // that instead. Tags dedup on the NORMALIZED (sorted, null=empty)
-    // form — the same normalization the cache keys use — so tag order
-    // never makes two identical requests look conflicting.
-    val queries = {
-      if (!queries0.columns.contains("filter_tags"))
-        queries0.dropDuplicates(Seq("query_id", "qvec"))
-      else
-        queries0
-          .withColumn("_tags_norm", sort_array(
-            coalesce(col("filter_tags"), array().cast("array<string>"))))
-          .dropDuplicates(Seq("query_id", "qvec", "_tags_norm"))
-          .drop("_tags_norm")
-    }
-
-    val tagsNorm =
-      if (queries.columns.contains("filter_tags"))
-        sort_array(coalesce(col("filter_tags"), array().cast("array<string>")))
-      else array().cast("array<string>")
+    // fully-warm fast path, bill phantom misses and double-write entries.
+    // Dedup on the FULL payload (a query_id reused with a different
+    // vector/filter fails the uniqueness check below instead), tags in the
+    // cache keys' normalized form, so tag order never makes two identical
+    // requests look conflicting.
+    val filtered = queries0.columns.contains("filter_tags")
+    val tagsNorm = if (filtered) sort_array(orEmpty(col("filter_tags"))) else emptyTags
+    val queries =
+      if (!filtered) queries0.dropDuplicates(Seq("query_id", "qvec"))
+      else queries0.withColumn("_tags_norm", tagsNorm)
+        .dropDuplicates(Seq("query_id", "qvec", "_tags_norm")).drop("_tags_norm")
 
     // L2 layer key: the per-call cascade's own admission, run as one
     // narrow UDF pass over the driver-sized centroid table (nlist rows) —
@@ -456,29 +436,20 @@ private[graft] trait SemanticCache { self: GraftEngine =>
       schemaOf("query_id" -> queries.schema("query_id").dataType,
         "rank" -> IntegerType, "id" -> StringType, "score" -> DoubleType))
 
-    // miss path: the real delta search (steps 10-12); materialized so the
-    // populate write below doesn't trigger a second full search and the
-    // returned frame is decoupled from the just-appended cache files.
-    // Under cache-only shedding the misses never reach the index.
-    // Small miss batches (≤1024 plain long-id queries, no tag filter or
-    // scan cap) route through the zero-job [[searchRows]] serving tier
-    // instead of the distributed plan: the result comes back as a local
-    // relation (decoupled from cache files by construction, so no
-    // checkpoint either), replacing the cold call's costliest action
-    // chain with one bounded collect. Large or filtered batches keep the
-    // distributed path — on a cluster that is the only correct tier.
+    // miss path: the real delta search (steps 10-12), materialized so the
+    // populate write below doesn't rerun it and the returned frame is
+    // decoupled from the just-appended cache files; under cache-only
+    // shedding misses never reach the index. Small miss batches (≤1024
+    // plain long-id queries, no tag filter or scan cap) take the zero-job
+    // [[searchRows]] tier, whose local relation needs no checkpoint; large
+    // or filtered batches keep the distributed plan.
     val rowsPathOk = nQ <= CachedMissLocalMaxQueries &&
-      queries.schema("query_id").dataType ==
-        org.apache.spark.sql.types.LongType &&
+      queries.schema("query_id").dataType == LongType &&
       // the local collect reads getSeq[Float]: the gate must fully decide
       // eligibility, so an array<double> qvec frame (typed but castable)
       // stays on the distributed path instead of a late ClassCastException
-      (queries.schema("qvec").dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, _) => true
-        case _ => false
-      }) &&
-      !queries.columns.contains("filter_tags") && options.maxScans == 0
+      (queries.schema("qvec").dataType match { case ArrayType(FloatType, _) => true; case _ => false }) &&
+      !filtered && options.maxScans == 0
     val fresh =
       if (options.cacheOnly || !anyMiss) emptyResult()
       else if (rowsPathOk) {
@@ -600,8 +571,8 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     * the fold) reads the mixed dir unchanged. */
   private def writeServingMetricsLocal(dir: String, ts: Long, hits: Long,
                                    misses: Long): Unit =
-    writeParquetLocal(dir, metricsRowSchema, Seq(())) { (g, _) =>
-      g.add("ts", ts); g.add("hits", hits); g.add("misses", misses)
+    writeParquetLocal(dir, metricsRowSchema, Seq((ts, hits, misses))) {
+      case (g, (t, h, m)) => g.add("ts", t); g.add("hits", h); g.add("misses", m)
     }
 
   /** Parquet-mr twin of the batch populate's entry rows — byte-compatible
@@ -678,15 +649,14 @@ private[graft] trait SemanticCache { self: GraftEngine =>
                 latencies: Option[DataFrame] = None): String =
       Stage.run(spark, "stats") {
     import graft.operators.Governance
-    val p = s"$root/metrics/$tenant/$index"
-    val (h, m) =
-      if (!Files.exists(Paths.get(p))) (0L, 0L)
+    // each column's sum over a log dir; 0 for a missing dir or no rows
+    def sums(dir: String, cols: String*): Seq[Long] =
+      if (!Files.exists(Paths.get(dir))) cols.map(_ => 0L)
       else {
-        val r = spark.read.parquet(p)
-          .agg(sum("hits"), sum("misses")).head
-        (if (r.isNullAt(0)) 0L else r.getLong(0),
-          if (r.isNullAt(1)) 0L else r.getLong(1))
+        val r = spark.read.parquet(dir).agg(sum(cols.head), cols.tail.map(c => sum(c)): _*).head
+        cols.indices.map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
       }
+    val Seq(h, m) = sums(s"$root/metrics/$tenant/$index", "hits", "misses")
     val hist = latencies.map(Governance.latencyHistogram(_, "latency_ms"))
       .getOrElse {
         import spark.implicits._
@@ -695,13 +665,7 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     // real eviction counts from the GC log (entries dropped by
     // compactCacheEntries — the reference's MemoryCacheStorage eviction
     // counter feeding GetStats)
-    val evPath = evictionsPath(tenant, index)
-    val ev =
-      if (!Files.exists(Paths.get(evPath))) 0L
-      else {
-        val r = spark.read.parquet(evPath).agg(sum("evicted")).head
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
+    val Seq(ev) = sums(evictionsPath(tenant, index), "evicted")
     // live resident-tier hits/misses (not yet flushed to the log) fold in
     // so VEC.STATS is current even mid-serving-burst
     val (memHits, memMisses) = cacheStates.get((tenant, index))
@@ -710,10 +674,6 @@ private[graft] trait SemanticCache { self: GraftEngine =>
       Governance.standardCounters(h + memHits, m + memMisses, evictions = ev,
         fallbacks = 0L), hist)
   }
-
-  // -------------------------------------------------------------------
-  // per-call cached serving (resident L0 probe over the entry table)
-  // -------------------------------------------------------------------
 
   // one entry-table row: (cache_key, layer, hits, epoch, expires_at,
   // written_at)
@@ -738,23 +698,17 @@ private[graft] trait SemanticCache { self: GraftEngine =>
     * up. `served` marks an index the per-call tier has answered for.
     *
     * Pending inserts: rows-path cache inserts pending their durable
-    * append. The reference's cache insert is an in-memory map put
-    * (MemoryCacheStorage) — serving truth here is likewise the resident
-    * map, updated in-heap at miss time; the parquet append that makes the
-    * entry visible to the BATCH cascade and to a cold restart is amortized
-    * through this queue (per-call parquet-writer init + dir rewalk
-    * measured ~20 ms and serialized wire misses on the manifest lock at
-    * ~24 QPS). Flushes are inline and deterministic — no background
-    * thread: a miss flushes when the queue reaches [[PendingFlushMaxRows]]
-    * or its oldest row (`pendingSince`, a System.nanoTime) exceeds
-    * [[PendingFlushMaxAgeNanos]]; hits piggyback the age check. Batch
-    * readers may lag a pending insert by at most the flush trigger — a
-    * cache answering a just-inserted query with a recompute, never a wrong
-    * result (and strictly more durable than the reference, which loses
-    * every entry on restart). [[flushCachePending]] is the deterministic
-    * hook for tests and shutdown. `quotaMb` is the latest caller-supplied
-    * CacheMemoryMb — the rows path's analog of SearchOptions.cacheMemoryMb,
-    * consulted at flush time.
+    * append. Serving truth is the resident map, updated in-heap at miss
+    * time like the reference's in-memory put (MemoryCacheStorage); the
+    * parquet append that makes the entry visible to the BATCH cascade and
+    * to a restart is amortized through this queue (a per-call append cost
+    * ~20 ms and serialized misses on the manifest lock). Flushes are
+    * inline, no background thread: a miss flushes when the queue reaches
+    * [[PendingFlushMaxRows]] or its oldest row (`pendingSince`, nanoTime)
+    * passes [[PendingFlushMaxAgeNanos]]; hits piggyback the age check. A
+    * batch reader may recompute a just-inserted query, never answer
+    * wrong. `quotaMb`: the latest caller-supplied CacheMemoryMb, consulted
+    * at flush time.
     *
     * Resident maps: `entries` (epoch, dir fingerprint, key → entries) and
     * `aliases` (dir fingerprint, source → canonical key), reloaded when
@@ -806,15 +760,13 @@ private[graft] trait SemanticCache { self: GraftEngine =>
       case ((t, i), st) => (t, i, st.hits.get(), st.misses.get())
     }
 
-  // -------------------------------------------------------------------
-  // sidecar-applied serving policy. The reference applies the policy's
+  // Sidecar-applied serving policy. The reference applies the policy's
   // TtlSeconds to subsequent cache decisions and leaves
   // AdmissionThreshold/EvictionPriority declared-but-unapplied on the
   // engine side (DynamicPolicyEngine.cs:16-46 — the comment at :40 says
   // exactly that); mirrored here: TTL drives inserts, the other two ride
   // along as data for stats/decision logs. ttl ≤ 0 = the reference's
   // NoCache decision — entries are born expired and never serve.
-  // -------------------------------------------------------------------
   private val appliedPolicies = scala.collection.concurrent.TrieMap
     .empty[String, (Int, Double, String)]
 
@@ -838,18 +790,12 @@ private[graft] trait SemanticCache { self: GraftEngine =>
   /** Drain the pending rows-path inserts for an index into the durable
     * entry table through [[appendCacheEntries]] — one parquet-mr append,
     * no Spark job, under the tenant's CacheMemoryMb like the batch
-    * populate. The sweep memo's window is the smallest TTL among the
-    * drained rows. Rejected rows' misses were already served; their
-    * in-heap copies age out by TTL/epoch under the resident map's own
-    * bounds. After an append, re-stamp the resident map's fingerprint so
-    * the flush itself does not force a reload: the map already holds
-    * these entries, so if its stamp matched the pre-write dir it matches
-    * the post-write dir too. A stamp that does NOT match fpBefore means
-    * someone else (a batch populate) wrote the dir since the map
-    * loaded — leave it mismatched and let the next probe reload as
-    * usual. Serving metrics flush here too, so rows-path hit/miss
-    * billing becomes durable on the same amortized cadence as the
-    * entries themselves. */
+    * populate; the sweep memo's window is the smallest drained TTL.
+    * Rejected rows were already served and age out in-heap. After an
+    * append the resident map's fingerprint is re-stamped, so the flush
+    * itself forces no reload; a stamp that does not match the pre-write
+    * dir means another writer changed it, and the next probe reloads.
+    * Serving metrics flush here too, on the same amortized cadence. */
   def flushCachePending(tenant: String, index: String): Unit = {
     val st = cacheStates.get((tenant, index)).orNull
     if (st == null || st.pending.isEmpty) return
@@ -899,13 +845,13 @@ private[graft] trait SemanticCache { self: GraftEngine =>
       flushServingMetrics(t, i, now)
     }
 
+  // forces a reload (and mismatches any cached value) when a concurrent
+  // GC-swap/flush deletes files mid-walk — monotonically unique
+  private val fpRaceMarker = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
+
   /** [[scanDir]]'s fingerprint for the serving path's staleness check of
     * a resident map (the dir is bounded at [[CacheGcFileThreshold]]
     * files). */
-  // forces a reload (and mismatches any cached value) when a concurrent
-  // GC-swap/flush deletes files mid-walk — monotonically unique
-  private val fpRaceMarker = new java.util.concurrent.atomic.AtomicLong(
-    Long.MinValue)
   private def entriesFingerprint(dir: String): Long =
     try scanDir(dir).fingerprint
     catch {
@@ -983,18 +929,13 @@ private[graft] trait SemanticCache { self: GraftEngine =>
   }
 
   /** Per-call cached serving: the RESP-shaped analog of [[searchCached]]
-    * for a single query — the full L0 → L0.5 → L1 → L2 priority cascade
-    * probed against a driver-resident copy of the (GC-bounded) entry
-    * table. A valid hit returns in-heap with no job, tagged with its
-    * layer. Every miss serves in-process and returns layer "MISS" (see
-    * the miss tail below), billed via the in-memory miss counter that
-    * [[flushCachePending]]/[[flushServingMetrics]] persist, its entry
-    * quota-enforced at flush against `cacheMemoryMb`. Probe semantics
-    * equal the batch plan's: same key derivations (the driver/Column
-    * parity is spec-pinned; L1 reuses the simhash kernel itself; L2 is
-    * the batch UDF's own [[graft.operators.Caching.l2ClusterLocal]]), same
-    * epoch gate, same expiry-before-winner rule, same winner order
-    * (cached from the plan's own ordering). Reference scenarios:
+    * for one query — the same L0 → L0.5 → L1 → L2 cascade, probed against
+    * a driver-resident copy of the (GC-bounded) entry table. A valid hit
+    * returns in-heap with no job, tagged with its layer; a miss serves
+    * in-process and returns layer "MISS", billed in memory and its entry
+    * quota-checked at flush against `cacheMemoryMb`. Probe semantics equal
+    * the batch plan's (spec-pinned): the same key derivations, epoch gate,
+    * expiry-before-winner rule and winner order. Reference scenarios:
     * repeat-query semantic-cache hit (P99 14.5 ms) and prefetch→L2 hit
     * (0.59 ms), 20260112_phase6_summary.md. */
   def searchCachedRows(tenant: String, index: String, queryId: Long,
@@ -1067,17 +1008,12 @@ private[graft] trait SemanticCache { self: GraftEngine =>
             headLive = -1, headMasked = -1, tailRows = -1,
             totalMicros = (System.nanoTime() - tTrace0) / 1000L))
       case None =>
-        // The miss tail. The reference answers a cache miss entirely
-        // in-process — search the index, put the entry in its in-memory
-        // cache, reply — inside one request (~ms); delegating to the
-        // batch cascade cost ~20 tiny Spark actions per wire miss, and a
-        // synchronous driver-side parquet append ~20 ms/call serialized
-        // on the manifest lock. So the zero-job rows tier answers
-        // (tag-filtered calls through [[searchRowsFilteredTraced]] — the
-        // snapshot tag index filters during the scan), reached through
-        // the two overridable entry points; a call outside the rows gates
-        // (non-resident tail, oversized corpus/head, filtered + refined)
-        // takes the distributed plan with the call's own tags and refine.
+        // The miss tail answers in-process, like the reference (search,
+        // in-memory put, reply): the batch cascade costs ~20 Spark actions
+        // per miss. The zero-job rows tier answers through its two
+        // overridable entry points (tag-filtered calls through
+        // [[searchRowsFilteredTraced]]); a call outside the rows gates takes
+        // the distributed plan with the call's own tags and refine.
         val one = Array((queryId, qvec))
         val rowsServed =
           if (tags.isEmpty)
@@ -1223,7 +1159,7 @@ private[graft] trait SemanticCache { self: GraftEngine =>
         struct(col("rank"), col("id"), col("score")))).as("hits"))
       .select(
         Caching.queryKey(lit(tenant), lit(index), lit(k), lit(metric),
-          array().cast("array<string>"), col("qcluster")).as("cache_key"),
+          emptyTags, col("qcluster")).as("cache_key"),
         lit("L2").as("layer"), col("hits"),
         lit(m.epoch).as("epoch"),
         lit(now + ttlSeconds).as("expires_at"),

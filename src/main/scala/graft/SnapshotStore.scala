@@ -12,17 +12,13 @@ import graft.operators.IvfFlat
   * new version without retraining. */
 private[graft] trait SnapshotStore { self: GraftEngine =>
 
-  // -------------------------------------------------------------------
-  // manifest (epoch + build watermark) — tiny JSON, driver-side
-  // -------------------------------------------------------------------
-
   /** `version` points at the snapshot directory (`v<version>/`) holding
     * this build's artifacts: readers resolve paths THROUGH the manifest, so
     * a build writes its whole snapshot into a fresh versioned dir and the
     * single manifest write is the atomic commit point — the snapshot-
     * isolation form of the reference's temp-dir-rename atomic snapshot
-    * (DeltaVectorIndex.cs:160-212). version 0 = never built. */
-  /** `headDirty` = 1 when the record log may hold rows newer than the
+    * (DeltaVectorIndex.cs:160-212). version 0 = never built.
+    * `headDirty` = 1 when the record log may hold rows newer than the
     * build watermark (any write since the last build/compaction); 0 right
     * after a build. Lets the search plan skip the whole fresh-head subtree
     * (log scan, LWW window, mask anti-joins) when the tail is known
@@ -199,11 +195,9 @@ private[graft] trait SnapshotStore { self: GraftEngine =>
         m.copy(epoch = m.epoch + 1, headDirty = if (dirty) 1 else m.headDirty))
     }
 
-  // -------------------------------------------------------------------
   // snapshot export / import (reference: POST {t}/{i}/snapshot + /load,
-  // IndexController.cs:125-228 — index state moves as files; the record
-  // store stays where it is)
-  // -------------------------------------------------------------------
+  // IndexController.cs:125-228): index state moves as files; the record
+  // store stays where it is
 
   private[graft] def copyTree(src: java.nio.file.Path, dest: java.nio.file.Path): Unit = {
     Files.walk(src).forEach { p =>

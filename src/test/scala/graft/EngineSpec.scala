@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end lifecycle over the user-facing engine — mirrors the
@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
 class EngineSpec extends SparkSpec {
   import spark.implicits._
 
-  private def mkRecords(rows: Seq[(String, Seq[Float], String, Seq[String], Long)]): DataFrame =
-    rows.toDF("id", "vector", "meta", "tags", "updated_at")
+  private def mkRecords(rows: Seq[(String, Seq[Float], String, Seq[String], Long)],
+                        session: SparkSession = spark): DataFrame =
+    session.createDataFrame(rows).toDF("id", "vector", "meta", "tags", "updated_at")
       .withColumn("tenant_id", lit("t1"))
       .withColumn("index_name", lit("idx"))
       .withColumn("deleted", lit(false))
@@ -2023,15 +2024,6 @@ class EngineSpec extends SparkSpec {
     assert(hitRows.toSeq == missRows.toSeq)
   }
 
-  /** Every plan node of an executed query, through AQE's query stages. */
-  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      planNodes(a.executedPlan)
-    case st: org.apache.spark.sql.execution.adaptive.QueryStageExec => planNodes(st.plan)
-    case other => other +: other.children.flatMap(planNodes)
-  }
-
   test("an engine keeps the plan's top-k hash-aggregated on a session without the threshold") {
     val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val session = spark.newSession()
@@ -2039,14 +2031,8 @@ class EngineSpec extends SparkSpec {
     val root = Files.createTempDirectory("engine_topk_threshold").toString
     val eng = new GraftEngine(session, root)
     val rng = new scala.util.Random(11)
-    eng.add(session.createDataFrame((0 until 64).map(i =>
-        (s"v$i", Seq.fill(4)(rng.nextFloat()), 100L)))
-      .toDF("id", "vector", "updated_at")
-      .withColumn("meta", lit(null).cast("string"))
-      .withColumn("tags", lit(null).cast("array<string>"))
-      .withColumn("tenant_id", lit("t1"))
-      .withColumn("index_name", lit("idx"))
-      .withColumn("deleted", lit(false)))
+    eng.add(mkRecords((0 until 64).map(i =>
+      (s"v$i", Seq.fill(4)(rng.nextFloat()), null: String, Seq.empty[String], 100L)), session))
     eng.build("t1", "idx", nlist = 2)
     // 256 queries probing both lists: every scoring task aggregates 256
     // query keys, past the default's 128
@@ -2054,12 +2040,12 @@ class EngineSpec extends SparkSpec {
       (i.toLong, Seq.fill(4)(rng.nextFloat())))).toDF("query_id", "qvec")
     val df = eng.search("t1", "idx", queries, k = 5, nprobe = 2)
     assert(df.collect().length == 256 * 5)
-    val aggs = planNodes(df.queryExecution.executedPlan).collect {
-      case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
-    }
-    assert(aggs.nonEmpty, df.queryExecution.executedPlan)
-    assert(aggs.map(_.metrics("numTasksFallBacked").value).sum == 0,
-      aggs.map(_.metrics("numTasksFallBacked").value))
+    val fallbacks = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec =>
+          a.metrics("numTasksFallBacked").value
+      }
+    assert(fallbacks.nonEmpty && fallbacks.sum == 0, (fallbacks, df.queryExecution.executedPlan))
     assert(session.conf.get(key) == "1000000")
     // a caller's higher setting stays
     val roomy = spark.newSession()
