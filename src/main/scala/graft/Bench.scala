@@ -346,12 +346,12 @@ object Bench {
     }
 
     // Serving-path forensics: which tier (driver / driverMT /
-    // distributed) served, and what state the packed serving RDD is in
+    // distributed, pq.driver / pq.driverMT / pq.plan) served, and what state the packed serving RDD is in
     // (cached parts, memory vs disk bytes). Printed around every serving
     // measurement so a slow run in the round log carries its own
     // diagnosis instead of needing a reproduction.
     def servingState(tag: String, rdd: Option[org.apache.spark.rdd.RDD[_]]): Unit = {
-      val tiers = IvfFlat.tierCountsSnapshot.toSeq.sortBy(_._1)
+      val tiers = graft.operators.ResidentScan.tierCountsSnapshot.toSeq.sortBy(_._1)
         .map { case (k, v) => s"$k=$v" }.mkString(",")
       val st = rdd.flatMap(r =>
         spark.sparkContext.getRDDStorageInfo.find(_.id == r.id).map(i =>

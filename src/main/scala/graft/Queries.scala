@@ -271,7 +271,7 @@ object Queries {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val allowed = (0L until HnswExactN.toLong).filter(_ % 2 == 0).toArray
     graft.operators.Hnsw.searchLocalRowsFiltered(parts, qs, K,
-        efSearch = HnswExactN, allowedSorted = allowed)
+        efSearch = HnswExactN, graft.operators.AllowedSet(sorted = allowed))
       .toSeq.map { case (q, rank, id, _) => (q, rank, id) }
       .toDF("query_id", "rank", "id")
       .orderBy("query_id", "rank")

@@ -155,14 +155,16 @@ private[graft] trait ResidentHandles { self: GraftEngine =>
         }
       }))
 
+    private lazy val hnswMeta = graft.operators.Hnsw.readMeta(spark, s"$snap/hnsw")
     private lazy val hnswEst: Long =
-      graft.operators.Hnsw.residentBytes(spark, s"$snap/hnsw")
+      graft.operators.Hnsw.residentBytes(spark, s"$snap/hnsw", hnswMeta)
 
     /** Driver-resident HNSW graphs: an oversized graph set pays the meta
-      * read once and every later call short-circuits. */
+      * read once and every later call short-circuits; a retried (Busy)
+      * admission reuses the meta rows and the estimate. */
     val hnswGraphs = new Residency.Memo[Array[(Int, graft.operators.Hnsw.Graph)]](
       Stage.run(spark, "admit.hnsw")(
-        graft.operators.Hnsw.loadResident(spark, s"$snap/hnsw", hnswEst)))
+        graft.operators.Hnsw.loadResident(spark, s"$snap/hnsw", hnswMeta, hnswEst)))
 
     private def segDir = s"$snap/sq16/segments"
     private lazy val sq16Sidecar = graft.operators.Sq16Store.sidecarExists(segDir)

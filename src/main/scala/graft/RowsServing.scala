@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.IvfFlat
+import graft.operators.{AllowedSet, IvfFlat, ResidentScan}
 
 /** The rows serving tier of a [[GraftEngine]]: driver-local queries in,
   * answer rows out, with no Spark job once the handles are resident. It
@@ -209,7 +209,7 @@ private[graft] trait RowsServing { self: GraftEngine =>
           Some(pqTailRowsRefined(tenant, index, m, pq, queries, metricU, k,
             refine, nprobe, hs, store))
         case _ if tags.isEmpty =>
-          scanTail(tenant, index, tier, queries, metric, kTail, nprobe, AllowAll)
+          scanTail(tenant, index, tier, queries, metric, kTail, nprobe, AllowedSet.All)
         case _ =>
           filteredTail(tenant, index, tier, queries, metric, kTail, nprobe, tags)
       }
@@ -228,8 +228,7 @@ private[graft] trait RowsServing { self: GraftEngine =>
               IvfFlat.candidateScore(metricU, qv, hs.liveVecs(i))))
           // merged bounded top-k, same (score desc, surrogate asc) order as
           // the DataFrame plan's TopKHits — exact-tie parity included
-          (tailCands ++ headCands)
-            .sortBy { case (surr, s) => (-s, surr) }.take(k).zipWithIndex
+          ResidentScan.topK(tailCands ++ headCands, k).zipWithIndex
             .map { case ((surr, s), r) =>
               (qid, r + 1, hs.liveIdOf.getOrElse(surr, tier.pool(surr)), s)
             }
@@ -253,30 +252,20 @@ private[graft] trait RowsServing { self: GraftEngine =>
     }
   }
 
-  /** A filter's resolved membership for the scan kernels: a sorted
-    * surrogate array, plus a [[graft.operators.LongHashSet]] and/or
-    * per-part row bitmaps for large tags. All null = unfiltered; bitmaps
-    * alone (the multi-tag AND) can only scan the resident tier. */
-  private case class AllowedSet(sorted: Array[Long],
-                                hash: graft.operators.LongHashSet,
-                                bits: Array[Array[Long]])
-  private val AllowAll = AllowedSet(null, null, null)
-
   /** One tail scan per algo, at `kTail` per query. None only when a
     * filtered scan cannot run resident (PQ over its scan bounds or
     * non-resident, bitmap-only inverted lists non-resident) — the caller
-    * then keeps the distributed filtered plan. */
+    * then keeps the distributed filtered plan. Bitmaps alone (the
+    * multi-tag AND) can only scan the resident tier. */
   private def scanTail(tenant: String, index: String, tier: RowsTier,
                        queries: Array[(Long, Array[Float])], metric: String,
                        kTail: Int, nprobe: Int,
                        allowed: AllowedSet): Option[Array[(Long, Int, Long, Double)]] =
     tier.tail match {
       case FlatTail =>
-        Option(IvfFlat.searchLocalRowsPath(tier.handles.tailIndex,
+        IvfFlat.searchLocalRowsPath(tier.handles.tailIndex,
           queries, metric, kTail, nprobe, spark, forceDistributed = false,
-          allowedSorted = allowed.sorted, allowedHash = allowed.hash,
-          allowedBits = allowed.bits,
-          residentOnly = allowed.sorted == null && allowed.bits != null))
+          allowed = allowed)
       case PqTail(pq, _) =>
         pqTailRows(tenant, index, tier.m, pq, queries,
           metric.toUpperCase(java.util.Locale.ROOT), kTail, nprobe, allowed)
@@ -288,11 +277,10 @@ private[graft] trait RowsServing { self: GraftEngine =>
         // reachable, where the parity post-filter keeps at most the
         // members surviving the unfiltered k×10 cut
         Some(
-          if (allowed eq AllowAll)
+          if (allowed.isAll)
             graft.operators.Hnsw.searchLocalRows(graphs, queries, kTail)
           else graft.operators.Hnsw.searchLocalRowsFiltered(graphs, queries,
-            kTail, efSearch = 50, allowedSorted = allowed.sorted,
-            allowedHash = allowed.hash))
+            kTail, efSearch = 50, allowed))
     }
 
   /** The filtered tail: resolves the tag conjunction to an
@@ -359,7 +347,7 @@ private[graft] trait RowsServing { self: GraftEngine =>
     multiBits.flatMap { bits =>
       if (!bits.exists(part => part.exists(_ != 0L))) Some(Array.empty[(Long, Int, Long, Double)])
       else scanTail(tenant, index, tier, queries, metric, kTail, nprobe,
-        AllowedSet(null, null, bits))
+        AllowedSet(bits = bits))
     }.orElse {
       // large single-tag allowed sets get a memoized open-addressing
       // membership set: the sorted array costs ~5-7 cache-missing tree
@@ -419,21 +407,16 @@ private[graft] trait RowsServing { self: GraftEngine =>
     * the distributed ADC plan. That plan has no filter hook, so a
     * filtered call serves ONLY from the resident byte-code tier: None
     * (over-budget batch or non-resident codes) keeps the caller's
-    * distributed filtered plan instead of throwing at serve time. */
+    * distributed filtered plan. */
   private def pqTailRows(tenant: String, index: String, m: Manifest,
                          pq: graft.operators.IvfPq.Index,
                          queries: Array[(Long, Array[Float])],
                          metricU: String, kTail: Int, nprobe: Int,
                          allowed: AllowedSet): Option[Array[(Long, Int, Long, Double)]] = {
     val (tq, fold) = pqFoldedQueries(tenant, index, m, pq, queries, metricU)
-    val rows =
-      if (allowed eq AllowAll)
-        Some(graft.operators.IvfPq.searchLocalRowsPath(pq, tq, kTail, nprobe,
-          spark, mtBound = pqServeMaxLookupsMT))
-      else graft.operators.IvfPq.searchResidentRows(pq, tq, kTail, nprobe,
-        mtBound = pqServeMaxLookupsMT, allowedSorted = allowed.sorted,
-        allowedHash = allowed.hash, allowedBits = allowed.bits)
-    rows.map(_.map { case (qid, rank, surr, s) => (qid, rank, surr, fold(qid, s)) })
+    graft.operators.IvfPq.searchLocalRowsPath(pq, tq, kTail, nprobe, spark,
+        mtBound = pqServeMaxLookupsMT, allowed = allowed)
+      .map(_.map { case (qid, rank, surr, s) => (qid, rank, surr, fold(qid, s)) })
   }
 
   /** k·refine rerank cut size, computed in Long: the wire caps REFINE at
@@ -471,8 +454,10 @@ private[graft] trait RowsServing { self: GraftEngine =>
     require(kAdcL <= Int.MaxValue,
       s"k*refine + head mask overflows Int: $k * $refine + ${hs.maskInTail}")
     val kAdc = kAdcL.toInt
+    // unfiltered: the plan fallback serves whatever the resident tier
+    // does not, so the answer is always Some
     val adc = graft.operators.IvfPq.searchLocalRowsPath(pqIdx, tq, kAdc,
-      nprobe, spark, mtBound = pqServeMaxLookupsMT)
+      nprobe, spark, mtBound = pqServeMaxLookupsMT).get
     val byQuery = adc.groupBy(_._1)
     // one scratch vector for the whole call's reranks (queries are
     // processed sequentially here): k·refine fresh dequant arrays per
@@ -496,7 +481,7 @@ private[graft] trait RowsServing { self: GraftEngine =>
         store.dequantInto(row, scratch)
         (surr, IvfFlat.candidateScore(metricU, qvRaw, scratch))
       }.toArray
-      reranked.sortBy { case (surr, s) => (-s, surr) }.take(k).zipWithIndex
+      ResidentScan.topK(reranked, k).zipWithIndex
         .map { case ((surr, s), r) => (qid, r + 1, surr, s) }
     }.toArray
   }

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.StableHash
 
@@ -344,62 +345,83 @@ object Hnsw {
     } finally { g.unpersist(); () }
   }
 
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): Dataset[(Int, Graph)] = {
-    import spark.implicits._
-    implicit val enc = Encoders.tuple(Encoders.scalaInt, Encoders.kryo[Graph])
+  /** One graph partition's meta/ row. */
+  private[graft] final case class PartMeta(metric: String, m: Int, efC: Int,
+                                           seed: Long, entry: Int, maxLevel: Int,
+                                           nLevels: Int, nNodes: Int)
+
+  // the snapshot tables' schemas as [[save]] writes them, declared so a
+  // read infers nothing (schema inference is one Spark job per table)
+  private val MetaSchema = StructType(Seq(
+    StructField("part_id", IntegerType), StructField("metric", StringType),
+    StructField("m", IntegerType), StructField("ef_construction", IntegerType),
+    StructField("seed", LongType), StructField("entry", IntegerType),
+    StructField("max_level", IntegerType), StructField("n_levels", IntegerType),
+    StructField("n_nodes", IntegerType)))
+  private val NodesSchema = StructType(Seq(
+    StructField("part_id", IntegerType), StructField("node", IntegerType),
+    StructField("id", LongType), StructField("vec", ArrayType(FloatType))))
+  private val EdgesSchema = StructType(Seq(
+    StructField("part_id", IntegerType), StructField("level", IntegerType),
+    StructField("node", IntegerType), StructField("nbrs", ArrayType(IntegerType))))
+
+  /** A snapshot's meta/ table by part_id: driver-sized, one row per graph
+    * partition, one job. */
+  private[graft] def readMeta(spark: org.apache.spark.sql.SparkSession,
+                              path: String): Map[Int, PartMeta] = {
     // a snapshot from before the columnar format (java-serialized blob
     // rows directly at `path`) has no meta/ table — fail with the remedy
     // instead of a path-not-found from the parquet reader
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/meta")),
       s"HNSW snapshot at $path has no meta/ table (pre-columnar blob " +
         "format, or not an HNSW snapshot); rebuild the index")
-    // driver-sized: one row per graph partition
-    val meta = spark.read.parquet(s"$path/meta").collect().map { r =>
-      r.getAs[Int]("part_id") ->
-        ((r.getAs[String]("metric"), r.getAs[Int]("m"),
-          r.getAs[Int]("ef_construction"), r.getAs[Long]("seed"),
-          r.getAs[Int]("entry"), r.getAs[Int]("max_level"),
-          r.getAs[Int]("n_levels"), r.getAs[Int]("n_nodes")))
+    spark.read.schema(MetaSchema).parquet(s"$path/meta").collect().map { r =>
+      r.getInt(0) -> PartMeta(r.getString(1), r.getInt(2), r.getInt(3),
+        r.getLong(4), r.getInt(5), r.getInt(6), r.getInt(7), r.getInt(8))
     }.toMap
+  }
+
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): Dataset[(Int, Graph)] =
+    load(spark, path, readMeta(spark, path))
+
+  private def load(spark: org.apache.spark.sql.SparkSession, path: String,
+                   meta: Map[Int, PartMeta]): Dataset[(Int, Graph)] = {
+    import spark.implicits._
+    implicit val enc = Encoders.tuple(Encoders.scalaInt, Encoders.kryo[Graph])
     val bMeta = spark.sparkContext.broadcast(meta)
-    val nodes = spark.read.parquet(s"$path/nodes")
-      .select("part_id", "node", "id", "vec")
+    val nodes = spark.read.schema(NodesSchema).parquet(s"$path/nodes")
       .as[(Int, Int, Long, Seq[Float])]
-    val edges = spark.read.parquet(s"$path/edges")
-      .select("part_id", "level", "node", "nbrs")
+    val edges = spark.read.schema(EdgesSchema).parquet(s"$path/edges")
       .as[(Int, Int, Int, Seq[Int])]
     nodes.groupByKey(_._1).cogroup(edges.groupByKey(_._1)) { (p, nit, eit) =>
-      val (metric, m, efC, seed, entry, maxLevel, nLevels, nNodes) = bMeta.value(p)
-      val g = new Graph(metric, m, efC, seed)
+      val pm = bMeta.value(p)
+      val g = new Graph(pm.metric, pm.m, pm.efC, pm.seed)
       nit.toArray.sortBy(_._2).foreach { case (_, _, id, vec) =>
         g.ids += id
         g.vecs += vec.toArray
       }
-      (0 until nLevels).foreach { _ =>
-        g.layers += mutable.ArrayBuffer.fill(nNodes)(mutable.ArrayBuffer.empty[Int])
+      (0 until pm.nLevels).foreach { _ =>
+        g.layers += mutable.ArrayBuffer.fill(pm.nNodes)(mutable.ArrayBuffer.empty[Int])
       }
       eit.foreach { case (_, level, node, nbrs) => g.layers(level)(node) ++= nbrs }
-      g.entry = entry
-      g.maxLevel = maxLevel
+      g.entry = pm.entry
+      g.maxLevel = pm.maxLevel
       Iterator((p, g))
     }
   }
 
-  /** Resident heap bytes of a snapshot's graphs (0 = no nodes), from the
-    * meta table (n_nodes, m — one driver-sized read) and one tiny dim
-    * probe on nodes/: rows × (vector + adjacency + ids), estimated
-    * conservatively so the bound fails safe. */
-  def residentBytes(spark: org.apache.spark.sql.SparkSession,
-                    path: String): Long = {
-    val meta = spark.read.parquet(s"$path/meta")
-      .select("n_nodes", "m").collect()
-    val rows = meta.map(_.getInt(0).toLong).sum
+  /** Resident heap bytes of a snapshot's graphs (0 = no nodes), from its
+    * `meta` rows (n_nodes, m) and one tiny dim probe on nodes/: rows ×
+    * (vector + adjacency + ids), estimated conservatively so the bound
+    * fails safe. */
+  private[graft] def residentBytes(spark: org.apache.spark.sql.SparkSession,
+                                   path: String, meta: Map[Int, PartMeta]): Long = {
+    val rows = meta.valuesIterator.map(_.nNodes.toLong).sum
     if (rows == 0L) 0L
     else {
-      val mWidth = meta.map(_.getInt(1)).max
-      val dim = spark.read.parquet(s"$path/nodes")
-        .select(org.apache.spark.sql.functions.size(
-          org.apache.spark.sql.functions.col("vec"))).head.getInt(0)
+      val mWidth = meta.valuesIterator.map(_.m).max
+      val dim = spark.read.schema(NodesSchema).parquet(s"$path/nodes")
+        .select(size(col("vec"))).head.getInt(0)
       // per node: dim floats + ~2 adjacency lists of ≤ m ints (level-0
       // can hold 2m in classic HNSW; this build prunes to m) + id +
       // object headers
@@ -410,15 +432,17 @@ object Hnsw {
   /** Load a snapshot's graphs DRIVER-RESIDENT for zero-job serving,
     * admitted on the [[graft.Residency.HnswGraphs]] line against
     * [[residentBytes]] BEFORE collecting (~512 MB of graph state per
-    * snapshot; bigger corpora keep the distributed fan-out). The
-    * reference serves every HNSW query from one process's heap
-    * (HnswVectorIndex.cs "Flat Vector Storage"); this is the honest
-    * analog for graphs inside the bound. */
-  def loadResident(spark: org.apache.spark.sql.SparkSession, path: String,
-                   estBytes: Long): graft.Residency.Admission[Array[(Int, Graph)]] =
+    * snapshot; bigger corpora keep the distributed fan-out). `meta` is the
+    * snapshot's [[readMeta]], read once per admission. The reference
+    * serves every HNSW query from one process's heap (HnswVectorIndex.cs
+    * "Flat Vector Storage"); this is the honest analog for graphs inside
+    * the bound. */
+  private[graft] def loadResident(spark: org.apache.spark.sql.SparkSession, path: String,
+                                  meta: Map[Int, PartMeta],
+                                  estBytes: Long): graft.Residency.Admission[Array[(Int, Graph)]] =
     if (estBytes == 0L) graft.Residency.Admitted(Array.empty[(Int, Graph)])
     else graft.Residency.admit(graft.Residency.HnswGraphs, estBytes)(
-      load(spark, path).collect())
+      load(spark, path, meta).collect())
 
   /** Zero-job HNSW serving for driver-local query batches: each query
     * beam-searches every resident sub-graph (k per graph — the SAME
@@ -431,11 +455,7 @@ object Hnsw {
   def searchLocalRows(graphs: Array[(Int, Graph)],
                       queries: Array[(Long, Array[Float])],
                       k: Int, efSearch: Int = 50): Array[(Long, Int, Long, Double)] =
-    searchLocalCandidates(graphs, queries, k, efSearch)
-      .groupBy(_._1).iterator.flatMap { case (qid, rows) =>
-        rows.sortBy { case (_, id, s) => (-s, id) }.take(k).zipWithIndex
-          .map { case ((_, id, s), r) => (qid, r + 1, id, s) }
-      }.toArray
+    ResidentScan.rankTopK(searchLocalCandidates(graphs, queries, k, efSearch), k)(identity)
 
   /** Tag-FILTERED resident serving with FILTER-DURING-BEAM semantics —
     * a NEW capability flag, deliberately NOT the batch plan's
@@ -446,17 +466,14 @@ object Hnsw {
     * keeps at most the members that happened to survive the unfiltered
     * k×10 cut and comes up short or empty. Costs degrade toward a
     * component scan as selectivity → 0 (the honest filtered-ANN trade,
-    * bounded by the resident graph). Membership via the same
-    * sorted-array / LongHashSet ladder as the IVF kernels. */
+    * bounded by the resident graph). Membership is `allowed`'s id test,
+    * as in the IVF kernels (graphs have no row bitmaps). */
   def searchLocalRowsFiltered(graphs: Array[(Int, Graph)],
                               queries: Array[(Long, Array[Float])],
                               k: Int, efSearch: Int,
-                              allowedSorted: Array[Long],
-                              allowedHash: LongHashSet = null): Array[(Long, Int, Long, Double)] = {
+                              allowed: AllowedSet): Array[(Long, Int, Long, Double)] = {
     if (queries.isEmpty || graphs.isEmpty) return Array.empty
-    val member: Long => Boolean =
-      if (allowedHash != null) allowedHash.contains
-      else id => java.util.Arrays.binarySearch(allowedSorted, id) >= 0
+    val member: Long => Boolean = allowed.containsId
     // (query × graph)-pair parallelism — see searchLocalCandidates
     val nG = graphs.length
     val out = new Array[Array[(Long, Long, Double)]](queries.length * nG)
@@ -469,10 +486,7 @@ object Hnsw {
     }
     if (queries.length * nG >= 4) idxs.parallel().forEach(pi => body(pi))
     else idxs.forEach(pi => body(pi))
-    out.flatten.groupBy(_._1).iterator.flatMap { case (qid, rows) =>
-      rows.sortBy { case (_, id, s) => (-s, id) }.take(k).zipWithIndex
-        .map { case ((_, id, s), r) => (qid, r + 1, id, s) }
-    }.toArray
+    ResidentScan.rankTopK(out.flatten[(Long, Long, Double)], k)(identity)
   }
 
   /** The per-(query, graph) top-k pool WITHOUT the global cut —

@@ -28,15 +28,6 @@ import graft.functions._
   */
 object IvfFlat {
 
-  /** One partition's inverted lists in flat storage: ids + contiguous
-    * float vectors, rows grouped by cluster with (start, len) ranges — the
-    * reference's flat vector layout (BruteForceVectorIndex.cs:11-25,
-    * HnswVectorIndex "Flat Vector Storage") per Spark partition. */
-  final class PackedLists(val dim: Int, val ids: Array[Long],
-                          val vecs: Array[Float],
-                          val ranges: java.util.HashMap[Int, Array[Int]])
-    extends Serializable
-
   /** `rows` is the row count of `assigned`, known to whoever wrote it
     * (0 for a centroids-only handle, as [[assign]] needs). */
   case class Index(assigned: DataFrame, centroids: DataFrame, rows: Long = 0L) {
@@ -68,45 +59,13 @@ object IvfFlat {
       * the packed RDD eagerly executes the cluster-keyed exchange's map
       * stage, and an evictor that "just wants to unpersist" would launch
       * that job against snapshot files it is in the middle of deleting. */
-    @transient @volatile private var packedBuilt: Option[org.apache.spark.rdd.RDD[PackedLists]] = None
-    def packedIfBuilt: Option[org.apache.spark.rdd.RDD[PackedLists]] = packedBuilt
+    @transient @volatile private var packedBuilt: Option[org.apache.spark.rdd.RDD[PackedPart[Float]]] = None
+    def packedIfBuilt: Option[org.apache.spark.rdd.RDD[PackedPart[Float]]] = packedBuilt
 
-    @transient lazy val packed: org.apache.spark.rdd.RDD[PackedLists] =
+    @transient lazy val packed: org.apache.spark.rdd.RDD[PackedPart[Float]] =
         graft.Stage.run(assigned.sparkSession, "admit.packedFloats") {
-      val rdd = assigned.select("id", "vec", "cluster_id")
-        .repartition(col("cluster_id"))
-        .queryExecution.toRdd.mapPartitions { it =>
-          val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val cls = scala.collection.mutable.ArrayBuffer.empty[Int]
-          val vecBuf = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-          while (it.hasNext) {
-            val row = it.next()
-            ids += row.getLong(0)
-            vecBuf += row.getArray(1).toFloatArray()
-            cls += row.getInt(2)
-          }
-          if (ids.isEmpty) Iterator.empty
-          else {
-            val n = ids.length
-            val dim = vecBuf(0).length
-            // group rows by cluster: stable order by (cluster, arrival)
-            val order = Array.range(0, n).sortBy(i => (cls(i), i))
-            val pIds = new Array[Long](n)
-            val pVecs = new Array[Float](n * dim)
-            val ranges = new java.util.HashMap[Int, Array[Int]]()
-            var i = 0
-            while (i < n) {
-              val src = order(i)
-              pIds(i) = ids(src)
-              System.arraycopy(vecBuf(src), 0, pVecs, i * dim, dim)
-              val c = cls(src)
-              val r = ranges.get(c)
-              if (r == null) ranges.put(c, Array(i, 1)) else r(1) += 1
-              i += 1
-            }
-            Iterator(new PackedLists(dim, pIds, pVecs, ranges))
-          }
-        }
+      val rdd = ResidentScan.pack(assigned.select("id", "cluster_id", "vec"),
+        _.getArray(2).toFloatArray())
       // MEMORY_AND_DISK, not MEMORY_ONLY: under storage pressure an
       // evicted MEMORY_ONLY partition silently recomputes the whole
       // pack-from-parquet per search call (a 20×+ serving regression
@@ -126,12 +85,12 @@ object IvfFlat {
       * otherwise). Admitted BEFORE collecting, from [[rows]] × vector
       * bytes; oversized indexes keep the distributed path, and a line
       * that is merely full is retried on the next call. */
-    def packedDriver: Option[Array[PackedLists]] = packedResident.get
+    def packedDriver: Option[Array[PackedPart[Float]]] = packedResident.get
 
     @transient private[graft] lazy val packedResident =
-      new graft.Residency.Memo[Array[PackedLists]]({
+      new graft.Residency.Memo[Array[PackedPart[Float]]]({
         val dim = centroidsLocal.headOption.fold(0)(_._2.length)
-        if (rows == 0L) graft.Residency.Admitted(Array.empty[PackedLists])
+        if (rows == 0L) graft.Residency.Admitted(Array.empty[PackedPart[Float]])
         else graft.Residency.admit(graft.Residency.PackedFloats,
           rows * (4L * dim + 16L))(graft.Stage.run(assigned.sparkSession,
             "admit.packedFloats")(packed.collect()))
@@ -170,8 +129,8 @@ object IvfFlat {
 
   /** Work ceiling for the MULTI-THREADED driver-resident tier: between
     * [[DriverServeMaxScanElems]] and this bound, a resident index scans
-    * on a shared daemon pool (one task per query chunk or per packed
-    * part) — NO job submission, NO broadcast, NO partial-collect, so
+    * on the shared daemon pool ([[ResidentScan]]: one task per query
+    * chunk or per list sub-range) — NO job submission, NO broadcast, NO partial-collect, so
     * mid-size serving batches (the reference-shaped 100-query run is
     * ~128M elems) never depend on the local scheduler's health. Past
     * this ceiling a scan is ≥ ~1 s even at 32 threads and the
@@ -183,43 +142,6 @@ object IvfFlat {
     * per-call work above this ceiling means a genuinely large query
     * batch, exactly what executors are for. */
   val DriverServeMaxScanElemsMT: Long = 8L << 30
-
-  /** Rows per inverted list, summed over driver-resident packed parts'
-    * `ranges` — no job: the parts already hold every list's length. */
-  private[graft] def listSizes(
-      ranges: Iterator[java.util.HashMap[Int, Array[Int]]]): scala.collection.Map[Int, Long] = {
-    val sizes = scala.collection.mutable.HashMap.empty[Int, Long]
-    ranges.foreach(_.forEach((c, r) => sizes(c) = sizes.getOrElse(c, 0L) + r(1)))
-    sizes
-  }
-
-  /** Shared daemon pool for the multi-threaded driver tier. Sized to the
-    * machine (local mode: same cores the executor threads would use —
-    * the tiers trade the scheduler for a plain pool, not CPUs for CPUs). */
-  private lazy val driverScanPool: java.util.concurrent.ExecutorService = {
-    val n = math.max(2, Runtime.getRuntime.availableProcessors())
-    java.util.concurrent.Executors.newFixedThreadPool(n, (r: Runnable) => {
-      val t = new Thread(r, "graft-ivf-driver-scan")
-      t.setDaemon(true)
-      t
-    })
-  }
-  private lazy val driverScanThreads: Int =
-    math.max(2, Runtime.getRuntime.availableProcessors())
-
-  /** Serving-tier counters (driver / driverMT / distributed), exposed so
-    * the benchmark can print WHICH path served each measured run — the
-    * round log then shows tier routing directly instead of leaving a
-    * slow run to forensic guessing. */
-  private[graft] val tierCounts: java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong] =
-    new java.util.concurrent.ConcurrentHashMap()
-  private def countTier(name: String): Unit =
-    tierCounts.computeIfAbsent(name, _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet()
-  private[graft] def tierCountsSnapshot: Map[String, Long] = {
-    val m = scala.collection.mutable.Map.empty[String, Long]
-    tierCounts.forEach((k, v) => m(k) = v.get())
-    m.toMap
-  }
 
   /** Train the coarse codebook and assign every vector to its inverted list.
     * Cosine metric uses MLlib's cosine distance measure; L2/IP use
@@ -509,10 +431,15 @@ object IvfFlat {
     * (broadcast centroids + rank UDF + explode) — a crossJoin×centroids +
     * aggregate form would shuffle nq×nlist rows for the same answer, and
     * the centroid table is driver-sized by construction (nlist rows).
-    * Scores and tie-break identical to [[probesLocal]]: (-score, cid). */
-  def probes(index: Index, queries: DataFrame, metric: String, nprobe: Int): DataFrame = {
+    * Scores and tie-break identical to [[ResidentScan.probeMap]]: (-score, cid). */
+  def probes(index: Index, queries: DataFrame, metric: String, nprobe: Int): DataFrame =
+    probesOver(index.centroidsLocal, queries, metric, nprobe)
+
+  /** [[probes]] against an already-held centroid snapshot `cents`. */
+  private[graft] def probesOver(cents: Array[(Int, Array[Float])], queries: DataFrame,
+                                metric: String, nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
-    val bc = spark.sparkContext.broadcast(index.centroidsLocal)
+    val bc = spark.sparkContext.broadcast(cents)
     val metricU = metric.toUpperCase(java.util.Locale.ROOT)
     val probeU = udf { (qv: Seq[Float]) =>
       rankProbes(bc.value, qv.toArray, metricU, nprobe)
@@ -541,21 +468,13 @@ object IvfFlat {
   private def probesLocal(index: Index, qs: Array[(Long, Seq[Float])],
                           metric: String, nprobe: Int,
                           spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val cents = index.centroidsLocal
-    val metricU = metric.toUpperCase(java.util.Locale.ROOT)
-    val rows = qs.flatMap { case (qid, qv) =>
-      cents.headOption.foreach { case (_, cv) =>
-        if (qv.length != cv.length) throw new graft.DimensionMismatchException(
-          s"vector dimension mismatch: ${qv.length} vs ${cv.length}")
-      }
-      val qArr = qv.toArray
-      cents.map { case (cid, cv) => (qid, cid, candidateScore(metricU, qArr, cv)) }
-        .sortBy { case (_, cid, s) => (-s, cid.toLong) }
-        .take(nprobe)
-        .map { case (q, cid, _) => (q, cid, qv) }
+    val probes = ResidentScan.probeMap(index.centroidsLocal, qs.map(_._2.toArray),
+      metric.toUpperCase(java.util.Locale.ROOT), nprobe)
+    val rows = probes.toSeq.flatMap { case (cid, probing) =>
+      probing.map(i => (qs(i)._1, cid, qs(i)._2))
     }
     import spark.implicits._
-    rows.toSeq.toDF("query_id", "cluster_id", "qvec")
+    rows.toDF("query_id", "cluster_id", "qvec")
       .select("query_id", "qvec", "cluster_id")
   }
 
@@ -615,53 +534,31 @@ object IvfFlat {
     * latency-sensitive callers and the benchmark use this entry.
     * Indexes inside the [[graft.Residency.PackedFloats]] handle cap serve
     * from the driver-resident packed tier — no job submission, so per-call
-    * latency is the scan, not the ~25 ms local scheduler floor. */
-  def searchLocalRows(index: Index, queries: Array[(Long, Array[Float])],
-                      metric: String, k: Int, nprobe: Int,
-                      spark: org.apache.spark.sql.SparkSession,
-                      allowedSorted: Array[Long] = null,
-                      allowedHash: LongHashSet = null,
-                      allowedBits: Array[Array[Long]] = null): Array[(Long, Int, Long, Double)] =
-    searchLocalRowsPath(index, queries, metric, k, nprobe, spark,
-      forceDistributed = false, allowedSorted = allowedSorted,
-      allowedHash = allowedHash, allowedBits = allowedBits)
-
-  /** [[searchLocalRows]] with the tier dispatch exposed for path-equality
-    * tests: `forceDistributed = true` always runs the packed-RDD job even
-    * when the index fits the driver-resident tier.
+    * latency is the scan, not the ~25 ms local scheduler floor.
     *
-    * `allowedSorted` (optional): a SORTED array of admissible surrogate
-    * ids — the serving-side conjunctive tag filter (F1) resolved to an id
-    * set by the caller. Candidates outside the set are skipped BEFORE
+    * `allowed`: the serving-side conjunctive tag filter (F1) resolved to
+    * an id set by the caller. Candidates outside it are skipped BEFORE
     * scoring (one membership test per probed row, no dot product), so the
     * filtered scan equals the batch plan's filter-then-top-k over the
     * same probed candidate set (the reference filters in-process during
     * its scan, VectorCommandSet.cs:461-480). The tier dispatch is
-    * unchanged: the scan still visits every probed row.
-    *
-    * `allowedHash` (optional): the same membership as a [[LongHashSet]] —
-    * the DRIVER tiers test it instead of binary-searching the array
-    * (a large allowed set costs ~5-7 cache misses per probed row as a
-    * sorted tree, ~1-2 as a probe chain); the distributed branch keeps
-    * the sorted array (broadcasting a second, larger copy of the same
-    * membership buys nothing on executors). Callers pass a set built
-    * from EXACTLY `allowedSorted` — results are identical either way. */
-  /** Resident-only filtered serving for callers whose membership exists
-    * ONLY in driver-resident form (a per-call AND of row-position
-    * bitmaps has no sorted array to hand the distributed branch):
-    * Some(rows) when the driver tier served, None when the dispatch
-    * would go distributed (over-work batch or non-resident index) —
-    * the caller then materializes a broadcastable membership and takes
-    * the ordinary path. Same dispatch estimate, same kernels. */
-  private[graft] def searchResidentRows(
-      index: Index, queries: Array[(Long, Array[Float])],
-      metric: String, k: Int, nprobe: Int,
-      spark: org.apache.spark.sql.SparkSession,
-      allowedBits: Array[Array[Long]]): Option[Array[(Long, Int, Long, Double)]] =
-    Option(searchLocalRowsPath(index, queries, metric, k, nprobe, spark,
-      forceDistributed = false, allowedBits = allowedBits,
-      residentOnly = true))
+    * unchanged: the scan still visits every probed row. A membership with
+    * no sorted array (hash-only or bitmap-only) serves only resident. */
+  def searchLocalRows(index: Index, queries: Array[(Long, Array[Float])],
+                      metric: String, k: Int, nprobe: Int,
+                      spark: org.apache.spark.sql.SparkSession,
+                      allowed: AllowedSet = AllowedSet.All): Array[(Long, Int, Long, Double)] =
+    searchLocalRowsPath(index, queries, metric, k, nprobe, spark,
+      forceDistributed = false, allowed = allowed).getOrElse(
+      throw new IllegalArgumentException("distributed filtered scan needs " +
+        "the sorted allowed array; hash and bitmap membership are resident-tier forms"))
 
+  /** [[searchLocalRows]] with the tier dispatch exposed: `forceDistributed
+    * = true` always runs the packed-RDD job even when the index fits the
+    * resident tier, and the bounds move the ST/MT split (path-equality
+    * specs). None when the resident tier does not serve and `allowed`
+    * has no sorted array for the executor scan to filter with — the
+    * caller then materializes one and calls again. */
   private[graft] def searchLocalRowsPath(
       index: Index, queries: Array[(Long, Array[Float])],
       metric: String, k: Int, nprobe: Int,
@@ -669,288 +566,72 @@ object IvfFlat {
       forceDistributed: Boolean,
       stBound: Long = DriverServeMaxScanElems,
       mtBound: Long = DriverServeMaxScanElemsMT,
-      allowedSorted: Array[Long] = null,
-      allowedHash: LongHashSet = null,
-      allowedBits: Array[Array[Long]] = null,
-      residentOnly: Boolean = false): Array[(Long, Int, Long, Double)] = {
-    val cents = index.centroidsLocal
-    queries.headOption.foreach { case (_, qv) =>
-      cents.headOption.foreach { case (_, cv) =>
-        if (qv.length != cv.length) throw new graft.DimensionMismatchException(
-          s"vector dimension mismatch: ${qv.length} vs ${cv.length}")
-      }
-    }
-    val nq = queries.length
+      allowed: AllowedSet = AllowedSet.All): Option[Array[(Long, Int, Long, Double)]] = {
     val qvecs = queries.map(_._2)
     val metricU = metric.toUpperCase(java.util.Locale.ROOT)
-    // per-query probe ranking (same scores/tie-break as probesLocal),
-    // inverted into cluster → probing query indexes
-    val byCluster = scala.collection.mutable.HashMap.empty[Int, scala.collection.mutable.ArrayBuffer[Int]]
-    var qi = 0
-    while (qi < nq) {
-      val qv = qvecs(qi)
-      cents.map { case (cid, cv) => (cid, candidateScore(metricU, qv, cv)) }
-        .sortBy { case (cid, s) => (-s, cid.toLong) }
-        .take(nprobe)
-        .foreach { case (cid, _) =>
-          byCluster.getOrElseUpdate(cid, scala.collection.mutable.ArrayBuffer.empty) += qi
-        }
-      qi += 1
-    }
-    val probeMap = byCluster.map { case (c, qs) => (c, qs.toArray) }.toMap
-    val kLoc = k
-    // Tier dispatch on EXACT probed work — per probed cluster, its real
-    // row count × probing-query count × dim, read off the resident
-    // parts' ranges — so skewed inverted lists can't route a big scan to
-    // a driver tier (a rows/nlist mean estimate underestimates by up to
-    // nlist/nprobe× when the probed clusters are the heavy ones).
-    //   work ≤ stBound → resident single-thread scan (zero handoff)
-    //   work ≤ mtBound → resident MULTI-THREADED scan (daemon pool)
-    //   else / non-resident / forced → packed-RDD job
+    val probes = ResidentScan.probeMap(index.centroidsLocal, qvecs, metricU, nprobe)
     val resident = if (forceDistributed) None else index.packedDriver
-    val scanElems: Long = resident.fold(0L) { parts =>
-      val sizes = listSizes(parts.iterator.map(_.ranges))
-      val dim = cents.headOption.fold(0)(_._2.length)
-      probeMap.foldLeft(0L) { case (s, (cid, probing)) =>
-        s + sizes.getOrElse(cid, 0L) * probing.length * dim
-      }
-    }
-    val residentParts = resident.filter(_ => scanElems <= mtBound)
-    // resident-only callers (bitmap-only membership) get a null sentinel
-    // instead of a distributed job their membership can't ride
-    if (residentOnly && residentParts.isEmpty) return null
-    val partials: Array[(Int, Long, Double)] =
-      residentParts match {
-        case Some(parts) if scanElems <= stBound =>
-          // zero-job tier: the packed lists live on the driver, so a
-          // serving call is a plain in-heap scan — no job submission,
-          // no broadcast, no scheduler floor (the reference serves every
-          // query from one process's heap; this is the honest analog for
-          // indexes inside the residency bound)
-          countTier("driver")
-          scanPacked(parts.iterator, qvecs, probeMap, metricU, kLoc,
-            allowedSorted, allowedHash, allowedBits).toArray
-        case Some(parts) =>
-          countTier("driverMT")
-          scanPackedMT(parts, qvecs, probeMap, metricU, kLoc, allowedSorted,
-            allowedHash, allowedBits)
-        case None =>
-          countTier("distributed")
-          // the executor scan filters via the broadcast SORTED array only
-          // (hash sets / bitmaps are driver-resident accelerations) — a
-          // hash-only filter reaching this tier must fail loudly, never
-          // silently scan unfiltered
-          require(allowedHash == null || allowedSorted != null,
-            "distributed filtered scan needs allowedSorted; " +
-              "hash-only membership is a driver-tier acceleration")
-          // partition-pruned job: only partitions holding a probed
-          // cluster's list get a task (the packed exchange keys by
-          // cluster, so the map below is exact) — a single nprobe-10
-          // query on a 512-list corpus launches ≤10 tasks, not one per
-          // partition
-          val parts = probeMap.keysIterator
-            .flatMap(index.packedPartsOf.get).toSet
+    ResidentScan.serve(resident, probes, queries.map(_._1), k, stBound, mtBound,
+        tier = "", allowed, splitRanges = true, new FlatKernel(qvecs, metricU, allowed))
+      .orElse(Option.when(allowed.isAll || allowed.sorted != null) {
+        ResidentScan.countTier("distributed")
+        // partition-pruned job: only partitions holding a probed
+        // cluster's list get a task (the packed exchange keys by
+        // cluster, so the map below is exact) — a single nprobe-10
+        // query on a 512-list corpus launches ≤10 tasks, not one per
+        // partition. Executors filter with the broadcast sorted array.
+        val parts = probes.keysIterator.flatMap(index.packedPartsOf.get).toSet
+        val partials =
           if (parts.isEmpty) Array.empty[(Int, Long, Double)]
           else {
-            val bq = spark.sparkContext.broadcast((qvecs, probeMap, allowedSorted))
+            val bq = spark.sparkContext.broadcast((qvecs, probes, allowed.sorted))
             val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(
               index.packed, parts.contains)
             pruned.mapPartitions { pit =>
-              val (qv, probes, allowed) = bq.value
-              scanPacked(pit, qv, probes, metricU, kLoc, allowed)
+              val (qv, probing, sorted) = bq.value
+              val onExecutor = AllowedSet(sorted = sorted)
+              ResidentScan.scanParts(pit, probing, qv.indices, k, onExecutor,
+                new FlatKernel(qv, metricU, onExecutor))
             }.collect()
           }
-      }
-    // final merge: ≤ partitions·nq·k rows, driver-local
-    partials.groupBy(_._1).iterator.flatMap { case (i, rows) =>
-      rows.sortBy { case (_, id, s) => (-s, id) }.take(k).zipWithIndex
-        .map { case ((_, id, s), r) => (queries(i)._1, r + 1, id, s) }
-    }.toArray
+        ResidentScan.rankTopK(partials, k)(queries(_)._1)
+      })
   }
 
-  /** Shared scan kernel for the packed serving tiers: probe-pruned ranges
-    * over flat float storage, L2 early-abandonment, one bounded top-k
-    * buffer per query. Runs identically inside an executor task (packed
-    * RDD) and on the driver (resident tier) — path equality is spec-pinned. */
-  private def scanPacked(pit: Iterator[PackedLists], qv: Array[Array[Float]],
-                         probes: Map[Int, Array[Int]], metricU: String,
-                         k: Int,
-                         allowedSorted: Array[Long] = null,
-                         allowedHash: LongHashSet = null,
-                         allowedBits: Array[Array[Long]] = null): Iterator[(Int, Long, Double)] = {
-    val bufs = Array.fill(qv.length)(new TopKBuf(k))
-    // allowedBits is aligned with the DRIVER parts array, indexed by
-    // consumption order — executor callers (partition iterators) must
-    // pass null, their ordinals are partition-local
-    var pi = 0
-    while (pit.hasNext) {
-      val p = pit.next()
-      val bits = if (allowedBits != null) allowedBits(pi) else null
-      probes.foreach { case (cid, probing) =>
-        val range = p.ranges.get(cid)
-        if (range != null)
-          scanRangeInto(bufs, p, probing, qv, metricU,
-            range(0), range(0) + range(1), allowedSorted, allowedHash, bits)
-      }
-      pi += 1
-    }
-    bufs.iterator.zipWithIndex.flatMap { case (b, i) =>
-      b.compact()
-      (0 until b.n).iterator.map(j => (i, b.ids(j), b.scores(j)))
-    }
-  }
+  /** The IVF_FLAT row kernel: exact float scoring with L2 early
+    * abandonment against the query's current k-th best. Runs identically
+    * inside an executor task (packed RDD) and on the driver (resident
+    * tiers) — path equality is spec-pinned. */
+  private final class FlatKernel(qv: Array[Array[Float]], metricU: String,
+                                 allowed: AllowedSet) extends RowKernel[Float] {
+    private val isL2 = metricU == "L2"
 
-  /** Row loop shared by [[scanPacked]] and the sub-range tasks of
-    * [[scanPackedMT]]'s few-query shape: score rows [start, end) of one
-    * packed part for the given probing queries. Splitting a list range
-    * across tasks preserves exact results: buffers only ever hold EXACT
-    * scores (abandoned partials are inadmissible by construction and
-    * rejected by the buffer), a chunk-local k-th-best threshold is ≤ the
-    * global one (subset of candidates), so a globally-top-k row is never
-    * abandoned in its chunk, and the caller's merge re-sorts on the total
-    * (score desc, id asc) order. */
-  private def scanRangeInto(bufs: Array[TopKBuf], p: PackedLists,
-                            probing: Array[Int], qv: Array[Array[Float]],
-                            metricU: String, start: Int, end: Int,
-                            allowedSorted: Array[Long],
-                            allowedHash: LongHashSet = null,
-                            bits: Array[Long] = null): Unit = {
-    val isL2 = metricU == "L2"
-    val dim = p.dim
-    var r = start
-    while (r < end) {
-      // membership priority: this part's row-position bitmap (sequential
-      // bit test) > hash set (1-2 probes) > sorted-array binary search
-      if (bits != null && ((bits(r >>> 6) >>> (r & 63)) & 1L) == 0L) {
-        r += 1
-      } else if (bits == null && (allowedHash != null || allowedSorted != null) &&
-          (if (allowedHash != null) !allowedHash.contains(p.ids(r))
-           else java.util.Arrays.binarySearch(allowedSorted, p.ids(r)) < 0)) {
-        // membership from WHICHEVER representation is present — a caller
-        // passing only the hash set must not get the filter silently
-        // dropped (engine callers pass both; the signature permits either)
-        r += 1
-      } else {
-        val off = r * dim
-        var i = 0
-        while (i < probing.length) {
-          val q = probing(i)
-          val score =
-            if (isL2)
-              // early-abandon: stop accumulating d² once it exceeds
-              // the query's current k-th-best (the reference's scan
-              // budget idea applied per candidate)
-              l2ScoreBounded(qv(q), p.vecs, off,
-                -bufs(q).admissionThreshold)
-            else candidateScoreFlat(metricU, qv(q), p.vecs, off)
-          bufs(q).add(p.ids(r), score)
-          i += 1
+    def scan(bufs: Array[TopKBuf], p: PackedPart[Float], cid: Int,
+             probing: Array[Int], start: Int, end: Int,
+             partBits: Array[Long]): Unit = {
+      val dim = p.width
+      val vecs = p.payload
+      var r = start
+      while (r < end) {
+        if (allowed.admits(partBits, r, p.ids(r))) {
+          val off = r * dim
+          var i = 0
+          while (i < probing.length) {
+            val q = probing(i)
+            val score =
+              if (isL2)
+                // early-abandon: stop accumulating d² once it exceeds
+                // the query's current k-th-best (the reference's scan
+                // budget idea applied per candidate)
+                l2ScoreBounded(qv(q), vecs, off, -bufs(q).admissionThreshold)
+              else candidateScoreFlat(metricU, qv(q), vecs, off)
+            bufs(q).add(p.ids(r), score)
+            i += 1
+          }
         }
         r += 1
       }
     }
-  }
-
-  /** Multi-threaded driver-resident scan: the mid-size regime between
-    * the single-thread bound and the distributed path. Batch regime
-    * (nq ≥ 2×threads): one task per QUERY CHUNK, each scanning every
-    * part — results are complete per query, no cross-task merge beyond
-    * concatenation. Latency regime (few queries, big probed work): one
-    * task per work-proportional ROW SUB-CHUNK of each probed list range
-    * (parallelism = pool width, not probed-part count) — partials merged
-    * by the caller's existing bounded merge. Both shapes run
-    * [[scanRangeInto]], the same row kernel as [[scanPacked]], so tier
-    * equality is pinned by the shared kernel. */
-  private def scanPackedMT(parts: Array[PackedLists],
-                           qv: Array[Array[Float]],
-                           probes: Map[Int, Array[Int]], metricU: String,
-                           k: Int,
-                           allowedSorted: Array[Long] = null,
-                           allowedHash: LongHashSet = null,
-                           allowedBits: Array[Array[Long]] = null): Array[(Int, Long, Double)] = {
-    val pool = driverScanPool
-    val nThreads = driverScanThreads
-    val nq = qv.length
-    val tasks: Seq[java.util.concurrent.Callable[Array[(Int, Long, Double)]]] =
-      if (nq >= 2 * nThreads) {
-        // chunk queries: each chunk gets a probe map in LOCAL query
-        // indices, scans all parts, and remaps indices back to global
-        val chunkSize = math.max(1, (nq + 2 * nThreads - 1) / (2 * nThreads))
-        (0 until nq by chunkSize).map { lo =>
-          val hi = math.min(nq, lo + chunkSize)
-          new java.util.concurrent.Callable[Array[(Int, Long, Double)]] {
-            override def call(): Array[(Int, Long, Double)] = {
-              val localQv = qv.slice(lo, hi)
-              val localProbes = probes.iterator.flatMap { case (cid, probing) =>
-                val in = probing.filter(q => q >= lo && q < hi)
-                if (in.isEmpty) None else Some(cid -> in.map(_ - lo))
-              }.toMap
-              scanPacked(parts.iterator, localQv, localProbes, metricU, k,
-                  allowedSorted, allowedHash, allowedBits)
-                .map { case (qi, id, s) => (qi + lo, id, s) }.toArray
-            }
-          }
-        }
-      } else {
-        // few queries, large probed lists: one task per PART caps the
-        // parallelism at the number of probed parts — on a cluster-keyed
-        // pack that is ≤ nprobe (10 tasks on a 32-thread pool for a
-        // single nprobe-10 query). Split each probed list range into
-        // work-proportional row sub-chunks instead, so one query's scan
-        // spreads over the whole pool (measured on the 500k single-query
-        // config: p50 6.3 → ~2 ms). Chunking preserves exact results —
-        // see [[scanRangeInto]]'s invariant note.
-        var totalWork = 0L // row-scans: rows × probing queries
-        parts.foreach { p =>
-          probes.foreach { case (cid, probing) =>
-            val range = p.ranges.get(cid)
-            if (range != null) totalWork += range(1).toLong * probing.length
-          }
-        }
-        val targetTasks = 4 * nThreads
-        val workPerTask =
-          math.max(1024L, (totalWork + targetTasks - 1) / targetTasks)
-        val units =
-          Seq.newBuilder[(PackedLists, Array[Int], Int, Int, Array[Long])]
-        var upi = 0
-        while (upi < parts.length) {
-          val p = parts(upi)
-          val bits = if (allowedBits != null) allowedBits(upi) else null
-          probes.foreach { case (cid, probing) =>
-            val range = p.ranges.get(cid)
-            if (range != null) {
-              val chunkRows = math.max(256L, workPerTask / probing.length)
-                .min(Int.MaxValue - 1L).toInt
-              var s = range(0); val end = range(0) + range(1)
-              while (s < end) {
-                val e = math.min(end, s + chunkRows)
-                units += ((p, probing, s, e, bits))
-                s = e
-              }
-            }
-          }
-          upi += 1
-        }
-        units.result().map { case (p, probing, s, e, bits) =>
-          new java.util.concurrent.Callable[Array[(Int, Long, Double)]] {
-            override def call(): Array[(Int, Long, Double)] = {
-              val bufs = new Array[TopKBuf](nq)
-              probing.foreach(q => bufs(q) = new TopKBuf(k))
-              scanRangeInto(bufs, p, probing, qv, metricU, s, e,
-                allowedSorted, allowedHash, bits)
-              probing.iterator.flatMap { q =>
-                val b = bufs(q); b.compact()
-                (0 until b.n).iterator.map(j => (q, b.ids(j), b.scores(j)))
-              }.toArray
-            }
-          }
-        }
-      }
-    import scala.jdk.CollectionConverters._
-    val futures = pool.invokeAll(tasks.asJava)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
-    futures.asScala.foreach(f => out ++= f.get())
-    out.toArray
   }
 
   /** -L2² with early abandonment: once the partial sum exceeds `bound`

@@ -14,17 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object IvfPq {
 
-  /** One partition's PQ inverted lists in flat storage: ids + contiguous
-    * byte codes (n × M), rows grouped by cluster with (start, len)
-    * ranges — the byte-code analog of [[IvfFlat.PackedLists]]. At M = 8
-    * a packed row is 8 code bytes + 8 id bytes: 10M vectors ≈ 160 MB,
-    * 32× under the float corpus — the compression that makes a
-    * driver-RESIDENT tier reach corpora whose raw vectors never could. */
-  final class PackedCodes(val m: Int, val ids: Array[Long],
-                          val codes: Array[Byte],
-                          val ranges: java.util.HashMap[Int, Array[Int]])
-    extends Serializable
-
   /** `rows` is the row count of `assigned`, known to whoever wrote it. */
   case class Index(assigned: DataFrame, // (id, cluster_id, codes BINARY)
                    centroids: DataFrame, // (cluster_id, centroid ARRAY<FLOAT>)
@@ -40,50 +29,22 @@ object IvfPq {
     /** Driver-RESIDENT packed code lists for the zero-job PQ serving
       * tier, or None while the [[graft.Residency.PqCodes]] line denies
       * them (a full line is retried on the next call, like
-      * [[IvfFlat.Index.packedDriver]]). Packing runs per-partition on the
-      * executors after a cluster-keyed exchange (each inverted list whole
-      * in one part — same shape as [[IvfFlat.Index.packed]]); the driver
-      * collects the already-flat parts, never 10M boxed rows. Admitted
-      * BEFORE collecting, from [[rows]] × (M code bytes + id bytes). */
-    def packedDriver: Option[Array[PackedCodes]] = packedResident.get
+      * [[IvfFlat.Index.packedDriver]]). Packed per partition on the
+      * executors by [[ResidentScan.pack]] (each inverted list whole in one
+      * part — same shape as [[IvfFlat.Index.packed]]); the driver collects
+      * the already-flat parts, never 10M boxed rows. At M = 8 a packed row
+      * is 8 code bytes + 8 id bytes: 10M vectors ≈ 160 MB, 32× under the
+      * float corpus — the compression that makes a driver-RESIDENT tier
+      * reach corpora whose raw vectors never could. Admitted BEFORE
+      * collecting, from [[rows]] × (M code bytes + id bytes). */
+    def packedDriver: Option[Array[PackedPart[Byte]]] = packedResident.get
 
     @transient private[graft] lazy val packedResident =
-      new graft.Residency.Memo[Array[PackedCodes]](
+      new graft.Residency.Memo[Array[PackedPart[Byte]]](
         graft.Residency.admit(graft.Residency.PqCodes,
             rows * (cb.m + 16L))(graft.Stage.run(assigned.sparkSession, "admit.packedCodes") {
-          val mWidth = cb.m
-          assigned.select("id", "cluster_id", "codes")
-            .repartition(col("cluster_id"))
-            .queryExecution.toRdd.mapPartitions { it =>
-              val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-              val cls = scala.collection.mutable.ArrayBuffer.empty[Int]
-              val codeBuf = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-              while (it.hasNext) {
-                val row = it.next()
-                ids += row.getLong(0)
-                cls += row.getInt(1)
-                codeBuf += row.getBinary(2)
-              }
-              if (ids.isEmpty) Iterator.empty
-              else {
-                val n = ids.length
-                val order = Array.range(0, n).sortBy(i => (cls(i), ids(i)))
-                val pIds = new Array[Long](n)
-                val pCodes = new Array[Byte](n * mWidth)
-                val ranges = new java.util.HashMap[Int, Array[Int]]()
-                var i = 0
-                while (i < n) {
-                  val src = order(i)
-                  pIds(i) = ids(src)
-                  System.arraycopy(codeBuf(src), 0, pCodes, i * mWidth, mWidth)
-                  val c = cls(src)
-                  val r = ranges.get(c)
-                  if (r == null) ranges.put(c, Array(i, 1)) else r(1) += 1
-                  i += 1
-                }
-                Iterator(new PackedCodes(mWidth, pIds, pCodes, ranges))
-              }
-            }.collect()
+          ResidentScan.pack(assigned.select("id", "cluster_id", "codes"),
+            _.getBinary(2)).collect()
         }))
   }
 
@@ -97,17 +58,6 @@ object IvfPq {
     * scan even pooled) the distributed ADC plan amortizes its overhead
     * and, on a real cluster, the executor fleet out-cores the driver. */
   val PqServeMaxLookupsMT: Long = 8L << 30
-
-  private lazy val pqScanPool: java.util.concurrent.ExecutorService = {
-    val n = math.max(2, Runtime.getRuntime.availableProcessors())
-    java.util.concurrent.Executors.newFixedThreadPool(n, (r: Runnable) => {
-      val t = new Thread(r, "graft-pq-driver-scan")
-      t.setDaemon(true)
-      t
-    })
-  }
-  private lazy val pqScanThreads: Int =
-    math.max(2, Runtime.getRuntime.availableProcessors())
 
   /** Zero-job PQ serving for driver-local query batches: probe ranking on
     * the resident centroids, one residual ADC table per (query, probed
@@ -124,241 +74,99 @@ object IvfPq {
     * same (score desc, id asc) top-k order — spec-pinned equality.
     *
     * Non-resident indexes (past the byte bounds) fall back to the
-    * distributed ADC plan and collect its bounded top-k (nq × k rows). */
+    * distributed ADC plan and collect its bounded top-k (nq × k rows).
+    * `allowed` (the serving-side conjunctive tag filter) skips
+    * non-members BEFORE the ADC lookups; the plan has no filter hook, so
+    * a filtered call the resident tier cannot serve fails here. */
   def searchLocalRows(index: Index, queries: Array[(Long, Array[Float])],
                       k: Int, nprobe: Int,
                       spark: org.apache.spark.sql.SparkSession,
-                      allowedSorted: Array[Long] = null,
-                      allowedHash: LongHashSet = null,
-                      allowedBits: Array[Array[Long]] = null): Array[(Long, Int, Long, Double)] =
-    searchLocalRowsPath(index, queries, k, nprobe, spark,
-      allowedSorted = allowedSorted, allowedHash = allowedHash,
-      allowedBits = allowedBits)
+                      allowed: AllowedSet = AllowedSet.All): Array[(Long, Int, Long, Double)] =
+    searchLocalRowsPath(index, queries, k, nprobe, spark, allowed = allowed)
+      .getOrElse(throw new IllegalArgumentException(
+        "filtered PQ serving requires the resident tier"))
 
-  /** [[searchLocalRows]] with the tier bounds exposed for path-equality
-    * tests (force the MT branch / the distributed fallback on small
-    * fixtures — same pattern as IvfFlat.searchLocalRowsPath).
-    *
-    * `allowedSorted` (optional): SORTED admissible surrogate ids — the
-    * serving-side conjunctive tag filter. Non-members are skipped BEFORE
-    * the ADC lookups (one binary search per probed row), matching the
-    * batch plan's filter-then-top-k over the same candidates. Null on
-    * the distributed fallback is a caller error (the fallback plan has
-    * no filter hook) — filtered callers must gate on residency first. */
+  /** [[searchLocalRows]] with the tier bounds exposed (the engine's
+    * constructor bound; path-equality specs force the MT branch or the
+    * plan fallback on small fixtures). None when the resident tier does
+    * not serve a FILTERED call — the caller keeps its own distributed
+    * filtered plan instead of throwing at serve time (the r7 failure
+    * mode: a large filtered batch past PqServeMaxLookupsMT hit the
+    * unfiltered plan's require). */
   private[graft] def searchLocalRowsPath(
       index: Index, queries: Array[(Long, Array[Float])],
       k: Int, nprobe: Int,
       spark: org.apache.spark.sql.SparkSession,
       stBound: Long = PqServeMaxLookups,
       mtBound: Long = PqServeMaxLookupsMT,
-      allowedSorted: Array[Long] = null,
-      allowedHash: LongHashSet = null,
-      allowedBits: Array[Array[Long]] = null): Array[(Long, Int, Long, Double)] = {
-    if (queries.isEmpty) return Array.empty
-    searchResidentRows(index, queries, k, nprobe, stBound, mtBound,
-      allowedSorted, allowedHash, allowedBits) match {
-      case Some(rows) => rows
-      case None =>
-        // the distributed ADC plan has no filter hook — FILTERED callers
-        // must use [[searchResidentRows]] directly and keep their own
-        // distributed filtered plan on None; reaching here filtered is a
-        // programming error, not a fallback
-        require(allowedSorted == null && allowedHash == null &&
-            allowedBits == null,
-          "filtered PQ serving requires the resident tier; " +
-            "callers must gate on searchResidentRows returning Some")
+      allowed: AllowedSet = AllowedSet.All): Option[Array[(Long, Int, Long, Double)]] = {
+    if (queries.isEmpty) return Some(Array.empty)
+    val cents = index.centroidsLocal
+    val qvecs = queries.map(_._2)
+    val probes = ResidentScan.probeMap(cents, qvecs, "L2", nprobe)
+    ResidentScan.serve(index.packedDriver, probes, queries.map(_._1), k, stBound,
+        mtBound, tier = "pq.", allowed, splitRanges = false,
+        new AdcKernel(qvecs, cents.toMap, index.cb, allowed))
+      .orElse(Option.when(allowed.isAll) {
+        ResidentScan.countTier("pq.plan")
         import spark.implicits._
         val qDf = queries.toSeq
           .map { case (qid, qv) => (qid, qv.toSeq) }.toDF("query_id", "qvec")
         search(index, qDf, k, nprobe).collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    }
+      })
   }
 
-  /** Resident-tier core: Some(rows) when the probed work fits the scan
-    * bounds AND the packed codes are resident; None otherwise (over-budget
-    * batch or non-resident index). Filtered serving gates on THIS — a
-    * None keeps the caller's always-correct distributed filtered plan
-    * instead of throwing at serve time (the r7 failure mode: a large
-    * filtered batch past PqServeMaxLookupsMT hit the unfiltered
-    * distributed fallback's require). */
-  private[graft] def searchResidentRows(
-      index: Index, queries: Array[(Long, Array[Float])],
-      k: Int, nprobe: Int,
-      stBound: Long = PqServeMaxLookups,
-      mtBound: Long = PqServeMaxLookupsMT,
-      allowedSorted: Array[Long] = null,
-      allowedHash: LongHashSet = null,
-      allowedBits: Array[Array[Long]] = null): Option[Array[(Long, Int, Long, Double)]] = {
-    val nq = queries.length
-    if (nq == 0) return Some(Array.empty)
-    val cents = index.centroidsLocal
-    val centOf = cents.toMap
-    // per-query probe ranking (identical kernel to the distributed
-    // IvfFlat.probes ranking), inverted into cluster → probing queries
-    val byCluster = scala.collection.mutable.HashMap.empty[Int, scala.collection.mutable.ArrayBuffer[Int]]
-    var qi = 0
-    while (qi < nq) {
-      IvfFlat.rankProbes(cents, queries(qi)._2, "L2", nprobe).foreach { cid =>
-        byCluster.getOrElseUpdate(cid, scala.collection.mutable.ArrayBuffer.empty) += qi
-      }
-      qi += 1
-    }
-    val probeMap = byCluster.map { case (c, qs) => (c, qs.toArray) }.toMap
-    index.packedDriver.flatMap { parts =>
-      // exact probed work, read off the resident lists (IvfFlat's rationale)
-      val sizes = IvfFlat.listSizes(parts.iterator.map(_.ranges))
-      val lookups = probeMap.foldLeft(0L) { case (s, (cid, probing)) =>
-        s + sizes.getOrElse(cid, 0L) * probing.length * index.cb.m
-      }
-      Option.when(lookups <= mtBound) {
-        val partials =
-          if (lookups <= stBound)
-            scanCodes(parts, queries.map(_._2), probeMap, centOf, index.cb, k,
-              allowedSorted, allowedHash, allowedBits)
-          else
-            scanCodesMT(parts, queries.map(_._2), probeMap, centOf, index.cb, k,
-              allowedSorted, allowedHash, allowedBits)
-        partials.groupBy(_._1).iterator.flatMap { case (i, rows) =>
-          rows.sortBy { case (_, id, s) => (-s, id) }.take(k).zipWithIndex
-            .map { case ((_, id, s), r) => (queries(i)._1, r + 1, id, s) }
-        }.toArray
-      }
-    }
-  }
-
-  /** Shared resident scan kernel: per (query, probed cluster), residual
+  /** The IVF_PQ row kernel: per (query, probed cluster), residual
     * rq = q − centroid in FLOAT arithmetic (bit-matching the plan's
     * `zip_with` subtraction), flat M×K ADC table from [[Pq.adcTableFor]],
-    * then score = −Σ table(mi·K + code(mi)) over the cluster's code
-    * range into one bounded top-k buffer per query. The ADC table is
-    * built once per (query, probed cluster) — the same doubles the
-    * distributed path broadcasts — and lookups sum in ascending subspace
-    * order, so scores are bit-identical across tiers. */
-  private def scanCodes(parts: Array[PackedCodes],
-                        qvecs: Array[Array[Float]],
-                        probeMap: Map[Int, Array[Int]],
-                        centOf: Map[Int, Array[Float]],
-                        cb: Pq.Codebook,
-                        k: Int,
-                        allowedSorted: Array[Long] = null,
-                        allowedHash: LongHashSet = null,
-                        allowedBits: Array[Array[Long]] = null): Array[(Int, Long, Double)] = {
-    val bufs = Array.fill(qvecs.length)(new TopKBuf(k))
-    val kk = cb.k
-    var pi = 0
-    while (pi < parts.length) {
-      val p = parts(pi)
-      // per-PART row-position bitmap (aligned with `parts`): membership
-      // becomes a sequential bit test in scan order — no per-row probe
-      // into a large table at all (the filtered-tier endgame)
-      val bits = if (allowedBits != null) allowedBits(pi) else null
-      val mWidth = p.m
-      probeMap.foreach { case (cid, probing) =>
-        val range = p.ranges.get(cid)
-        if (range != null) {
-          val cent = centOf(cid)
-          var i = 0
-          while (i < probing.length) {
-            val q = probing(i)
-            val qv = qvecs(q)
-            val rq = new Array[Float](qv.length)
-            var d = 0
-            while (d < qv.length) { rq(d) = qv(d) - cent(d); d += 1 }
-            val table = Pq.adcTableFor(
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(rq), cb)
-            val flat = new Array[Double](cb.m * kk)
-            var mi = 0
-            while (mi < cb.m) {
-              System.arraycopy(table(mi), 0, flat, mi * kk, kk)
-              mi += 1
-            }
-            val buf = bufs(q)
-            var r = range(0); val end = range(0) + range(1)
-            while (r < end) {
-              if (bits != null &&
-                  ((bits(r >>> 6) >>> (r & 63)) & 1L) == 0L) {
-                r += 1
-              } else if (bits == null &&
-                  (allowedHash != null || allowedSorted != null) &&
-                  (if (allowedHash != null) !allowedHash.contains(p.ids(r))
-                   else java.util.Arrays.binarySearch(allowedSorted, p.ids(r)) < 0)) {
-                // membership from whichever representation is present —
-                // hash-only callers must not lose the filter silently
-                r += 1
-              } else {
-                val off = r * mWidth
-                var s = 0.0
-                mi = 0
-                while (mi < mWidth) {
-                  s += flat(mi * kk + (p.codes(off + mi) & 0xff)); mi += 1
-                }
-                buf.add(p.ids(r), -s)
-                r += 1
-              }
-            }
-            i += 1
-          }
+    * then score = −Σ table(mi·K + code(mi)) over the range. The table is
+    * built once per (query, range) — the same doubles the distributed
+    * path broadcasts — and lookups sum in ascending subspace order, so
+    * scores are bit-identical across tiers. */
+  private final class AdcKernel(qvecs: Array[Array[Float]],
+                                centOf: Map[Int, Array[Float]],
+                                cb: Pq.Codebook,
+                                allowed: AllowedSet) extends RowKernel[Byte] {
+    def scan(bufs: Array[TopKBuf], p: PackedPart[Byte], cid: Int,
+             probing: Array[Int], start: Int, end: Int,
+             partBits: Array[Long]): Unit = {
+      val cent = centOf(cid)
+      val kk = cb.k
+      val mWidth = p.width
+      val codes = p.payload
+      var i = 0
+      while (i < probing.length) {
+        val q = probing(i)
+        val qv = qvecs(q)
+        val rq = new Array[Float](qv.length)
+        var d = 0
+        while (d < qv.length) { rq(d) = qv(d) - cent(d); d += 1 }
+        val table = Pq.adcTableFor(
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(rq), cb)
+        val flat = new Array[Double](cb.m * kk)
+        var mi = 0
+        while (mi < cb.m) {
+          System.arraycopy(table(mi), 0, flat, mi * kk, kk)
+          mi += 1
         }
+        val buf = bufs(q)
+        var r = start
+        while (r < end) {
+          if (allowed.admits(partBits, r, p.ids(r))) {
+            val off = r * mWidth
+            var s = 0.0
+            mi = 0
+            while (mi < mWidth) {
+              s += flat(mi * kk + (codes(off + mi) & 0xff)); mi += 1
+            }
+            buf.add(p.ids(r), -s)
+          }
+          r += 1
+        }
+        i += 1
       }
-      pi += 1
     }
-    bufs.iterator.zipWithIndex.flatMap { case (b, i) =>
-      b.compact()
-      (0 until b.n).iterator.map(j => (i, b.ids(j), b.scores(j)))
-    }.toArray
-  }
-
-  /** Multi-threaded resident scan: one task per QUERY CHUNK (each chunk
-    * scans every part with a probe map remapped to local indices —
-    * results complete per query, merge is concatenation), falling back
-    * to one task per PART when the batch is small but the probed work
-    * is large. Both shapes reuse [[scanCodes]] verbatim. */
-  private def scanCodesMT(parts: Array[PackedCodes],
-                          qvecs: Array[Array[Float]],
-                          probeMap: Map[Int, Array[Int]],
-                          centOf: Map[Int, Array[Float]],
-                          cb: Pq.Codebook,
-                          k: Int,
-                          allowedSorted: Array[Long] = null,
-                          allowedHash: LongHashSet = null,
-                          allowedBits: Array[Array[Long]] = null): Array[(Int, Long, Double)] = {
-    val pool = pqScanPool
-    val nThreads = pqScanThreads
-    val nq = qvecs.length
-    val tasks: Seq[java.util.concurrent.Callable[Array[(Int, Long, Double)]]] =
-      if (nq >= 2 * nThreads) {
-        val chunkSize = math.max(1, (nq + 2 * nThreads - 1) / (2 * nThreads))
-        (0 until nq by chunkSize).map { lo =>
-          val hi = math.min(nq, lo + chunkSize)
-          new java.util.concurrent.Callable[Array[(Int, Long, Double)]] {
-            override def call(): Array[(Int, Long, Double)] = {
-              val localQv = qvecs.slice(lo, hi)
-              val localProbes = probeMap.iterator.flatMap { case (cid, probing) =>
-                val in = probing.filter(q => q >= lo && q < hi)
-                if (in.isEmpty) None else Some(cid -> in.map(_ - lo))
-              }.toMap
-              scanCodes(parts, localQv, localProbes, centOf, cb, k,
-                  allowedSorted, allowedHash, allowedBits)
-                .map { case (qi, id, s) => (qi + lo, id, s) }
-            }
-          }
-        }
-      } else {
-        parts.toSeq.zipWithIndex.map { case (p, pi) =>
-          new java.util.concurrent.Callable[Array[(Int, Long, Double)]] {
-            override def call(): Array[(Int, Long, Double)] =
-              scanCodes(Array(p), qvecs, probeMap, centOf, cb, k,
-                allowedSorted, allowedHash,
-                if (allowedBits == null) null else Array(allowedBits(pi)))
-          }
-        }
-      }
-    import scala.jdk.CollectionConverters._
-    val futures = pool.invokeAll(tasks.asJava)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
-    futures.asScala.foreach(f => out ++= f.get())
-    out.toArray
   }
 
   def build(vectors: DataFrame, nlist: Int, m: Int, k: Int,
@@ -413,8 +221,9 @@ object IvfPq {
   def scoredCandidates(index: Index, queries: DataFrame, nprobe: Int,
                        maxLocalQueries: Int = 10000): DataFrame = {
     val spark = queries.sparkSession
-    val coarse = IvfFlat.Index(index.assigned, index.centroids, index.rows)
-    val probeSet = IvfFlat.probes(coarse, queries, "L2", nprobe)
+    // the PQ handle's own memoized centroids: a coarse IvfFlat.Index
+    // wrapper would collect the centroid table again on every call
+    val probeSet = IvfFlat.probesOver(index.centroidsLocal, queries, "L2", nprobe)
       .join(broadcast(index.centroids), Seq("cluster_id"))
       .withColumn("rq", zip_with(col("qvec"), col("centroid"), (x, y) => x - y))
       .select("query_id", "cluster_id", "rq")

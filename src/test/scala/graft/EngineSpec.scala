@@ -681,6 +681,20 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("engine searchRows IVF_PQ: a wrong-width query fails with the dimension error") {
+    val root = Files.createTempDirectory("engine_pqdim").toString
+    val eng = new GraftEngine(spark, root)
+    val rng = new scala.util.Random(43)
+    eng.add(mkRecords((0 until 80).map(i =>
+      (s"v$i", Seq.fill(16)(rng.nextFloat()), null: String, Seq.empty[String], 100L))))
+    eng.build("t1", "idx", nlist = 4, metric = "L2", algo = "IVF_PQ", pqM = 4, pqK = 16)
+    val ok = eng.searchRowsTraced("t1", "idx", Array((1L, Array.fill(16)(0.5f))), k = 3)
+    assert(ok._2.path == "head+pqtail", ok._2)
+    intercept[DimensionMismatchException] {
+      eng.searchRows("t1", "idx", Array((1L, Array.fill(15)(0.5f))), k = 3)
+    }
+  }
+
   test("engine searchRows HNSW: resident graph tier equals the plan incl. dirty head") {
     val root = Files.createTempDirectory("engine_hnswrows").toString
     val eng = new GraftEngine(spark, root)

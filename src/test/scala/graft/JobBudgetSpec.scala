@@ -89,8 +89,27 @@ class JobBudgetSpec extends SparkSpec {
     assert(add == addEmpty && add2 == addNonEmpty, (add, add2))
     assert(build == Map("build.state" -> 3, "build.hnsw" -> 5, "build.idmap" -> 1,
       "build.records" -> 1), build)
-    // the graphs' size estimate and their collect
-    assert(search == Map("admit.idPool" -> 1, "admit.hnsw" -> 11), search)
+    // the meta read, the size estimate's dim probe and the graphs'
+    // collect (all three tables read with declared schemas)
+    assert(search == Map("admit.idPool" -> 1, "admit.hnsw" -> 5), search)
+  }
+
+  test("job budget: a repeat IVF_PQ plan call on one handle collects no centroids") {
+    val rng = new scala.util.Random(3)
+    val vecs = (0 until 400).map(i => (i.toLong, Seq.fill(16)(rng.nextFloat())))
+      .toDF("id", "vec")
+    // a snapshot-backed handle, as the engine opens: its centroid table
+    // is a parquet read, so collecting it is a job
+    val dir = Files.createTempDirectory("jobs_pq_plan").toString
+    graft.operators.IvfPq.save(
+      graft.operators.IvfPq.build(vecs, nlist = 4, m = 4, k = 16), dir)
+    val idx = graft.operators.IvfPq.load(spark, dir)
+    val q = Seq((1L, Seq.fill(16)(0.5f))).toDF("query_id", "qvec")
+    graft.operators.IvfPq.search(idx, q, 5, nprobe = 2).collect()
+    val (rows, jobs) = JobCount.byStage(spark)(
+      graft.operators.IvfPq.search(idx, q, 5, nprobe = 2).collect())
+    assert(rows.length == 5)
+    assert(!jobs.contains("open.centroids"), jobs)
   }
 
   /** The first filtered search on a tagged corpus: besides the tail and

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Components, IvfFlat, IvfPq, TextDedup}
+import graft.operators.{AllowedSet, Components, IvfFlat, IvfPq, TextDedup}
 
 /** Distributed-branch proof under `local-cluster[2,8,4096]` — REAL
   * executor JVMs, unlike local[n] where driver and executors share one
@@ -54,16 +54,17 @@ object LocalClusterMain {
     val resident = IvfFlat.searchLocalRows(idx, queries, "L2", 10,
       nprobe = 3, spark)
     val distributed = IvfFlat.searchLocalRowsPath(idx, queries, "L2", 10,
-      nprobe = 3, spark, forceDistributed = true)
+      nprobe = 3, spark, forceDistributed = true).get
     check("ivf_flat distributed == resident (scores+ties)") {
       distributed.toSeq == resident.toSeq
     }
     // filtered variant through the broadcast allowed set
     val allowed = (0L until 4000L).filter(_ % 2 == 0).toArray
     val resF = IvfFlat.searchLocalRows(idx, queries, "L2", 10, nprobe = 3,
-      spark, allowedSorted = allowed)
+      spark, AllowedSet(sorted = allowed))
     val distF = IvfFlat.searchLocalRowsPath(idx, queries, "L2", 10,
-      nprobe = 3, spark, forceDistributed = true, allowedSorted = allowed)
+      nprobe = 3, spark, forceDistributed = true,
+      allowed = AllowedSet(sorted = allowed)).get
     check("ivf_flat FILTERED distributed == resident") {
       distF.toSeq == resF.toSeq
     }
@@ -74,7 +75,7 @@ object LocalClusterMain {
     val pqResident = IvfPq.searchLocalRows(pq, queries, 10, nprobe = 3, spark)
     // mtBound = 0 forces the distributed fallback (collects the ADC plan)
     val pqDistributed = IvfPq.searchLocalRowsPath(pq, queries, 10,
-      nprobe = 3, spark, stBound = 0L, mtBound = 0L)
+      nprobe = 3, spark, stBound = 0L, mtBound = 0L).get
     check("ivf_pq distributed ADC plan == resident byte-code tier") {
       // row ORDER is not part of the contract (the plan's collect order
       // is partition order; the resident tier's is group order) — the

@@ -46,7 +46,7 @@ class SnapshotHandleSpec extends SparkSpec {
         (h.assigned, h.rows, h.packedDriver.get.map(_.ranges))
       }
     assert(rows == assigned.count(), s"$algo after $what")
-    assert(IvfFlat.listSizes(ranges.iterator) == counts(assigned),
+    assert(graft.operators.ResidentScan.listSizes(ranges.iterator) == counts(assigned),
       s"$algo after $what")
   }
 

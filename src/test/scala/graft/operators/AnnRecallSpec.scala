@@ -94,9 +94,9 @@ class AnnRecallSpec extends SparkSpec {
     val qsLocal = tq.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     for (metric <- Seq("L2", "COSINE", "IP")) {
       val a = IvfFlat.searchLocalRowsPath(idx, qsLocal, metric, K, 2, spark,
-        forceDistributed = false)
+        forceDistributed = false).get
       val b = IvfFlat.searchLocalRowsPath(idx, qsLocal, metric, K, 2, spark,
-        forceDistributed = true)
+        forceDistributed = true).get
       assert(a.sortBy(r => (r._1, r._2)).toSeq == b.sortBy(r => (r._1, r._2)).toSeq,
         s"metric=$metric")
     }
@@ -121,11 +121,11 @@ class AnnRecallSpec extends SparkSpec {
     val qsSmall = qsBig.take(3)
     for (metric <- Seq("L2", "COSINE", "IP"); qs <- Seq(qsBig, qsSmall)) {
       val st = IvfFlat.searchLocalRowsPath(idx, qs, metric, K, 2, spark,
-        forceDistributed = false) // all work fits the single-thread bound
+        forceDistributed = false).get // all work fits the single-thread bound
       val mt = IvfFlat.searchLocalRowsPath(idx, qs, metric, K, 2, spark,
-        forceDistributed = false, stBound = 0L, mtBound = Long.MaxValue)
+        forceDistributed = false, stBound = 0L, mtBound = Long.MaxValue).get
       val dist = IvfFlat.searchLocalRowsPath(idx, qs, metric, K, 2, spark,
-        forceDistributed = true)
+        forceDistributed = true).get
       assert(mt.sortBy(r => (r._1, r._2)).toSeq == st.sortBy(r => (r._1, r._2)).toSeq,
         s"MT != ST: metric=$metric nq=${qs.length}")
       assert(mt.sortBy(r => (r._1, r._2)).toSeq == dist.sortBy(r => (r._1, r._2)).toSeq,
@@ -135,9 +135,10 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("MT driver tier is safe under concurrent callers (shared pool, no cross-talk)") {
-    // the daemon pool is shared JVM-wide: two callers' task batches
-    // interleave on it. Results must match the single-caller answer
-    // exactly for both callers — TopKBufs are per-call, parts immutable.
+    // the daemon pool is shared JVM-wide by IVF_FLAT and IVF_PQ: their
+    // callers' task batches interleave on it. Results must match the
+    // single-caller answer exactly for every caller — TopKBufs are
+    // per-call, parts immutable.
     val tied = (0 until 400).map { i =>
       (i.toLong, Seq((i % 5).toFloat, ((i / 5) % 4).toFloat, 1f))
     }.toDF("id", "vec").cache()
@@ -146,15 +147,23 @@ class AnnRecallSpec extends SparkSpec {
     val qsB = (0 until 120).map(i => (i.toLong, Array(1f, (i % 4).toFloat, 1f))).toArray
     def mt(qs: Array[(Long, Array[Float])]) =
       IvfFlat.searchLocalRowsPath(idx, qs, "L2", K, 2, spark,
-        forceDistributed = false, stBound = 0L, mtBound = Long.MaxValue)
+        forceDistributed = false, stBound = 0L, mtBound = Long.MaxValue).get
         .sortBy(r => (r._1, r._2)).toSeq
-    val (expA, expB) = (mt(qsA), mt(qsB))
+    // IVF_PQ callers share the same pool: a query-chunked batch and a
+    // few-query call (one task per probed list range)
+    val pq = IvfPq.build(vectors, nlist = 8, m = 8, k = 16)
+    val qsPq = queries.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val qsPqBig = (0 until 120).map(i => (i.toLong, qsPq(i % qsPq.length)._2)).toArray
+    def pqMt(qs: Array[(Long, Array[Float])]) =
+      IvfPq.searchLocalRowsPath(pq, qs, K, nprobe = 3, spark, stBound = 0L,
+        mtBound = Long.MaxValue).get.sortBy(r => (r._1, r._2)).toSeq
+    val calls: Seq[() => Seq[(Long, Int, Long, Double)]] = Seq(
+      () => mt(qsA), () => mt(qsB), () => pqMt(qsPqBig), () => pqMt(qsPq.take(3)))
+    val expected = calls.map(_())
     val results = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]()
     val threads = (0 until 8).map { t =>
       new Thread(() => {
-        val ok = (0 until 5).forall { _ =>
-          mt(if (t % 2 == 0) qsA else qsB) == (if (t % 2 == 0) expA else expB)
-        }
+        val ok = (0 until 5).forall(_ => calls(t % 4)() == expected(t % 4))
         results.put(t, ok)
       })
     }
@@ -229,13 +238,66 @@ class AnnRecallSpec extends SparkSpec {
       .sortBy(t => (t._1, t._2))
     def tier(st: Long, mt: Long) =
       IvfPq.searchLocalRowsPath(idx, qArr, K, nprobe = 3, spark,
-        stBound = st, mtBound = mt).sortBy(t => (t._1, t._2))
+        stBound = st, mtBound = mt).get.sortBy(t => (t._1, t._2))
     // single-thread resident, MT resident, and distributed fallback all
     // produce the identical rows — scores included (same ADC doubles,
     // same (score desc, id asc) ties)
     assert(tier(Long.MaxValue, Long.MaxValue).toSeq == planRows.toSeq)
     assert(tier(0L, Long.MaxValue).toSeq == planRows.toSeq)
     assert(tier(0L, 0L).toSeq == planRows.toSeq)
+
+    // Both MT shapes and filtered calls, against the plan's FULL ranking
+    // of every probed candidate (k = corpus size): its rank ≤ K rows are
+    // the unfiltered answer, and its member rows' first K the
+    // filter-then-top-k answer. A 200-query batch is query-chunked on any
+    // pool of ≤ 100 threads; a 3-query call runs one task per probed
+    // list range.
+    val rng = new Random(5)
+    val pts = vectors.as[(Long, Seq[Float])].collect()
+    val big = Array.tabulate(200) { i =>
+      (i.toLong, pts(rng.nextInt(pts.length))._2.map(_ + rng.nextFloat() * 0.1f).toArray)
+    }
+    val small = big.take(3)
+    val allowed = pts.map(_._1).filter(_ % 3 == 0).sorted
+    val parts = idx.packedDriver.get
+    val memberships = Seq(
+      "sorted" -> AllowedSet(sorted = allowed),
+      "hash" -> AllowedSet(hash = LongHashSet.from(allowed)),
+      "bits" -> AllowedSet(bits = parts.map(p => rowBits(p.ids, allowed))))
+    type Row = (Long, Int, Long, Double)
+    def cut(ranked: Array[Row], keep: Long => Boolean): Seq[Row] =
+      ranked.filter(r => keep(r._3)).groupBy(_._1).toSeq.flatMap { case (q, rs) =>
+        rs.sortBy(_._2).take(K).zipWithIndex.map { case (r, i) => (q, i + 1, r._3, r._4) }
+      }.sortBy(t => (t._1, t._2))
+    def path(qs: Array[(Long, Array[Float])], st: Long, mt: Long,
+             allowed: AllowedSet = AllowedSet.All): Seq[Row] =
+      IvfPq.searchLocalRowsPath(idx, qs, K, nprobe = 3, spark, stBound = st,
+        mtBound = mt, allowed = allowed).get.sortBy(t => (t._1, t._2)).toSeq
+    for (qs <- Seq(big, small)) {
+      val qDf = qs.toSeq.map { case (q, v) => (q, v.toSeq) }.toDF("query_id", "qvec")
+      val ranked = IvfPq.search(idx, qDf, nPoints, nprobe = 3).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      val plain = cut(ranked, _ => true)
+      assert(path(qs, Long.MaxValue, Long.MaxValue) == plain, s"ST nq=${qs.length}")
+      assert(path(qs, 0L, Long.MaxValue) == plain, s"MT nq=${qs.length}")
+      assert(path(qs, 0L, 0L) == plain, s"plan nq=${qs.length}")
+      val filtered = cut(ranked, id => java.util.Arrays.binarySearch(allowed, id) >= 0)
+      assert(filtered.nonEmpty)
+      for ((name, m) <- memberships) {
+        assert(path(qs, Long.MaxValue, Long.MaxValue, m) == filtered,
+          s"ST $name nq=${qs.length}")
+        assert(path(qs, 0L, Long.MaxValue, m) == filtered, s"MT $name nq=${qs.length}")
+      }
+    }
+  }
+
+  /** A part's row-position bitmap of the ids in sorted `allowed`. */
+  private def rowBits(ids: Array[Long], allowed: Array[Long]): Array[Long] = {
+    val b = new Array[Long]((ids.length + 63) >>> 6)
+    ids.zipWithIndex.foreach { case (id, r) =>
+      if (java.util.Arrays.binarySearch(allowed, id) >= 0) b(r >>> 6) |= 1L << (r & 63)
+    }
+    b
   }
 
   test("engine IVF_PQ IP (MIPS augmentation): realistic-parameter recall vs brute dot") {
@@ -337,9 +399,9 @@ class AnnRecallSpec extends SparkSpec {
     // tier at a pruning-heavy config (nprobe=1: one task)
     val qs = (0 until 4).map(i => (i.toLong, Array(i.toFloat, 1f, 1f))).toArray
     val a = IvfFlat.searchLocalRowsPath(idx, qs, "L2", K, 1, spark,
-      forceDistributed = false)
+      forceDistributed = false).get
     val b = IvfFlat.searchLocalRowsPath(idx, qs, "L2", K, 1, spark,
-      forceDistributed = true)
+      forceDistributed = true).get
     assert(a.sortBy(r => (r._1, r._2)).toSeq == b.sortBy(r => (r._1, r._2)).toSeq)
     vecs.unpersist()
   }

@@ -106,7 +106,7 @@ class HnswSpec extends SparkSpec {
     // ef >= n: the filtered beam explores the whole component, so the
     // answer must be EXACT brute force over the member set
     val got = Hnsw.searchLocalRowsFiltered(graphs, qs, 10, efSearch = 256,
-      allowedSorted = allowed)
+      AllowedSet(sorted = allowed))
     val raw = vecs.collect().map(r =>
       (r.getLong(0), r.getSeq[Float](1).toArray))
     val bySet = allowed.toSet
@@ -126,7 +126,7 @@ class HnswSpec extends SparkSpec {
     // member == everyone: identical to the unfiltered beam
     val all = (0L until 200L).toArray
     val gotAll = Hnsw.searchLocalRowsFiltered(graphs, qs, 10, efSearch = 256,
-      allowedSorted = all)
+      AllowedSet(sorted = all))
     val unf = Hnsw.searchLocalRows(graphs, qs, 10, efSearch = 256)
     assert(gotAll.toSeq == unf.toSeq)
   }
@@ -147,7 +147,7 @@ class HnswSpec extends SparkSpec {
     val q = Array((1L, Array.fill(dim)(0.15f)))
     val members = (195L until 200L).toArray
     val beam = Hnsw.searchLocalRowsFiltered(graphs, q, 5, efSearch = 50,
-      allowedSorted = members)
+      AllowedSet(sorted = members))
     assert(beam.length == 5, s"beam must return all 5 members, got ${beam.length}")
     assert(beam.map(_._3).toSet == members.toSet)
     // the post-filter shape on the same graph: top-50 unfiltered ∩ members

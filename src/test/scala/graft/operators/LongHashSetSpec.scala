@@ -45,10 +45,9 @@ class LongHashSetSpec extends SparkSpec {
     val queries = Array((1L, Array.fill(8)(rng.nextFloat())),
       (2L, Array.fill(8)(rng.nextFloat())))
     val viaArray = IvfFlat.searchLocalRows(idx, queries, "L2", 5, nprobe = 2,
-      spark, allowedSorted = allowed)
+      spark, AllowedSet(sorted = allowed))
     val viaHash = IvfFlat.searchLocalRows(idx, queries, "L2", 5, nprobe = 2,
-      spark, allowedSorted = allowed,
-      allowedHash = LongHashSet.from(allowed))
+      spark, AllowedSet(sorted = allowed, hash = LongHashSet.from(allowed)))
     assert(viaArray.toSeq == viaHash.toSeq)
   }
 
@@ -76,9 +75,9 @@ class LongHashSetSpec extends SparkSpec {
     val queries = Array((1L, Array.fill(8)(rng.nextFloat())),
       (2L, Array.fill(8)(rng.nextFloat())))
     val viaArray = IvfFlat.searchLocalRows(idx, queries, "L2", 5, nprobe = 2,
-      spark, allowedSorted = allowed)
+      spark, AllowedSet(sorted = allowed))
     val viaBits = IvfFlat.searchLocalRows(idx, queries, "L2", 5, nprobe = 2,
-      spark, allowedSorted = allowed, allowedBits = bits)
+      spark, AllowedSet(sorted = allowed, bits = bits))
     assert(viaArray.toSeq == viaBits.toSeq)
   }
 
@@ -95,9 +94,9 @@ class LongHashSetSpec extends SparkSpec {
     val queries = Array((1L, Array.fill(8)(rng.nextFloat())),
       (2L, Array.fill(8)(rng.nextFloat())))
     val viaArray = IvfPq.searchLocalRows(idx, queries, 5, nprobe = 2, spark,
-      allowedSorted = allowed)
+      AllowedSet(sorted = allowed))
     val viaBits = IvfPq.searchLocalRows(idx, queries, 5, nprobe = 2, spark,
-      allowedSorted = allowed, allowedBits = bits)
+      AllowedSet(sorted = allowed, bits = bits))
     assert(viaArray.toSeq == viaBits.toSeq)
   }
 
@@ -113,9 +112,9 @@ class LongHashSetSpec extends SparkSpec {
     val queries = Array((1L, Array.fill(8)(rng.nextFloat())),
       (2L, Array.fill(8)(rng.nextFloat())))
     val viaArray = IvfPq.searchLocalRows(idx, queries, 5, nprobe = 2, spark,
-      allowedSorted = allowed)
+      AllowedSet(sorted = allowed))
     val viaHash = IvfPq.searchLocalRows(idx, queries, 5, nprobe = 2, spark,
-      allowedSorted = allowed, allowedHash = LongHashSet.from(allowed))
+      AllowedSet(sorted = allowed, hash = LongHashSet.from(allowed)))
     assert(viaArray.toSeq == viaHash.toSeq)
   }
 
@@ -133,15 +132,15 @@ class LongHashSetSpec extends SparkSpec {
     java.util.Arrays.sort(allowed)
     val set = LongHashSet.from(allowed)
     val flatSorted = IvfFlat.searchLocalRows(flat, queries, "L2", 5,
-      nprobe = 2, spark, allowedSorted = allowed)
+      nprobe = 2, spark, AllowedSet(sorted = allowed))
     val flatHashOnly = IvfFlat.searchLocalRows(flat, queries, "L2", 5,
-      nprobe = 2, spark, allowedHash = set)
+      nprobe = 2, spark, AllowedSet(hash = set))
     assert(flatHashOnly.toSeq == flatSorted.toSeq)
     val pq = IvfPq.build(vectors, nlist = 4, m = 4, k = 16)
     val pqSorted = IvfPq.searchLocalRows(pq, queries, 5, nprobe = 2, spark,
-      allowedSorted = allowed)
+      AllowedSet(sorted = allowed))
     val pqHashOnly = IvfPq.searchLocalRows(pq, queries, 5, nprobe = 2, spark,
-      allowedHash = set)
+      AllowedSet(hash = set))
     assert(pqHashOnly.toSeq == pqSorted.toSeq)
   }
 }
